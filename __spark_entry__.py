@@ -9,109 +9,39 @@ driver cross-checks each against DuckDB at sf0.01.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from data_ingestion_din_spark.plans import ORACLES, QUERIES
 
-# Queries the per-round correctness driver has not yet sampled (or whose
-# last sample is oldest) are listed first so a bounded driver window covers
-# them before re-checking recently-green entries. Names not in the registry
-# are ignored; registered queries not listed here follow in registration
-# order. Rotation state entering round 15 (CORRECTNESS_r14 green for all 50
-# sampled, zero never-sampled anywhere; the r14 window retired the whole r7
-# block plus the front 26 of r8): no new queries this round (optimization
-# round), so the head is the 24-query r8 remainder, then the 50-query
-# round-9 block, both in registration order — the ~50 window retires r8
-# entirely plus ~the front half of r9, keeping every query's latest sample
-# within ~6 rounds (tests/test_rotation.py enforces that any never-sampled
-# name would have to precede all of these).
-_DRIVER_PRIORITY: list[str] = [
-    # Latest driver sample is round 8 (the 24 not re-sampled in r14,
-    # registration order).
-    "similarity_ivfpq_topk",
-    "similarity_ivfpq_recall",
-    "similarity_ivfpq_multiprobe",
-    "similarity_ivfpq_mp_recall",
-    "table_transactions",
-    "table_transactions_dated",
-    "retrieval_bm25",
-    "bloom_join_prune",
-    "streaming_first_seen",
-    "streaming_dedup_watermark",
-    "streaming_ivf_index",
-    "streaming_quality_gate",
-    "corpus_lang_pruned_stats",
-    "corpus_length_buckets",
-    "corpus_mixture_epochs",
-    "corpus_distinctive_terms",
-    "doc_quality_classifier",
-    "url_canonicalize",
-    "corpus_snapshot_diff",
-    "corpus_dsir_select",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q20_potential_promotion",
-    # Latest driver sample is round 9 (all 50, registration order).
-    "q4_order_priority",
-    "events_latest_snapshot",
-    "events_cohort_ltv",
-    "events_dau_wau",
-    "events_hll_distinct",
-    "events_zorder_box",
-    "events_interval_overlap_join",
-    "doc_rare_token_ratio",
-    "corpus_bigram_lm",
-    "corpus_langid_confusion",
-    "corpus_curation_funnel",
-    "doc_bigram_lm_score",
-    "corpus_bpe_merge_step",
-    "corpus_phrase_mining",
-    "corpus_textrank_keywords",
-    "ingest_quarantine",
-    "corpus_bigram_generate",
-    "corpus_bpe_pipeline",
-    "corpus_bpe_fertility",
-    "corpus_zipf_fit",
-    "corpus_heaps_law",
-    "dedup_incremental_batch",
-    "similarity_ivfpq_residual_topk",
-    "similarity_ivfpq_residual_recall",
-    "similarity_ivfpq_recall_sweep",
-    "similarity_ivfpq_residual_recall_sweep",
-    "similarity_ivfpq_incremental",
-    "similarity_range_search",
-    "similarity_ivfpq_k16_grid",
-    "corpus_dedup_funnel_full",
-    "similarity_lsh_recall_sweep",
-    "retrieval_ndcg_audit",
-    "multimodal_clip_gate",
-    "media_segment_dedup",
-    "salted_skew_join",
-    "streaming_substring_index",
-    "streaming_ivfpq_index",
-    "streaming_ivfpq_serve",
-    "corpus_temperature_mixture",
-    "corpus_eval_attribution",
-    "streaming_dsir_gate",
-    "streaming_bpe_gate",
-    "streaming_decontam_gate",
-    "streaming_semdedup_gate",
-    "streaming_tmix_gate",
-    "streaming_rollup_maintenance",
-    "streaming_profile_gate",
-    "dq_key_skew_profile",
-    "dq_k_anonymity_audit",
-    "dq_schema_drift",
-]
+_REPO = os.path.dirname(os.path.abspath(__file__))
+
+
+def _driver_priority() -> list[str]:
+    """Every registered query, least recently driver-sampled first: the
+    per-round correctness driver checks a bounded head-first window, so
+    never-sampled queries lead, then those whose latest sample (the
+    highest round of a committed ``CORRECTNESS_r*.json`` naming them) is
+    oldest. Ties keep registration order."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for name in json.load(fh):
+                last[name] = max(last.get(name, 0), rnd)
+    return sorted(QUERIES, key=lambda n: last.get(n, 0))
+
+
+_DRIVER_PRIORITY: list[str] = _driver_priority()
 
 
 def _priority_order(mapping: dict) -> dict:
-    head = {k: mapping[k] for k in _DRIVER_PRIORITY if k in mapping}
-    tail = {k: v for k, v in mapping.items() if k not in head}
-    return {**head, **tail}
+    return {k: mapping[k] for k in _DRIVER_PRIORITY if k in mapping}
 
 
 def entry(spark: SparkSession) -> DataFrame:

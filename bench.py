@@ -47,379 +47,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from data_ingestion_din_spark.plans import QUERIES  # noqa: E402
+
+# Every registered query, in registration order, except the all-pairs
+# near-dup baselines: O(n^2) by definition, their scale path (the
+# LSH/IVF variants) is what is benched.
 BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "top_customers_per_nation",
-    "customer_running_revenue",
-    "parts_never_discounted",
-    "late_shipment_orders",
-    "q4_order_priority",
-    "salted_skew_join",
-    "dq_key_skew_profile",
-    "corpus_temperature_mixture",
-    "dq_k_anonymity_audit",
-    "nation_customer_rollup",
-    "segment_median_order",
-    "events_tumbling_5min",
-    "events_sliding_10min",
-    "events_sessionized",
-    "events_json_props",
-    "events_type_pivot",
-    "clicks_on_error_free_days",
-    "doc_token_stats",
-    "doc_language_quality",
-    "doc_clean_roundtrip",
-    "doc_fixed_chunks",
-    "corpus_word_freq",
-    "dedup_exact",
-    "dedup_wordset",
-    "minhash_signatures",
-    "dedup_minhash_groups",
-    "dedup_simhash_groups",
-    "similarity_topk",
-    "similarity_ivf_label",
-    "embedding_label_centroids",
-    "blocks_merged",
-    "tables_clean_shape",
-    "tables_dedup_conflicts",
-    "table_transactions",
-    "validation_issues",
-    "keyword_relevance",
-    "qna_pairs_extract",
-    "events_asof_attribution",
-    "events_error_burst",
-    "doc_semantic_chunks",
-    "multimodal_media_stats",
-    "q13_customer_distribution",
-    "q18_large_orders",
-    "q19_bracket_revenue",
-    "q22_idle_customers",
-    # round 2: banded/bit-sliced near-dup, LSH ANN, batch kNN, Q&A argmax,
-    # HTML parse, grouping sets, quartiles, set-ops, enrichment cascade
-    "dedup_minhash_banded",
-    "dedup_simhash_near",
-    "embedding_near_dup_lsh",
-    "corpus_curation",
-    "ngram_jaccard_capped",
-    "q6_forecast_revenue",
-    "q14_promo_revenue",
-    "events_hourly_rollup",
-    "q10_returned_items",
-    "q17_small_quantity_revenue",
-    "similarity_lsh_topk",
-    "similarity_batch_topk",
-    "qna_best_match",
-    "html_tables_parse",
-    "revenue_cube",
-    "events_value_quartiles",
-    "repeat_buyers_96_not_97",
-    "doc_enrichment",
-    "doc_classification",
-    "doc_sanitize_normalize",
-    "block_type_detection",
-    # round 3: bucketed co-located fact join (layout staged in setup),
-    # corpus-curation passes (decontamination, PII, repetition quality,
-    # stratified sampling)
-    "q3_bucketed_colocated",
-    "corpus_decontaminate",
-    "pii_redaction",
-    "doc_repetition_quality",
-    "corpus_stratified_sample",
-    "q12_priority_shipping",
-    "q16_supplier_part_variety",
-    "q21_waiting_suppliers",
-    "events_5min_gapfill",
-    "events_daily_retention",
-    "events_funnel",
-    "events_kmv_distinct",
-    "dedup_clusters",
-    "doc_bpe_token_stats",
-    "events_trailing_hour",
-    "corpus_pack_sequences",
-    "customer_spend_quartiles",
-    "events_pivot_unpivot",
-    "embedding_kmeans",
-    "similarity_ivf_kmeans",
-    "similarity_lsh_recall",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q15_top_supplier",
-    # round 4: the four partsupp-unlocked TPC-H shapes (derived-view
-    # layout staged in setup like the bucketed facts), multi-format date
-    # parsing, partition-pruned corpus layout
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q20_potential_promotion",
-    "table_transactions_dated",
-    "corpus_lang_pruned_stats",
-    "dedup_keep_best",
-    "chunk_level_dedup",
-    "corpus_length_buckets",
-    "corpus_mixture_epochs",
-    "corpus_distinctive_terms",
-    "doc_cdc_chunks",
-    "doc_winnow_fingerprints",
-    # round 5: K8 overlay geometry, L12 judge pipeline, sharded packing
-    "overlay_boxes",
-    "eval_judged_summary",
-    "corpus_pack_sequences_sharded",
-    "retrieval_hybrid_rrf",
-    "doc_rare_token_ratio",
-    "corpus_cms_heavy_hitters",
-    "corpus_train_val_split",
-    "embedding_hard_negatives",
-    "dedup_incremental_batch",
-    "events_latest_snapshot",
-    "corpus_bigram_lm",
-    "corpus_length_percentiles",
-    "events_anomaly_zscore",
-    "corpus_langid_confusion",
-    "corpus_curation_funnel",
-    "similarity_lsh_multiprobe",
-    "tables_column_profile",
-    "events_cohort_ltv",
-    "dedup_cluster_size_hist",
-    "dedup_minhash_estimate_audit",
-    "events_dau_wau",
-    "similarity_pq_topk",
-    "similarity_pq_recall",
-    "dedup_semantic_kmeans",
-    "events_hll_distinct",
-    "doc_bigram_lm_score",
-    "corpus_bpe_merge_step",
-    "corpus_phrase_mining",
-    "corpus_textrank_keywords",
-    "events_zorder_box",
-    "blocks_reading_order",
-    "blocks_sections",
-    "context_budget_cut",
-    "table_trust_aggregate",
-    "tables_header_election",
-    "tables_subtable_split",
-    "eval_judged_scores",
-    "retrieval_bm25",
-    "corpus_bpe_encode",
-    "bloom_join_prune",
-    "events_scd2_intervals",
-    "events_histogram_quantiles",
-    "doc_tfidf_cosine_topk",
-    "ingest_quarantine",
-    "user_erasure",
-    "corpus_bigram_generate",
-    # round 6: perceptual-hash media near-dup (banded Hamming join),
-    # shard-manifest audit (export staged in setup, like the layouts)
-    "media_phash_near_dup",
-    "media_phash_clusters",
-    "media_phash_recall",
-    # r14: the two r12 media additions were registered but never
-    # benched (VERDICT r13 "What's missing" #2) — cheap decode-plan
-    # queries, included so n_queries = registry minus only the named
-    # all-pairs exclusions.
-    "media_resize_plan",
-    "media_frame_samples",
-    "training_shard_manifest",
-    "dq_expectations",
-    # round 7: the composed /ask serving path; incremental shard
-    # re-export (export staged on first run inside the query, then the
-    # audit is the repeatable plan).
-    "ask_pipeline",
-    # r14: the composed ingest->index->serve lifecycle flagship
-    # (blocks -> chunk walk -> fingerprint dedup -> embed join -> top-k)
-    "pipeline_e2e",
-    "training_shard_incremental",
-    # round 8: exact-substring dedup (stride-1 window fingerprints +
-    # interval-island merge), model-based quality gate (broadcast
-    # bounded vocab), incremental IVF maintenance (frozen-quantizer
-    # append routing)
-    "dedup_substring_spans",
-    "dedup_substring_removal",
-    "dedup_substring_stats",
-    "doc_quality_classifier",
-    "similarity_ivf_incremental",
-    "corpus_bpe_train",
-    "url_canonicalize",
-    "similarity_ivfpq_topk",
-    "similarity_ivfpq_recall",
-    "similarity_ivfpq_multiprobe",
-    "similarity_ivfpq_mp_recall",
-    "corpus_leakage_safe_split",
-    "corpus_snapshot_diff",
-    "corpus_dedup_funnel",
-    "corpus_dsir_select",
-    # round 9: IVFPQ residual encoding (+hash-gated recall improvement),
-    # train->encode tokenizer composition, cross-modality pairing gate.
-    "similarity_ivfpq_residual_topk",
-    "similarity_ivfpq_residual_recall",
-    "similarity_ivfpq_residual_multiprobe",
-    "similarity_ivfpq_residual_mp_recall",
-    "corpus_bpe_pipeline",
-    "multimodal_clip_gate",
-    "similarity_ivfpq_recall_sweep",
-    "similarity_ivfpq_residual_recall_sweep",
-    "similarity_ivfpq_incremental",
-    # streaming_ivfpq_serve IS benched: the stream landings are staged
-    # in setup (ivfpq_stream_index row), so the timing is the repeatable
-    # serve-from-posting-lists plan — the production read path
-    "streaming_ivfpq_serve",
-    "retrieval_ndcg_audit",
-    "corpus_bpe_fertility",
-    # round 9 (continuation): corpus statistics audits, interval overlap
-    # join, schema-drift profile.
-    "corpus_zipf_fit",
-    "corpus_heaps_law",
-    "events_interval_overlap_join",
-    "dq_schema_drift",
-    "media_segment_dedup",
-    "corpus_dedup_funnel_full",
-    "corpus_eval_attribution",
-    "similarity_range_search",
-    "similarity_ivfpq_k16_grid",
-    "similarity_lsh_recall_sweep",
-    # round 10: the LSH operating grid, the perplexity filter pair, the
-    # rollup anomaly gate, the SQ8 quantization pair, the unigram
-    # tokenizer A/B (stream staging and tokenizer training land in the
-    # cold run; the headline keeps best-of-two, so read/serve paths are
-    # what steady times)
-    "dedup_minhash_br_grid",
-    "doc_ngram_perplexity",
-    "streaming_ppl_gate",
-    "streaming_anomaly_gate",
-    "similarity_sq8_topk",
-    "similarity_sq8_recall_sweep",
-    "corpus_unigram_tokenize",
-    "corpus_unigram_fertility",
-    # the Bloom-filter decontamination pair (bounded-sketch gate)
-    "corpus_bloom_decontaminate",
-    "streaming_bloom_gate",
-    # IVF x SQ8 composition: the routing-loss isolation measurement
-    "similarity_ivfsq8_topk",
-    "similarity_ivfsq8_recall_sweep",
-    "corpus_unigram_encode",
-    "similarity_sq8_incremental",
-    "dq_l_diversity_audit",
-    # graph-ANN family: walk trace + the (degree x beam) operating grid
-    "similarity_graph_greedy_search",
-    "similarity_graph_search_grid",
-    "corpus_unigram_em_step",
-    "streaming_quantile_maintenance",
-    "streaming_cms_maintenance",
-    "dq_t_closeness_audit",
-    "similarity_graph_insert",
-    # round-11 additions
-    "streaming_stream_outer_join",
-    "dedup_substring_w_grid",
-    "doc_trigram_perplexity",
-    "doc_lm_interp_ab",
-    "doc_lm_smoothing_ab",
-    "dq_k_anonymity_generalize",
-    "similarity_graph_nsw_grid",
-    "streaming_stream_full_outer_join",
-    "similarity_graph_routed_insert",
-    "similarity_graph_hnsw_entry",
-    "doc_gopher_rules",
-    "similarity_mrl_dim_grid",
-    "dq_salt_factor_grid",
-    "events_hll_precision_grid",
-    "events_dynamic_gap_sessions",
-    "similarity_ivf_nlist_sweep",
-    "similarity_ivfpq_rerank_sweep",
-    "events_cdc_merge",
-    "corpus_compaction_ab",
-    "similarity_graph_delete_repair",
-    "corpus_unigram_prune",
-    "events_funnel_windowed",
-    "retrieval_mmr_diversify",
-    "events_anomaly_mad",
-    "dedup_simhash_band_grid",
-    "similarity_filtered_ann",
-    "similarity_filtered_nprobe",
-    "events_ewma_halving",
-    "dq_freshness_sla",
-    "dq_quantile_sketch_grid",
-    "corpus_mg_heavy_hitters",
-    "streaming_mg_maintenance",
-    "streaming_cdc_merge",
-    "similarity_bq_recall_grid",
-    "retrieval_late_interaction",
-    "layout_zonemap_audit",
-    "layout_zorder_pruning",
-    "layout_hilbert_vs_zorder",
-    "events_theta_set_ops",
-    "streaming_theta_index",
-    "corpus_pack_split_ab",
-    "events_scd2_temporal_join",
-    "retrieval_prf_expansion",
-    "similarity_rp_dim_grid",
-    "corpus_line_dedup",
-    "corpus_doremi_step",
-    "events_hll_sliding_merge",
-    "similarity_graph_vamana_grid",
-    "similarity_vamana_clustered_ab",
-    "streaming_line_dedup_gate",
-    "retrieval_ql_dirichlet",
-    "dq_benford_audit",
-    "similarity_pq_subspace_ab",
-    "streaming_watermark_lateness_grid",
-    "events_asof_tolerance_grid",
-    "events_gini_concentration",
-    "corpus_cms_width_grid",
-    "corpus_decontam_n_grid",
-    "doc_mattr_diversity",
-    "similarity_kmeans_convergence",
-    "dq_order_consistency_audit",
-    "events_markov_transitions",
-    "events_session_gap_grid",
-    "events_cusum_changepoint",
-    "events_dispersion_audit",
-    "streaming_cusum_gate",
-    "corpus_ccnet_buckets",
-    "dedup_semdedup_eps_grid",
-    "dq_completeness_matrix",
-    # round 12: the 22 earlier streaming foreachBatch pipelines, benched
-    # via the staged-landing pattern the newer gates use — each
-    # pipeline's incremental availableNow landings run once as an
-    # explicit setup row below, so these rows time the repeatable
-    # readback plan (sink scan / latest-epoch resolution), exactly like
-    # streaming_cdc_merge and streaming_ivfpq_serve
-    "streaming_ingest_chunks",
-    "streaming_first_seen",
-    "streaming_stream_join",
-    "streaming_session_windows",
-    "streaming_dedup_watermark",
-    "streaming_scd2_maintenance",
-    "streaming_latest_snapshot",
-    "streaming_minhash_index",
-    "streaming_phash_index",
-    "streaming_ivf_index",
-    "streaming_substring_index",
-    "streaming_ivfpq_index",
-    "streaming_curation_funnel",
-    "streaming_quality_gate",
-    "streaming_dsir_gate",
-    "streaming_bpe_gate",
-    "streaming_decontam_gate",
-    "streaming_semdedup_gate",
-    "streaming_tmix_gate",
-    "streaming_hll_registers",
-    "streaming_rollup_maintenance",
-    "streaming_profile_gate",
-    # round-12 additions: the HLL column-profiling A/B, the two-layer
-    # HNSW hierarchy audit, and the %2-trainer 5-gram LM pair
-    "dq_completeness_hll_ab",
-    "similarity_graph_hnsw_layers",
-    "doc_5gram_perplexity",
-    "doc_lm_5gram_ab",
-    # round-13 additions
-    "ranked_prefix_ab",
-    "similarity_pq_aniso_ab",
-    "streaming_asof_attribution",
-    # round-14 additions (pipeline_e2e + the media pair are inserted at
-    # their family groups above)
-    "similarity_pq_opq_ab",
-    "streaming_ivf_rebalance",
+    n for n in QUERIES if n not in ("embedding_near_dup", "ngram_jaccard_top20")
 ]
 
 
@@ -681,7 +315,6 @@ def scaling_main() -> None:
     sf_dirs = [os.path.join(root, f"sf{s}") for s in ("0.001", "0.01", "0.1")]
     sfs = [0.001, 0.01, 0.1]
 
-    from data_ingestion_din_spark.plans import QUERIES
     from data_ingestion_din_spark.session import get_spark
 
     unknown = [n for n in SCALING_QUERIES if n not in QUERIES]
@@ -766,13 +399,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
+    # parsed before the run so a malformed value cannot lose its results
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
-    from data_ingestion_din_spark.plans import QUERIES
+    from pyspark.sql import DataFrame
+
+    from data_ingestion_din_spark.operators.colocate import STAGED
     from data_ingestion_din_spark.session import get_spark
-
-    unknown = [n for n in BENCH_QUERIES if n not in QUERIES]
-    if unknown:
-        raise SystemExit(f"bench.py: unregistered queries {unknown}")
 
     spark = get_spark("bench")
 
@@ -795,218 +428,22 @@ def main() -> None:
 
     run("q1_pricing_summary")  # warmup (JVM + codegen + parquet footer cache)
 
-    # Shared one-time artifacts (layouts, exports, staged tables) are
-    # paid here so per-query timings measure each operator's own
-    # resolution — and each stage's cost is RECORDED as its own bench
-    # row ("setup" in the full record / BENCH_DETAIL.json) so the
-    # pre-staging cannot silently understate the consumers' standalone
-    # cost across rounds (ADVICE r8).
+    # Shared one-time artifacts (layouts, exports, staged tables, stream
+    # landings) are paid here so per-query timings measure each
+    # operator's own resolution — and each one's cost is RECORDED as its
+    # own setup row (BENCH_DETAIL.json) so the pre-staging cannot
+    # silently understate the consumers' standalone cost (ADVICE r8).
+    # The rows are the staging registry's (operators/colocate.staged):
+    # frame results are counted, which materializes a lazy checkpoint.
     setup: dict[str, float] = {}
-
-    def stage(name: str, fn) -> None:
-        t0 = time.time()
-        fn()
-        setup[name] = round(time.time() - t0, 3)
-
-    # derived entity tables (staged-table production shape)
-    from data_ingestion_din_spark.sources.entities import table_blocks, text_blocks
-
-    stage("entity_tables", lambda: (
-        text_blocks(spark, sf_dir).count(),
-        table_blocks(spark, sf_dir).count(),
-    ))
-    # bucketed fact layout: paid once (like a nightly table layout), so
-    # q3_bucketed_colocated times the zero-shuffle join, not the write
-    from data_ingestion_din_spark.operators.colocate import (
-        bucketed_fact_tables,
-        partitioned_documents,
-        zordered_events,
-    )
-
-    stage("bucketed_fact_tables", lambda: bucketed_fact_tables(spark, sf_dir))
-    # lang-partitioned corpus layout (corpus_lang_pruned_stats scans it)
-    stage("partitioned_documents", lambda: partitioned_documents(spark, sf_dir))
-    # z-ordered events layout (events_zorder_box scans it)
-    stage("zordered_events", lambda: zordered_events(spark, sf_dir))
-    # training-shard export: one-time sink cost (like a nightly export),
-    # so training_shard_manifest times the audit, not the write
-    from data_ingestion_din_spark.plans.curation_queries import (
-        _shard_export,
-        _tsi_export,
-    )
-
-    stage("shard_export", lambda: _shard_export(spark, sf_dir))
-    # incremental shard export: initial + append passes staged once, so
-    # training_shard_incremental times the read-back audit
-    stage("tsi_export", lambda: _tsi_export(spark, sf_dir))
-    # staged pHash table: the once-per-session Arrow stage (like the
-    # layouts above), so media_phash_clusters times CC resolution, not
-    # the whole-corpus hash pass it happened to consume first
-    from data_ingestion_din_spark.plans.multimodal_queries import _phash_table
-
-    stage("phash_table", lambda: _phash_table(spark, sf_dir).count())
-    # staged near-dup pair table: four dedup queries consume the same
-    # verified MinHash-banded pairs (a first-class pipeline artifact),
-    # so each times its own resolution step, not the shared pipeline
-    from data_ingestion_din_spark.plans.dedup_queries import (
-        _banded_pairs,
-        _substring_spans,
-    )
-
-    stage("banded_pairs", lambda: _banded_pairs(spark, sf_dir).count())
-    # staged duplicated-span table (three substring-dedup consumers)
-    stage("substring_spans", lambda: _substring_spans(spark, sf_dir).count())
-    # staged PQ indexes (raw + residual spaces; seven consumers between
-    # the pq/ivfpq families and their recall audits)
-    from data_ingestion_din_spark.plans.similarity_queries import _pq_trained
-
-    stage("pq_index_raw", lambda: _pq_trained(spark, sf_dir, "raw")[0].count())
-    stage("pq_index_res", lambda: _pq_trained(spark, sf_dir, "res")[0].count())
-    # k=16 codebooks + the shared exact-topk side (the operating-grid
-    # query's one-time training/staging, like the k=4 rows above)
-    from data_ingestion_din_spark.plans.similarity_queries import (
-        _etop_staged,
-        _GRID_K,
-    )
-
-    stage("pq_index_raw16", lambda: _pq_trained(spark, sf_dir, "raw", k=_GRID_K)[0].count())
-    stage("pq_index_res16", lambda: _pq_trained(spark, sf_dir, "res", k=_GRID_K)[0].count())
-    stage("sweep_etop", lambda: _etop_staged(spark, sf_dir).count())
-    # staircase PQ-A/B space + guarded truth + the shared baseline arm
-    # (subspace_ab's "contiguous" = opq_ab's "identity" training) —
-    # staged once per session like the PQ indexes; two consumers
-    from data_ingestion_din_spark.plans.similarity_proj import (
-        _pqs_base_trained,
-        _pqs_space,
-    )
-
-    stage(
-        "pqs_space",
-        lambda: _pqs_base_trained(
-            spark, sf_dir, _pqs_space(spark, sf_dir)[0]
-        )[0].count(),
-    )
-    # trained-LM staged artifacts (the _P5/_TRI/_BI convention): the
-    # scored component passes are session-staged and shared by 2-3
-    # consumers each; staging them here prices the build as its own
-    # visible setup row so the consumers' headline entries time the
-    # serve path, not a cold-run build (VERDICT r14 ask #3 — these two
-    # previously staged on first touch inside a query, hiding the build
-    # in an excluded cold run; pqs_space set the honest convention).
-    # The .count() materializes the lazy localCheckpoint (the logical
-    # plan is cut at the checkpoint RDD, so no column pruning skips it).
-    from data_ingestion_din_spark.plans.lm_queries import (
-        _bi_perdoc,
-        _p5_comps,
-        _tri_comps,
-    )
-
-    stage("lm_bi_perdoc", lambda: _bi_perdoc(spark, sf_dir).count())
-    stage("lm_tri_comps", lambda: _tri_comps(spark, sf_dir).count())
-    stage("lm_p5_comps", lambda: _p5_comps(spark, sf_dir).count())
-    # streamed IVFPQ index: the two availableNow landings run once here
-    # so streaming_ivfpq_serve times the read path, not the ingest
-    from data_ingestion_din_spark.plans.streaming_indexes import _siq_out_dir
-
-    stage("ivfpq_stream_index", lambda: _siq_out_dir(spark, sf_dir))
-    # graph-ANN audit tables: the guarded all-pairs kNN build + the
-    # collected walk inputs (one-time audit cost, like sweep_etop)
-    from data_ingestion_din_spark.plans.graph_queries import (
-        _gr_collected,
-    )
-
-    stage("graph_ann_edges", lambda: _gr_collected(spark, sf_dir))
-    # outer-join stream landings (checkpointed availableNow runs) — the
-    # benched row is the readback, the landings are one-time setup like
-    # the ivfpq stream index
-    from data_ingestion_din_spark.plans.streaming_cdc import (
-        _sjf_out_dir,
-        _sjo_out_dir,
-    )
-
-    stage("sjoin_outer_landings", lambda: _sjo_out_dir(spark, sf_dir))
-    stage("sjoin_full_landings", lambda: _sjf_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_sketches import _smg_out_dir
-
-    stage("smg_landings", lambda: _smg_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_cdc import _cdcm_out_dir
-
-    stage("cdcm_landings", lambda: _cdcm_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_sketches import _sth_out_dir
-
-    stage("sth_landings", lambda: _sth_out_dir(spark, sf_dir))
-    # watermark-lateness grid: nine checkpointed availableNow runs
-    # (3 delays x 3 landings) staged once; the benched row times the
-    # sink readback + per-day rollup
-    from data_ingestion_din_spark.plans.streaming_cdc import _swl_out_dir
-
-    stage("swl_landings", lambda: _swl_out_dir(spark, sf_dir))
-    # the 22 earlier streaming pipelines' landings (availableNow runs +
-    # checkpointed restarts), staged once each so their bench rows time
-    # the repeatable readback plan; every one-time stream cost is its
-    # own recorded setup row (ivfpq_stream_index above already covers
-    # streaming_ivfpq_index / streaming_ivfpq_serve)
-    from data_ingestion_din_spark.plans.streaming_cdc import (
-        _asofs_out_dir,
-        _ddw_out_dir,
-        _first_seen_out_dir,
-        _ingested_corpus_dir,
-        _scd2s_out_dir,
-        _session_windows_out_dir,
-        _snap_out_dir,
-        _stream_join_out_dir,
-    )
-
-    stage("ingest_corpus", lambda: _ingested_corpus_dir(spark, sf_dir))
-    stage("first_seen_landings", lambda: _first_seen_out_dir(spark, sf_dir))
-    stage("stream_join_landings", lambda: _stream_join_out_dir(spark, sf_dir))
-    stage(
-        "session_window_landings",
-        lambda: _session_windows_out_dir(spark, sf_dir),
-    )
-    stage("dedup_watermark_landings", lambda: _ddw_out_dir(spark, sf_dir))
-    stage("scd2_stream_landings", lambda: _scd2s_out_dir(spark, sf_dir))
-    stage("asof_stream_landings", lambda: _asofs_out_dir(spark, sf_dir))
-    stage("snapshot_landings", lambda: _snap_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_gates import (
-        _sbg_out_dir,
-        _scf_out_dir,
-        _sdc_out_dir,
-        _sdg_out_dir,
-        _sqg_out_dir,
-        _ssd_out_dir,
-        _stg_out_dir,
-    )
-
-    stage("curation_funnel_landings", lambda: _scf_out_dir(spark, sf_dir))
-    stage("quality_gate_landings", lambda: _sqg_out_dir(spark, sf_dir))
-    stage("dsir_gate_landings", lambda: _sdg_out_dir(spark, sf_dir))
-    stage("bpe_gate_landings", lambda: _sbg_out_dir(spark, sf_dir))
-    stage("decontam_gate_landings", lambda: _sdc_out_dir(spark, sf_dir))
-    stage("semdedup_gate_landings", lambda: _ssd_out_dir(spark, sf_dir))
-    stage("tmix_gate_landings", lambda: _stg_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_indexes import (
-        _sii_out_dir,
-        _sir_out_dir,
-        _smi_out_dir,
-        _spi_out_dir,
-        _ssi_out_dir,
-    )
-
-    stage("minhash_index_landings", lambda: _smi_out_dir(spark, sf_dir))
-    stage("phash_index_landings", lambda: _spi_out_dir(spark, sf_dir))
-    stage("ivf_index_landings", lambda: _sii_out_dir(spark, sf_dir))
-    stage("ivf_rebalance_landings", lambda: _sir_out_dir(spark, sf_dir))
-    stage("substring_index_landings", lambda: _ssi_out_dir(spark, sf_dir))
-    from data_ingestion_din_spark.plans.streaming_sketches import (
-        _hll_out_dir,
-        _spg_out_dir,
-        _srm_state_dir,
-    )
-
-    stage("hll_registers_landings", lambda: _hll_out_dir(spark, sf_dir))
-    stage("rollup_state_landings", lambda: _srm_state_dir(spark, sf_dir))
-    stage("profile_gate_landings", lambda: _spg_out_dir(spark, sf_dir))
+    for build in STAGED.values():
+        for row, args in build.setup.items():
+            t0 = time.time()
+            out = build(spark, sf_dir, *args)
+            for v in out if isinstance(out, tuple) else (out,):
+                if isinstance(v, DataFrame):
+                    v.count()
+            setup[row] = round(setup.get(row, 0.0) + time.time() - t0, 3)
 
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
@@ -1061,9 +498,8 @@ def main() -> None:
         "setup": setup,
         "setup_total": round(sum(setup.values()), 3),
         "sf": sf,
+        "cpus": cpus,
     }
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    full["cpus"] = cpus
     print(json.dumps(full))
     # Full per-query record also goes to FILES: the driver's log capture
     # keeps only the stdout tail, so per-query history across rounds is
@@ -1085,30 +521,31 @@ def main() -> None:
     # final summary so whatever suffix of stdout survives still contains
     # complete, parseable per-query records (the LAST chunks survive a
     # tail cut; the stamped detail file above is the lossless record).
-    items = sorted(steady.items())
-    chunks: list[dict] = []
-    buf: dict[str, float] = {}
-    for k, v in items:
-        buf[k] = v
-        if len(json.dumps({"queries": buf})) > 1700:
-            chunks.append(buf)
-            buf = {}
-    if buf:
-        chunks.append(buf)
-    for i, ch in enumerate(chunks):
-        print(
-            json.dumps(
-                {
-                    "metric": "per_query_steady",
-                    "part": i + 1,
-                    "parts": len(chunks),
-                    "cpus": cpus,
-                    "sf": sf,
-                    "queries": ch,
-                },
-                separators=(",", ":"),
-            )
+    def chunk_line(part: int, parts: int, queries: dict) -> str:
+        return json.dumps(
+            {
+                "metric": "per_query_steady",
+                "part": part,
+                "parts": parts,
+                "cpus": cpus,
+                "sf": sf,
+                "queries": queries,
+            },
+            separators=(",", ":"),
         )
+
+    # Packed to 1700 chars of the exact printed form (9999 stands in for
+    # the part numbers), so the last chunk plus the summary line still
+    # fit in a 2000-char tail; the assert holds every line to 1900.
+    chunks: list[dict] = [{}]
+    for k, v in sorted(steady.items()):
+        if len(chunk_line(9999, 9999, {**chunks[-1], k: v})) > 1700:
+            chunks.append({})
+        chunks[-1][k] = v
+    for i, ch in enumerate(chunks):
+        line = chunk_line(i + 1, len(chunks), ch)
+        assert len(line) <= 1900, f"chunk line {i + 1} is {len(line)} chars"
+        print(line)
     # Repeat a compact summary as the FINAL line so the tail always
     # contains one complete JSON record.
     print(

@@ -25,9 +25,12 @@ documented.
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 import re
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,7 +70,7 @@ def cleanup_stale_app_dirs(
     root: str, keep: str, max_age_sec: float = STALE_AGE_SEC
 ) -> None:
     """Delete per-application artifact directories under ``root`` left by
-    PREVIOUS Spark applications (``keep`` is the current applicationId's
+    PREVIOUS Spark applications (``keep`` is the current application's
     sanitized dir name). Session-scoped staging otherwise accumulates
     unboundedly across sessions. Called on first staging use per session.
 
@@ -75,9 +78,9 @@ def cleanup_stale_app_dirs(
     is older than ``max_age_sec`` — a fresh dir belongs to a concurrently
     LIVE session whose in-memory staging caches still point at it, and
     deleting it would break that session for its remaining lifetime (the
-    round-4 reproduced race). As a second line of defense every staging
-    materializer also re-checks its directory on cache hit and
-    re-materializes if it vanished (:func:`_dir_ok`)."""
+    round-4 reproduced race). As a second line of defense the staging
+    registry (:func:`staged`) re-checks path results on a cache hit and
+    re-materializes if they vanished (:func:`_dir_ok`)."""
     import shutil
     import time
 
@@ -113,10 +116,7 @@ def _dir_ok(path: str) -> bool:
 def app_dir_path(spark: SparkSession, sf_dir: str, root_name: str) -> str:
     """Pure path derivation for an app-scoped staged artifact —
     ``$TMPDIR/<root_name>/<sanitized app id>/<sanitized sf tag>`` — with
-    NO filesystem side effects. Cache-hit revalidation paths must use
-    this (not a hand-rolled re.sub copy) so a layout change here cannot
-    leave a cache checking the old location while :func:`fresh_app_dir`
-    materializes to the new one."""
+    NO filesystem side effects."""
     app = re.sub(r"[^A-Za-z0-9]+", "_", spark.sparkContext.applicationId)
     tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
     return os.path.join(tempfile.gettempdir(), root_name, app, tag)
@@ -125,10 +125,9 @@ def app_dir_path(spark: SparkSession, sf_dir: str, root_name: str) -> str:
 def fresh_app_dir(spark: SparkSession, sf_dir: str, root_name: str) -> str:
     """App-scoped staged-artifact base dir (:func:`app_dir_path`) with
     the staging lifecycle applied — stale sibling-app dirs under the
-    root cleaned (age-gated), the base itself recreated empty. The one
-    place the scaffold lives: the streaming landings, the shard export
-    and any future staged artifact call this instead of repeating the
-    sanitize/cleanup/rmtree block (a lifecycle fix lands once)."""
+    root cleaned (age-gated), the base itself removed. Only the staging
+    registry calls this: a builder declaring ``base`` receives one, so
+    the lifecycle lives in one place."""
     import shutil
 
     base = app_dir_path(spark, sf_dir, root_name)
@@ -140,12 +139,91 @@ def fresh_app_dir(spark: SparkSession, sf_dir: str, root_name: str) -> str:
     return base
 
 
-# Layout staging cache, keyed like sources/entities._ENTITY_CACHE: the
-# applicationId is unique per SparkContext lifetime (id(spark) is not —
-# a stopped session's address can be reused).
-_BUCKETED_FACTS: set[tuple[str, str, int]] = set()
+# The one session-staging registry: name -> staged builder, in
+# registration (import) order. bench.py stages every entry as a setup row.
+STAGED: dict[str, Callable] = {}
+
+
+def _paths(result) -> list[str]:
+    """The absolute-path strings a staged result carries (itself, or the
+    members of a tuple result) — the dirs a cache hit must revalidate."""
+    items = result if isinstance(result, tuple) else (result,)
+    return [x for x in items if isinstance(x, str) and os.path.isabs(x)]
+
+
+def staged(name: str, setup: dict[str, tuple] | None = None):
+    """Register ``build(spark, sf_dir, *args)`` as a session-staged
+    artifact: built once per (applicationId, sf_dir, *args) and reused by
+    every later call in that SparkContext.
+
+    - Entries of other (stopped) SparkContexts are dropped on each call:
+      their checkpointed blocks died with the JVM, and keeping them would
+      grow the cache across in-process session restarts.
+    - Path results (a str, or the str members of a tuple) are revalidated
+      with :func:`_dir_ok` on a hit and rebuilt if the files vanished.
+    - A builder declaring a ``base`` parameter gets a fresh
+      :func:`fresh_app_dir` under ``spark_graft_<name>``, so two artifacts
+      can never share a directory.
+    - The builder owns its ``localCheckpoint(eager=...)`` choice.
+
+    ``setup`` maps bench setup-row names to argument tuples; it defaults
+    to one row ``name`` for builders that take no further arguments.
+    The wrapper's ``cache_clear()`` empties its cache."""
+
+    def deco(build: Callable) -> Callable:
+        if name in STAGED:
+            raise ValueError(f"duplicate staged artifact name: {name}")
+        sig = inspect.signature(build)
+        wants_base = "base" in sig.parameters
+        # the caller-facing signature: the registry supplies ``base``
+        params = [p for p in sig.parameters.values() if p.name != "base"]
+        call_sig = sig.replace(parameters=params)
+        cache: dict[tuple, object] = {}
+
+        @functools.wraps(build)
+        def get(spark: SparkSession, sf_dir: str, *args, **kwargs):
+            bound = call_sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            kw = dict(list(bound.arguments.items())[2:])
+            app = spark.sparkContext.applicationId
+            for k in [k for k in cache if k[0] != app]:
+                del cache[k]
+            key = (app, sf_dir, *kw.values())
+            if key in cache and all(_dir_ok(p) for p in _paths(cache[key])):
+                return cache[key]
+            if wants_base:
+                kw["base"] = fresh_app_dir(spark, sf_dir, f"spark_graft_{name}")
+            cache[key] = build(spark, sf_dir, **kw)
+            return cache[key]
+
+        no_args = all(p.default is not p.empty for p in params[2:])
+        get.setup = setup if setup is not None else ({name: ()} if no_args else {})
+        get.cache_clear = cache.clear
+        STAGED[name] = get
+        return get
+
+    return deco
+
 
 N_FACT_BUCKETS = 8
+
+
+@staged("bucketed_fact_tables")
+def _bucketed_fact_dirs(
+    spark: SparkSession, sf_dir: str, base: str, n_buckets: int = N_FACT_BUCKETS
+) -> tuple[str, str]:
+    from data_ingestion_din_spark.sources.tables import load_table
+
+    tag = os.path.basename(base)
+    paths = []
+    for src, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+        tbl = f"{src}_bkt_{tag}"
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        paths.append(os.path.join(base, tbl))
+        write_bucketed(
+            load_table(spark, sf_dir, src), tbl, key, n_buckets, path=paths[-1]
+        )
+    return tuple(paths)
 
 
 def bucketed_fact_tables(
@@ -157,35 +235,10 @@ def bucketed_fact_tables(
     This is the layout a nightly fact-fact pipeline pays for ONCE so that
     every subsequent orderkey join/aggregation plans with zero shuffle
     Exchange (see ``q3_bucketed_colocated``). External parquet tables
-    under the system temp dir, tagged by applicationId — re-registration
+    under the system temp dir, tagged by the session — re-registration
     is idempotent within a session and cannot collide across sessions."""
-    tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
-    names = (f"orders_bkt_{tag}", f"lineitem_bkt_{tag}")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, n_buckets)
-    app = re.sub(r"[^A-Za-z0-9]+", "_", spark.sparkContext.applicationId)
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_bucketed")
-    base = os.path.join(root, app, tag)
-    if cache_key in _BUCKETED_FACTS:
-        if all(_dir_ok(os.path.join(base, t)) for t in names):
-            return names
-        _BUCKETED_FACTS.discard(cache_key)  # staged files vanished
-    from data_ingestion_din_spark.sources.tables import load_table
-
-    cleanup_stale_app_dirs(root, app)
-    for src, tbl, key in (
-        ("orders", names[0], "o_orderkey"),
-        ("lineitem", names[1], "l_orderkey"),
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        write_bucketed(
-            load_table(spark, sf_dir, src),
-            tbl,
-            key,
-            n_buckets,
-            path=os.path.join(base, tbl),
-        )
-    _BUCKETED_FACTS.add(cache_key)
-    return names
+    paths = _bucketed_fact_dirs(spark, sf_dir, n_buckets)
+    return tuple(os.path.basename(p) for p in paths)
 
 
 def salt_col(key: Column, n_salts: int) -> Column:
@@ -261,10 +314,8 @@ def salted_join(
 # Partition-pruned corpus layout: the scan-layout lever next to
 # bucketing. Written once per (application, sf_dir), like the bucketed
 # facts above.
-_PARTITIONED_DOCS: dict[tuple[str, str], str] = {}
-
-
-def partitioned_documents(spark: SparkSession, sf_dir: str) -> str:
+@staged("partitioned_documents")
+def partitioned_documents(spark: SparkSession, sf_dir: str, base: str) -> str:
     """Materialize the ``documents`` table partitioned by ``lang``
     (hive-style ``lang=xx/`` directories) once per session; returns the
     path. A language-filtered query over this layout prunes at FILE
@@ -273,26 +324,15 @@ def partitioned_documents(spark: SparkSession, sf_dir: str) -> str:
     (plan-asserted in tests/test_colocate.py). At 100 TB this is the
     difference between reading one language's share and reading the
     whole corpus to filter it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PARTITIONED_DOCS:
-        if _dir_ok(_PARTITIONED_DOCS[key]):
-            return _PARTITIONED_DOCS[key]
-        del _PARTITIONED_DOCS[key]  # staged files vanished
     from data_ingestion_din_spark.sources.tables import load_table
 
-    app = re.sub(r"[^A-Za-z0-9]+", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_partdocs")
-    cleanup_stale_app_dirs(root, app)
-    path = os.path.join(root, app, tag)
     (
         load_table(spark, sf_dir, "documents")
         .write.mode("overwrite")
         .partitionBy("lang")
-        .parquet(path)
+        .parquet(base)
     )
-    _PARTITIONED_DOCS[key] = path
-    return path
+    return base
 
 
 # Z-order (Morton-curve) clustered layout: the third layout lever next
@@ -301,8 +341,6 @@ def partitioned_documents(spark: SparkSession, sf_dir: str) -> str:
 # and row-group min/max ranges tight BOXES in (user, time) space, so a
 # 2-D box predicate skips most files on BOTH dimensions — a time-sorted
 # layout prunes time ranges but every file spans the full user range.
-_ZORDER_EVENTS: dict[tuple[str, str], str] = {}
-
 _Z_FILES = 16
 
 
@@ -324,7 +362,8 @@ def zorder_value(dim_a: str, dim_b: str) -> Column:
     )
 
 
-def zordered_events(spark: SparkSession, sf_dir: str) -> str:
+@staged("zordered_events")
+def zordered_events(spark: SparkSession, sf_dir: str, base: str) -> str:
     """Materialize ``events`` z-ordered on (user_id, ts) into
     ``_Z_FILES`` range-partitioned, z-sorted parquet files, once per
     (session, sf_dir); returns the path. Dimensions are min-max scaled
@@ -334,18 +373,8 @@ def zordered_events(spark: SparkSession, sf_dir: str) -> str:
     what lets a box predicate skip files on both dimensions
     (tests/test_colocate.py reads the parquet footers and proves the
     skip rate vs a time-sorted layout)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ZORDER_EVENTS:
-        if _dir_ok(_ZORDER_EVENTS[key]):
-            return _ZORDER_EVENTS[key]
-        del _ZORDER_EVENTS[key]
     from data_ingestion_din_spark.sources.tables import load_table
 
-    app = re.sub(r"[^A-Za-z0-9]+", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_zorder")
-    cleanup_stale_app_dirs(root, app)
-    path = os.path.join(root, app, tag)
     ev = load_table(spark, sf_dir, "events")
     lo_u, hi_u, lo_t, hi_t = ev.select(
         F.min("user_id"),
@@ -377,10 +406,9 @@ def zordered_events(spark: SparkSession, sf_dir: str) -> str:
         .drop("_z")
         .write.mode("overwrite")
         .partitionBy("_zcell")
-        .parquet(path)
+        .parquet(base)
     )
-    _ZORDER_EVENTS[key] = path
-    return path
+    return base
 
 
 def _parquet_files(path: str) -> list[tuple[str, int]]:
@@ -429,21 +457,3 @@ def compact_small_files(
         "files_after": len(after),
         "bytes_after": sum(sz for _, sz in after),
     }
-
-
-def session_staged(cache: dict, spark, sf_dir: str, build):
-    """The one (applicationId, sf_dir)-keyed session-staging pattern:
-    evict entries from other (stopped) SparkContexts — their
-    checkpointed blocks died with the JVM, and keeping the dead
-    references would grow the dict unboundedly across session restarts
-    in one process (review finding) — then build + eagerly
-    localCheckpoint on miss. ``build()`` returns the DataFrame to
-    stage; used by the pHash table, the banded-pair table, the
-    substring-span table and the trained k-means assignment."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in cache if k[0] != app]:
-        del cache[k]
-    key = (app, sf_dir)
-    if key not in cache:
-        cache[key] = build().localCheckpoint(eager=True)
-    return cache[key]

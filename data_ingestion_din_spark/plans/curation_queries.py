@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64_sql
 from data_ingestion_din_spark.operators import curation as C
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -664,35 +665,24 @@ def corpus_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # audit is one scan of the written files with a shard-local agg.
 # --------------------------------------------------------------------------
 _TSM_SHARDS = 8
-_TSM_DONE: dict[tuple[str, str], tuple[str, list]] = {}
 
 
-def _shard_export(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
+@staged("shard_export")
+def _shard_export(
+    spark: SparkSession, sf_dir: str, base: str
+) -> tuple[str, list]:
     """Run the shard export once per (app, sf_dir); returns (out_dir,
-    manifest). Uses the shared staged-artifact scaffold
-    (operators/colocate.fresh_app_dir) with cache revalidation."""
+    manifest)."""
     from data_ingestion_din_spark.functions.analysis import tokens
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
     from data_ingestion_din_spark.sinks.shards import write_training_shards
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TSM_DONE:
-        if _dir_ok(_TSM_DONE[key][0]):
-            return _TSM_DONE[key]
-        del _TSM_DONE[key]
-
-    out = fresh_app_dir(spark, sf_dir, "spark_graft_shards")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.size(tokens(F.col("text"))).alias("n_tok")
     )
     manifest = write_training_shards(
-        docs, "doc_id", out, n_shards=_TSM_SHARDS
+        docs, "doc_id", base, n_shards=_TSM_SHARDS
     )
-    _TSM_DONE[key] = (out, manifest)
-    return _TSM_DONE[key]
+    return base, manifest
 
 
 _TSM_H = h64_sql(
@@ -802,11 +792,13 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows (bounded by touched-shard size, not corpus size); the touched-id
 # collect moves ≤ n_shards ints of control data.
 # --------------------------------------------------------------------------
-_TSI_DONE: dict[tuple[str, str], tuple[str, list]] = {}
 _TSI_MOD = 97
 
 
-def _tsi_export(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
+@staged("tsi_export")
+def _tsi_export(
+    spark: SparkSession, sf_dir: str, base: str
+) -> tuple[str, list]:
     """Initial export minus the append slice, then the incremental
     append pass; returns (out_dir, touched shard ids). Raises if an
     untouched shard's bytes changed or a touched shard was not
@@ -815,22 +807,12 @@ def _tsi_export(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     import os
 
     from data_ingestion_din_spark.functions.analysis import tokens
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
     from data_ingestion_din_spark.sinks.shards import (
         shard_id,
         write_training_shards,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TSI_DONE:
-        if _dir_ok(_TSI_DONE[key][0]):
-            return _TSI_DONE[key]
-        del _TSI_DONE[key]
-
-    out = fresh_app_dir(spark, sf_dir, "spark_graft_shards_incr")
+    out = base
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.size(tokens(F.col("text"))).alias("n_tok")
     )
@@ -889,8 +871,7 @@ def _tsi_export(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         if is_touched(p) and p in post and post[p] == pre[p]:
             raise RuntimeError(f"touched shard file not rewritten: {p}")
 
-    _TSI_DONE[key] = (out, touched)
-    return _TSI_DONE[key]
+    return out, touched
 
 
 @query(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64_sql
 from data_ingestion_din_spark.operators import dedup as D
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.dedup_queries import (
     _BANDED_CTES,
     _H2_SQL,
@@ -382,10 +383,6 @@ def dedup_substring_w_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _SHG_WIDTHS = (8, 16, 32)
 _SHG_RADII = (1, 2, 3)
-# (applicationId, sf_dir) -> (ids, fingerprints, truth_pos_a, truth_pos_b,
-# truth_hamming) — the session-staged audit inputs (fingerprints are
-# 8 bytes/doc; the truth list is radius-bounded, a few hundred pairs)
-_SHG_STATE: dict[tuple[str, str], tuple] = {}
 
 
 def _shg_oracle() -> str:
@@ -446,73 +443,74 @@ def _shg_oracle() -> str:
     """
 
 
-@query("dedup_simhash_band_grid", oracle=_shg_oracle())
-def dedup_simhash_band_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+@staged("simhash_band_truth")
+def _shg_inputs(spark: SparkSession, sf_dir: str) -> tuple:
     import numpy as np
 
     from data_ingestion_din_spark.operators.dedup import _refuse_all_pairs
 
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _SHG_STATE if kk[0] != app]:
-        del _SHG_STATE[kk]
-    key = (app, sf_dir)
-    if key not in _SHG_STATE:
-        docs = load_table(spark, sf_dir, "documents")
-        _refuse_all_pairs(
-            docs, 20_000, "the distributed banded join (dedup_simhash_near)"
-        )
-        rows = D.simhash(docs, bits=64).collect()
-        ids = np.array([int(r.doc_id) for r in rows], dtype=np.int64)
-        hv = np.array([int(r.simhash) for r in rows], dtype=np.int64)
-        order = np.argsort(ids)
-        ids, hv = ids[order], hv[order]
-        n = len(ids)
-        rmax = max(_SHG_RADII)
-        bc = spark.sparkContext.broadcast(hv)
-        # all-pairs Hamming truth (audit side, guarded): row-chunked
-        # across executor tasks; each task XORs its i-chunk against all
-        # j and keeps (i, j>i) pairs within rmax via a 65536-entry
-        # popcount-table gather. Chunk starts are one-int control rows.
-        chunk = 256
-        n_tasks = max(1, (n + chunk - 1) // chunk)
-        starts_df = spark.createDataFrame(
-            [(i,) for i in range(0, n, chunk)], "i0 int"
-        ).repartition(n_tasks)
+    docs = load_table(spark, sf_dir, "documents")
+    _refuse_all_pairs(
+        docs, 20_000, "the distributed banded join (dedup_simhash_near)"
+    )
+    rows = D.simhash(docs, bits=64).collect()
+    ids = np.array([int(r.doc_id) for r in rows], dtype=np.int64)
+    hv = np.array([int(r.simhash) for r in rows], dtype=np.int64)
+    order = np.argsort(ids)
+    ids, hv = ids[order], hv[order]
+    n = len(ids)
+    rmax = max(_SHG_RADII)
+    bc = spark.sparkContext.broadcast(hv)
+    # all-pairs Hamming truth (audit side, guarded): row-chunked
+    # across executor tasks; each task XORs its i-chunk against all
+    # j and keeps (i, j>i) pairs within rmax via a 65536-entry
+    # popcount-table gather. Chunk starts are one-int control rows.
+    chunk = 256
+    n_tasks = max(1, (n + chunk - 1) // chunk)
+    starts_df = spark.createDataFrame(
+        [(i,) for i in range(0, n, chunk)], "i0 int"
+    ).repartition(n_tasks)
 
-        def _truth_tasks(batches):
-            import pandas as pd
+    def _truth_tasks(batches):
+        import pandas as pd
 
-            fp = bc.value
-            nn = len(fp)
-            uw = fp.view(np.uint64).view(np.uint16).reshape(nn, 4)
-            v = np.arange(1 << 16, dtype=np.int64)
-            pop16 = np.zeros(1 << 16, dtype=np.uint8)
-            for s in range(16):
-                pop16 += ((v >> s) & 1).astype(np.uint8)
-            for pdf in batches:
-                for i0 in pdf["i0"].tolist():
-                    i1 = min(i0 + chunk, nn)
-                    x = uw[i0:i1, None, :] ^ uw[None, :, :]
-                    h = pop16[x].sum(axis=2, dtype=np.int64)
-                    ii, jj = np.nonzero(h <= rmax)
-                    gi = ii + i0
-                    keep = gi < jj
-                    yield pd.DataFrame(
-                        {
-                            "pa": gi[keep],
-                            "pb": jj[keep],
-                            "h": h[ii[keep], jj[keep]],
-                        }
-                    )
+        fp = bc.value
+        nn = len(fp)
+        uw = fp.view(np.uint64).view(np.uint16).reshape(nn, 4)
+        v = np.arange(1 << 16, dtype=np.int64)
+        pop16 = np.zeros(1 << 16, dtype=np.uint8)
+        for s in range(16):
+            pop16 += ((v >> s) & 1).astype(np.uint8)
+        for pdf in batches:
+            for i0 in pdf["i0"].tolist():
+                i1 = min(i0 + chunk, nn)
+                x = uw[i0:i1, None, :] ^ uw[None, :, :]
+                h = pop16[x].sum(axis=2, dtype=np.int64)
+                ii, jj = np.nonzero(h <= rmax)
+                gi = ii + i0
+                keep = gi < jj
+                yield pd.DataFrame(
+                    {
+                        "pa": gi[keep],
+                        "pb": jj[keep],
+                        "h": h[ii[keep], jj[keep]],
+                    }
+                )
 
-        tp = starts_df.mapInPandas(
-            _truth_tasks, "pa long, pb long, h long"
-        ).collect()
-        tpa = np.array([r.pa for r in tp], dtype=np.int64)
-        tpb = np.array([r.pb for r in tp], dtype=np.int64)
-        tph = np.array([r.h for r in tp], dtype=np.int64)
-        _SHG_STATE[key] = (ids, hv, tpa, tpb, tph)
-    ids, hv, tpa, tpb, tph = _SHG_STATE[key]
+    tp = starts_df.mapInPandas(
+        _truth_tasks, "pa long, pb long, h long"
+    ).collect()
+    tpa = np.array([r.pa for r in tp], dtype=np.int64)
+    tpb = np.array([r.pb for r in tp], dtype=np.int64)
+    tph = np.array([r.h for r in tp], dtype=np.int64)
+    return ids, hv, tpa, tpb, tph
+
+
+@query("dedup_simhash_band_grid", oracle=_shg_oracle())
+def dedup_simhash_band_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+
+    ids, hv, tpa, tpb, tph = _shg_inputs(spark, sf_dir)
     u = hv.view(np.uint64)
     n = len(ids)
     # candidate fan-out per width: one task per (width, band); each

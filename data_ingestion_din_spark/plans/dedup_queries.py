@@ -20,6 +20,7 @@ from data_ingestion_din_spark.functions.hashing import (
     minhash_slot_sql,
 )
 from data_ingestion_din_spark.operators import dedup as D
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -255,24 +256,15 @@ _BANDED_CTES = f"""toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
 # size histogram) — staged once per (SparkContext, sf_dir) like the
 # pHash table (plans/multimodal_queries._phash_table), so consumers pay
 # the signature+banding+verify pipeline once per session, not each.
-_BP_DONE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("banded_pairs")
 def _banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.operators.colocate import session_staged
-
-    return session_staged(
-        _BP_DONE,
-        spark,
-        sf_dir,
-        lambda: D.minhash_banded_pairs(
-            load_table(spark, sf_dir, "documents"),
-            n_hashes=_NB_HASHES,
-            bands=_NB_BANDS,
-            shingle_n=3,
-            threshold=0.5,
-        ),
-    )
+    return D.minhash_banded_pairs(
+        load_table(spark, sf_dir, "documents"),
+        n_hashes=_NB_HASHES,
+        bands=_NB_BANDS,
+        shingle_n=3,
+        threshold=0.5,
+    ).localCheckpoint(eager=True)
 
 
 @query(
@@ -1346,23 +1338,15 @@ def doc_tfidf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _SSW = 20  # window length in tokens
 
+
 # The merged-span table feeds three queries (spans listing, removal,
 # per-lang stats) — staged once per (SparkContext, sf_dir) like the
 # banded-pair table above.
-_SS_DONE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("substring_spans")
 def _substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.operators.colocate import session_staged
-
-    return session_staged(
-        _SS_DONE,
-        spark,
-        sf_dir,
-        lambda: D.duplicated_spans(
-            load_table(spark, sf_dir, "documents"), _SSW
-        ),
-    )
+    return D.duplicated_spans(
+        load_table(spark, sf_dir, "documents"), _SSW
+    ).localCheckpoint(eager=True)
 
 def _win_ctes(
     include_toks: bool = True, w: int = _SSW, prefix: str = ""

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.similarity_queries import (
     _DIMS_UB,
@@ -56,129 +57,109 @@ _GR_GRID = [(4, 1), (8, 1), (8, 4), (16, 4)]
 _GR_L1_MOD = 8  # layer-1 subsample: vec_id % 8 == 0 (the HNSW upper layer)
 _GR_MAXG = max(g for g, _ in _GR_GRID)
 
-# (applicationId, sf_dir) -> checkpointed all-pairs L2 edge list
-# (node, nbr, dist) ranked per node — the guarded audit artifact that
-# graph construction, walk scoring, and the exact-NN truth all read.
-_GR_STATE: dict[tuple[str, str], DataFrame] = {}
 
-
+# Checkpointed all-pairs L2 edge list (node, nbr, dist) ranked per node
+# — the guarded audit artifact that graph construction, walk scoring,
+# and the exact-NN truth all read.
+@staged("graph_edge_table")
 def _gr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestion_din_spark.functions.vectors import quantize
     from data_ingestion_din_spark.operators.dedup import _refuse_all_pairs
 
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _GR_STATE if kk[0] != app]:
-        del _GR_STATE[kk]
-    key = (app, sf_dir)
-    if key not in _GR_STATE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _refuse_all_pairs(
-            emb, 20_000, "LSH/IVF candidate generation + exact top-G"
-        )
-        qv = emb.select("vec_id", quantize(F.col("embedding")).alias("qv"))
-        # the audit-side corpus matrix, bounded by the same guard that
-        # admits the all-pairs construction (≤20k × 64 int64 ≈ 10 MB
-        # control data); per-chunk GEMM against it replaces 25M
-        # interpreted zip_with dots (64 s → ~3 s at sf0.1 — the
-        # SemDeDup per-cluster-GEMM playbook)
-        rows = qv.collect()
-        import numpy as np
+    emb = load_table(spark, sf_dir, "embeddings")
+    _refuse_all_pairs(
+        emb, 20_000, "LSH/IVF candidate generation + exact top-G"
+    )
+    qv = emb.select("vec_id", quantize(F.col("embedding")).alias("qv"))
+    # the audit-side corpus matrix, bounded by the same guard that
+    # admits the all-pairs construction (≤20k × 64 int64 ≈ 10 MB
+    # control data); per-chunk GEMM against it replaces 25M
+    # interpreted zip_with dots (64 s → ~3 s at sf0.1 — the
+    # SemDeDup per-cluster-GEMM playbook)
+    rows = qv.collect()
+    import numpy as np
 
-        ids = np.array([int(r.vec_id) for r in rows], dtype=np.int64)
-        m = np.array([list(r.qv) for r in rows], dtype=np.int64)
-        nsq = (m * m).sum(axis=1)
-        sweep_ids = set(int(i) for i in ids if i < _SWEEP_N)
-        # the routed-insert audit needs full candidate rows for the
-        # appended slice too (its probes are the appended vectors)
-        full_ids = sweep_ids | set(
-            int(i) for i in ids if i % _IVF_INC_MOD == 0
-        )
+    ids = np.array([int(r.vec_id) for r in rows], dtype=np.int64)
+    m = np.array([list(r.qv) for r in rows], dtype=np.int64)
+    nsq = (m * m).sum(axis=1)
+    sweep_ids = set(int(i) for i in ids if i < _SWEEP_N)
+    # the routed-insert audit needs full candidate rows for the
+    # appended slice too (its probes are the appended vectors)
+    full_ids = sweep_ids | set(
+        int(i) for i in ids if i % _IVF_INC_MOD == 0
+    )
 
-        def _topg(batches):
-            import pandas as pd
+    def _topg(batches):
+        import pandas as pd
 
-            for pdf in batches:
-                out = {
-                    "node": [],
-                    "nbr": [],
-                    "dist": [],
-                    "rk": [],
-                    "prk": [],
-                    "bprk": [],
-                    "l1rk": [],
+        for pdf in batches:
+            out = {
+                "node": [],
+                "nbr": [],
+                "dist": [],
+                "rk": [],
+                "prk": [],
+                "bprk": [],
+                "l1rk": [],
+            }
+            a = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
+            an = [int(x) for x in pdf["vec_id"]]
+            g = a @ m.T
+            asq = (a * a).sum(axis=1)
+            d = asq[:, None] + nsq[None, :] - 2 * g
+            for ri, node in enumerate(an):
+                drow = d[ri]
+                order = np.lexsort((ids, drow))
+                order = order[ids[order] != node]
+                keep = (
+                    order
+                    if node in full_ids
+                    else order[:_GR_MAXG]
+                )
+                # NSW insertion audit: rank among PREDECESSORS in
+                # the vec_id insertion order (the nodes already in
+                # the graph when `node` inserts); bprk ranks among
+                # BASE predecessors only (appended slice excluded)
+                # for the frozen-snapshot routed-insert audit
+                pred = order[ids[order] < node][:_GR_MAXG]
+                prks = {int(j): r for r, j in enumerate(pred, start=1)}
+                bmask = (ids[order] < node) & (
+                    ids[order] % _IVF_INC_MOD != 0
+                )
+                bpred = order[bmask][:_GR_MAXG]
+                bprks = {
+                    int(j): r for r, j in enumerate(bpred, start=1)
                 }
-                a = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
-                an = [int(x) for x in pdf["vec_id"]]
-                g = a @ m.T
-                asq = (a * a).sum(axis=1)
-                d = asq[:, None] + nsq[None, :] - 2 * g
-                for ri, node in enumerate(an):
-                    drow = d[ri]
-                    order = np.lexsort((ids, drow))
-                    order = order[ids[order] != node]
-                    keep = (
-                        order
-                        if node in full_ids
-                        else order[:_GR_MAXG]
-                    )
-                    # NSW insertion audit: rank among PREDECESSORS in
-                    # the vec_id insertion order (the nodes already in
-                    # the graph when `node` inserts); bprk ranks among
-                    # BASE predecessors only (appended slice excluded)
-                    # for the frozen-snapshot routed-insert audit
-                    pred = order[ids[order] < node][:_GR_MAXG]
-                    prks = {int(j): r for r, j in enumerate(pred, start=1)}
-                    bmask = (ids[order] < node) & (
-                        ids[order] % _IVF_INC_MOD != 0
-                    )
-                    bpred = order[bmask][:_GR_MAXG]
-                    bprks = {
-                        int(j): r for r, j in enumerate(bpred, start=1)
+                rks = {int(j): r for r, j in enumerate(keep, start=1)}
+                # layer-1 rank: for upper-layer nodes, rank among
+                # the other upper-layer nodes (the HNSW coarse
+                # graph's edge source)
+                l1rks = {}
+                if node % _GR_L1_MOD == 0:
+                    l1 = order[ids[order] % _GR_L1_MOD == 0][
+                        :_GR_MAXG
+                    ]
+                    l1rks = {
+                        int(j): r for r, j in enumerate(l1, start=1)
                     }
-                    rks = {int(j): r for r, j in enumerate(keep, start=1)}
-                    # layer-1 rank: for upper-layer nodes, rank among
-                    # the other upper-layer nodes (the HNSW coarse
-                    # graph's edge source)
-                    l1rks = {}
-                    if node % _GR_L1_MOD == 0:
-                        l1 = order[ids[order] % _GR_L1_MOD == 0][
-                            :_GR_MAXG
-                        ]
-                        l1rks = {
-                            int(j): r for r, j in enumerate(l1, start=1)
-                        }
-                    for j in sorted(
-                        set(rks) | set(prks) | set(bprks) | set(l1rks),
-                        key=lambda j: drow[j],
-                    ):
-                        out["node"].append(node)
-                        out["nbr"].append(int(ids[j]))
-                        out["dist"].append(int(drow[j]))
-                        out["rk"].append(rks.get(j))
-                        out["prk"].append(prks.get(j))
-                        out["bprk"].append(bprks.get(j))
-                        out["l1rk"].append(l1rks.get(j))
-                yield pd.DataFrame(out)
+                for j in sorted(
+                    set(rks) | set(prks) | set(bprks) | set(l1rks),
+                    key=lambda j: drow[j],
+                ):
+                    out["node"].append(node)
+                    out["nbr"].append(int(ids[j]))
+                    out["dist"].append(int(drow[j]))
+                    out["rk"].append(rks.get(j))
+                    out["prk"].append(prks.get(j))
+                    out["bprk"].append(bprks.get(j))
+                    out["l1rk"].append(l1rks.get(j))
+            yield pd.DataFrame(out)
 
-        _GR_STATE[key] = qv.mapInPandas(
-            _topg, "node bigint, nbr bigint, dist bigint, rk int, prk int, bprk int, l1rk int"
-            # lazy: the walk-input collect is the first consumer and
-            # materializes it in the same staging run
-        ).localCheckpoint(eager=False)
-    return _GR_STATE[key]
-
-
-# (applicationId, sf_dir) -> collected walk inputs: adjacency ranked to
-# _GR_MAXG, probe→candidate distances, entry id. Bounded by the SAME
-# ≤20k-row audit guard that admits the all-pairs construction (adj is
-# N×16 rows, pdist is _SWEEP_N×N — control data for this audit family;
-# a production walk keeps both distributed, exactly as the comment
-# above documents). Collected once; every (G, B) config walks in
-# driver Python — pure integer arithmetic, bit-identical to the
-# oracle's unrolled CTEs, with no per-hop job scheduling at all
-# (the per-hop DataFrame walk cost 28 eager jobs ≈ 7 s and lazy
-# checkpoints grew 145 MB task binaries — measured, both rejected).
-_GR_WALK_IN: dict[tuple[str, str], tuple] = {}
+    return qv.mapInPandas(
+        _topg, "node bigint, nbr bigint, dist bigint, rk int, prk int, bprk int, l1rk int"
+        # lazy: the walk-input collect is the first consumer and
+        # materializes it in the same staging run
+    ).localCheckpoint(eager=False)
 
 
 def _seed_beams(probes, entry, pdist):
@@ -194,26 +175,31 @@ def _seed_beams(probes, entry, pdist):
     }
 
 
+# Collected walk inputs: adjacency ranked to _GR_MAXG, probe→candidate
+# distances, entry id. Bounded by the SAME ≤20k-row audit guard that
+# admits the all-pairs construction (adj is N×16 rows, pdist is
+# _SWEEP_N×N — control data for this audit family; a production walk
+# keeps both distributed, exactly as the comment above documents).
+# Collected once; every (G, B) config walks in driver Python — pure
+# integer arithmetic, bit-identical to the oracle's unrolled CTEs, with
+# no per-hop job scheduling at all (the per-hop DataFrame walk cost 28
+# eager jobs ≈ 7 s and lazy checkpoints grew 145 MB task binaries —
+# measured, both rejected).
+@staged("graph_ann_edges")
 def _gr_collected(spark: SparkSession, sf_dir: str):
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _GR_WALK_IN if kk[0] != app]:
-        del _GR_WALK_IN[kk]
-    key = (app, sf_dir)
-    if key not in _GR_WALK_IN:
-        edges = _gr_edges(spark, sf_dir)
-        adj: dict[int, list[int]] = {}
-        for r in edges.filter(F.col("rk") <= _GR_MAXG).collect():
-            adj.setdefault(int(r.node), []).append((int(r.rk), int(r.nbr)))
-        adj = {n: [v for _, v in sorted(e)] for n, e in adj.items()}
-        pdist = {
-            (int(r.node), int(r.nbr)): int(r.dist)
-            for r in edges.filter(F.col("node") < _SWEEP_N).collect()
-        }
-        emb = load_table(spark, sf_dir, "embeddings")
-        entry = int(emb.agg(F.max("vec_id")).first()[0])
-        probes = sorted({n for n, _ in pdist})
-        _GR_WALK_IN[key] = (adj, pdist, entry, probes)
-    return _GR_WALK_IN[key]
+    edges = _gr_edges(spark, sf_dir)
+    adj: dict[int, list[int]] = {}
+    for r in edges.filter(F.col("rk") <= _GR_MAXG).collect():
+        adj.setdefault(int(r.node), []).append((int(r.rk), int(r.nbr)))
+    adj = {n: [v for _, v in sorted(e)] for n, e in adj.items()}
+    pdist = {
+        (int(r.node), int(r.nbr)): int(r.dist)
+        for r in edges.filter(F.col("node") < _SWEEP_N).collect()
+    }
+    emb = load_table(spark, sf_dir, "embeddings")
+    entry = int(emb.agg(F.max("vec_id")).first()[0])
+    probes = sorted({n for n, _ in pdist})
+    return adj, pdist, entry, probes
 
 
 def _gr_beam_walk(
@@ -534,35 +520,27 @@ def similarity_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # binaries of 145 MB were both measured and rejected — see the family
 # header).
 # --------------------------------------------------------------------------
-_GR_NSW_IN: dict[tuple[str, str], dict] = {}
-
-
+@staged("graph_nsw_adjacency")
 def _gr_nsw_collected(spark: SparkSession, sf_dir: str) -> dict:
     """Per-degree NSW adjacency (out-edges to the G nearest
     predecessors + symmetric back-links), from the staged edge table's
     predecessor-rank column."""
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _GR_NSW_IN if kk[0] != app]:
-        del _GR_NSW_IN[kk]
-    key = (app, sf_dir)
-    if key not in _GR_NSW_IN:
-        edges = _gr_edges(spark, sf_dir)
-        pred = [
-            (int(r.node), int(r.nbr), int(r.prk))
-            for r in edges.filter(F.col("prk") <= _GR_MAXG)
-            .select("node", "nbr", "prk")
-            .collect()
-        ]
-        by_g: dict[int, dict[int, set]] = {}
-        for g in sorted({g for g, _ in _GR_GRID}):
-            adj: dict[int, set] = {}
-            for node, nbr, prk in pred:
-                if prk <= g:
-                    adj.setdefault(node, set()).add(nbr)
-                    adj.setdefault(nbr, set()).add(node)
-            by_g[g] = adj
-        _GR_NSW_IN[key] = by_g
-    return _GR_NSW_IN[key]
+    edges = _gr_edges(spark, sf_dir)
+    pred = [
+        (int(r.node), int(r.nbr), int(r.prk))
+        for r in edges.filter(F.col("prk") <= _GR_MAXG)
+        .select("node", "nbr", "prk")
+        .collect()
+    ]
+    by_g: dict[int, dict[int, set]] = {}
+    for g in sorted({g for g, _ in _GR_GRID}):
+        adj: dict[int, set] = {}
+        for node, nbr, prk in pred:
+            if prk <= g:
+                adj.setdefault(node, set()).add(nbr)
+                adj.setdefault(nbr, set()).add(node)
+        by_g[g] = adj
+    return by_g
 
 
 def _gr_nsw_beam_walk(
@@ -2080,9 +2058,9 @@ _GR_L2_MOD = 64  # layer-2 subsample (over layer 1's % 8)
 _GR_L2_G, _GR_L2_B, _GR_L2_H = 4, 1, 2
 _GR_L12_H = 2  # halved seeded layer-1 walk in the layer2 arm
 _GR_HL_HS = (1, 2, 6)
-_GR_L2_IN: dict[tuple[str, str], dict] = {}
 
 
+@staged("graph_l2_adjacency")
 def _gr_l2_collected(spark: SparkSession, sf_dir: str) -> dict[int, list]:
     """Directed layer-2 kNN adjacency (top-G2 among %64 nodes), built
     from the quantized vectors in driver Python — (n/64)^2 exact
@@ -2090,33 +2068,27 @@ def _gr_l2_collected(spark: SparkSession, sf_dir: str) -> dict[int, list]:
     d CTE, under the family's guarded-audit-artifact disposition."""
     import math
 
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _GR_L2_IN if kk[0] != app]:
-        del _GR_L2_IN[kk]
-    key = (app, sf_dir)
-    if key not in _GR_L2_IN:
-        emb = load_table(spark, sf_dir, "embeddings")
-        rows = (
-            emb.filter(F.col("vec_id") % _GR_L2_MOD == 0)
-            .select("vec_id", "embedding")
-            .collect()
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = (
+        emb.filter(F.col("vec_id") % _GR_L2_MOD == 0)
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    q = {
+        int(r.vec_id): [
+            int(math.floor(float(x) * 1000000.0)) for x in r.embedding
+        ]
+        for r in rows
+    }
+    adj = {}
+    for a, va in q.items():
+        ds = sorted(
+            (sum((x - y) * (x - y) for x, y in zip(va, vb)), b)
+            for b, vb in q.items()
+            if b != a
         )
-        q = {
-            int(r.vec_id): [
-                int(math.floor(float(x) * 1000000.0)) for x in r.embedding
-            ]
-            for r in rows
-        }
-        adj = {}
-        for a, va in q.items():
-            ds = sorted(
-                (sum((x - y) * (x - y) for x, y in zip(va, vb)), b)
-                for b, vb in q.items()
-                if b != a
-            )
-            adj[a] = [b for _, b in ds[: _GR_L2_G]]
-        _GR_L2_IN[key] = adj
-    return _GR_L2_IN[key]
+        adj[a] = [b for _, b in ds[: _GR_L2_G]]
+    return adj
 
 
 def _gr_hl_oracle() -> str:

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from data_ingestion_din_spark.functions.analysis import tokens
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.text_pipeline import _TOKS_SQL
 from data_ingestion_din_spark.sources.tables import load_table
@@ -100,7 +101,7 @@ def doc_ngram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bi_perdoc(spark, sf_dir).orderBy("doc_id")
 
 
-# Per-session staged per-doc bigram score table — the _TRI_STATE/_P5_STATE
+# Per-session staged per-doc bigram score table — the _tri_comps/_p5_comps
 # convention one order further down: the trained bigram LM is a staged
 # artifact at production, and TWO queries (doc_ngram_perplexity itself and
 # doc_lm_interp_ab's bi_nll baseline) read the same per-doc rollup instead
@@ -108,19 +109,9 @@ def doc_ngram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checkpoint: the first consumer's action materializes it — in the
 # bench that is the dedicated lm_bi_perdoc setup row (VERDICT r14 ask
 # #3), so the build cost is a visible setup row, not a hidden cold run.
-_BI_STATE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("lm_bi_perdoc")
 def _bi_perdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _BI_STATE if kk[0] != app]:
-        del _BI_STATE[kk]
-    key = (app, sf_dir)
-    if key not in _BI_STATE:
-        _BI_STATE[key] = _bi_perdoc_build(spark, sf_dir).localCheckpoint(
-            eager=False
-        )
-    return _BI_STATE[key]
+    return _bi_perdoc_build(spark, sf_dir).localCheckpoint(eager=False)
 
 
 def _bi_perdoc_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -296,27 +287,17 @@ def _ppl3_q_sql(lams: tuple[int, int, int]) -> str:
     )
 
 
-# (applicationId, sf_dir) -> scored trigram component DF, lazily
-# localCheckpointed — the _P5_STATE convention one order down: the
+# The scored trigram component DF, lazily localCheckpointed — the
+# _p5_comps convention one order down: the
 # trained component tables are staged artifacts at production, and
 # THREE queries (doc_trigram_perplexity, doc_lm_interp_ab,
 # doc_lm_smoothing_ab) read the same scored pass instead of each
 # rebuilding the tokenize + three-gram-table + four-join pipeline. In
 # the bench the dedicated lm_tri_comps setup row pays the build
 # (VERDICT r14 ask #3), so consumer entries time the serve path.
-_TRI_STATE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("lm_tri_comps")
 def _tri_comps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _TRI_STATE if kk[0] != app]:
-        del _TRI_STATE[kk]
-    key = (app, sf_dir)
-    if key not in _TRI_STATE:
-        _TRI_STATE[key] = _tri_comps_build(spark, sf_dir).localCheckpoint(
-            eager=False
-        )
-    return _TRI_STATE[key]
+    return _tri_comps_build(spark, sf_dir).localCheckpoint(eager=False)
 
 
 def _tri_comps_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -947,20 +928,12 @@ def _ppl5_q_sql(lams: tuple[int, int, int, int, int]) -> str:
     )
 
 
-# (applicationId, sf_dir) -> scored component DF, localCheckpointed:
-# the trained n-gram tables are staged artifacts at production (the
-# bigram family's contract), and BOTH 5-gram queries read one pass
-_P5_STATE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The scored component DF, localCheckpointed: the trained n-gram tables
+# are staged artifacts at production (the bigram family's contract), and
+# BOTH 5-gram queries read one pass
+@staged("lm_p5_comps")
 def _p5_comps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of the ``comps5`` CTE (session-staged)."""
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _P5_STATE if kk[0] != app]:
-        del _P5_STATE[kk]
-    key = (app, sf_dir)
-    if key in _P5_STATE:
-        return _P5_STATE[key]
     docs = load_table(spark, sf_dir, "documents")
     t0 = docs.select("doc_id", tokens(F.col("text")).alias("t"))
     two = 1 << _PPL5_S
@@ -1015,7 +988,7 @@ def _p5_comps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("tok_n")
     )
     tot = trtok.agg(F.count(F.lit(1)).cast("bigint").alias("tt"))
-    out = (
+    return (
         g5.join(c5, ["h1", "h2", "h3", "h4", "x"], "left")
         .join(x5, ["h1", "h2", "h3", "h4"], "left")
         .join(
@@ -1082,8 +1055,6 @@ def _p5_comps(spark: SparkSession, sf_dir: str) -> DataFrame:
         # that is the dedicated lm_p5_comps setup row, so the build cost
         # is priced visibly and consumers time the serve path
     ).localCheckpoint(eager=False)
-    _P5_STATE[key] = out
-    return out
 
 
 def _ppl5_q_col(lams: tuple[int, int, int, int, int]):

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64, h64_sql
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.binary import decode_media
 from data_ingestion_din_spark.sources.tables import load_table
@@ -215,26 +216,14 @@ def _media_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_frame(load_table(spark, sf_dir, "documents"))
 
 
-# (applicationId, sf_dir) -> checkpointed pHash DataFrame. The Arrow
-# boundary (phash_media over the whole corpus) runs once per session,
-# not once per query invocation — media_phash_near_dup, _clusters and
-# _recall all read the same checkpointed table (the _TSM_DONE/_SCF_DONE
-# staging pattern, holding the DF instead of a path: localCheckpoint
-# blocks live for the SparkContext lifetime, and the app-id key expires
-# the entry with the context).
-_PH_DONE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The checkpointed pHash table. The Arrow boundary (phash_media over the
+# whole corpus) runs once per session, not once per query invocation —
+# media_phash_near_dup, _clusters and _recall all read the same table.
+@staged("phash_table")
 def _phash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.operators.colocate import session_staged
     from data_ingestion_din_spark.sources.binary import phash_media
 
-    return session_staged(
-        _PH_DONE,
-        spark,
-        sf_dir,
-        lambda: phash_media(_media_binary(spark, sf_dir)),
-    )
+    return phash_media(_media_binary(spark, sf_dir)).localCheckpoint(eager=True)
 
 
 def _phash_pairs(ph: DataFrame) -> DataFrame:

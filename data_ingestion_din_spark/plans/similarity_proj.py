@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64, h64_sql
 from data_ingestion_din_spark.functions.vectors import cosine_exact_sql
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.similarity_queries import (
     _DIMS_UB,
@@ -577,8 +578,8 @@ def _pqs_oracle() -> str:
     )
 
 
-# (applicationId, sf_dir) -> (sq, setop, probes) — the staircase space,
-# its guarded exact truth and the collected probe vectors are shared by
+# (sq, setop, probes) — the staircase space, its guarded exact truth and
+# the collected probe vectors are shared by
 # similarity_pq_subspace_ab AND similarity_pq_opq_ab (both A/Bs isolate
 # one PQ design knob on the SAME planted-variance space against the
 # SAME transform-invariant truth), so they are staged once per session
@@ -586,38 +587,9 @@ def _pqs_oracle() -> str:
 # staging as its own setup row. The baseline arm (PQ trained on the
 # untransformed sq — "contiguous" in the subspace A/B, "identity" in
 # the OPQ A/B) is byte-identical between the two queries, so its
-# trained (codes, codebook) pair is staged under the same key.
-_PQS_STATE: dict[tuple[str, str], tuple] = {}
-_PQS_BASE_STATE: dict[tuple[str, str], tuple] = {}
-
-
+# trained (codes, codebook) pair is staged too.
+@staged("pqs_space")
 def _pqs_space(spark: SparkSession, sf_dir: str):
-    """Session-staged ``(sq, setop, probes)`` — see _PQS_STATE above."""
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _PQS_STATE if kk[0] != app]:
-        del _PQS_STATE[kk]
-    key = (app, sf_dir)
-    if key not in _PQS_STATE:
-        _PQS_STATE[key] = _pqs_space_build(spark, sf_dir)
-    return _PQS_STATE[key]
-
-
-def _pqs_base_trained(spark: SparkSession, sf_dir: str, src: DataFrame):
-    """Session-staged baseline-arm PQ training over the staircase space
-    ``src`` (= the staged sq): (checkpointed codes, codebooks)."""
-    from data_ingestion_din_spark.operators.similarity import pq_assign_qv
-
-    app = spark.sparkContext.applicationId
-    for kk in [kk for kk in _PQS_BASE_STATE if kk[0] != app]:
-        del _PQS_BASE_STATE[kk]
-    key = (app, sf_dir)
-    if key not in _PQS_BASE_STATE:
-        codes, cb = pq_assign_qv(src, n_sub=4, k=4, iters=1)
-        _PQS_BASE_STATE[key] = (codes.localCheckpoint(eager=True), cb)
-    return _PQS_BASE_STATE[key]
-
-
-def _pqs_space_build(spark: SparkSession, sf_dir: str):
     """Staircase-scaled quantized space, its guarded exact truth and the
     driver-side probe vectors. Returns ``(sq, setop, probes)``."""
     from data_ingestion_din_spark.functions.vectors import quantize
@@ -671,6 +643,17 @@ def _pqs_space_build(spark: SparkSession, sf_dir: str):
         if pid < _SWEEP_N
     }
     return sq, setop, probes
+
+
+@staged("pqs_base_arm")
+def _pqs_base_trained(spark: SparkSession, sf_dir: str):
+    """Baseline-arm PQ training over the staged staircase space sq:
+    (checkpointed codes, codebooks)."""
+    from data_ingestion_din_spark.operators.similarity import pq_assign_qv
+
+    src = _pqs_space(spark, sf_dir)[0]
+    codes, cb = pq_assign_qv(src, n_sub=4, k=4, iters=1)
+    return codes.localCheckpoint(eager=True), cb
 
 
 def _pq_arm_rows(
@@ -799,7 +782,7 @@ def similarity_pq_subspace_ab(
         F.expr(f"transform({perm_lit}, i -> qv[i - 1])").alias("qv"),
     )
     pvb = {k: [v[i - 1] for i in _PQS_PERM] for k, v in probes.items()}
-    base = _pqs_base_trained(spark, sf_dir, sq)
+    base = _pqs_base_trained(spark, sf_dir)
     out = None
     for label, src, pv, trained in (
         ("contiguous", sq, probes, base),
@@ -898,7 +881,7 @@ def similarity_pq_opq_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         k: [s * v[p - 1] for p, s in zip(_OPQ_PERM, _OPQ_SIGN)]
         for k, v in probes.items()
     }
-    base = _pqs_base_trained(spark, sf_dir, sq)
+    base = _pqs_base_trained(spark, sf_dir)
     out = None
     for label, src, pv, trained in (
         ("identity", sq, probes, base),

@@ -25,10 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.text import clean_text_sql
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_core import (
     _await_or_raise,
-    _evict_dead,
     _latest_epoch_rows,
     _run_split_landings,
 )
@@ -38,28 +38,8 @@ from data_ingestion_din_spark.streaming.ingest import start_ingest_stream
 
 # One stream run per (SparkContext lifetime, sf_dir) — the corpus dir is
 # the durable artifact; reruns of the query in the same session read it.
-_INGEST_DONE: set[tuple[str, str]] = set()
-
-def _ingested_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        app_dir_path,
-        fresh_app_dir,
-    )
-
-    # cache-hit revalidation derives the path from the SAME helper that
-    # materializes it, so a layout change cannot desynchronize the two
-    corpus = os.path.join(
-        app_dir_path(spark, sf_dir, "spark_graft_stream"), "corpus"
-    )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_INGEST_DONE, key[0])
-    if key in _INGEST_DONE:
-        if _dir_ok(corpus):
-            return corpus
-        _INGEST_DONE.discard(key)  # staged corpus vanished; re-ingest
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_stream")
+@staged("ingest_corpus")
+def _ingested_corpus_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     corpus = os.path.join(base, "corpus")
     landing = os.path.join(base, "landing")
     ckpt = os.path.join(base, "ckpt")
@@ -80,7 +60,6 @@ def _ingested_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     _await_or_raise(
         start_ingest_stream(spark, os.path.join(landing, "*"), corpus, ckpt)
     )
-    _INGEST_DONE.add(key)
     return corpus
 
 
@@ -147,23 +126,13 @@ _WORDSET_FP_SQL = (
     "md5(array_to_string(list_sort(list_distinct("
     "list_filter(string_split(text, ' '), x -> x <> ''))), ' '))"
 )
-_FIRST_SEEN_DONE: dict[tuple[str, str], str] = {}
 
 
-def _first_seen_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_FIRST_SEEN_DONE, key[0])
-    if key in _FIRST_SEEN_DONE:
-        from data_ingestion_din_spark.operators.colocate import _dir_ok
-
-        if _dir_ok(_FIRST_SEEN_DONE[key]):
-            return _FIRST_SEEN_DONE[key]
-        del _FIRST_SEEN_DONE[key]  # staged output vanished; re-run
-    from data_ingestion_din_spark.operators.colocate import fresh_app_dir
+@staged("first_seen_landings")
+def _first_seen_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     from data_ingestion_din_spark.operators.dedup import keep_first_by
     from data_ingestion_din_spark.streaming.stateful import first_seen_stream
 
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_firstseen")
     landing = os.path.join(base, "landing")
     ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
@@ -202,7 +171,6 @@ def _first_seen_out_dir(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(landing, f"b{i}")
         )
         run_once()
-    _FIRST_SEEN_DONE[key] = out
     return out
 
 
@@ -245,21 +213,10 @@ def streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dropped as late and the exact batch answer is the correct output.
 # --------------------------------------------------------------------------
 _SJOIN_WINDOW_US = 3_600_000_000  # 1 hour
-_STREAM_JOIN_DONE: dict[tuple[str, str], str] = {}
 
 
-def _stream_join_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_STREAM_JOIN_DONE, key[0])
-    if key in _STREAM_JOIN_DONE:
-        from data_ingestion_din_spark.operators.colocate import _dir_ok
-
-        if _dir_ok(_STREAM_JOIN_DONE[key]):
-            return _STREAM_JOIN_DONE[key]
-        del _STREAM_JOIN_DONE[key]
-    from data_ingestion_din_spark.operators.colocate import fresh_app_dir
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sjoin")
+@staged("stream_join_landings")
+def _stream_join_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     landing_c = os.path.join(base, "clicks")
     landing_e = os.path.join(base, "errors")
     ckpt = os.path.join(base, "ckpt")
@@ -323,7 +280,6 @@ def _stream_join_out_dir(spark: SparkSession, sf_dir: str) -> str:
         "overwrite"
     ).parquet(os.path.join(landing_e, "b1"))
     run_once()
-    _STREAM_JOIN_DONE[key] = out
     return out
 
 
@@ -392,21 +348,10 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: identical state/shuffle shape to the inner join — both sides
 # shuffle on user_id, state bounded by the watermark horizon.
 # --------------------------------------------------------------------------
-_SJO_DONE: dict[tuple[str, str], str] = {}
 
 
-def _sjo_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SJO_DONE, key[0])
-    if key in _SJO_DONE:
-        from data_ingestion_din_spark.operators.colocate import _dir_ok
-
-        if _dir_ok(_SJO_DONE[key]):
-            return _SJO_DONE[key]
-        del _SJO_DONE[key]
-    from data_ingestion_din_spark.operators.colocate import fresh_app_dir
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sjoin_outer")
+@staged("sjoin_outer_landings")
+def _sjo_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     landing_c = os.path.join(base, "clicks")
     landing_e = os.path.join(base, "errors")
     ckpt = os.path.join(base, "ckpt")
@@ -481,7 +426,6 @@ def _sjo_out_dir(spark: SparkSession, sf_dir: str) -> str:
         os.path.join(landing_c, "b1")
     )
     run_once()
-    _SJO_DONE[key] = out
     return out
 
 
@@ -558,21 +502,10 @@ def streaming_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # first hash run IS the probe: < vs <= differ by any error exactly at
 # the watermark).
 # --------------------------------------------------------------------------
-_SJF_DONE: dict[tuple[str, str], str] = {}
 
 
-def _sjf_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SJF_DONE, key[0])
-    if key in _SJF_DONE:
-        from data_ingestion_din_spark.operators.colocate import _dir_ok
-
-        if _dir_ok(_SJF_DONE[key]):
-            return _SJF_DONE[key]
-        del _SJF_DONE[key]
-    from data_ingestion_din_spark.operators.colocate import fresh_app_dir
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sjoin_full")
+@staged("sjoin_full_landings")
+def _sjf_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     landing_c = os.path.join(base, "clicks")
     landing_e = os.path.join(base, "errors")
     ckpt = os.path.join(base, "ckpt")
@@ -647,7 +580,6 @@ def _sjf_out_dir(spark: SparkSession, sf_dir: str) -> str:
         os.path.join(landing_c, "b1")
     )
     run_once()
-    _SJF_DONE[key] = out
     return out
 
 
@@ -728,23 +660,12 @@ def streaming_stream_full_outer_join(
 # --------------------------------------------------------------------------
 _SESSION_GAP = "30 minutes"
 _SESSION_GAP_US = 1_800_000_000
-_SESSION_WIN_DONE: dict[tuple[str, str], str] = {}
 
 
-def _session_windows_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SESSION_WIN_DONE, key[0])
-    if key in _SESSION_WIN_DONE:
-        from data_ingestion_din_spark.operators.colocate import _dir_ok
-
-        if _dir_ok(_SESSION_WIN_DONE[key]):
-            return _SESSION_WIN_DONE[key]
-        del _SESSION_WIN_DONE[key]
+@staged("session_window_landings")
+def _session_windows_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     from pyspark.sql.window import Window as W
 
-    from data_ingestion_din_spark.operators.colocate import fresh_app_dir
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sesswin")
     landing = os.path.join(base, "landing")
     ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
@@ -823,7 +744,6 @@ def _session_windows_out_dir(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(landing, f"b{i}")
         )
         run_once()
-    _SESSION_WIN_DONE[key] = out
     return out
 
 
@@ -898,21 +818,10 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the exact shape RocksDB state stores hold at production fan-in.
 # --------------------------------------------------------------------------
 _DDW_DELAY_DAYS = 10
-_DDW_DONE: dict[tuple[str, str], str] = {}
 
 
-def _ddw_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_DDW_DONE, key[0])
-    if key in _DDW_DONE:
-        from data_ingestion_din_spark.operators.colocate import _dir_ok
-
-        if _dir_ok(_DDW_DONE[key]):
-            return _DDW_DONE[key]
-        del _DDW_DONE[key]
-    from data_ingestion_din_spark.operators.colocate import fresh_app_dir
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_ddw")
+@staged("dedup_watermark_landings")
+def _ddw_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     landing = os.path.join(base, "landing")
     ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
@@ -951,7 +860,6 @@ def _ddw_out_dir(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(landing, f"b{i}")
         )
         run_once()
-    _DDW_DONE[key] = out
     return out
 
 
@@ -1048,7 +956,6 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 # able open-rows seed join; history is touched only by the equi-join
 # on (user_id, version) at read time.
 # --------------------------------------------------------------------------
-_SCD2S_DONE: dict[tuple[str, str], str] = {}
 
 
 def _scd2_processor(out: str):
@@ -1160,20 +1067,8 @@ def _scd2_processor(out: str):
     return _process
 
 
-def _scd2s_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SCD2S_DONE, key[0])
-    if key in _SCD2S_DONE:
-        if _dir_ok(_SCD2S_DONE[key]):
-            return _SCD2S_DONE[key]
-        del _SCD2S_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_scd2s")
+@staged("scd2_stream_landings")
+def _scd2s_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1193,7 +1088,6 @@ def _scd2s_out_dir(spark: SparkSession, sf_dir: str) -> str:
         ],
         _scd2_processor(out),
     )
-    _SCD2S_DONE[key] = out
     return out
 
 
@@ -1233,7 +1127,6 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # winners + an equi-join against the delta history; the full snapshot
 # is never rewritten per batch — the write is O(keys touched).
 # --------------------------------------------------------------------------
-_SNAP_DONE: dict[tuple[str, str], str] = {}
 
 
 def _snapshot_processor(out: str):
@@ -1276,20 +1169,8 @@ def _snapshot_processor(out: str):
     return _process
 
 
-def _snap_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SNAP_DONE, key[0])
-    if key in _SNAP_DONE:
-        if _dir_ok(_SNAP_DONE[key]):
-            return _SNAP_DONE[key]
-        del _SNAP_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_snap")
+@staged("snapshot_landings")
+def _snap_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1303,7 +1184,6 @@ def _snap_out_dir(spark: SparkSession, sf_dir: str) -> str:
         [ev.filter(F.col("event_id") % 2 == p) for p in (0, 1)],
         _snapshot_processor(out),
     )
-    _SNAP_DONE[key] = out
     return out
 
 
@@ -1341,7 +1221,6 @@ def streaming_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # only scanned for touched keys (left-semi), the Delta MERGE-on-read
 # shape.
 # --------------------------------------------------------------------------
-_CDCM_DONE: dict[tuple[str, str], str] = {}
 
 
 def _cdc_merge_processor(out: str):
@@ -1400,21 +1279,10 @@ def _cdc_merge_processor(out: str):
     return _process
 
 
-def _cdcm_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
+@staged("cdcm_landings")
+def _cdcm_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     from data_ingestion_din_spark.plans.events_ext import _CDC_SPLIT
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_CDCM_DONE, key[0])
-    if key in _CDCM_DONE:
-        if _dir_ok(_CDCM_DONE[key]):
-            return _CDCM_DONE[key]
-        del _CDCM_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_cdcm")
     out = os.path.join(base, "out")
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1435,7 +1303,6 @@ def _cdcm_out_dir(spark: SparkSession, sf_dir: str) -> str:
         ],
         _cdc_merge_processor(out),
     )
-    _CDCM_DONE[key] = out
     return out
 
 
@@ -1514,7 +1381,6 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # canonical Structured Streaming shape; state is bounded by the delay
 # horizon (the trade this grid prices), shuffle keyed on the window.
 # --------------------------------------------------------------------------
-_SWL_DONE: dict[tuple[str, str], str] = {}
 _SWL_WIN_US = 300_000_000  # 5-minute tumbling window
 _SWL_D1_MS = 86_400_000  # 1 day
 _SWL_D2_MS = 864_000_000  # 10 days
@@ -1532,19 +1398,8 @@ def _swl_delay_ms(label: str, max_odd_us: int) -> int:
     return max_ms - floor5 + _SWL_D3_BASE_MS
 
 
-def _swl_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SWL_DONE, key[0])
-    if key in _SWL_DONE:
-        if _dir_ok(_SWL_DONE[key]):
-            return _SWL_DONE[key]
-        del _SWL_DONE[key]
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_swl")
+@staged("swl_landings")
+def _swl_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     landing = os.path.join(base, "landing")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
@@ -1599,8 +1454,7 @@ def _swl_out_dir(spark: SparkSession, sf_dir: str) -> str:
                 os.path.join(lnd, f"b{i}")
             )
             run_once()
-    _SWL_DONE[key] = os.path.join(base, "out")
-    return _SWL_DONE[key]
+    return os.path.join(base, "out")
 
 
 def _swl_oracle() -> str:
@@ -1754,7 +1608,6 @@ def streaming_watermark_lateness_grid(
 # WITH an error history (never the corpus), and attributed clicks are
 # written once each — O(batch) output per landing.
 # --------------------------------------------------------------------------
-_ASOFS_DONE: dict[tuple[str, str], str] = {}
 
 
 def _asof_processor(out: str):
@@ -1864,20 +1717,8 @@ def _asof_processor(out: str):
     return _process
 
 
-def _asofs_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_ASOFS_DONE, key[0])
-    if key in _ASOFS_DONE:
-        if _dir_ok(os.path.join(_ASOFS_DONE[key], "clicks")):
-            return _ASOFS_DONE[key]
-        del _ASOFS_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_asofs")
+@staged("asof_stream_landings")
+def _asofs_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1897,7 +1738,6 @@ def _asofs_out_dir(spark: SparkSession, sf_dir: str) -> str:
         ],
         _asof_processor(out),
     )
-    _ASOFS_DONE[key] = out
     return out
 
 

@@ -7,8 +7,10 @@ gates), streaming_sketches (maintained sketch state + dq-at-ingest
 judges) — after the flat 5.5k-line module's helper namespace caused a
 silent prefix-shadowing bug (r10: a later ``_sbg_*`` definition replaced
 the BPE gate's helper). This module holds the pieces every family
-shares: cache eviction, the awaitTermination guard, the multi-restart
-landing harness, and the epoch-keyed state reader.
+shares: the awaitTermination guard, the multi-restart landing harness,
+and the epoch-keyed state reader. Session staging of the landings (one
+run per session, revalidated, stale dirs cleaned) is the registry in
+operators/colocate.staged.
 tests/test_module_hygiene.py asserts helper prefixes stay unique per
 module.
 """
@@ -21,15 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.sources.tables import load_table
-
-def _evict_dead(cache, app: str) -> None:
-    """Drop cache entries from stopped SparkContexts — the session_staged
-    eviction idiom applied to the PATH caches too. The values are short
-    strings, but unbounded growth across in-process session restarts is
-    the same leak the DataFrame cache was given eviction for."""
-    for k in [k for k in cache if k[0] != app]:
-        cache.discard(k) if isinstance(cache, set) else cache.pop(k)
-
 
 
 def _await_or_raise(q, timeout_sec: int = 240) -> None:

@@ -14,12 +14,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_indexes import (
     _SII_K,
 )
 from data_ingestion_din_spark.plans.streaming_core import (
-    _evict_dead,
     _run_doc_parity_landings,
     _run_split_landings,
 )
@@ -54,7 +54,6 @@ from data_ingestion_din_spark.sources.tables import load_table
 # is genuinely small. Same rule as _minhash_index_processor below:
 # no forced broadcast on any state-side join.
 # --------------------------------------------------------------------------
-_SCF_DONE: dict[tuple[str, str], str] = {}
 
 
 def _funnel_processor(out: str, fp_state: str, lang_state: str):
@@ -237,26 +236,13 @@ def _funnel_processor(out: str, fp_state: str, lang_state: str):
     return _process
 
 
-def _scf_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SCF_DONE, key[0])
-    if key in _SCF_DONE:
-        if _dir_ok(_SCF_DONE[key]):
-            return _SCF_DONE[key]
-        del _SCF_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_scf")
+@staged("curation_funnel_landings")
+def _scf_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _funnel_processor(
         out, os.path.join(base, "state_fps"), os.path.join(base, "state_lang")
     )
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SCF_DONE[key] = out
     return out
 
 
@@ -395,7 +381,6 @@ def streaming_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hint). Per landing: one token shuffle for the per-doc sums.
 # --------------------------------------------------------------------------
 _SQG_K = 400
-_SQG_DONE: dict[tuple[str, str], str] = {}
 
 
 def _quality_gate_processor(out: str, vocab_state: str, k: int = _SQG_K):
@@ -474,24 +459,11 @@ def _quality_gate_processor(out: str, vocab_state: str, k: int = _SQG_K):
     return _process
 
 
-def _sqg_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SQG_DONE, key[0])
-    if key in _SQG_DONE:
-        if _dir_ok(_SQG_DONE[key]):
-            return _SQG_DONE[key]
-        del _SQG_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sqg")
+@staged("quality_gate_landings")
+def _sqg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _quality_gate_processor(out, os.path.join(base, "vocab"))
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SQG_DONE[key] = out
     return out
 
 
@@ -557,7 +529,6 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vocab); the corpus-growing verdicts are append-only. Per landing: one
 # gram-explode shuffle to (doc, bucket) counts.
 # --------------------------------------------------------------------------
-_SDG_DONE: dict[tuple[str, str], str] = {}
 
 
 def _dsir_gate_processor(out: str, ratio_state: str):
@@ -707,20 +678,8 @@ def _dsir_gate_processor(out: str, ratio_state: str):
     return _process
 
 
-def _sdg_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SDG_DONE, key[0])
-    if key in _SDG_DONE:
-        if _dir_ok(_SDG_DONE[key]):
-            return _SDG_DONE[key]
-        del _SDG_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sdg")
+@staged("dsir_gate_landings")
+def _sdg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _dsir_gate_processor(out, os.path.join(base, "ratio"))
     docs = load_table(spark, sf_dir, "documents").select(
@@ -733,7 +692,6 @@ def _sdg_out_dir(spark: SparkSession, sf_dir: str) -> str:
         [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _process,
     )
-    _SDG_DONE[key] = out
     return out
 
 
@@ -844,7 +802,6 @@ def streaming_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the doc-word ↔ encoded-vocab equi-join (NO broadcast hint — the
 # vocabulary grows with the corpus, the forbidden class).
 # --------------------------------------------------------------------------
-_SBG_DONE: dict[tuple[str, str], str] = {}
 
 
 def _bpe_gate_processor(out: str, merges_state: str, steps: int = 4):
@@ -947,24 +904,11 @@ def _bpe_gate_processor(out: str, merges_state: str, steps: int = 4):
     return _process
 
 
-def _sbg_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SBG_DONE, key[0])
-    if key in _SBG_DONE:
-        if _dir_ok(_SBG_DONE[key]):
-            return _SBG_DONE[key]
-        del _SBG_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sbg")
+@staged("bpe_gate_landings")
+def _sbg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _bpe_gate_processor(out, os.path.join(base, "merges"))
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SBG_DONE[key] = out
     return out
 
 
@@ -1038,7 +982,6 @@ def streaming_bpe_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash parity proves the frozen shingle set survived the checkpointed
 # restart and landing 2 was gated by landing 1's benchmark snapshot.
 # --------------------------------------------------------------------------
-_SDC_DONE: dict[tuple[str, str], str] = {}
 
 
 def _decontam_gate_processor(out: str, shingle_state: str, n: int = 8):
@@ -1112,22 +1055,10 @@ def _decontam_gate_processor(out: str, shingle_state: str, n: int = 8):
     return _process
 
 
-def _sdc_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SDC_DONE, key[0])
-    if key in _SDC_DONE:
-        if _dir_ok(_SDC_DONE[key]):
-            return _SDC_DONE[key]
-        del _SDC_DONE[key]
-
+@staged("decontam_gate_landings")
+def _sdc_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     from data_ingestion_din_spark.plans.curation_queries import _DC_N
 
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sdc")
     out = os.path.join(base, "out")
     # n keyed to the SAME constant the oracle interpolates — retuning
     # _DC_N moves both sides together
@@ -1135,7 +1066,6 @@ def _sdc_out_dir(spark: SparkSession, sf_dir: str) -> str:
         out, os.path.join(base, "shingles"), n=_DC_N
     )
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SDC_DONE[key] = out
     return out
 
 
@@ -1212,7 +1142,6 @@ def streaming_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: per landing, O(batch × k·dims) routing + O(in-cell candidate
 # pairs) dot products — candidate generation is cell-local everywhere.
 # --------------------------------------------------------------------------
-_SSD_DONE: dict[tuple[str, str], str] = {}
 
 
 def _semdedup_gate_processor(
@@ -1356,20 +1285,8 @@ def _semdedup_gate_processor(
     return _process
 
 
-def _ssd_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SSD_DONE, key[0])
-    if key in _SSD_DONE:
-        if _dir_ok(_SSD_DONE[key]):
-            return _SSD_DONE[key]
-        del _SSD_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_ssd")
+@staged("semdedup_gate_landings")
+def _ssd_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -1383,7 +1300,6 @@ def _ssd_out_dir(spark: SparkSession, sf_dir: str) -> str:
             out, os.path.join(base, "cents"), os.path.join(base, "members")
         ),
     )
-    _SSD_DONE[key] = out
     return out
 
 
@@ -1485,7 +1401,6 @@ def streaming_semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verdict is a scan-local predicate. Train is keyed on PRIOR-EPOCH ROWS
 # so a replayed training epoch retrains identically.
 # --------------------------------------------------------------------------
-_STG_DONE: dict[tuple[str, str], str] = {}
 
 
 def _tmix_gate_processor(out: str, rate_state: str):
@@ -1570,20 +1485,8 @@ def _tmix_gate_processor(out: str, rate_state: str):
     return _process
 
 
-def _stg_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_STG_DONE, key[0])
-    if key in _STG_DONE:
-        if _dir_ok(_STG_DONE[key]):
-            return _STG_DONE[key]
-        del _STG_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_stg")
+@staged("tmix_gate_landings")
+def _stg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     _run_split_landings(
@@ -1593,7 +1496,6 @@ def _stg_out_dir(spark: SparkSession, sf_dir: str) -> str:
         [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _tmix_gate_processor(out, os.path.join(base, "rates")),
     )
-    _STG_DONE[key] = out
     return out
 
 
@@ -1660,7 +1562,6 @@ def streaming_tmix_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the frozen LM survived the checkpointed restart and landing 2 was
 # scored by landing 1's model.
 # --------------------------------------------------------------------------
-_SPPL_DONE: dict[tuple[str, str], str] = {}
 _SPPL_KEEP = 4600  # milli-octaves/bigram; splits the fixture under the
 # even-half LM (measured median 4574 overall / 4622 held-out)
 
@@ -1813,24 +1714,11 @@ def _ppl_gate_processor(out: str, lm_state: str):
     return _process
 
 
-def _sppl_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SPPL_DONE, key[0])
-    if key in _SPPL_DONE:
-        if _dir_ok(_SPPL_DONE[key]):
-            return _SPPL_DONE[key]
-        del _SPPL_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sppl")
+@staged("ppl_gate_landings")
+def _sppl_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _ppl_gate_processor(out, os.path.join(base, "lm"))
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SPPL_DONE[key] = out
     return out
 
 
@@ -1933,7 +1821,6 @@ def streaming_ppl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every realized false positive, which the seeded hashes make exactly
 # reproducible.
 # --------------------------------------------------------------------------
-_SBLM_DONE: dict[tuple[str, str], str] = {}
 _SBLM_T = 4  # doc flag threshold (the batch query's measured knee)
 
 
@@ -2073,24 +1960,11 @@ def _bloom_gate_processor(out: str, word_state: str):
     return _process
 
 
-def _sblm_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SBLM_DONE, key[0])
-    if key in _SBLM_DONE:
-        if _dir_ok(_SBLM_DONE[key]):
-            return _SBLM_DONE[key]
-        del _SBLM_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sblm")
+@staged("bloom_gate_landings")
+def _sblm_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _bloom_gate_processor(out, os.path.join(base, "words"))
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SBLM_DONE[key] = out
     return out
 
 
@@ -2189,7 +2063,6 @@ def streaming_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are prefix-consistent (the Misra-Gries "state ≡ batch prefix"
 # contract, transplanted to dedup).
 # --------------------------------------------------------------------------
-_SLDG_DONE: dict[tuple[str, str], str] = {}
 _SLDG_T = 2  # production boilerplate threshold (corpus_line_dedup's grid)
 
 
@@ -2249,23 +2122,11 @@ def _line_gate_processor(out: str, freq_state: str):
     return _process
 
 
-def _sldg_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SLDG_DONE, key[0])
-    if key in _SLDG_DONE:
-        if _dir_ok(_SLDG_DONE[key]):
-            return _SLDG_DONE[key]
-        del _SLDG_DONE[key]
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sldg")
+@staged("line_dedup_gate_landings")
+def _sldg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _line_gate_processor(out, os.path.join(base, "freq"))
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SLDG_DONE[key] = out
     return out
 
 

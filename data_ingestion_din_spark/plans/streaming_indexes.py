@@ -14,9 +14,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_core import (
-    _evict_dead,
     _run_doc_parity_landings,
     _run_split_landings,
 )
@@ -44,7 +44,6 @@ from data_ingestion_din_spark.sources.tables import load_table
 _SMI_HASHES, _SMI_BANDS = 8, 4
 _SMI_R = _SMI_HASHES // _SMI_BANDS
 _SMI_MIN_AGREE = 4  # >= 4/8 slots == estimated jaccard >= 0.5
-_SMI_DONE: dict[tuple[str, str], str] = {}
 
 
 def _smi_band_keys():
@@ -188,24 +187,11 @@ def _minhash_index_processor(out: str, sig_state: str):
     return _process
 
 
-def _smi_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SMI_DONE, key[0])
-    if key in _SMI_DONE:
-        if _dir_ok(_SMI_DONE[key]):
-            return _SMI_DONE[key]
-        del _SMI_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_smi")
+@staged("minhash_index_landings")
+def _smi_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _minhash_index_processor(out, os.path.join(base, "sigs"))
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SMI_DONE[key] = out
     return out
 
 
@@ -310,7 +296,6 @@ def streaming_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # equi-join (shuffle keyed by (band_id, 16-bit value)), exactly how a
 # nightly media ingest probes its materialized fingerprint index.
 # --------------------------------------------------------------------------
-_SPI_DONE: dict[tuple[str, str], str] = {}
 
 
 def _phash_index_processor(out: str, ph_state: str):
@@ -431,24 +416,11 @@ def _phash_index_processor(out: str, ph_state: str):
     return _process
 
 
-def _spi_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SPI_DONE, key[0])
-    if key in _SPI_DONE:
-        if _dir_ok(_SPI_DONE[key]):
-            return _SPI_DONE[key]
-        del _SPI_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_spi")
+@staged("phash_index_landings")
+def _spi_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _phash_index_processor(out, os.path.join(base, "phs"))
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SPI_DONE[key] = out
     return out
 
 
@@ -527,7 +499,6 @@ def streaming_phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rescans or re-trains it.
 # --------------------------------------------------------------------------
 _SII_K = 8
-_SII_DONE: dict[tuple[str, str], str] = {}
 
 
 def _ivf_index_processor(out: str, cent_state: str, k: int = _SII_K):
@@ -596,20 +567,8 @@ def _ivf_index_processor(out: str, cent_state: str, k: int = _SII_K):
     return _process
 
 
-def _sii_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SII_DONE, key[0])
-    if key in _SII_DONE:
-        if _dir_ok(_SII_DONE[key]):
-            return _SII_DONE[key]
-        del _SII_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sii")
+@staged("ivf_index_landings")
+def _sii_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -621,7 +580,6 @@ def _sii_out_dir(spark: SparkSession, sf_dir: str) -> str:
         [emb.filter(F.col("vec_id") % 2 == p) for p in (0, 1)],
         _ivf_index_processor(out, os.path.join(base, "cents")),
     )
-    _SII_DONE[key] = out
     return out
 
 
@@ -699,7 +657,6 @@ def streaming_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window.
 # --------------------------------------------------------------------------
 _SSI_W = 20  # window length in tokens — same as the batch pass (_SSW)
-_SSI_DONE: dict[tuple[str, str], str] = {}
 
 
 def _substring_index_processor(out: str, wfp_state: str, w: int = _SSI_W):
@@ -784,24 +741,11 @@ def _substring_index_processor(out: str, wfp_state: str, w: int = _SSI_W):
     return _process
 
 
-def _ssi_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SSI_DONE, key[0])
-    if key in _SSI_DONE:
-        if _dir_ok(_SSI_DONE[key]):
-            return _SSI_DONE[key]
-        del _SSI_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_ssi")
+@staged("substring_index_landings")
+def _ssi_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _substring_index_processor(out, os.path.join(base, "wfps"))
     _run_doc_parity_landings(spark, sf_dir, base, _process)
-    _SSI_DONE[key] = out
     return out
 
 
@@ -887,7 +831,6 @@ def streaming_substring_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: per landing the cost is O(batch × (k·dims + n_sub·k·d_sub))
 # argmin work; the posting lists grow append-only.
 # --------------------------------------------------------------------------
-_SIQ_DONE: dict[tuple[str, str], str] = {}
 
 
 def _ivfpq_index_processor(
@@ -995,20 +938,8 @@ def _ivfpq_index_processor(
     return _process
 
 
-def _siq_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SIQ_DONE, key[0])
-    if key in _SIQ_DONE:
-        if _dir_ok(_SIQ_DONE[key]):
-            return _SIQ_DONE[key]
-        del _SIQ_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_siq")
+@staged("ivfpq_stream_index")
+def _siq_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -1022,7 +953,6 @@ def _siq_out_dir(spark: SparkSession, sf_dir: str) -> str:
             out, os.path.join(base, "cents"), os.path.join(base, "cb")
         ),
     )
-    _SIQ_DONE[key] = out
     return out
 
 
@@ -1310,7 +1240,6 @@ def streaming_ivfpq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _SIR_K = 8
 _SIR_TRIG_MILLI = 1150  # split when mass > 1.15x mean cell mass
-_SIR_DONE: dict[tuple[str, str], str] = {}
 
 
 def _ivf_rebalance_processor(
@@ -1491,20 +1420,8 @@ def _ivf_rebalance_processor(
     return _process
 
 
-def _sir_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SIR_DONE, key[0])
-    if key in _SIR_DONE:
-        if _dir_ok(_SIR_DONE[key]):
-            return _SIR_DONE[key]
-        del _SIR_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sir")
+@staged("ivf_rebalance_landings")
+def _sir_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -1523,7 +1440,6 @@ def _sir_out_dir(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(base, "mass"),
         ),
     )
-    _SIR_DONE[key] = out
     return out
 
 

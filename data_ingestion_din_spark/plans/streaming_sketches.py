@@ -13,6 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.events_ext import (
     _theta_algebra_sql,
     _theta_est_rows,
@@ -20,7 +21,6 @@ from data_ingestion_din_spark.plans.events_ext import (
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_core import (
     _await_or_raise,
-    _evict_dead,
     _latest_epoch_rows,
     _run_doc_parity_landings,
     _run_split_landings,
@@ -40,7 +40,6 @@ from data_ingestion_din_spark.sources.tables import load_table
 # one across a restart. State per key is one int; ≤ m rows per group
 # regardless of stream length.
 # --------------------------------------------------------------------------
-_HLL_DONE: dict[tuple[str, str], str] = {}
 _SHLL_M = 64
 _SHLL_NUM = 0.709 * 64.0 * 64.0 * 4294967296.0
 
@@ -67,23 +66,12 @@ def _hll_register_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hll_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_HLL_DONE, key[0])
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    if key in _HLL_DONE:
-        if _dir_ok(_HLL_DONE[key]):
-            return _HLL_DONE[key]
-        del _HLL_DONE[key]  # staged output vanished; re-run
+@staged("hll_registers_landings")
+def _hll_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     from data_ingestion_din_spark.streaming.stateful import (
         running_max_stream,
     )
 
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_hll")
     landing = os.path.join(base, "landing")
     ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
@@ -116,7 +104,6 @@ def _hll_out_dir(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(landing, f"b{i}")
         )
         run_once()
-    _HLL_DONE[key] = out
     return out
 
 
@@ -205,7 +192,6 @@ def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # touches — is the training_shard_incremental pattern; the additive
 # merge here is the semantics both share.)
 # --------------------------------------------------------------------------
-_SRM_DONE: dict[tuple[str, str], str] = {}
 
 
 def _rollup_processor(state: str):
@@ -255,20 +241,8 @@ def _rollup_processor(state: str):
     return _process
 
 
-def _srm_state_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SRM_DONE, key[0])
-    if key in _SRM_DONE:
-        if _dir_ok(_SRM_DONE[key]):
-            return _SRM_DONE[key]
-        del _SRM_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_srm")
+@staged("rollup_state_landings")
+def _srm_state_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     state = os.path.join(base, "state")
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -288,7 +262,6 @@ def _srm_state_dir(spark: SparkSession, sf_dir: str) -> str:
         ],
         _rollup_processor(state),
     )
-    _SRM_DONE[key] = state
     return state
 
 
@@ -331,7 +304,6 @@ def streaming_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the checkpointed restart and landing 2 was judged against landing
 # 1's baseline.
 # --------------------------------------------------------------------------
-_SPG_DONE: dict[tuple[str, str], str] = {}
 _SPG_COLS = ["lang", "source", "n_chars", "text"]
 
 
@@ -421,20 +393,8 @@ def _profile_gate_processor(out: str, baseline_state: str):
     return _process
 
 
-def _spg_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SPG_DONE, key[0])
-    if key in _SPG_DONE:
-        if _dir_ok(_SPG_DONE[key]):
-            return _SPG_DONE[key]
-        del _SPG_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_spg")
+@staged("profile_gate_landings")
+def _spg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
@@ -447,7 +407,6 @@ def _spg_out_dir(spark: SparkSession, sf_dir: str) -> str:
         [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _profile_gate_processor(out, os.path.join(base, "baseline")),
     )
-    _SPG_DONE[key] = out
     return out
 
 
@@ -543,7 +502,6 @@ def streaming_profile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rollup-landing-1 → stats → judge-landing-2 in SQL, so hash parity
 # proves the maintained state fed the judgment across the restart.
 # --------------------------------------------------------------------------
-_SAG_DONE: dict[tuple[str, str], str] = {}
 _SAG_K = 2  # flag beyond k standard deviations
 
 
@@ -633,20 +591,8 @@ def _anomaly_gate_processor(out: str, state: str, k: int = _SAG_K):
     return _process
 
 
-def _sag_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SAG_DONE, key[0])
-    if key in _SAG_DONE:
-        if _dir_ok(_SAG_DONE[key]):
-            return _SAG_DONE[key]
-        del _SAG_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sag")
+@staged("anomaly_gate_landings")
+def _sag_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
     lo, hi = ev.agg(
@@ -663,7 +609,6 @@ def _sag_out_dir(spark: SparkSession, sf_dir: str) -> str:
         ],
         _anomaly_gate_processor(out, os.path.join(base, "state")),
     )
-    _SAG_DONE[key] = out
     return out
 
 
@@ -748,7 +693,6 @@ def streaming_anomaly_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: per landing one map-side-combined ~20-bin aggregate; the
 # exact side is the fixture-only audit column, sampled at production.
 # --------------------------------------------------------------------------
-_SQM_DONE: dict[tuple[str, str], str] = {}
 _SQM_PCTS = (50, 90, 99)
 
 
@@ -786,20 +730,8 @@ def _quantile_processor(state: str):
     return _process
 
 
-def _sqm_state_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SQM_DONE, key[0])
-    if key in _SQM_DONE:
-        if _dir_ok(_SQM_DONE[key]):
-            return _SQM_DONE[key]
-        del _SQM_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sqm")
+@staged("quantile_state_landings")
+def _sqm_state_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     state = os.path.join(base, "state")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     _run_split_landings(
@@ -809,7 +741,6 @@ def _sqm_state_dir(spark: SparkSession, sf_dir: str) -> str:
         [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _quantile_processor(state),
     )
-    _SQM_DONE[key] = state
     return state
 
 
@@ -946,7 +877,6 @@ def streaming_quantile_maintenance(
 # the batch; state is d·w rows regardless of corpus size — the point
 # of CMS; the probe join broadcasts the grid.
 # --------------------------------------------------------------------------
-_SCM_DONE: dict[tuple[str, str], str] = {}
 
 
 def _cms_processor(state: str):
@@ -1007,23 +937,10 @@ def _cms_processor(state: str):
     return _process
 
 
-def _scm_state_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SCM_DONE, key[0])
-    if key in _SCM_DONE:
-        if _dir_ok(_SCM_DONE[key]):
-            return _SCM_DONE[key]
-        del _SCM_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_scm")
+@staged("cms_state_landings")
+def _scm_state_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     state = os.path.join(base, "state")
     _run_doc_parity_landings(spark, sf_dir, base, _cms_processor(state))
-    _SCM_DONE[key] = state
     return state
 
 
@@ -1102,7 +1019,6 @@ def streaming_cms_maintenance(
 # ordered single-partition walk — at production the walker key is the
 # shard, exactly as corpus_mg_heavy_hitters distributes it.
 # --------------------------------------------------------------------------
-_SMG_DONE: dict[tuple[str, str], str] = {}
 _SMG_K = 8
 _SMG_DOCS = 100
 _SMG_EPOCHS = 4
@@ -1161,21 +1077,10 @@ def _smg_processor(out: str):
     return _process
 
 
-def _smg_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
+@staged("smg_landings")
+def _smg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     from data_ingestion_din_spark.functions.analysis import tokens
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SMG_DONE, key[0])
-    if key in _SMG_DONE:
-        if _dir_ok(_SMG_DONE[key]):
-            return _SMG_DONE[key]
-        del _SMG_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_smg")
     out = os.path.join(base, "out")
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -1194,7 +1099,6 @@ def _smg_out_dir(spark: SparkSession, sf_dir: str) -> str:
         ],
         _smg_processor(out),
     )
-    _SMG_DONE[key] = out
     return out
 
 
@@ -1326,7 +1230,6 @@ def streaming_mg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: state is k rows per epoch; merge is metadata-sized; the exact
 # sides are the fixture-only audit columns.
 # --------------------------------------------------------------------------
-_STH_DONE: dict[tuple[str, str], str] = {}
 _STH_K = 32
 
 
@@ -1357,20 +1260,8 @@ def _theta_index_processor(out: str):
     return _process
 
 
-def _sth_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_STH_DONE, key[0])
-    if key in _STH_DONE:
-        if _dir_ok(_STH_DONE[key]):
-            return _STH_DONE[key]
-        del _STH_DONE[key]
-
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_sth")
+@staged("sth_landings")
+def _sth_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
     _run_split_landings(
@@ -1380,7 +1271,6 @@ def _sth_out_dir(spark: SparkSession, sf_dir: str) -> str:
         [ev.filter(F.col("event_id") % 2 == p) for p in (0, 1)],
         _theta_index_processor(out),
     )
-    _STH_DONE[key] = out
     return out
 
 
@@ -1460,7 +1350,6 @@ def streaming_theta_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # there), so every gated alarm column is exact zeros — the verdicts'
 # VALUE here is the carried S trajectory itself.
 # --------------------------------------------------------------------------
-_SCSM_DONE: dict[tuple[str, str], str] = {}
 _SCSM_CUT = "2024-01-16"  # in-control cutoff == the landing split
 
 
@@ -1601,19 +1490,8 @@ def _cusum_gate_processor(out: str, state: str):
     return _process
 
 
-def _scsm_out_dir(spark: SparkSession, sf_dir: str) -> str:
-    from data_ingestion_din_spark.operators.colocate import (
-        _dir_ok,
-        fresh_app_dir,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_dead(_SCSM_DONE, key[0])
-    if key in _SCSM_DONE:
-        if _dir_ok(_SCSM_DONE[key]):
-            return _SCSM_DONE[key]
-        del _SCSM_DONE[key]
-    base = fresh_app_dir(spark, sf_dir, "spark_graft_scsm")
+@staged("cusum_gate_landings")
+def _scsm_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _cusum_gate_processor(out, os.path.join(base, "walkstate"))
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
@@ -1625,7 +1503,6 @@ def _scsm_out_dir(spark: SparkSession, sf_dir: str) -> str:
         [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)],
         _process,
     )
-    _SCSM_DONE[key] = out
     return out
 
 

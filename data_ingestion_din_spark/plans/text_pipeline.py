@@ -25,6 +25,7 @@ from data_ingestion_din_spark.functions.analysis import (
 )
 from data_ingestion_din_spark.functions.hashing import h64_sql
 from data_ingestion_din_spark.functions.text import clean_text, clean_text_sql
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -1742,21 +1743,12 @@ def bpe_merge_fold(a: str, b: str) -> F.Column:
 
 # The trained tokenizer — (merge table, final distinct-word
 # tokenization) — is consumed by corpus_bpe_train AND the composed
-# corpus_bpe_pipeline; staged as ONE pair under one key (the _KM8_STATE
-# pattern) so neither query re-runs the 4-round Lloyd-style loop.
-_BPE_TRAIN_STATE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-
-
+# corpus_bpe_pipeline; staged as ONE pair (the _km8_pair pattern) so
+# neither query re-runs the 4-round Lloyd-style loop.
+@staged("bpe_train")
 def _bpe_train_run(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list, DataFrame]:
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _BPE_TRAIN_STATE if k[0] != app]:
-        del _BPE_TRAIN_STATE[k]  # dead-context eviction
-    key = (app, sf_dir)
-    if key in _BPE_TRAIN_STATE:
-        return _BPE_TRAIN_STATE[key]
-
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(tokens(F.col("text"))).alias("w"))
     wn = words.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("wn"))
@@ -1787,12 +1779,11 @@ def _bpe_train_run(
         # intermediate folds lazy (the next step's argmax collect
         # materializes them); the LAST fold stays eager so the staged
         # artifact's materialization cost remains inside this run, not
-        # shifted onto the first _BPE_TRAIN_STATE consumer
+        # shifted onto the first _bpe_train_run consumer
         cur = cur.withColumn(
             "toks", bpe_merge_fold(top.lft, top.rgt)
         ).localCheckpoint(eager=(step == _BPE_TRAIN_STEPS - 1))
-    _BPE_TRAIN_STATE[key] = (merges, cur)
-    return _BPE_TRAIN_STATE[key]
+    return merges, cur
 
 
 @query("corpus_bpe_train", oracle=_bpe_train_oracle())

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.analysis import tokens
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.text_pipeline import (
     _BPE_TRAIN_STEPS,
@@ -139,19 +140,10 @@ def _uni_ctes() -> str:
 # (vocab dict, normalizer octave, per-word verdict DF) staged per
 # (SparkContext, sf_dir) — consumed by corpus_unigram_tokenize,
 # corpus_unigram_fertility, corpus_unigram_encode and the EM step.
-_UNI_STATE: dict[tuple[str, str], tuple[dict, int, DataFrame]] = {}
-
-
+@staged("unigram_vocab")
 def _uni_run(
     spark: SparkSession, sf_dir: str
 ) -> tuple[dict, int, DataFrame]:
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _UNI_STATE if k[0] != app]:
-        del _UNI_STATE[k]  # dead-context eviction
-    key = (app, sf_dir)
-    if key in _UNI_STATE:
-        return _UNI_STATE[key]
-
     docs = load_table(spark, sf_dir, "documents")
     wrd = (
         docs.select(F.explode(tokens(F.col("text"))).alias("w"))
@@ -221,8 +213,7 @@ def _uni_run(
         # lazy: the first consumer query's action materializes it (the
         # staging happens inside that same query's run either way)
     ).localCheckpoint(eager=False)
-    _UNI_STATE[key] = (vocab, nrm, verdicts)
-    return _UNI_STATE[key]
+    return vocab, nrm, verdicts
 
 
 @query(

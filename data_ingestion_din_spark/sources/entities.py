@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64, h64_sql
+from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.sources.tables import load_table, scan_parallel
 
 # --------------------------------------------------------------------------
@@ -45,14 +46,19 @@ BLOCKS_PER_PAGE = 12
 PAGE_HEIGHT = 842.0
 
 
+# Entities are staged tables: the rows-as-arrays construction is a deep
+# expression tree (md5 per cell inside nested transforms); downstream
+# higher-order ops reference `rows` many times and Catalyst's project
+# collapsing would inline the whole tree per reference (exponential
+# analysis time). An eager localCheckpoint materializes each entity once
+# per (session, sf_dir) and truncates the lineage.
+@staged("text_blocks", setup={"entity_tables": ()})
 def text_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the ``text_blocks`` entity table (FIXTURES.md B.1 subset:
-    id, doc_id, page, content, bbox, font_size, intent) — staged via the
-    entity cache like ``table_blocks`` (one md5-heavy derivation per
-    (app, sf_dir), then every consumer reads the materialized table)."""
-    return _cached(
-        spark, sf_dir, "text_blocks", lambda: _text_blocks(spark, sf_dir)
-    )
+    id, doc_id, page, content, bbox, font_size, intent) — staged like
+    ``table_blocks`` (one md5-heavy derivation per (session, sf_dir),
+    then every consumer reads the materialized table)."""
+    return _text_blocks(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def _text_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,30 +263,12 @@ def _cell_sql(ch: str) -> str:
     END"""
 
 
-# Derivation cache: the rows-as-arrays construction is a deep expression
-# tree (md5 per cell inside nested transforms); downstream higher-order
-# ops reference `rows` many times and Catalyst's project collapsing would
-# inline the whole tree per reference (exponential analysis time).
-# localCheckpoint materializes the derived entity once and truncates the
-# lineage — the production shape too (entities are a staged table).
-_ENTITY_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    # Keyed on applicationId (unique per SparkContext lifetime), not
-    # id(spark): a stopped session's address can be reused by a new one,
-    # which would resurrect a checkpointed DataFrame bound to a dead context.
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _ENTITY_CACHE:
-        _ENTITY_CACHE[key] = build().localCheckpoint(eager=True)
-    return _ENTITY_CACHE[key]
-
-
+@staged("table_blocks", setup={"entity_tables": ()})
 def table_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the ``table_blocks`` entity table (FIXTURES.md B.2 subset:
     id, doc_id, page, columns, rows, source, numeric_trust,
     source_priority). Materialized once per (session, sf_dir)."""
-    return _cached(spark, sf_dir, "table_blocks", lambda: _table_blocks(spark, sf_dir))
+    return _table_blocks(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def _table_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -49,8 +49,7 @@ def main() -> None:
         times = [round(run(name), 3) for _ in range(runs)]
         print(f"{name}: {times}  min={min(times)}")
         if do_explain:
-            df = QUERIES[name](spark, SF_DIR)
-            print(df._sc is None)  # noqa
+            QUERIES[name](spark, SF_DIR).explain("formatted")
         if do_prof:
             import cProfile
             import pstats

@@ -291,13 +291,14 @@ def test_staging_growth_bounded_across_sessions(spark, tmp_path,
     from data_ingestion_din_spark.operators import colocate
 
     monkeypatch.setattr(_tf, "gettempdir", lambda: str(tmp_path))
-    root = os.path.join(str(tmp_path), "spark_graft_bucketed")
+    root = os.path.join(str(tmp_path), "spark_graft_bucketed_fact_tables")
     # fake remnant of a long-dead session
     dead = os.path.join(root, "app_dead_session", "sf")
     os.makedirs(dead)
     os.utime(os.path.dirname(dead), (1, 1))
     os.utime(dead, (1, 1))
-    colocate._BUCKETED_FACTS.clear()
+    staged_facts = colocate.STAGED["bucketed_fact_tables"]
+    staged_facts.cache_clear()
     try:
         colocate.bucketed_fact_tables(spark, SF)
         apps = sorted(os.listdir(root))
@@ -307,7 +308,7 @@ def test_staging_growth_bounded_across_sessions(spark, tmp_path,
         # restore real-tempdir staging so later tests' cache hits don't
         # point at pytest's transient tmp_path
         monkeypatch.undo()
-        colocate._BUCKETED_FACTS.clear()
+        staged_facts.cache_clear()
         colocate.bucketed_fact_tables(spark, SF)
 
 

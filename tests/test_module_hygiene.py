@@ -10,9 +10,10 @@ failure impossible to reintroduce:
 
 1. No module-level name in any plans/operators/functions/sources module
    is defined twice (def/class/assignment shadowing).
-2. Every ``fresh_app_dir``/``app_dir_path`` staged-directory tag belongs
-   to exactly one top-level function package-wide (two families sharing a
-   tag would overwrite each other's session-staged artifacts).
+2. Staged directories come only from the staging registry
+   (``operators/colocate.staged``), which tags each by its unique
+   registered name, so two families cannot overwrite each other's
+   session-staged artifacts.
 """
 
 from __future__ import annotations
@@ -61,26 +62,30 @@ def test_no_module_level_name_shadowing():
 
 
 def test_staged_dir_tags_unique_per_function():
-    tag_sites: dict[str, set[tuple[str, str]]] = collections.defaultdict(set)
+    """Staged-directory tags come from registered names, and the registry
+    rejects a duplicate name (tests/test_staged_registry.py), so two
+    families can only share a directory by calling the path helpers
+    directly. No module outside the registry may."""
+    callers: set[str] = set()
     for path in _module_files():
+        rel = os.path.relpath(path, PKG)
+        if rel == os.path.join("operators", "colocate.py"):
+            continue
         with open(path) as fh:
             tree = ast.parse(fh.read())
-        rel = os.path.relpath(path, PKG)
-        for fn in (n for n in tree.body if isinstance(n, ast.FunctionDef)):
-            for node in ast.walk(fn):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Name)
-                    and node.func.id in ("fresh_app_dir", "app_dir_path")
-                    and len(node.args) >= 3
-                    and isinstance(node.args[2], ast.Constant)
-                ):
-                    tag_sites[node.args[2].value].add((rel, fn.name))
-    assert tag_sites, "no staged-dir tags found — scan is miswired"
-    shared = {t: sorted(s) for t, s in tag_sites.items() if len(s) > 1}
-    assert not shared, (
-        "staged-dir tags used by more than one top-level function "
-        f"(families would clobber each other's artifacts): {shared}"
+        for node in ast.walk(tree):
+            name = None
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name
+            if name in ("fresh_app_dir", "app_dir_path"):
+                callers.add(rel)
+    assert not callers, (
+        "modules outside operators/colocate.py reach the staged-dir "
+        f"helpers directly instead of declaring a staged builder: {sorted(callers)}"
     )
 
 
