@@ -29,8 +29,10 @@ from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_core import (
     _await_or_raise,
+    _epoch_writer,
     _latest_epoch_rows,
     _run_split_landings,
+    _time_midpoint,
 )
 from data_ingestion_din_spark.sources.tables import load_table
 from data_ingestion_din_spark.streaming.ingest import start_ingest_stream
@@ -130,14 +132,11 @@ _WORDSET_FP_SQL = (
 
 @staged("first_seen_landings")
 def _first_seen_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
+    from data_ingestion_din_spark.functions.analysis import tokens
     from data_ingestion_din_spark.operators.dedup import keep_first_by
     from data_ingestion_din_spark.streaming.stateful import first_seen_stream
 
-    landing = os.path.join(base, "landing")
-    ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
-    from data_ingestion_din_spark.functions.analysis import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.md5(
@@ -146,31 +145,20 @@ def _first_seen_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
             )
         ).alias("fp"),
     )
-    schema = "doc_id bigint, fp string"
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(landing + "/*")
-        q = (
-            first_seen_stream(stream, "fp")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-
-    for i, parity in enumerate((0, 1)):
-        batch = keep_first_by(
-            docs.filter(F.col("doc_id") % 2 == parity),
-            F.col("fp"),
-            [F.col("doc_id")],
-        )
-        batch.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(landing, f"b{i}")
-        )
-        run_once()
+    _run_split_landings(
+        spark,
+        base,
+        [
+            keep_first_by(
+                docs.filter(F.col("doc_id") % 2 == parity),
+                F.col("fp"),
+                [F.col("doc_id")],
+            )
+            for parity in (0, 1)
+        ],
+        transform=lambda stream: first_seen_stream(stream, "fp"),
+        out=out,
+    )
     return out
 
 
@@ -215,72 +203,83 @@ def streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SJOIN_WINDOW_US = 3_600_000_000  # 1 hour
 
 
-@staged("stream_join_landings")
-def _stream_join_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
-    landing_c = os.path.join(base, "clicks")
-    landing_e = os.path.join(base, "errors")
-    ckpt = os.path.join(base, "ckpt")
+def _interval_join_landings(
+    spark: SparkSession, sf_dir: str, base: str, how: str
+) -> str:
+    """The three interval joins' one builder body, ``how`` = Spark join
+    type: clicks land in run 1 with the first error half, the second
+    error half lands in run 2 — with, for the outer joins, the
+    watermark-advancing sentinel click (boundary fact 1 below): far past
+    every real event, on a user id no error carries. ``user_id`` is
+    coalesced over both sides: inner and left outer rows always carry
+    the click's, so only the full outer join's error-only rows differ."""
     out = os.path.join(base, "out")
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    mid = lo + (hi - lo) // 2  # setup-stage scalar (layout prep, 1 row)
+    mid, hi = _time_midpoint(ev)
     clicks = ev.filter(F.col("event_type") == "click").drop("event_type")
     errors = ev.filter(F.col("event_type") == "error").drop("event_type")
+    late = F.unix_micros("ts") >= mid
+    run2 = {"errors": errors.filter(late)}
+    if how != "inner":
+        run2["clicks"] = spark.createDataFrame(
+            [(-1, hi + 30 * 24 * 3_600_000_000, -1)],
+            "event_id bigint, us bigint, user_id bigint",
+        ).select(
+            "event_id", F.timestamp_micros(F.col("us")).alias("ts"), "user_id"
+        )
 
-    def run_once() -> None:
-        schema = "event_id bigint, ts timestamp, user_id bigint"
-        c = (
-            spark.readStream.schema(schema)
-            .parquet(landing_c + "/*")
-            .withWatermark("ts", "10 minutes")
-            .alias("c")
-        )
-        e = (
-            spark.readStream.schema(schema)
-            .parquet(landing_e + "/*")
-            .withWatermark("ts", "10 minutes")
-            .alias("e")
-        )
-        joined = c.join(
+    def join(clicks_s: DataFrame, errors_s: DataFrame) -> DataFrame:
+        c = clicks_s.withWatermark("ts", "10 minutes").alias("c")
+        e = errors_s.withWatermark("ts", "10 minutes").alias("e")
+        return c.join(
             e,
             F.expr(
                 "c.user_id = e.user_id AND e.ts >= c.ts "
                 "AND e.ts <= c.ts + interval 1 hour"
             ),
+            how,
         ).select(
             F.col("c.event_id").alias("click_id"),
             F.col("e.event_id").alias("error_id"),
-            F.col("c.user_id").alias("user_id"),
+            F.coalesce(F.col("c.user_id"), F.col("e.user_id")).alias(
+                "user_id"
+            ),
             F.unix_micros(F.col("c.ts")).alias("click_us"),
             F.unix_micros(F.col("e.ts")).alias("error_us"),
         )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
 
-    clicks.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(landing_c, "b0")
+    _run_split_landings(
+        spark,
+        base,
+        [{"clicks": clicks, "errors": errors.filter(~late)}, run2],
+        transform=join,
+        out=out,
     )
-    errors.filter(F.unix_micros("ts") < mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(landing_e, "b0"))
-    run_once()
-    errors.filter(F.unix_micros("ts") >= mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(landing_e, "b1"))
-    run_once()
     return out
+
+
+def _interval_join_rows(spark: SparkSession, out: str) -> DataFrame:
+    """Read back an interval-join landing without the sentinel click
+    (user_id -1; fixture user ids are non-negative)."""
+    return (
+        spark.read.parquet(out)
+        .filter(F.col("user_id") >= 0)  # drop the watermark sentinel
+        .select(
+            F.col("click_id").cast("bigint").alias("click_id"),
+            F.col("error_id").cast("bigint").alias("error_id"),
+            F.col("user_id").cast("bigint").alias("user_id"),
+            F.col("click_us").cast("bigint").alias("click_us"),
+            F.col("error_us").cast("bigint").alias("error_us"),
+        )
+        .orderBy("click_id", "error_id")
+    )
+
+
+@staged("stream_join_landings")
+def _stream_join_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
+    return _interval_join_landings(spark, sf_dir, base, "inner")
 
 
 @query(
@@ -299,18 +298,7 @@ def _stream_join_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     """,
 )
 def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_join_out_dir(spark, sf_dir)
-    return (
-        spark.read.parquet(out)
-        .select(
-            F.col("click_id").cast("bigint").alias("click_id"),
-            F.col("error_id").cast("bigint").alias("error_id"),
-            F.col("user_id").cast("bigint").alias("user_id"),
-            F.col("click_us").cast("bigint").alias("click_us"),
-            F.col("error_us").cast("bigint").alias("error_us"),
-        )
-        .orderBy("click_id", "error_id")
-    )
+    return _interval_join_rows(spark, _stream_join_out_dir(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -352,81 +340,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @staged("sjoin_outer_landings")
 def _sjo_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
-    landing_c = os.path.join(base, "clicks")
-    landing_e = os.path.join(base, "errors")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    mid = lo + (hi - lo) // 2  # setup-stage scalar (layout prep, 1 row)
-    clicks = ev.filter(F.col("event_type") == "click").drop("event_type")
-    errors = ev.filter(F.col("event_type") == "error").drop("event_type")
-
-    def run_once() -> None:
-        schema = "event_id bigint, ts timestamp, user_id bigint"
-        c = (
-            spark.readStream.schema(schema)
-            .parquet(landing_c + "/*")
-            .withWatermark("ts", "10 minutes")
-            .alias("c")
-        )
-        e = (
-            spark.readStream.schema(schema)
-            .parquet(landing_e + "/*")
-            .withWatermark("ts", "10 minutes")
-            .alias("e")
-        )
-        joined = c.join(
-            e,
-            F.expr(
-                "c.user_id = e.user_id AND e.ts >= c.ts "
-                "AND e.ts <= c.ts + interval 1 hour"
-            ),
-            "leftOuter",
-        ).select(
-            F.col("c.event_id").alias("click_id"),
-            F.col("e.event_id").alias("error_id"),
-            F.col("c.user_id").alias("user_id"),
-            F.unix_micros(F.col("c.ts")).alias("click_us"),
-            F.unix_micros(F.col("e.ts")).alias("error_us"),
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-
-    clicks.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(landing_c, "b0")
-    )
-    errors.filter(F.unix_micros("ts") < mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(landing_e, "b0"))
-    run_once()
-    errors.filter(F.unix_micros("ts") >= mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(landing_e, "b1"))
-    # the watermark-advancing sentinel click (boundary fact 1): far past
-    # every real event, on a user id no error carries
-    spark.createDataFrame(
-        [(-1, hi + 30 * 24 * 3_600_000_000, -1)],
-        "event_id bigint, us bigint, user_id bigint",
-    ).select(
-        "event_id", F.timestamp_micros(F.col("us")).alias("ts"), "user_id"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(landing_c, "b1")
-    )
-    run_once()
-    return out
+    return _interval_join_landings(spark, sf_dir, base, "leftOuter")
 
 
 @query(
@@ -468,19 +382,7 @@ def _sjo_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     """,
 )
 def streaming_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _sjo_out_dir(spark, sf_dir)
-    return (
-        spark.read.parquet(out)
-        .filter(F.col("user_id") >= 0)  # drop the watermark sentinel
-        .select(
-            F.col("click_id").cast("bigint").alias("click_id"),
-            F.col("error_id").cast("bigint").alias("error_id"),
-            F.col("user_id").cast("bigint").alias("user_id"),
-            F.col("click_us").cast("bigint").alias("click_us"),
-            F.col("error_us").cast("bigint").alias("error_us"),
-        )
-        .orderBy("click_id", "error_id")
-    )
+    return _interval_join_rows(spark, _sjo_out_dir(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -506,81 +408,7 @@ def streaming_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @staged("sjoin_full_landings")
 def _sjf_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
-    landing_c = os.path.join(base, "clicks")
-    landing_e = os.path.join(base, "errors")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    mid = lo + (hi - lo) // 2  # setup-stage scalar (layout prep, 1 row)
-    clicks = ev.filter(F.col("event_type") == "click").drop("event_type")
-    errors = ev.filter(F.col("event_type") == "error").drop("event_type")
-
-    def run_once() -> None:
-        schema = "event_id bigint, ts timestamp, user_id bigint"
-        c = (
-            spark.readStream.schema(schema)
-            .parquet(landing_c + "/*")
-            .withWatermark("ts", "10 minutes")
-            .alias("c")
-        )
-        e = (
-            spark.readStream.schema(schema)
-            .parquet(landing_e + "/*")
-            .withWatermark("ts", "10 minutes")
-            .alias("e")
-        )
-        joined = c.join(
-            e,
-            F.expr(
-                "c.user_id = e.user_id AND e.ts >= c.ts "
-                "AND e.ts <= c.ts + interval 1 hour"
-            ),
-            "fullOuter",
-        ).select(
-            F.col("c.event_id").alias("click_id"),
-            F.col("e.event_id").alias("error_id"),
-            F.coalesce(F.col("c.user_id"), F.col("e.user_id")).alias(
-                "user_id"
-            ),
-            F.unix_micros(F.col("c.ts")).alias("click_us"),
-            F.unix_micros(F.col("e.ts")).alias("error_us"),
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-
-    clicks.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(landing_c, "b0")
-    )
-    errors.filter(F.unix_micros("ts") < mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(landing_e, "b0"))
-    run_once()
-    errors.filter(F.unix_micros("ts") >= mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(landing_e, "b1"))
-    spark.createDataFrame(
-        [(-1, hi + 30 * 24 * 3_600_000_000, -1)],
-        "event_id bigint, us bigint, user_id bigint",
-    ).select(
-        "event_id", F.timestamp_micros(F.col("us")).alias("ts"), "user_id"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(landing_c, "b1")
-    )
-    run_once()
-    return out
+    return _interval_join_landings(spark, sf_dir, base, "fullOuter")
 
 
 @query(
@@ -629,19 +457,7 @@ def _sjf_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
 def streaming_stream_full_outer_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    out = _sjf_out_dir(spark, sf_dir)
-    return (
-        spark.read.parquet(out)
-        .filter(F.col("user_id") >= 0)  # drop the watermark sentinel
-        .select(
-            F.col("click_id").cast("bigint").alias("click_id"),
-            F.col("error_id").cast("bigint").alias("error_id"),
-            F.col("user_id").cast("bigint").alias("user_id"),
-            F.col("click_us").cast("bigint").alias("click_us"),
-            F.col("error_us").cast("bigint").alias("error_us"),
-        )
-        .orderBy("click_id", "error_id")
-    )
+    return _interval_join_rows(spark, _sjf_out_dir(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -666,10 +482,7 @@ _SESSION_GAP_US = 1_800_000_000
 def _session_windows_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     from pyspark.sql.window import Window as W
 
-    landing = os.path.join(base, "landing")
-    ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     # setup-stage scalars: the largest session's midpoint (split there so
     # one session provably spans the restart) and the corpus max ts
@@ -695,14 +508,10 @@ def _session_windows_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str
     split_us = (big["st"] + big["en"]) // 2
     max_us = ev.agg(F.max(F.unix_micros("ts"))).first()[0]
 
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, value double")
-            .parquet(landing + "/*")
-            .withWatermark("ts", _SESSION_GAP)
-        )
-        agg = (
-            stream.groupBy(
+    def sessions(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", _SESSION_GAP)
+            .groupBy(
                 F.session_window("ts", _SESSION_GAP).alias("sw"), "user_id"
             )
             .agg(
@@ -717,18 +526,11 @@ def _session_windows_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str
                 "tot",
             )
         )
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
 
-    for i, frame in enumerate(
-        (
+    _run_split_landings(
+        spark,
+        base,
+        [
             ev.filter(F.unix_micros("ts") < split_us),
             ev.filter(F.unix_micros("ts") >= split_us),
             spark.range(1).select(
@@ -738,12 +540,10 @@ def _session_windows_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str
                 ).alias("ts"),
                 F.lit(0.0).alias("value"),
             ),
-        )
-    ):
-        frame.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(landing, f"b{i}")
-        )
-        run_once()
+        ],
+        transform=sessions,
+        out=out,
+    )
     return out
 
 
@@ -822,44 +622,28 @@ _DDW_DELAY_DAYS = 10
 
 @staged("dedup_watermark_landings")
 def _ddw_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
-    landing = os.path.join(base, "landing")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-
     from pyspark.sql.window import Window as W
 
+    out = os.path.join(base, "out")
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
     wk = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-
-    def run_once() -> None:
-        stream = spark.readStream.schema(
-            "user_id bigint, event_type string, ts timestamp, event_id bigint"
-        ).parquet(landing + "/*")
-        q = (
-            stream.withWatermark("ts", f"{_DDW_DELAY_DAYS} days")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-
-    for i, parity in enumerate((0, 1)):
-        batch = (
+    _run_split_landings(
+        spark,
+        base,
+        [
             ev.filter(F.col("event_id") % 2 == parity)
             .withColumn("rk", F.row_number().over(wk))
             .filter(F.col("rk") == 1)
             .drop("rk")
-        )
-        batch.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(landing, f"b{i}")
-        )
-        run_once()
+            for parity in (0, 1)
+        ],
+        transform=lambda stream: stream.withWatermark(
+            "ts", f"{_DDW_DELAY_DAYS} days"
+        ).dropDuplicatesWithinWatermark(["user_id", "event_type"]),
+        out=out,
+    )
     return out
 
 
@@ -1056,15 +840,7 @@ def _scd2_processor(out: str):
         )
         return rows
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _plan(batch_df, epoch_id).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, f"epoch={epoch_id}"))
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, out)
 
 
 @staged("scd2_stream_landings")
@@ -1074,14 +850,10 @@ def _scd2s_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    mid = lo + (hi - lo) // 2  # setup-stage scalar: time-split point
+    mid, _ = _time_midpoint(ev)
     _run_split_landings(
         spark,
         base,
-        "user_id bigint, event_id bigint, event_type string, ts timestamp",
         [
             ev.filter(F.unix_micros("ts") <= mid),
             ev.filter(F.unix_micros("ts") > mid),
@@ -1132,7 +904,7 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _snapshot_processor(out: str):
     from pyspark.sql.window import Window as W
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def _plan(batch_df: DataFrame, epoch_id: int) -> DataFrame:
         spark_l = batch_df.sparkSession
         b = batch_df.select(
             F.col("user_id").cast("bigint").alias("user_id"),
@@ -1157,16 +929,13 @@ def _snapshot_processor(out: str):
         wk = W.partitionBy("user_id", "event_type").orderBy(
             F.desc("ts_us"), F.desc("event_id")
         )
-        winners = (
+        return (
             cand.withColumn("rk", F.row_number().over(wk))
             .filter(F.col("rk") == 1)
             .drop("rk")
         )
-        winners.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"epoch={epoch_id}")
-        )
 
-    return _process
+    return _epoch_writer(_plan, out)
 
 
 @staged("snapshot_landings")
@@ -1179,8 +948,6 @@ def _snap_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "user_id bigint, event_id bigint, event_type string, "
-        "ts timestamp, value double",
         [ev.filter(F.col("event_id") % 2 == p) for p in (0, 1)],
         _snapshot_processor(out),
     )
@@ -1270,13 +1037,7 @@ def _cdc_merge_processor(out: str):
         inb = cand.groupBy(*keys).agg(F.max("in_base").alias("in_base"))
         return winners.join(inb, keys)
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        plan(batch_df, epoch_id).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, f"epoch={epoch_id}"))
-
-    _process.plan = plan
-    return _process
+    return _epoch_writer(plan, out)
 
 
 @staged("cdcm_landings")
@@ -1294,8 +1055,6 @@ def _cdcm_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "user_id bigint, event_id bigint, event_type string, "
-        "ts timestamp, value double, props string",
         [
             ev.filter(F.col("event_id") < _CDC_SPLIT),
             cdc.filter(F.col("event_id") % 2 == 0),
@@ -1400,7 +1159,6 @@ def _swl_delay_ms(label: str, max_odd_us: int) -> int:
 
 @staged("swl_landings")
 def _swl_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
-    landing = os.path.join(base, "landing")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
@@ -1421,18 +1179,12 @@ def _swl_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
         ).alias("ts"),
         "event_type",
     ).select("event_id", "ts", "event_type")
-    schema = "event_id bigint, ts timestamp, event_type string"
     for label in _SWL_LABELS:
-        d_ms = _swl_delay_ms(label, int(max_odd_us))
-        lnd = os.path.join(landing, label)
-        ckpt = os.path.join(base, "ckpt", label)
-        sink = os.path.join(base, "out", f"delay={label}")
+        delay = f"{_swl_delay_ms(label, int(max_odd_us))} milliseconds"
 
-        def run_once() -> None:
-            q = (
-                spark.readStream.schema(schema)
-                .parquet(lnd + "/*")
-                .withWatermark("ts", f"{d_ms} milliseconds")
+        def counts(stream: DataFrame, delay: str = delay) -> DataFrame:
+            return (
+                stream.withWatermark("ts", delay)
                 .groupBy(F.window("ts", "5 minutes").alias("w"))
                 .agg(F.count(F.lit(1)).alias("n"))
                 .select(
@@ -1440,20 +1192,15 @@ def _swl_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
                     F.unix_micros("w.end").alias("w_end_us"),
                     "n",
                 )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
             )
-            _await_or_raise(q)
 
-        for i, batch in enumerate((odds, evens, sentinel)):
-            batch.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(lnd, f"b{i}")
-            )
-            run_once()
+        _run_split_landings(
+            spark,
+            os.path.join(base, label),
+            [odds, evens, sentinel],
+            transform=counts,
+            out=os.path.join(base, "out", f"delay={label}"),
+        )
     return os.path.join(base, "out")
 
 
@@ -1616,6 +1363,7 @@ def _asof_processor(out: str):
     from pyspark.sql.window import Window as W
 
     state_cols = "user_id bigint, err_ts_us bigint, err_id bigint"
+    sdir = os.path.join(out, "state")
 
     def _plan(batch_df: DataFrame, epoch_id: int):
         spark_l = batch_df.sparkSession
@@ -1633,7 +1381,6 @@ def _asof_processor(out: str):
         bclk = b.filter(F.col("event_type") == "click").select(
             "user_id", "ts_us", F.col("event_id").alias("click_id")
         )
-        sdir = os.path.join(out, "state")
         if os.path.isdir(sdir):
             touched = b.select("user_id").distinct()
             prior = (
@@ -1702,19 +1449,10 @@ def _asof_processor(out: str):
         )
         return att, nstate
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        att, nstate = _plan(batch_df, epoch_id)
-        att.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, "clicks", f"epoch={epoch_id}")
-        )
-        nstate.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, "state", f"epoch={epoch_id}")
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(
+        _plan,
+        {"clicks": os.path.join(out, "clicks"), "state": sdir},
+    )
 
 
 @staged("asof_stream_landings")
@@ -1724,14 +1462,10 @@ def _asofs_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    mid = lo + (hi - lo) // 2  # setup-stage scalar: time-split point
+    mid, _ = _time_midpoint(ev)
     _run_split_landings(
         spark,
         base,
-        "user_id bigint, event_id bigint, event_type string, ts timestamp",
         [
             ev.filter(F.unix_micros("ts") <= mid),
             ev.filter(F.unix_micros("ts") > mid),

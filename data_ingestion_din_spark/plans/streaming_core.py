@@ -6,13 +6,27 @@ maintained search indexes), streaming_gates (frozen-artifact admission
 gates), streaming_sketches (maintained sketch state + dq-at-ingest
 judges) — after the flat 5.5k-line module's helper namespace caused a
 silent prefix-shadowing bug (r10: a later ``_sbg_*`` definition replaced
-the BPE gate's helper). This module holds the pieces every family
-shares: the awaitTermination guard, the multi-restart landing harness,
-and the epoch-keyed state reader. Session staging of the landings (one
+the BPE gate's helper). This module holds the streaming mechanism every
+family shares, so a trigger, checkpoint or state-store setting changes
+in one place:
+
+- ``_run_split_landings`` — the ONE landing harness: it lands each split
+  as its own batch and drains it with a checkpointed ``availableNow``
+  run, into either a ``foreachBatch`` processor or a parquet append sink
+  over a stream transform (one or more file sources, e.g. the interval
+  joins' clicks and errors);
+- ``_epoch_writer`` / ``_write_epoch`` — the per-epoch state sink behind
+  every ``foreachBatch`` processor (idempotent ``epoch=<id>``
+  overwrites);
+- ``_latest_epoch_rows`` — the epoch-keyed state reader;
+- ``_await_or_raise`` — the awaitTermination guard;
+- ``_time_midpoint`` — the events time-split point several landings use.
+
+Family modules build plans and processors on top of these and never
+start a stream or write an epoch dir themselves
+(tests/test_module_hygiene.py). Session staging of the landings (one
 run per session, revalidated, stale dirs cleaned) is the registry in
 operators/colocate.staged.
-tests/test_module_hygiene.py asserts helper prefixes stay unique per
-module.
 """
 
 from __future__ import annotations
@@ -39,31 +53,54 @@ def _await_or_raise(q, timeout_sec: int = 240) -> None:
 
 
 def _run_split_landings(
-    spark: SparkSession, base: str, schema: str, halves, process
+    spark: SparkSession,
+    base: str,
+    splits,
+    process=None,
+    *,
+    transform=None,
+    out: str | None = None,
 ) -> None:
-    """Write each split DataFrame as its own landing batch and drain it
-    with a checkpointed availableNow run of ``foreachBatch(process)`` —
-    the ONE multi-restart proof harness behind every incremental state
-    sink (curation funnel, MinHash index, SCD2 maintainer, snapshot
-    merger): a trigger/checkpoint fix lands once."""
-    landing = os.path.join(base, "landing")
-    ckpt = os.path.join(base, "ckpt")
+    """Land each split as its own batch and drain it with a checkpointed
+    availableNow run — the ONE multi-restart proof harness behind every
+    streaming landing.
 
-    def run_once() -> None:
-        stream = spark.readStream.schema(schema).parquet(landing + "/*")
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
+    A split is a DataFrame (written to the single source ``landing``) or
+    a ``{source: DataFrame}`` dict for multi-source streams; every source
+    must land in the first split, whose frames also give each source's
+    stream schema. Split i lands at ``<base>/<source>/b<i>``; the
+    checkpoint is ``<base>/ckpt``. The sink is ``foreachBatch(process)``
+    over the single source, or — with ``transform`` — a parquet append
+    to ``out`` of ``transform(*streams)``, streams in source order."""
+    schemas: dict = {}
+    for i, split in enumerate(splits):
+        if isinstance(split, DataFrame):
+            split = {"landing": split}
+        for src, frame in split.items():
+            schemas.setdefault(src, frame.schema)
+            frame.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(base, src, f"b{i}")
+            )
+        streams = [
+            spark.readStream.schema(schema).parquet(
+                os.path.join(base, src, "*")
+            )
+            for src, schema in schemas.items()
+        ]
+        if transform is None:
+            writer = streams[0].writeStream.foreachBatch(process)
+        else:
+            writer = (
+                transform(*streams)
+                .writeStream.outputMode("append")
+                .format("parquet")
+                .option("path", out)
+            )
+        _await_or_raise(
+            writer.option("checkpointLocation", os.path.join(base, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
-        _await_or_raise(q)
-
-    for i, half in enumerate(halves):
-        half.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(landing, f"b{i}")
-        )
-        run_once()
 
 
 def _run_doc_parity_landings(
@@ -74,11 +111,58 @@ def _run_doc_parity_landings(
     _run_split_landings(
         spark,
         base,
-        "doc_id bigint, text string",
         [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         process,
     )
 
+
+def _time_midpoint(ev: DataFrame) -> tuple[int, int]:
+    """(midpoint, max) of ``ev.ts`` in epoch µs — the setup-stage scalar
+    (one-row aggregate) the time-split landings cut at."""
+    lo, hi = ev.agg(
+        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
+    ).first()
+    return lo + (hi - lo) // 2, hi
+
+
+def _write_epoch(df: DataFrame, state_dir: str, epoch_id: int) -> None:
+    """Overwrite ``<state_dir>/epoch=<epoch_id>`` with ``df`` — a replayed
+    epoch rewrites its own partition instead of appending a second copy."""
+    df.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(state_dir, f"epoch={epoch_id}")
+    )
+
+
+def _epoch_writer(plan, dirs):
+    """The foreachBatch function over ``plan(batch_df, epoch_id)``, with
+    ``.plan`` attached for the plan-shape tests.
+
+    ``dirs`` is one state dir (the plan returns a DataFrame) or an
+    ``{output name: dir}`` mapping (the plan returns a dict keyed by
+    those names — other keys are not written — or a tuple of frames in
+    the mapping's order). An empty batch and a None output write
+    nothing. Every write is an idempotent per-epoch overwrite
+    (_write_epoch) and every state read filters to epochs strictly
+    before the current one (_latest_epoch_rows), so a replay under
+    foreachBatch's at-least-once delivery neither double-counts nor
+    reads its own earlier attempt: exactly-once state."""
+
+    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        res = plan(batch_df, epoch_id)
+        if not isinstance(dirs, dict):
+            pairs = [(res, dirs)]
+        elif isinstance(res, dict):
+            pairs = [(res[name], d) for name, d in dirs.items()]
+        else:
+            pairs = zip(res, dirs.values())
+        for df, d in pairs:
+            if df is not None:
+                _write_epoch(df, d, epoch_id)
+
+    _process.plan = plan
+    return _process
 
 
 def _latest_epoch_rows(
@@ -105,5 +189,3 @@ def _latest_epoch_rows(
         .filter(F.col("rk") == 1)
         .drop("rk", "epoch")
     )
-
-

@@ -20,6 +20,7 @@ from data_ingestion_din_spark.plans.streaming_indexes import (
     _SII_K,
 )
 from data_ingestion_din_spark.plans.streaming_core import (
+    _epoch_writer,
     _run_doc_parity_landings,
     _run_split_landings,
 )
@@ -72,22 +73,18 @@ def _funnel_processor(out: str, fp_state: str, lang_state: str):
     )
     from data_ingestion_din_spark.plans.text_pipeline import _CUR_BUDGET
 
-    def _plan(
-        batch_df: DataFrame, epoch_id: int
-    ) -> dict[str, DataFrame] | None:
+    def _plan(batch_df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
         """Build this batch's output DataFrames (audit rows, new
         fingerprints, per-lang consumption increment) WITHOUT writing
-        state — split from _process so tests can pin the per-batch
-        physical plans (tests/test_plan_assertions.py).
+        state — split from the epoch writer so tests can pin the
+        per-batch physical plans (tests/test_plan_assertions.py).
 
         NOT a pure plan builder: it runs eager localCheckpoints (so the
         scored/deduped stages are computed once, not re-derived per
         consumer) and a bounded collect() of per-language consumption —
-        it executes jobs, it just writes nothing. Returns None for an
-        empty (checkpoint-recovery) batch, whose stage rows would
-        otherwise stamp NULL batch_par into the audit."""
-        if batch_df.isEmpty():
-            return None
+        it executes jobs, it just writes nothing. The epoch writer never
+        passes it an empty (checkpoint-recovery) batch, whose stage rows
+        would stamp NULL batch_par into the audit."""
         toks = tokens(F.col("text"))
         scored = batch_df.select(
             "doc_id",
@@ -210,30 +207,9 @@ def _funnel_processor(out: str, fp_state: str, lang_state: str):
             "new_lang": new_lang,
         }
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        dfs = _plan(batch_df, epoch_id)
-        # None = empty (checkpoint-recovery) batch — write nothing
-        if dfs is None:
-            return
-        # all three writes are per-epoch overwrites (idempotent on
-        # replay — a re-run of this epoch rewrites identical content):
-        # the audit partition, this epoch's new fingerprints, and this
-        # epoch's per-lang consumption INCREMENT (cumulative totals are
-        # derived by summing prior epochs at read time, so a replay
-        # cannot double-add)
-        ep = f"epoch={epoch_id}"
-        dfs["audit"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        dfs["new_fps"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(fp_state, ep)
-        )
-        dfs["new_lang"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(lang_state, ep)
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(
+        _plan, {"audit": out, "new_fps": fp_state, "new_lang": lang_state}
+    )
 
 
 @staged("curation_funnel_landings")
@@ -442,21 +418,7 @@ def _quality_gate_processor(out: str, vocab_state: str, k: int = _SQG_K):
         )
         return {"verdicts": verdicts, "new_vocab": new_vocab}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_vocab"] is not None:
-            dfs["new_vocab"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(vocab_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_vocab": vocab_state})
 
 
 @staged("quality_gate_landings")
@@ -661,21 +623,7 @@ def _dsir_gate_processor(out: str, ratio_state: str):
         )
         return {"verdicts": verdicts, "new_ratio": new_ratio}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_ratio"] is not None:
-            dfs["new_ratio"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(ratio_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_ratio": ratio_state})
 
 
 @staged("dsir_gate_landings")
@@ -688,7 +636,6 @@ def _sdg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "doc_id bigint, source string, text string",
         [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _process,
     )
@@ -887,21 +834,7 @@ def _bpe_gate_processor(out: str, merges_state: str, steps: int = 4):
         )
         return {"verdicts": verdicts, "new_merges": new_merges}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_merges"] is not None:
-            dfs["new_merges"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(merges_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_merges": merges_state})
 
 
 @staged("bpe_gate_landings")
@@ -1038,21 +971,7 @@ def _decontam_gate_processor(out: str, shingle_state: str, n: int = 8):
         )
         return {"verdicts": verdicts, "new_state": new_state}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_state"] is not None:
-            dfs["new_state"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(shingle_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_state": shingle_state})
 
 
 @staged("decontam_gate_landings")
@@ -1265,24 +1184,14 @@ def _semdedup_gate_processor(
             "new_cents": new_cents,
         }
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        dfs["new_members"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(member_state, ep)
-        )
-        if dfs["new_cents"] is not None:
-            dfs["new_cents"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(cent_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(
+        _plan,
+        {
+            "verdicts": out,
+            "new_members": member_state,
+            "new_cents": cent_state,
+        },
+    )
 
 
 @staged("semdedup_gate_landings")
@@ -1294,7 +1203,6 @@ def _ssd_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "vec_id bigint, embedding array<float>",
         [emb.filter(F.col("vec_id") % 2 == p) for p in (0, 1)],
         _semdedup_gate_processor(
             out, os.path.join(base, "cents"), os.path.join(base, "members")
@@ -1468,21 +1376,7 @@ def _tmix_gate_processor(out: str, rate_state: str):
         )
         return {"verdicts": verdicts, "new_rates": new_rates}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_rates"] is not None:
-            dfs["new_rates"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(rate_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_rates": rate_state})
 
 
 @staged("tmix_gate_landings")
@@ -1492,7 +1386,6 @@ def _stg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "doc_id bigint, lang string",
         [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _tmix_gate_processor(out, os.path.join(base, "rates")),
     )
@@ -1697,21 +1590,7 @@ def _ppl_gate_processor(out: str, lm_state: str):
         )
         return {"verdicts": verdicts, "new_state": new_state}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_state"] is not None:
-            dfs["new_state"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(lm_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_state": lm_state})
 
 
 @staged("ppl_gate_landings")
@@ -1943,21 +1822,7 @@ def _bloom_gate_processor(out: str, word_state: str):
         )
         return {"verdicts": verdicts, "new_state": new_state}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_state"] is not None:
-            dfs["new_state"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(word_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_state": word_state})
 
 
 @staged("bloom_gate_landings")
@@ -2106,20 +1971,7 @@ def _line_gate_processor(out: str, freq_state: str):
         )
         return {"verdicts": verdicts, "new_state": own}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        dfs["new_state"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(freq_state, ep)
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_state": freq_state})
 
 
 @staged("line_dedup_gate_landings")

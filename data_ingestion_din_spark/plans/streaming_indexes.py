@@ -17,8 +17,11 @@ from pyspark.sql import functions as F
 from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_core import (
+    _epoch_writer,
+    _latest_epoch_rows,
     _run_doc_parity_landings,
     _run_split_landings,
+    _write_epoch,
 )
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -171,20 +174,7 @@ def _minhash_index_processor(out: str, sig_state: str):
             "new_sigs": sigs.select("doc_id", *mh_cols),
         }
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["decisions"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        dfs["new_sigs"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(sig_state, ep)
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"decisions": out, "new_sigs": sig_state})
 
 
 @staged("minhash_index_landings")
@@ -400,20 +390,7 @@ def _phash_index_processor(out: str, ph_state: str):
         )
         return {"decisions": decisions, "new_hashes": ph}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["decisions"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        dfs["new_hashes"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(ph_state, ep)
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"decisions": out, "new_hashes": ph_state})
 
 
 @staged("phash_index_landings")
@@ -550,21 +527,7 @@ def _ivf_index_processor(out: str, cent_state: str, k: int = _SII_K):
             "new_cents": cent_rows,
         }
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["assignments"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_cents"] is not None:
-            dfs["new_cents"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(cent_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"assignments": out, "new_cents": cent_state})
 
 
 @staged("ivf_index_landings")
@@ -576,7 +539,6 @@ def _sii_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "vec_id bigint, embedding array<float>",
         [emb.filter(F.col("vec_id") % 2 == p) for p in (0, 1)],
         _ivf_index_processor(out, os.path.join(base, "cents")),
     )
@@ -725,20 +687,7 @@ def _substring_index_processor(out: str, wfp_state: str, w: int = _SSI_W):
         # duplicates are harmless (the probe is a semi-join)
         return {"verdicts": verdicts, "new_wfps": wins.select("wfp").distinct()}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        dfs["new_wfps"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(wfp_state, ep)
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_wfps": wfp_state})
 
 
 @staged("substring_index_landings")
@@ -917,25 +866,9 @@ def _ivfpq_index_processor(
             "new_cb": cb_rows,
         }
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["postings"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_cents"] is not None:
-            dfs["new_cents"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(cent_state, ep)
-            )
-        if dfs["new_cb"] is not None:
-            dfs["new_cb"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(cb_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(
+        _plan, {"postings": out, "new_cents": cent_state, "new_cb": cb_state}
+    )
 
 
 @staged("ivfpq_stream_index")
@@ -947,7 +880,6 @@ def _siq_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "vec_id bigint, embedding array<float>",
         [emb.filter(F.col("vec_id") % 2 == p) for p in (0, 1)],
         _ivfpq_index_processor(
             out, os.path.join(base, "cents"), os.path.join(base, "cb")
@@ -1257,9 +1189,6 @@ def _ivf_rebalance_processor(
         kmeans_train,
         kmeans_train_qv,
     )
-    from data_ingestion_din_spark.plans.streaming_core import (
-        _latest_epoch_rows,
-    )
 
     def _plan(batch_df: DataFrame, epoch_id: int) -> dict:
         spark_l = batch_df.sparkSession
@@ -1396,24 +1325,26 @@ def _ivf_rebalance_processor(
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        # own body, not _epoch_writer: the centroid and mass state are
+        # driver-side rows the plan hands back as lists
         spark_l = batch_df.sparkSession
         dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["assignments"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
+        _write_epoch(dfs["assignments"], out, epoch_id)
         if dfs["cent_rows"]:
-            spark_l.createDataFrame(
-                dfs["cent_rows"],
-                "cluster int, qv array<bigint>, retired boolean",
-            ).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(cent_state, ep)
+            _write_epoch(
+                spark_l.createDataFrame(
+                    dfs["cent_rows"],
+                    "cluster int, qv array<bigint>, retired boolean",
+                ),
+                cent_state,
+                epoch_id,
             )
-        spark_l.createDataFrame(
-            sorted(dfs["masses"].items()),
-            "cluster int, mass bigint",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(mass_state, ep)
+        _write_epoch(
+            spark_l.createDataFrame(
+                sorted(dfs["masses"].items()), "cluster int, mass bigint"
+            ),
+            mass_state,
+            epoch_id,
         )
 
     _process.plan = _plan
@@ -1429,7 +1360,6 @@ def _sir_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "vec_id bigint, embedding array<float>",
         [
             emb.filter(F.col("vec_id") % 4 == 0),
             emb.filter(F.col("vec_id") % 4 != 0),
@@ -1532,9 +1462,6 @@ def streaming_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     landings; the oracle re-walks train → route → trigger → cell-local
     k=2 split in batch SQL, so parity proves the rebalance decision and
     the split reassignment survived the checkpointed restart."""
-    from data_ingestion_din_spark.plans.streaming_core import (
-        _latest_epoch_rows,
-    )
 
     out = _sir_out_dir(spark, sf_dir)
     return (

@@ -20,10 +20,11 @@ from data_ingestion_din_spark.plans.events_ext import (
 )
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_core import (
-    _await_or_raise,
+    _epoch_writer,
     _latest_epoch_rows,
     _run_doc_parity_landings,
     _run_split_landings,
+    _time_midpoint,
 )
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -72,38 +73,23 @@ def _hll_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
         running_max_stream,
     )
 
-    landing = os.path.join(base, "landing")
-    ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
-
     rows = _hll_register_rows(spark, sf_dir)
     mid = rows.agg(
         F.expr("timestamp_micros(cast(avg(unix_micros(ts)) as bigint))")
     ).collect()[0][0]
-    schema = "event_type string, bucket int, rnk int"
-
-    def run_once() -> None:
-        stream = spark.readStream.schema(schema).parquet(landing + "/*")
-        q = (
-            running_max_stream(stream, ["event_type", "bucket"], "rnk")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-
-    for i, pred in enumerate(
-        (F.col("ts") <= F.lit(mid), F.col("ts") > F.lit(mid))
-    ):
-        rows.filter(pred).select(
-            "event_type", "bucket", "rnk"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(landing, f"b{i}")
-        )
-        run_once()
+    _run_split_landings(
+        spark,
+        base,
+        [
+            rows.filter(pred).select("event_type", "bucket", "rnk")
+            for pred in (F.col("ts") <= F.lit(mid), F.col("ts") > F.lit(mid))
+        ],
+        transform=lambda stream: running_max_stream(
+            stream, ["event_type", "bucket"], "rnk"
+        ),
+        out=out,
+    )
     return out
 
 
@@ -229,16 +215,7 @@ def _rollup_processor(state: str):
             )
         )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merged = _plan(batch_df, epoch_id)
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state, f"epoch={epoch_id}")
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, state)
 
 
 @staged("rollup_state_landings")
@@ -248,14 +225,10 @@ def _srm_state_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "value"
     )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    mid = lo + (hi - lo) // 2  # setup-stage scalar: time-split point
+    mid, _ = _time_midpoint(ev)
     _run_split_landings(
         spark,
         base,
-        "event_type string, ts timestamp, value double",
         [
             ev.filter(F.unix_micros("ts") <= mid),
             ev.filter(F.unix_micros("ts") > mid),
@@ -376,21 +349,7 @@ def _profile_gate_processor(out: str, baseline_state: str):
         )
         return {"audit": audit, "new_baseline": new_baseline}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["audit"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        if dfs["new_baseline"] is not None:
-            dfs["new_baseline"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(baseline_state, ep)
-            )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"audit": out, "new_baseline": baseline_state})
 
 
 @staged("profile_gate_landings")
@@ -402,8 +361,6 @@ def _spg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "doc_id bigint, text string, lang string, source string,"
-        " n_chars bigint",
         [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _profile_gate_processor(out, os.path.join(base, "baseline")),
     )
@@ -574,35 +531,17 @@ def _anomaly_gate_processor(out: str, state: str, k: int = _SAG_K):
         )
         return {"verdicts": verdicts, "new_state": merged}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        if dfs["verdicts"] is not None:
-            dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(out, ep)
-            )
-        dfs["new_state"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state, ep)
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_state": state})
 
 
 @staged("anomaly_gate_landings")
 def _sag_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    mid = lo + (hi - lo) // 2  # setup-stage scalar: time-split point
+    mid, _ = _time_midpoint(ev)
     _run_split_landings(
         spark,
         base,
-        "event_type string, ts timestamp",
         [
             ev.filter(F.unix_micros("ts") <= mid),
             ev.filter(F.unix_micros("ts") > mid),
@@ -718,16 +657,7 @@ def _quantile_processor(state: str):
             F.sum("cnt").cast("bigint").alias("cnt")
         )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merged = _plan(batch_df, epoch_id)
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state, f"epoch={epoch_id}")
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, state)
 
 
 @staged("quantile_state_landings")
@@ -737,7 +667,6 @@ def _sqm_state_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "doc_id bigint, n_chars bigint",
         [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _quantile_processor(state),
     )
@@ -925,16 +854,7 @@ def _cms_processor(state: str):
             F.sum("counter").cast("bigint").alias("counter")
         )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merged = _plan(batch_df, epoch_id)
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state, f"epoch={epoch_id}")
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, state)
 
 
 @staged("cms_state_landings")
@@ -1025,7 +945,7 @@ _SMG_EPOCHS = 4
 
 
 def _smg_processor(out: str):
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def _plan(batch_df: DataFrame, epoch_id: int) -> DataFrame:
         spark_l = batch_df.sparkSession
         # prior state = the FULL snapshot of the latest prior epoch —
         # NOT a per-word latest-epoch read (_latest_epoch_rows), which
@@ -1066,15 +986,13 @@ def _smg_processor(out: str):
         # the None sentinel keeps an EMPTY snapshot addressable: an
         # all-churned state must still advance the latest-prior-epoch
         # pointer, or the next epoch resumes from a stale snapshot
-        spark_l.createDataFrame(
+        return spark_l.createDataFrame(
             [(w, c, epoch_id) for w, c in mg.items()]
             or [(None, None, epoch_id)],
             "word string, c bigint, epoch_src bigint",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"epoch={epoch_id}")
         )
 
-    return _process
+    return _epoch_writer(_plan, out)
 
 
 @staged("smg_landings")
@@ -1092,7 +1010,6 @@ def _smg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "doc_id bigint, pos int, w string",
         [
             stream.filter(F.col("doc_id") % _SMG_EPOCHS == e)
             for e in range(_SMG_EPOCHS)
@@ -1236,10 +1153,8 @@ _STH_K = 32
 def _theta_index_processor(out: str):
     from data_ingestion_din_spark.functions.hashing import h64
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql.window import Window as W
-
-        sk = (
+    def _plan(batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return (
             batch_df.select("user_id")
             .distinct()
             .select(
@@ -1253,11 +1168,8 @@ def _theta_index_processor(out: str):
             .limit(_STH_K)  # K-smallest via per-task heaps (r12: was a
             # partition-less row_number window — single-partition sort)
         )
-        sk.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"epoch={epoch_id}")
-        )
 
-    return _process
+    return _epoch_writer(_plan, out)
 
 
 @staged("sth_landings")
@@ -1267,7 +1179,6 @@ def _sth_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "event_id bigint, user_id bigint",
         [ev.filter(F.col("event_id") % 2 == p) for p in (0, 1)],
         _theta_index_processor(out),
     )
@@ -1474,20 +1385,7 @@ def _cusum_gate_processor(out: str, state: str):
         )
         return {"verdicts": verdicts, "new_state": new_state}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dfs = _plan(batch_df, epoch_id)
-        ep = f"epoch={epoch_id}"
-        dfs["verdicts"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, ep)
-        )
-        dfs["new_state"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state, ep)
-        )
-
-    _process.plan = _plan
-    return _process
+    return _epoch_writer(_plan, {"verdicts": out, "new_state": state})
 
 
 @staged("cusum_gate_landings")
@@ -1499,7 +1397,6 @@ def _scsm_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     _run_split_landings(
         spark,
         base,
-        "event_type string, ts timestamp",
         [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)],
         _process,
     )

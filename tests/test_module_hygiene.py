@@ -14,6 +14,10 @@ failure impossible to reintroduce:
    (``operators/colocate.staged``), which tags each by its unique
    registered name, so two families cannot overwrite each other's
    session-staged artifacts.
+
+A third lint keeps the streaming mechanism (trigger, checkpoint,
+foreachBatch sink, per-epoch state writes) in plans/streaming_core.py,
+the way lint 2 keeps staging in one registry.
 """
 
 from __future__ import annotations
@@ -86,6 +90,48 @@ def test_staged_dir_tags_unique_per_function():
     assert not callers, (
         "modules outside operators/colocate.py reach the staged-dir "
         f"helpers directly instead of declaring a staged builder: {sorted(callers)}"
+    )
+
+
+def _docstring_ids(tree: ast.AST) -> set[int]:
+    ids = set()
+    for node in ast.walk(tree):
+        if isinstance(
+            node,
+            (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+        ) and ast.get_docstring(node, clean=False) is not None:
+            ids.add(id(node.body[0].value))
+    return ids
+
+
+def test_streaming_mechanism_lives_in_streaming_core():
+    """No plans module but streaming_core starts an availableNow run,
+    sets a checkpointLocation, attaches a foreachBatch sink or writes an
+    ``epoch=`` path (code only: comments and docstrings may name them)."""
+    hits: dict[str, set[str]] = collections.defaultdict(set)
+    for path in sorted(glob.glob(os.path.join(PKG, "plans", "*.py"))):
+        rel = os.path.relpath(path, PKG)
+        if os.path.basename(path) == "streaming_core.py":
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        docs = _docstring_ids(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.keyword) and node.arg == "availableNow":
+                hits[rel].add("availableNow")
+            elif isinstance(node, ast.Attribute) and node.attr == "foreachBatch":
+                hits[rel].add("foreachBatch")
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docs
+            ):
+                for word in ("availableNow", "checkpointLocation", "epoch="):
+                    if word in node.value:
+                        hits[rel].add(word)
+    assert not hits, (
+        "streaming mechanism outside plans/streaming_core.py (use "
+        f"_run_split_landings / _epoch_writer / _write_epoch): {dict(hits)}"
     )
 
 

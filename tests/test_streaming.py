@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from data_ingestion_din_spark.plans.streaming_core import _await_or_raise
 from data_ingestion_din_spark.sources.tables import load_table
 from data_ingestion_din_spark.streaming.ingest import (
     DOCUMENTS_SCHEMA,
@@ -43,7 +44,7 @@ def _run_stream(spark, stream_df, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_or_raise(q, 120)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -103,7 +104,7 @@ def test_ingest_stream_is_incremental_and_idempotent(spark):
         schema=DOCUMENTS_SCHEMA,
     )
     docs1.write.mode("overwrite").parquet(landing)
-    start_ingest_stream(spark, landing, corpus, ckpt).awaitTermination(120)
+    _await_or_raise(start_ingest_stream(spark, landing, corpus, ckpt), 120)
     n1 = spark.read.parquet(corpus).count()
     expected1 = chunk_documents(docs1).dropDuplicates(["chunk_id"]).count()
     assert n1 == expected1 > 0
@@ -115,7 +116,7 @@ def test_ingest_stream_is_incremental_and_idempotent(spark):
         schema=DOCUMENTS_SCHEMA,
     )
     docs2.write.mode("append").parquet(landing)
-    start_ingest_stream(spark, landing, corpus, ckpt).awaitTermination(120)
+    _await_or_raise(start_ingest_stream(spark, landing, corpus, ckpt), 120)
     out = spark.read.parquet(corpus)
     # re-uploaded doc 1 chunks are deduped by content-addressed id;
     # only doc 3's chunks are new.
@@ -159,7 +160,7 @@ def test_watermark_drops_late_rows(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_or_raise(q, 120)
 
     write_batch("b1", [
         (t("2024-01-01 10:00:30"), 1, "click", 1.0),
@@ -222,7 +223,7 @@ def test_ingest_stream_equals_batch_frame(spark):
         )
     )
     docs.write.mode("overwrite").parquet(landing)
-    start_ingest_stream(spark, landing, corpus, ckpt).awaitTermination(120)
+    _await_or_raise(start_ingest_stream(spark, landing, corpus, ckpt), 120)
 
     streamed = spark.read.parquet(corpus)
     batch = chunk_documents(
@@ -298,7 +299,7 @@ def test_first_seen_stream_dedups_across_microbatches(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_or_raise(q, 120)
     rows = spark.sql("SELECT fp FROM first_seen_out").collect()
     # exactly one row per distinct fingerprint, regardless of how many
     # micro-batches its duplicates were spread over
@@ -354,7 +355,7 @@ def test_watermark_drop_set_matches_batch_predicate(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_or_raise(q, 120)
 
     # independent derivation of kept rows + final watermark
     def win_end(ts):
@@ -521,7 +522,7 @@ def test_ddw_boundary_conventions(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_or_raise(q, 120)
 
     mk(
         [
