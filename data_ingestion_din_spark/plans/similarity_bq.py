@@ -20,6 +20,8 @@ from data_ingestion_din_spark.plans.similarity_queries import (
     _DIMS_UB,
     _SWEEP_N,
     _etop_staged,
+    _probe_rerank,
+    _recall_row,
 )
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -179,8 +181,6 @@ def _bq_oracle() -> str:
 def similarity_bq_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    from data_ingestion_din_spark.functions.vectors import cosine_exact
-
     emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.select("vec_id", quantize(F.col("embedding")).alias("qv"))
 
@@ -232,13 +232,10 @@ def similarity_bq_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE pass over the scored rows computes BOTH rankings (same probe
     # partitioning — one exchange, two in-partition sorts), and each
     # row explodes into the arm tags it belongs to; the four arms then
-    # share one shortlist table, one rerank pass (arm rides the window
-    # key) and ONE recall rollup — the aniso-ab merged-arm pattern.
-    # Before (r14): four window+filter subtrees re-read the scored
-    # checkpoint and eight per-arm aggregates crossJoined pairwise.
+    # share one shortlist table, one probe rerank (arm rides the window
+    # key) and ONE recall rollup.
     wham = W.partitionBy("probe").orderBy("ham", "vec_id")
     wasym = W.partitionBy("probe").orderBy(F.desc("adot"), "vec_id")
-    _ARMS = ("ham@10", "ham@50+rr", "asym@10", "asym@50+rr")
     ranked = scored.select(
         "probe",
         "vec_id",
@@ -267,60 +264,17 @@ def similarity_bq_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         # it inside the final action; the rerank side then reuses it
         .localCheckpoint(eager=False)
     )
-    etop = _etop_staged(spark, sf_dir)
-    pemb = F.broadcast(
-        emb.filter(F.col("vec_id") < _SWEEP_N).select(
-            F.col("vec_id").alias("probe"),
-            F.col("embedding").alias("p_embedding"),
+    rerank = F.col("arm").endswith("+rr")
+    itops = tagged.filter(~rerank).unionByName(
+        _probe_rerank(spark, sf_dir, tagged.filter(rerank)).select(
+            "probe", "vec_id", "arm"
         )
     )
-    raw_arms = tagged.filter(~F.col("arm").endswith("+rr"))
-    wtop = W.partitionBy("arm", "probe").orderBy(F.desc("cos"), "vec_id")
-    rr_arms = (
-        tagged.filter(F.col("arm").endswith("+rr"))
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(pemb, "probe")
-        .select(
-            "arm",
-            "probe",
-            "vec_id",
-            cosine_exact(
-                F.col("embedding"), F.col("p_embedding")
-            ).alias("cos"),
-        )
-        .withColumn("rk2", F.row_number().over(wtop))
-        .filter(F.col("rk2") <= 10)
-        .select("probe", "vec_id", "arm")
-    )
-    itops = raw_arms.unionByName(rr_arms)
-    arms_df = spark.createDataFrame([(a,) for a in _ARMS], "arm string")
-    ovl = itops.join(etop, ["probe", "vec_id"]).groupBy("arm").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_overlap_total")
-    )
-    grid = (
-        arms_df.join(ovl, "arm", "left")
-        .crossJoin(
-            etop.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_exact_total")
-            )
-        )
-        .select(
-            "arm",
-            F.lit(_SWEEP_N).cast("bigint").alias("n_probes"),
-            "n_exact_total",
-            F.coalesce(
-                F.col("n_overlap_total"), F.lit(0).cast("bigint")
-            ).alias("n_overlap_total"),
-            F.round(
-                F.coalesce(
-                    F.col("n_overlap_total"), F.lit(0).cast("bigint")
-                ).cast("double")
-                / F.col("n_exact_total"),
-                6,
-            ).alias("mean_recall"),
-        )
-    )
-    return grid.orderBy("arm")
+    return _recall_row(
+        _etop_staged(spark, sf_dir),
+        itops,
+        arm=["ham@10", "ham@50+rr", "asym@10", "asym@50+rr"],
+    ).orderBy("arm")
 
 
 # --------------------------------------------------------------------------

@@ -12,15 +12,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_din_spark.functions.vectors import (
-    cosine_exact,
-    cosine_exact_sql,
-)
+from data_ingestion_din_spark.functions.vectors import cosine_exact_sql
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.similarity_queries import (
     _SWEEP_N,
     _km8,
     _km_ctes,
+    _overlap_rollup,
+    _probe_rerank,
 )
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -138,44 +137,48 @@ def _fann_oracle() -> str:
     """
 
 
+def _filter_tags(*extra: F.Column) -> F.Column:
+    """Explode a row into the name of every filter it passes (plus any
+    ``extra`` tags), as the ``filter`` column."""
+    tags = [F.when(F.expr(p.format(e="")), F.lit(n)) for n, p in _FANN_FILTERS]
+    return F.explode(
+        F.filter(F.array(*extra, *tags), lambda x: x.isNotNull())
+    ).alias("filter")
+
+
 @query("similarity_filtered_ann", oracle=_fann_oracle())
 def similarity_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = _km8(spark, sf_dir)
     pa = assigned.filter(F.col("vec_id") < _SWEEP_N).select(
         F.col("vec_id").alias("probe"), F.col("cluster").alias("pc")
     )
-    pemb = F.broadcast(
-        emb.filter(F.col("vec_id") < _SWEEP_N).select(
-            F.col("vec_id").alias("probe"),
-            F.col("embedding").alias("p_embedding"),
-        )
-    )
-    scored = (
+    labels = emb.select("vec_id", "label")
+    cell = (
         assigned.join(F.broadcast(pa), F.col("cluster") == F.col("pc"))
         .filter(F.col("vec_id") != F.col("probe"))
-        .join(emb.select("vec_id", "embedding", "label"), "vec_id")
-        .join(pemb, "probe")
-        .select(
-            "probe",
-            "vec_id",
-            "label",
-            cosine_exact(F.col("embedding"), F.col("p_embedding")).alias(
-                "cos"
-            ),
-        )
-        # lazy: materialized inside the final action's first consumer
-        # stage and shared from there (an eager checkpoint here was a
-        # serial driver barrier before any result work started)
-        .localCheckpoint(eager=False)
+        .join(labels, "vec_id")
     )
-    wtop = W.partitionBy("probe").orderBy(F.desc("cos"), "vec_id")
-    ptop = (
-        scored.withColumn("rk", F.row_number().over(wtop))
-        .filter(F.col("rk") <= 10)
-        .select("probe", "vec_id", "label")
+    # ONE rerank of the cell members feeds both arms of every filter:
+    # the '' tag is the unfiltered cell (the post arm's top-10, filtered
+    # after the cut), each filter's tag its passing members (the aware
+    # arm, filtered before the cut)
+    top = _probe_rerank(
+        spark, sf_dir, cell.select("probe", "vec_id", _filter_tags(F.lit("")))
+    )
+    aware = top.filter(F.col("filter") != "").select(
+        "filter", "probe", "vec_id", F.lit("aware").alias("arm")
+    )
+    post = (
+        top.filter(F.col("filter") == "")
+        .join(labels, "vec_id")
+        .select("probe", "vec_id", _filter_tags())
+        .withColumn("arm", F.lit("post"))
+    )
+    # ONE probes × corpus exact pass feeds every filter's truth — each
+    # corpus row rides once per filter it passes
+    truth = _probe_rerank(
+        spark, sf_dir, emb.select("vec_id", "embedding", _filter_tags())
     )
     # ONE agg job returns the corpus size and every filter's
     # selectivity count (was one count job per filter plus one for the
@@ -189,69 +192,34 @@ def similarity_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, (_, rawpred) in enumerate(_FANN_FILTERS)
         ],
     ).collect()[0]
-    n_corpus = int(sel_row.n)
-    # ONE probes × corpus exact pass feeds every filter's truth — the
-    # single-scan shape (measured ~equal wall-clock to three per-filter
-    # scans at sf0.1, where the small-job overhead dominates; at real
-    # corpus sizes the scan count is what matters)
-    exall = (
-        emb.select("vec_id", "embedding", "label")
-        .crossJoin(pemb)
-        .filter(F.col("vec_id") != F.col("probe"))
-        .select(
-            "probe",
-            "vec_id",
-            "label",
-            cosine_exact(F.col("embedding"), F.col("p_embedding")).alias(
-                "cos"
-            ),
-        )
-        .localCheckpoint(eager=False)
+    sel = spark.createDataFrame(
+        [
+            (name, int(sel_row[f"s{i}"]) * 1000 // int(sel_row.n))
+            for i, (name, _) in enumerate(_FANN_FILTERS)
+        ],
+        "filter string, sel_milli bigint",
     )
-    grid = None
-    for i, (name, rawpred) in enumerate(_FANN_FILTERS):
-        pred = rawpred.format(e="")
-        sel = int(sel_row[f"s{i}"]) * 1000 // n_corpus
-        truth = (
-            exall.filter(F.expr(pred))
-            .withColumn("rk", F.row_number().over(wtop))
-            .filter(F.col("rk") <= 10)
-            .select("probe", "vec_id")
+    return (
+        _overlap_rollup(
+            truth,
+            aware.unionByName(post),
+            keys=("filter", "probe", "vec_id"),
+            filter=[name for name, _ in _FANN_FILTERS],
+            arm=["post", "aware"],
         )
-        arms = {
-            "post": ptop.filter(F.expr(pred)).select("probe", "vec_id"),
-            "aware": scored.filter(F.expr(pred))
-            .withColumn("rk", F.row_number().over(wtop))
-            .filter(F.col("rk") <= 10)
-            .select("probe", "vec_id"),
-        }
-        for arm in ("post", "aware"):
-            row = (
-                truth.agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_truth")
-                )
-                .crossJoin(
-                    arms[arm]
-                    .join(truth, ["probe", "vec_id"])
-                    .agg(
-                        F.count(F.lit(1))
-                        .cast("bigint")
-                        .alias("n_overlap")
-                    )
-                )
-                .select(
-                    F.lit(name).alias("filter"),
-                    F.lit(sel).cast("bigint").alias("sel_milli"),
-                    F.lit(arm).alias("arm"),
-                    "n_truth",
-                    "n_overlap",
-                    F.expr("n_overlap * 1000 DIV greatest(n_truth, 1)")
-                    .cast("bigint")
-                    .alias("recall_milli"),
-                )
-            )
-            grid = row if grid is None else grid.unionByName(row)
-    return grid.orderBy(F.desc("sel_milli"), "filter", "arm")
+        .join(sel, "filter")
+        .select(
+            "filter",
+            "sel_milli",
+            "arm",
+            "n_truth",
+            "n_overlap",
+            F.expr("n_overlap * 1000 DIV greatest(n_truth, 1)")
+            .cast("bigint")
+            .alias("recall_milli"),
+        )
+        .orderBy(F.desc("sel_milli"), "filter", "arm")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -352,48 +320,23 @@ def _fnp_oracle() -> str:
 def similarity_filtered_nprobe(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    from data_ingestion_din_spark.plans.similarity_queries import _km8_cents
+    from data_ingestion_din_spark.plans.similarity_queries import (
+        _km8_cents,
+        _probe_qv_staged,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = _km8(spark, sf_dir)
     cents = _km8_cents(spark, sf_dir)
-    pred = _FNP_PRED.format(e="")
-    pemb = F.broadcast(
-        emb.filter(F.col("vec_id") < _SWEEP_N).select(
-            F.col("vec_id").alias("probe"),
-            F.col("embedding").alias("p_embedding"),
-        )
-    )
-    wtop = W.partitionBy("probe").orderBy(F.desc("cos"), "vec_id")
-    truth = (
-        emb.filter(F.expr(pred))
-        .select("vec_id", "embedding")
-        .crossJoin(pemb)
-        .filter(F.col("vec_id") != F.col("probe"))
-        .select(
-            "probe",
-            "vec_id",
-            cosine_exact(F.col("embedding"), F.col("p_embedding")).alias(
-                "cos"
-            ),
-        )
-        .withColumn("rk", F.row_number().over(wtop))
-        .filter(F.col("rk") <= 10)
-        .select("probe", "vec_id")
-        # lazy: materialized inside the final action and shared by the
-        # four nprobe arms' overlap joins
-        .localCheckpoint(eager=False)
-    )
+    passing = emb.filter(F.expr(_FNP_PRED.format(e="")))
+    # lazy: materialized inside the final action and shared by the four
+    # nprobe arms' overlap joins
+    truth = _probe_rerank(
+        spark, sf_dir, passing.select("vec_id", "embedding")
+    ).localCheckpoint(eager=False)
     # probe→cell ranking on the frozen centroids (bounded control data,
-    # the _ivfpq_sweep multiprobe shape); the quantized probe collect
-    # is the session-staged one every sweep shares
-    from data_ingestion_din_spark.plans.similarity_queries import (
-        _probe_qv_staged,
-    )
-
-    probe_rows = _probe_qv_staged(spark, sf_dir, "raw")
+    # the _ivfpq_shortlist multiprobe shape); the quantized probe
+    # collect is the session-staged one every sweep shares
     ranked = {
         int(r.vec_id): sorted(
             (
@@ -402,48 +345,34 @@ def similarity_filtered_nprobe(
             )
             for cl, c in enumerate(cents)
         )
-        for r in probe_rows
+        for r in _probe_qv_staged(spark, sf_dir, "raw")
     }
-    grid = None
-    for np_ in _FNP_GRID:
-        pc_rows = [
-            (p, cl) for p, rk in ranked.items() for _, cl in rk[:np_]
-        ]
-        pcells = spark.createDataFrame(pc_rows, "probe bigint, pcell int")
-        itop = (
-            assigned.join(
-                F.broadcast(pcells), F.col("cluster") == F.col("pcell")
-            )
-            .filter(F.col("vec_id") != F.col("probe"))
-            .join(emb.select("vec_id", "embedding", "label"), "vec_id")
-            .filter(F.expr(pred))
-            .join(pemb, "probe")
-            .select(
-                "probe",
-                "vec_id",
-                cosine_exact(
-                    F.col("embedding"), F.col("p_embedding")
-                ).alias("cos"),
-            )
-            .withColumn("rk", F.row_number().over(wtop))
-            .filter(F.col("rk") <= 10)
-            .select("probe", "vec_id")
+    # every nprobe arm's probed cells in one tagged table
+    pcells = spark.createDataFrame(
+        [
+            (p, cl, np_)
+            for np_ in _FNP_GRID
+            for p, rk in ranked.items()
+            for _, cl in rk[:np_]
+        ],
+        "probe bigint, pcell int, nprobe int",
+    )
+    cand = (
+        assigned.join(F.broadcast(pcells), F.col("cluster") == F.col("pcell"))
+        .filter(F.col("vec_id") != F.col("probe"))
+        .join(passing.select("vec_id"), "vec_id", "left_semi")
+        .select("probe", "vec_id", "nprobe")
+    )
+    itop = _probe_rerank(spark, sf_dir, cand)
+    return (
+        _overlap_rollup(truth, itop, nprobe=list(_FNP_GRID))
+        .select(
+            "nprobe",
+            "n_truth",
+            "n_overlap",
+            F.expr("n_overlap * 1000 DIV greatest(n_truth, 1)")
+            .cast("bigint")
+            .alias("recall_milli"),
         )
-        row = (
-            truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-            .crossJoin(
-                itop.join(truth, ["probe", "vec_id"]).agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_overlap")
-                )
-            )
-            .select(
-                F.lit(np_).cast("int").alias("nprobe"),
-                "n_truth",
-                "n_overlap",
-                F.expr("n_overlap * 1000 DIV greatest(n_truth, 1)")
-                .cast("bigint")
-                .alias("recall_milli"),
-            )
-        )
-        grid = row if grid is None else grid.unionByName(row)
-    return grid.orderBy("nprobe")
+        .orderBy("nprobe")
+    )

@@ -14,6 +14,8 @@ index at reduced width and trained quantizers, or not at all).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,6 +27,8 @@ from data_ingestion_din_spark.plans.similarity_queries import (
     _DIMS_UB,
     _SWEEP_N,
     _etop_staged,
+    _overlap_rollup,
+    _rank_cut,
 )
 from data_ingestion_din_spark.plans.similarity_sq import _MRL_DIMS
 from data_ingestion_din_spark.sources.tables import load_table
@@ -207,8 +211,6 @@ def _rp_oracle() -> str:
 def similarity_rp_dim_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    from pyspark.sql.window import Window as W
-
     from data_ingestion_din_spark.functions.vectors import quantize
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -310,66 +312,60 @@ def similarity_rp_dim_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dist = qm.mapInPandas(_dist_batches, out_schema).localCheckpoint(
         eager=True
-    )  # 20·n control-sized rows; 12 rank passes below share one scan
-    rdist = dist.select(
+    )  # 20·n control-sized rows; the 12 arms below fan out of one scan
+    # every (dims, strategy) arm ranks the same checkpointed rows by its
+    # own prefix score — the dot estimator negated so all three rank
+    # ascending — under one (dims, kind, probe) window
+    scores = {"rp_l2": "d{}", "rp_dot": "-g{}", "trunc": "t{}"}
+    arms = dist.select(
         "probe",
         "vec_id",
-        *[F.col(f"d{d}") for d in _MRL_DIMS],
-        *[F.col(f"g{d}") for d in _MRL_DIMS],
-    )
-    tdist = dist.select(
-        "probe",
-        "vec_id",
-        *[F.col(f"t{d}").alias(f"d{d}") for d in _MRL_DIMS],
-    )
-    etop = _etop_staged(spark, sf_dir)
-    n_exact = etop.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact_total")
-    )
-    grid = None
-    for d in _MRL_DIMS:
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(d).alias("dims"),
+                        F.lit(kind).alias("kind"),
+                        F.expr(expr.format(d)).alias("score"),
+                    )
+                    for d in _MRL_DIMS
+                    for kind, expr in scores.items()
+                ]
+            )
+        ).alias("a"),
+    ).select("probe", "vec_id", "a.dims", "a.kind", "a.score")
+    itop = _rank_cut(arms, "score", "vec_id", tags=("dims", "kind"))
 
-        def _ov(dist, order_cols, alias):
-            wd = W.partitionBy("probe").orderBy(*order_cols)
-            itop = (
-                dist.withColumn("rk", F.row_number().over(wd))
-                .filter(F.col("rk") <= 10)
-                .select("probe", "vec_id")
-            )
-            return etop.join(itop, ["probe", "vec_id"]).agg(
-                F.count(F.lit(1)).cast("bigint").alias(alias)
-            )
+    def per_mille(num: F.Column) -> F.Column:
+        return (num * 1000 / F.col("n_exact_total")).cast("bigint")
 
-        row = (
-            n_exact.crossJoin(_ov(rdist, [f"d{d}", "vec_id"], "rp_ov"))
-            .crossJoin(
-                _ov(rdist, [F.desc(f"g{d}"), F.col("vec_id")], "rd_ov")
-            )
-            .crossJoin(_ov(tdist, [f"d{d}", "vec_id"], "tr_ov"))
-            .select(
-                F.lit(d).cast("int").alias("dims"),
-                F.lit(_SWEEP_N).cast("bigint").alias("n_probes"),
-                "n_exact_total",
-                (F.col("rp_ov") * 1000 / F.col("n_exact_total"))
-                .cast("bigint")
-                .alias("rp_l2_milli"),
-                (F.col("rd_ov") * 1000 / F.col("n_exact_total"))
-                .cast("bigint")
-                .alias("rp_dot_milli"),
-                (F.col("tr_ov") * 1000 / F.col("n_exact_total"))
-                .cast("bigint")
-                .alias("trunc_milli"),
-                (
-                    (F.col("rd_ov") - F.col("tr_ov"))
-                    * 1000
-                    / F.col("n_exact_total")
-                )
-                .cast("bigint")
-                .alias("dot_vs_trunc_milli"),
-            )
+    def kind_overlap(kind: str) -> F.Column:
+        return F.max(F.when(F.col("kind") == kind, F.col("n_overlap")))
+
+    rp, rd, tr = F.col("rp_l2"), F.col("rp_dot"), F.col("trunc")
+    return (
+        _overlap_rollup(
+            _etop_staged(spark, sf_dir),
+            itop,
+            dims=list(_MRL_DIMS),
+            kind=list(scores),
         )
-        grid = row if grid is None else grid.unionByName(row)
-    return grid.orderBy("dims")
+        .groupBy("dims")
+        .agg(
+            F.max("n_truth").alias("n_exact_total"),
+            *[kind_overlap(kind).alias(kind) for kind in scores],
+        )
+        .select(
+            "dims",
+            F.lit(_SWEEP_N).cast("bigint").alias("n_probes"),
+            "n_exact_total",
+            per_mille(rp).alias("rp_l2_milli"),
+            per_mille(rd).alias("rp_dot_milli"),
+            per_mille(tr).alias("trunc_milli"),
+            per_mille(rd - tr).alias("dot_vs_trunc_milli"),
+        )
+        .orderBy("dims")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -656,24 +652,20 @@ def _pqs_base_trained(spark: SparkSession, sf_dir: str):
     return codes.localCheckpoint(eager=True), cb
 
 
-def _pq_arm_rows(
+def _pq_arm(
     spark: SparkSession,
-    label: str,
     src: DataFrame,
     pv: dict,
-    setop: DataFrame,
     trained: tuple | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """One PQ A/B arm: train the k=4 / 4-subspace / 1-iter PQ on ``src``
-    (vec_id, qv), roll up per-subspace quantization error, serve the
-    probes by broadcast ADC and count truth overlap — the per-(layout,
-    subspace) rows every PQ A/B emits. ``pv`` maps probe id to its
-    vector IN THE ARM'S SPACE (the caller applies the arm transform to
-    both ``src`` and the probe vectors). ``trained`` short-circuits the
-    training with a pre-staged (checkpointed codes, codebooks) pair —
-    the session-staged baseline arm both A/Bs share."""
-    from pyspark.sql.window import Window as W
-
+    (vec_id, qv) and return its per-subspace quantization error
+    (m, sq_err) and its broadcast-ADC distances for the probes (probe,
+    vec_id, adc_dist). ``pv`` maps probe id to its vector IN THE ARM'S
+    SPACE (the caller applies the arm transform to both ``src`` and the
+    probe vectors). ``trained`` short-circuits the training with a
+    pre-staged (checkpointed codes, codebooks) pair — the
+    session-staged baseline arm both A/Bs share."""
     from data_ingestion_din_spark.operators.similarity import pq_assign_qv
     from data_ingestion_din_spark.plans.similarity_queries import _PQ_D
 
@@ -739,25 +731,39 @@ def _pq_arm_rows(
             adc_rows, "probe bigint, m int, code int, dpart bigint"
         )
     )
-    wsh = W.partitionBy("probe").orderBy("adc_dist", "vec_id")
-    sh = (
+    dist = (
         codes.join(adc, ["m", "code"])
         .filter(F.col("vec_id") != F.col("probe"))
         .groupBy("probe", "vec_id")
         .agg(F.sum("dpart").cast("bigint").alias("adc_dist"))
-        .withColumn("rk", F.row_number().over(wsh))
-        .filter(F.col("rk") <= 10)
-        .select("probe", "vec_id")
     )
-    ov = setop.join(sh, ["probe", "vec_id"]).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_overlap")
+    return serr, dist
+
+
+def _pq_ab(spark: SparkSession, setop: DataFrame, arms) -> DataFrame:
+    """The per-(layout, subspace) rows every PQ A/B emits: ``arms`` =
+    ((label, src, pv, trained), ...) per :func:`_pq_arm`; the arms'
+    ADC top-10 sets are cut under one (layout, probe) window and rolled
+    up against the shared truth ``setop`` in one pass."""
+    errs, dists = [], []
+    for label, src, pv, trained in arms:
+        serr, dist = _pq_arm(spark, src, pv, trained)
+        errs.append(serr.withColumn("layout", F.lit(label)))
+        dists.append(dist.withColumn("layout", F.lit(label)))
+    itop = _rank_cut(
+        reduce(DataFrame.unionByName, dists),
+        "adc_dist",
+        "vec_id",
+        tags=("layout",),
     )
-    tot = serr.agg(F.sum("sq_err").cast("bigint").alias("t"))
+    rec = _overlap_rollup(setop, itop, layout=[a[0] for a in arms])
+    errs = reduce(DataFrame.unionByName, errs)
+    tot = errs.groupBy("layout").agg(F.sum("sq_err").cast("bigint").alias("t"))
     return (
-        serr.crossJoin(tot)
-        .crossJoin(ov)
+        errs.join(tot, "layout")
+        .join(rec, "layout")
         .select(
-            F.lit(label).alias("layout"),
+            "layout",
             F.col("m").cast("int").alias("subspace"),
             "sq_err",
             F.expr("sq_err * 1000 DIV t")
@@ -768,6 +774,7 @@ def _pq_arm_rows(
             .cast("bigint")
             .alias("recall_milli"),
         )
+        .orderBy("layout", "subspace")
     )
 
 
@@ -783,14 +790,14 @@ def similarity_pq_subspace_ab(
     )
     pvb = {k: [v[i - 1] for i in _PQS_PERM] for k, v in probes.items()}
     base = _pqs_base_trained(spark, sf_dir)
-    out = None
-    for label, src, pv, trained in (
-        ("contiguous", sq, probes, base),
-        ("balanced", bq, pvb, None),
-    ):
-        row = _pq_arm_rows(spark, label, src, pv, setop, trained=trained)
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("layout", "subspace")
+    return _pq_ab(
+        spark,
+        setop,
+        (
+            ("contiguous", sq, probes, base),
+            ("balanced", bq, pvb, None),
+        ),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -882,14 +889,14 @@ def similarity_pq_opq_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k, v in probes.items()
     }
     base = _pqs_base_trained(spark, sf_dir)
-    out = None
-    for label, src, pv, trained in (
-        ("identity", sq, probes, base),
-        ("rotated", rq, pvr, None),
-    ):
-        row = _pq_arm_rows(spark, label, src, pv, setop, trained=trained)
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("layout", "subspace")
+    return _pq_ab(
+        spark,
+        setop,
+        (
+            ("identity", sq, probes, base),
+            ("rotated", rq, pvr, None),
+        ),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1496,12 +1503,10 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         if pid < _SWEEP_N
     }
 
-    from pyspark.sql.window import Window as W
-
-    stats = None
-    for arm, mode in (("aniso", "aniso"), ("mse", "mse")):
-        cb = _mstep(mode)
-        codes = _assign(cb, mode).select("vec_id", "m", "code")
+    errs, ests = [], []
+    for arm in ("aniso", "mse"):
+        cb = _mstep(arm)
+        codes = _assign(cb, arm).select("vec_id", "m", "code")
         cb_df = F.broadcast(
             spark.createDataFrame(
                 [
@@ -1512,7 +1517,7 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "m int, code int, cv array<bigint>",
             )
         )
-        errs_agg = (
+        errs.append(
             codes.join(sub, ["vec_id", "m"])
             .join(cb_df, ["m", "code"])
             .select(
@@ -1537,6 +1542,7 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("aniso_err"),
             )
+            .withColumn("arm", F.lit(arm))
         )
         adc_rows = []
         for pid, vec in probes.items():
@@ -1556,26 +1562,24 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 adc_rows, "probe bigint, m int, code int, dpart bigint"
             )
         )
-        wsh = W.partitionBy("probe").orderBy(F.desc("est"), "vec_id")
-        sh = (
+        ests.append(
             codes.join(adc, ["m", "code"])
             .filter(F.col("vec_id") != F.col("probe"))
             .groupBy("probe", "vec_id")
             .agg(F.sum("dpart").cast("bigint").alias("est"))
-            .withColumn("rk", F.row_number().over(wsh))
-            .filter(F.col("rk") <= 10)
-            .select("probe", "vec_id")
+            .withColumn("arm", F.lit(arm))
         )
-        ov_agg = setop.join(sh, ["probe", "vec_id"]).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_ov")
-        )
-        row = errs_agg.crossJoin(ov_agg).select(
-            F.lit(arm).alias("arm"), "sq_err", "aniso_err", "n_ov"
-        )
-        stats = row if stats is None else stats.unionByName(row)
-    # ONE action for BOTH arms: error totals and truth overlaps union
-    # under the arm tag (one collect per arm before this round, and a
-    # collect + count per arm before that)
+    itop = _rank_cut(
+        reduce(DataFrame.unionByName, ests),
+        F.desc("est"),
+        "vec_id",
+        tags=("arm",),
+    )
+    # ONE action for BOTH arms: error totals and truth overlaps join
+    # under the arm tag
+    stats = reduce(DataFrame.unionByName, errs).join(
+        _overlap_rollup(setop, itop, arm=["aniso", "mse"]), "arm"
+    )
     by_arm = {r.arm: r for r in stats.collect()}
     out_rows = [
         (
@@ -1583,7 +1587,7 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(by_arm[arm].sq_err),
             int(by_arm[arm].aniso_err),
             _SWEEP_N,
-            int(by_arm[arm].n_ov) * 1000 // (10 * _SWEEP_N),
+            int(by_arm[arm].n_overlap) * 1000 // (10 * _SWEEP_N),
         )
         for arm in ("aniso", "mse")
     ]

@@ -5,8 +5,12 @@ reference's Chroma kNN, backend/services/vector_store.py:263-341).
 
 from __future__ import annotations
 
+import itertools
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from data_ingestion_din_spark.functions.vectors import (
     EMBED_DIMS,
@@ -379,6 +383,28 @@ _EXACT_SQL = _ORACLES["similarity_topk"]
 _LSHK_SQL = _ORACLES["similarity_lsh_topk"]
 
 
+def _topk_recall(
+    spark: SparkSession, sf_dir: str, approx: DataFrame, n_col: str
+) -> DataFrame:
+    """(n_exact, n_col, n_overlap, recall) of one ANN top-10 for probe
+    vec_id 0 against the exact similarity_topk: the overlap rollup on
+    vec_id, plus the approximate set's own size as ``n_col``."""
+    exact = similarity_topk(spark, sf_dir).select("vec_id")
+    approx = approx.select("vec_id")
+    return (
+        _overlap_rollup(exact, approx, keys=("vec_id",))
+        .crossJoin(approx.agg(F.count(F.lit(1)).cast("bigint").alias(n_col)))
+        .select(
+            F.col("n_truth").alias("n_exact"),
+            n_col,
+            "n_overlap",
+            F.round(
+                F.col("n_overlap").cast("double") / F.col("n_truth"), 6
+            ).alias("recall"),
+        )
+    )
+
+
 @query(
     "similarity_lsh_recall",
     oracle=f"""
@@ -393,23 +419,8 @@ _LSHK_SQL = _ORACLES["similarity_lsh_topk"]
     """,
 )
 def similarity_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = similarity_topk(spark, sf_dir).select("vec_id")
-    lsh = similarity_lsh_topk(spark, sf_dir).select("vec_id")
-    ov = exact.join(lsh, "vec_id")
-    return (
-        exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .crossJoin(lsh.agg(F.count(F.lit(1)).cast("bigint").alias("n_lsh")))
-        .crossJoin(
-            ov.agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
-        )
-        .select(
-            "n_exact",
-            "n_lsh",
-            "n_overlap",
-            F.round(
-                F.col("n_overlap").cast("double") / F.col("n_exact"), 6
-            ).alias("recall"),
-        )
+    return _topk_recall(
+        spark, sf_dir, similarity_lsh_topk(spark, sf_dir), "n_lsh"
     )
 
 
@@ -939,24 +950,7 @@ _PQ_SQL = _ORACLES["similarity_pq_topk"]
     """,
 )
 def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = similarity_topk(spark, sf_dir).select("vec_id")
-    pq = similarity_pq_topk(spark, sf_dir).select("vec_id")
-    ov = exact.join(pq, "vec_id")
-    return (
-        exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .crossJoin(pq.agg(F.count(F.lit(1)).cast("bigint").alias("n_pq")))
-        .crossJoin(
-            ov.agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
-        )
-        .select(
-            "n_exact",
-            "n_pq",
-            "n_overlap",
-            F.round(
-                F.col("n_overlap").cast("double") / F.col("n_exact"), 6
-            ).alias("recall"),
-        )
-    )
+    return _topk_recall(spark, sf_dir, similarity_pq_topk(spark, sf_dir), "n_pq")
 
 
 # --------------------------------------------------------------------------
@@ -1160,23 +1154,8 @@ _IVFPQ_SQL = _ORACLES["similarity_ivfpq_topk"]
     """,
 )
 def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = similarity_topk(spark, sf_dir).select("vec_id")
-    ip = similarity_ivfpq_topk(spark, sf_dir).select("vec_id")
-    ov = exact.join(ip, "vec_id")
-    return (
-        exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .crossJoin(ip.agg(F.count(F.lit(1)).cast("bigint").alias("n_ivfpq")))
-        .crossJoin(
-            ov.agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
-        )
-        .select(
-            "n_exact",
-            "n_ivfpq",
-            "n_overlap",
-            F.round(
-                F.col("n_overlap").cast("double") / F.col("n_exact"), 6
-            ).alias("recall"),
-        )
+    return _topk_recall(
+        spark, sf_dir, similarity_ivfpq_topk(spark, sf_dir), "n_ivfpq"
     )
 
 
@@ -1302,23 +1281,8 @@ _IVFPQ_MP_SQL = _ORACLES["similarity_ivfpq_multiprobe"]
     """,
 )
 def similarity_ivfpq_mp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = similarity_topk(spark, sf_dir).select("vec_id")
-    ip = similarity_ivfpq_multiprobe(spark, sf_dir).select("vec_id")
-    ov = exact.join(ip, "vec_id")
-    return (
-        exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .crossJoin(ip.agg(F.count(F.lit(1)).cast("bigint").alias("n_ivfpq")))
-        .crossJoin(
-            ov.agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
-        )
-        .select(
-            "n_exact",
-            "n_ivfpq",
-            "n_overlap",
-            F.round(
-                F.col("n_overlap").cast("double") / F.col("n_exact"), 6
-            ).alias("recall"),
-        )
+    return _topk_recall(
+        spark, sf_dir, similarity_ivfpq_multiprobe(spark, sf_dir), "n_ivfpq"
     )
 
 
@@ -1451,6 +1415,49 @@ def similarity_ivfpq_residual_topk(
 _IVFPQ_RES_SQL = _ORACLES["similarity_ivfpq_residual_topk"]
 
 
+def _residual_ab(
+    spark: SparkSession,
+    sf_dir: str,
+    res: DataFrame,
+    raw: DataFrame,
+    holds: bool,
+) -> DataFrame:
+    """The residual-vs-raw row over the exact similarity_topk: one
+    vec_id rollup of both arms, pivoted to (n_exact, n_residual, n_raw,
+    recall_residual, recall_raw) plus residual_improves (n_residual >
+    n_raw) or, when ``holds``, residual_holds (>=)."""
+    tagged = res.select("vec_id", F.lit("residual").alias("arm")).unionByName(
+        raw.select("vec_id", F.lit("raw").alias("arm"))
+    )
+    exact = similarity_topk(spark, sf_dir).select("vec_id")
+
+    def arm_overlap(arm: str) -> F.Column:
+        return F.max(F.when(F.col("arm") == arm, F.col("n_overlap")))
+
+    def recall(col: str) -> F.Column:
+        return F.round(F.col(col).cast("double") / F.col("n_exact"), 6)
+
+    res_n, raw_n = F.col("n_residual"), F.col("n_raw")
+    return (
+        _overlap_rollup(exact, tagged, keys=("vec_id",), arm=["residual", "raw"])
+        .agg(
+            F.max("n_truth").alias("n_exact"),
+            arm_overlap("residual").alias("n_residual"),
+            arm_overlap("raw").alias("n_raw"),
+        )
+        .select(
+            "n_exact",
+            "n_residual",
+            "n_raw",
+            recall("n_residual").alias("recall_residual"),
+            recall("n_raw").alias("recall_raw"),
+            (res_n >= raw_n).alias("residual_holds")
+            if holds
+            else (res_n > raw_n).alias("residual_improves"),
+        )
+    )
+
+
 @query(
     "similarity_ivfpq_residual_recall",
     oracle=f"""
@@ -1473,31 +1480,12 @@ _IVFPQ_RES_SQL = _ORACLES["similarity_ivfpq_residual_topk"]
 def similarity_ivfpq_residual_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    exact = similarity_topk(spark, sf_dir).select("vec_id")
-    res = similarity_ivfpq_residual_topk(spark, sf_dir).select("vec_id")
-    raw = similarity_ivfpq_topk(spark, sf_dir).select("vec_id")
-    ovr = exact.join(res, "vec_id")
-    ovw = exact.join(raw, "vec_id")
-    return (
-        exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .crossJoin(
-            ovr.agg(F.count(F.lit(1)).cast("bigint").alias("n_residual"))
-        )
-        .crossJoin(ovw.agg(F.count(F.lit(1)).cast("bigint").alias("n_raw")))
-        .select(
-            "n_exact",
-            "n_residual",
-            "n_raw",
-            F.round(
-                F.col("n_residual").cast("double") / F.col("n_exact"), 6
-            ).alias("recall_residual"),
-            F.round(
-                F.col("n_raw").cast("double") / F.col("n_exact"), 6
-            ).alias("recall_raw"),
-            (F.col("n_residual") > F.col("n_raw")).alias(
-                "residual_improves"
-            ),
-        )
+    return _residual_ab(
+        spark,
+        sf_dir,
+        similarity_ivfpq_residual_topk(spark, sf_dir),
+        similarity_ivfpq_topk(spark, sf_dir),
+        holds=False,
     )
 
 
@@ -1666,33 +1654,12 @@ _IVFPQ_RES_MP_SQL = _ORACLES["similarity_ivfpq_residual_multiprobe"]
 def similarity_ivfpq_residual_mp_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    exact = similarity_topk(spark, sf_dir).select("vec_id")
-    res = similarity_ivfpq_residual_multiprobe(spark, sf_dir).select(
-        "vec_id"
-    )
-    raw = similarity_ivfpq_multiprobe(spark, sf_dir).select("vec_id")
-    ovr = exact.join(res, "vec_id")
-    ovw = exact.join(raw, "vec_id")
-    return (
-        exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .crossJoin(
-            ovr.agg(F.count(F.lit(1)).cast("bigint").alias("n_residual"))
-        )
-        .crossJoin(ovw.agg(F.count(F.lit(1)).cast("bigint").alias("n_raw")))
-        .select(
-            "n_exact",
-            "n_residual",
-            "n_raw",
-            F.round(
-                F.col("n_residual").cast("double") / F.col("n_exact"), 6
-            ).alias("recall_residual"),
-            F.round(
-                F.col("n_raw").cast("double") / F.col("n_exact"), 6
-            ).alias("recall_raw"),
-            (F.col("n_residual") >= F.col("n_raw")).alias(
-                "residual_holds"
-            ),
-        )
+    return _residual_ab(
+        spark,
+        sf_dir,
+        similarity_ivfpq_residual_multiprobe(spark, sf_dir),
+        similarity_ivfpq_multiprobe(spark, sf_dir),
+        holds=True,
     )
 
 
@@ -1732,13 +1699,34 @@ def _probe_qv_staged(spark: SparkSession, sf_dir: str, space: str) -> list:
     return pv.filter(F.col("vec_id") < _SWEEP_N).collect()
 
 
-# The checkpointed exact top-10 per probe — the sweep's exact side
-# depends only on the embeddings and the probe set, so every (k, nprobe,
-# space) sweep shares ONE computation of it.
-@staged("sweep_etop")
-def _etop_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
+# --------------------------------------------------------------------------
+# The recall-audit skeleton. Every recall query in the similarity family
+# is the same three steps over its own candidates: cut a top-10 per
+# probe (per (arm, probe) when arms are tagged), exact-cosine rerank
+# shortlists against the probe embeddings, and roll the overlap with a
+# truth set up to one row per arm. The exact truth itself is the first
+# user: computed once per session (_etop_staged) and scored against by
+# every arm, the reuse idea of incremental top-k search sessions.
+# --------------------------------------------------------------------------
+def _rank_cut(df: DataFrame, *order, tags=(), k: int = 10) -> DataFrame:
+    """The one top-k cut: ``row_number`` over each probe — over
+    (*tags, probe) when arms are tagged — in the caller's ``order``,
+    kept at rank <= ``k`` (the audited top-10 unless a shortlist depth
+    is passed). The rank rides along as ``rk``."""
+    w = W.partitionBy(*tags, "probe").orderBy(*order)
+    return df.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
+
+def _probe_rerank(spark: SparkSession, sf_dir: str, cand: DataFrame) -> DataFrame:
+    """The one exact-cosine probe rerank: attach the ``_SWEEP_N`` probe
+    embeddings as a broadcast, score every candidate with
+    ``cosine_exact`` and cut the top-10 per probe by (cos desc, vec_id).
+
+    ``cand`` rows with a ``probe`` column are that probe's shortlist
+    (their embeddings are joined here); rows without one are a corpus
+    slice carrying its ``embedding``, a candidate of every probe but
+    itself — the exact side. Any other column is an arm tag: it rides
+    through and splits the cut. Returns (*tags, probe, vec_id, cos)."""
     emb = load_table(spark, sf_dir, "embeddings")
     pemb = F.broadcast(
         emb.filter(F.col("vec_id") < _SWEEP_N).select(
@@ -1746,64 +1734,103 @@ def _etop_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("p_embedding"),
         )
     )
-    ex = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(pemb)
-        .filter(F.col("vec_id") != F.col("probe"))
-        .select(
-            "probe",
-            "vec_id",
-            cosine_exact(
-                F.col("embedding"), F.col("p_embedding")
-            ).alias("cos"),
+    tags = [c for c in cand.columns if c not in ("probe", "vec_id", "embedding")]
+    if "probe" in cand.columns:
+        pairs = cand.join(emb.select("vec_id", "embedding"), "vec_id").join(
+            pemb, "probe"
         )
+    else:
+        pairs = cand.crossJoin(pemb).filter(F.col("vec_id") != F.col("probe"))
+    scored = pairs.select(
+        *tags,
+        "probe",
+        "vec_id",
+        cosine_exact(F.col("embedding"), F.col("p_embedding")).alias("cos"),
     )
-    wtop = W.partitionBy("probe").orderBy(F.desc("cos"), "vec_id")
+    return _rank_cut(scored, F.desc("cos"), "vec_id", tags=tags).drop("rk")
+
+
+def _overlap_rollup(
+    truth: DataFrame, approx: DataFrame, keys=("probe", "vec_id"), **arms
+) -> DataFrame:
+    """The one overlap rollup: (*tags, n_truth, n_overlap), one row per
+    arm. ``arms`` maps each tag column of ``approx`` to its values; the
+    arms are their product. ``n_overlap`` counts the arm's approximate
+    rows found in ``truth`` on ``keys`` — (probe, vec_id) for the probe
+    sweeps, vec_id for the single-probe audits. A tag column among
+    ``keys`` gives each arm its own truth (tagged the same way);
+    otherwise every arm is scored against the whole truth. An arm with
+    no overlap, or no rows at all, still gets its row with 0. Without
+    arms the result is one untagged row."""
+    tags = list(arms)
+    own = [t for t in tags if t in keys]
+    count = F.count(F.lit(1)).cast("bigint")
+    n_truth = truth.groupBy(*own).agg(count.alias("n_truth"))
+    n_overlap = (
+        approx.select(*keys, *[t for t in tags if t not in keys])
+        .join(truth.select(*keys), list(keys))
+        .groupBy(*tags)
+        .agg(count.alias("n_overlap"))
+    )
+    if not tags:
+        return n_truth.crossJoin(n_overlap)
+    grid = approx.sparkSession.createDataFrame(
+        list(itertools.product(*arms.values())),
+        ", ".join(
+            f"{t} {'int' if isinstance(v[0], int) else 'string'}"
+            for t, v in arms.items()
+        ),
+    )
+    grid = grid.join(n_truth, own, "left") if own else grid.crossJoin(n_truth)
+    zero = F.lit(0).cast("bigint")
+    return grid.join(n_overlap, tags, "left").select(
+        *tags,
+        F.coalesce("n_truth", zero).alias("n_truth"),
+        F.coalesce("n_overlap", zero).alias("n_overlap"),
+    )
+
+
+def _recall_row(etop: DataFrame, itop: DataFrame, **arms) -> DataFrame:
+    """(*tags, n_probes, n_exact_total, n_overlap_total, mean_recall)
+    per arm: the :func:`_overlap_rollup` of the approximate top-10 sets
+    ``itop`` against the exact ``etop``, projected to the mean recall@10
+    over the ``_SWEEP_N`` probes — the one recall definition the sweep
+    family shares (a drift here would silently diverge them)."""
+    return _overlap_rollup(etop, itop, **arms).select(
+        *arms,
+        F.lit(_SWEEP_N).cast("bigint").alias("n_probes"),
+        F.col("n_truth").alias("n_exact_total"),
+        F.col("n_overlap").alias("n_overlap_total"),
+        F.round(
+            F.col("n_overlap").cast("double") / F.col("n_truth"), 6
+        ).alias("mean_recall"),
+    )
+
+
+# The checkpointed exact top-10 per probe — the sweeps' exact side
+# depends only on the embeddings and the probe set, so every (k, nprobe,
+# space) sweep shares ONE computation of it.
+@staged("sweep_etop")
+def _etop_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
     return (
-        ex.withColumn("rk", F.row_number().over(wtop))
-        .filter(F.col("rk") <= 10)
+        _probe_rerank(spark, sf_dir, emb.select("vec_id", "embedding"))
         .select("probe", "vec_id")
         .localCheckpoint(eager=True)
     )
 
 
-def _recall_row(etop, itop, *label_cols):
-    """(n_probes, n_exact_total, n_overlap_total, mean_recall) from the
-    exact and approximate top-10 sets — the one recall definition every
-    sweep family shares (a drift here would silently diverge them)."""
-    ov = etop.join(itop, ["probe", "vec_id"])
-    return (
-        etop.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact_total"))
-        .crossJoin(
-            ov.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_overlap_total")
-            )
-        )
-        .select(
-            *label_cols,
-            F.lit(_SWEEP_N).cast("bigint").alias("n_probes"),
-            "n_exact_total",
-            "n_overlap_total",
-            F.round(
-                F.col("n_overlap_total").cast("double")
-                / F.col("n_exact_total"),
-                6,
-            ).alias("mean_recall"),
-        )
-    )
-
-
-def _ivfpq_sweep(
+def _ivfpq_shortlist(
     spark: SparkSession,
     sf_dir: str,
     space: str,
     k: int = _PQ_K,
     nprobe: int = 1,
-    shortlists: tuple[int, ...] | None = None,
+    depth: int = _IVFPQ_SHORTLIST,
 ) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings")
+    """The batched 20-probe IVFPQ shortlist: (probe, vec_id, rk) for the
+    ``depth`` candidates nearest by ADC distance in each probe's
+    ``nprobe`` cells, before the exact rerank."""
     assigned = _km8(spark, sf_dir)
     codes, cb = _pq_trained(spark, sf_dir, space, k=k)
     # probe-side control data: 20 (residualized for 'res') vectors →
@@ -1901,57 +1928,19 @@ def _ivfpq_sweep(
         .groupBy("probe", "vec_id")
         .agg(F.sum("dpart").cast("bigint").alias("adc_dist"))
     )
-    wsh = W.partitionBy("probe").orderBy("adc_dist", "vec_id")
-    pemb = F.broadcast(
-        emb.filter(F.col("vec_id") < _SWEEP_N).select(
-            F.col("vec_id").alias("probe"),
-            F.col("embedding").alias("p_embedding"),
-        )
+    return _rank_cut(shd, "adc_dist", "vec_id", k=depth).select(
+        "probe", "vec_id", "rk"
     )
-    etop = _etop_staged(spark, sf_dir)
-    if shortlists is not None:
-        # one pass of ADC distances shared by every rerank depth — the
-        # candidate×ADC join is the expensive side, so checkpoint it
-        # (20 probes × one cell's rows) instead of recomputing per C
-        shd = shd.withColumn(
-            "rk", F.row_number().over(wsh)
-        ).localCheckpoint(eager=False)  # all depth arms sit in the final
-        # action, which materializes it once
-    grid = None
-    for c in shortlists or (_IVFPQ_SHORTLIST,):
-        if shortlists is not None:
-            sh = shd.filter(F.col("rk") <= c).select("probe", "vec_id")
-        else:
-            sh = (
-                shd.withColumn("rk", F.row_number().over(wsh))
-                .filter(F.col("rk") <= c)
-                .select("probe", "vec_id")
-            )
-        rr = (
-            sh.join(emb.select("vec_id", "embedding"), "vec_id")
-            .join(pemb, "probe")
-            .select(
-                "probe",
-                "vec_id",
-                cosine_exact(
-                    F.col("embedding"), F.col("p_embedding")
-                ).alias("cos"),
-            )
-        )
-        wtop = W.partitionBy("probe").orderBy(F.desc("cos"), "vec_id")
-        itop = (
-            rr.withColumn("rk", F.row_number().over(wtop))
-            .filter(F.col("rk") <= 10)
-            .select("probe", "vec_id")
-        )
-        labels = (
-            (F.lit(c).cast("int").alias("rerank_c"),)
-            if shortlists is not None
-            else ()
-        )
-        row = _recall_row(etop, itop, *labels)
-        grid = row if grid is None else grid.unionByName(row)
-    return grid.orderBy("rerank_c") if shortlists is not None else grid
+
+
+def _shortlist_recall(
+    spark: SparkSession, sf_dir: str, sh: DataFrame
+) -> DataFrame:
+    """The 20-probe recall row of a two-stage index: exact-rerank its
+    per-probe shortlist ``sh`` (probe, vec_id) and score the top-10
+    against the staged exact side."""
+    itop = _probe_rerank(spark, sf_dir, sh.select("probe", "vec_id"))
+    return _recall_row(_etop_staged(spark, sf_dir), itop)
 
 
 def _sweep_oracle(
@@ -2068,7 +2057,9 @@ def _sweep_oracle(
 def similarity_ivfpq_recall_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _ivfpq_sweep(spark, sf_dir, "raw")
+    return _shortlist_recall(
+        spark, sf_dir, _ivfpq_shortlist(spark, sf_dir, "raw")
+    )
 
 
 @query(
@@ -2077,7 +2068,9 @@ def similarity_ivfpq_recall_sweep(
 def similarity_ivfpq_residual_recall_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _ivfpq_sweep(spark, sf_dir, "res")
+    return _shortlist_recall(
+        spark, sf_dir, _ivfpq_shortlist(spark, sf_dir, "res")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2372,19 +2365,21 @@ FROM ({_sweep_oracle(res, k=_GRID_K, nprobe=np_)}) s"""
 
 @query("similarity_ivfpq_k16_grid", oracle=_grid_oracle())
 def similarity_ivfpq_k16_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rows = None
-    for np_ in (1, 3):
-        for space in ("raw", "res"):
-            cell = _ivfpq_sweep(
-                spark, sf_dir, space, k=_GRID_K, nprobe=np_
-            ).select(
-                F.lit(_GRID_K).cast("int").alias("codebook_k"),
-                F.lit(np_).cast("int").alias("nprobe"),
-                F.lit(space).alias("space"),
-                "n_probes",
-                "n_exact_total",
-                "n_overlap_total",
-                "mean_recall",
-            )
-            rows = cell if rows is None else rows.unionByName(cell)
-    return rows.orderBy("nprobe", "space")
+    cells = [
+        _ivfpq_shortlist(spark, sf_dir, space, k=_GRID_K, nprobe=np_).select(
+            "probe",
+            "vec_id",
+            F.lit(np_).alias("nprobe"),
+            F.lit(space).alias("space"),
+        )
+        for np_ in (1, 3)
+        for space in ("raw", "res")
+    ]
+    itop = _probe_rerank(spark, sf_dir, reduce(DataFrame.unionByName, cells))
+    return (
+        _recall_row(
+            _etop_staged(spark, sf_dir), itop, nprobe=[1, 3], space=["raw", "res"]
+        )
+        .select(F.lit(_GRID_K).cast("int").alias("codebook_k"), "*")
+        .orderBy("nprobe", "space")
+    )

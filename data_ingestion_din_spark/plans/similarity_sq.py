@@ -7,14 +7,14 @@ k-means / PQ / sweep helpers stay there and are imported below).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from data_ingestion_din_spark.functions.vectors import (
     cosine_exact,
     cosine_exact_sql,
-    quantize,
 )
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.similarity_queries import (
@@ -28,12 +28,15 @@ from data_ingestion_din_spark.plans.similarity_queries import (
     _PQ_SHORTLIST,
     _SWEEP_N,
     _etop_staged,
-    _ivfpq_sweep,
+    _ivfpq_shortlist,
     _km8,
     _km8_pair,
     _km_ctes,
     _pq_ctes,
+    _probe_rerank,
+    _rank_cut,
     _recall_row,
+    _shortlist_recall,
 )
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -235,9 +238,6 @@ def _sq8_sweep_oracle() -> str:
 def similarity_sq8_recall_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings")
     enc = _sq8_enc(spark, sf_dir).localCheckpoint(
         eager=False
     )  # one encode pass feeds probe side and corpus side
@@ -254,37 +254,9 @@ def similarity_sq8_recall_sweep(
             .alias("sq_dist")
         )
     )
-    wsh = W.partitionBy("probe").orderBy("sq_dist", "vec_id")
-    sh = (
-        d.withColumn("rk", F.row_number().over(wsh))
-        .filter(F.col("rk") <= _IVFPQ_SHORTLIST)
-        .select("probe", "vec_id")
+    return _shortlist_recall(
+        spark, sf_dir, _rank_cut(d, "sq_dist", "vec_id", k=_IVFPQ_SHORTLIST)
     )
-    pemb = F.broadcast(
-        emb.filter(F.col("vec_id") < _SWEEP_N).select(
-            F.col("vec_id").alias("probe"),
-            F.col("embedding").alias("p_embedding"),
-        )
-    )
-    rr = (
-        sh.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(pemb, "probe")
-        .select(
-            "probe",
-            "vec_id",
-            cosine_exact(F.col("embedding"), F.col("p_embedding")).alias(
-                "cos"
-            ),
-        )
-    )
-    wtop = W.partitionBy("probe").orderBy(F.desc("cos"), "vec_id")
-    itop = (
-        rr.withColumn("rk", F.row_number().over(wtop))
-        .filter(F.col("rk") <= 10)
-        .select("probe", "vec_id")
-    )
-    etop = _etop_staged(spark, sf_dir)
-    return _recall_row(etop, itop)
 
 
 # --------------------------------------------------------------------------
@@ -450,9 +422,6 @@ def _ivfsq8_sweep_oracle() -> str:
 def similarity_ivfsq8_recall_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings")
     assigned = _km8(spark, sf_dir)
     enc = _sq8_enc(spark, sf_dir).localCheckpoint(eager=False)
     pcells = assigned.filter(F.col("vec_id") < _SWEEP_N).select(
@@ -478,37 +447,9 @@ def similarity_ivfsq8_recall_sweep(
             .alias("sq_dist")
         )
     )
-    wsh = W.partitionBy("probe").orderBy("sq_dist", "vec_id")
-    sh = (
-        d.withColumn("rk", F.row_number().over(wsh))
-        .filter(F.col("rk") <= _IVFPQ_SHORTLIST)
-        .select("probe", "vec_id")
+    return _shortlist_recall(
+        spark, sf_dir, _rank_cut(d, "sq_dist", "vec_id", k=_IVFPQ_SHORTLIST)
     )
-    pemb = F.broadcast(
-        emb.filter(F.col("vec_id") < _SWEEP_N).select(
-            F.col("vec_id").alias("probe"),
-            F.col("embedding").alias("p_embedding"),
-        )
-    )
-    rr = (
-        sh.join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(pemb, "probe")
-        .select(
-            "probe",
-            "vec_id",
-            cosine_exact(F.col("embedding"), F.col("p_embedding")).alias(
-                "cos"
-            ),
-        )
-    )
-    wtop = W.partitionBy("probe").orderBy(F.desc("cos"), "vec_id")
-    itop = (
-        rr.withColumn("rk", F.row_number().over(wtop))
-        .filter(F.col("rk") <= 10)
-        .select("probe", "vec_id")
-    )
-    etop = _etop_staged(spark, sf_dir)
-    return _recall_row(etop, itop)
 
 
 # --------------------------------------------------------------------------
@@ -652,10 +593,10 @@ def similarity_sq8_incremental(
 # hash-gated row per d ∈ {8, 16, 32, 64}: top-10 by integer squared L2
 # over the FIRST d quantized dimensions (the stated audit metric;
 # vectors are unit-norm so the full-dim ranking coincides with the
-# exact-cosine truth) against the shared exact top-10
-# (_etop_staged / _recall_row — the one recall definition every sweep
-# family uses). Measured (sf0.01): recall@10 = 0.090 / 0.135 / 0.315 /
-# 1.000 at d = 8 / 16 / 32 / 64 — the honest baseline for
+# exact-cosine truth) against the shared exact top-10, through the
+# recall-audit skeleton in similarity_queries (_etop_staged truth,
+# _rank_cut, _recall_row). Measured (sf0.01): recall@10 = 0.090 /
+# 0.135 / 0.315 / 1.000 at d = 8 / 16 / 32 / 64 — the honest baseline for
 # NON-MRL-trained vectors (random unit vectors front-load nothing:
 # half the dimensions buys less than a third of the recall), which is
 # exactly the "before" column of an MRL adoption decision; the 1.000
@@ -737,8 +678,6 @@ def _mrl_oracle() -> str:
 
 @query("similarity_mrl_dim_grid", oracle=_mrl_oracle())
 def similarity_mrl_dim_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     from data_ingestion_din_spark.functions.vectors import quantize
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -770,20 +709,28 @@ def similarity_mrl_dim_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for d in _MRL_DIMS
             ]
         )
-        .localCheckpoint(eager=False)  # four rank passes, one scan
     )
-    etop = _etop_staged(spark, sf_dir)
-    grid = None
-    for d in _MRL_DIMS:
-        wd = W.partitionBy("probe").orderBy(f"d{d}", "vec_id")
-        itop = (
-            dist.withColumn("rk", F.row_number().over(wd))
-            .filter(F.col("rk") <= 10)
-            .select("probe", "vec_id")
-        )
-        row = _recall_row(etop, itop, F.lit(d).cast("int").alias("dims"))
-        grid = row if grid is None else grid.unionByName(row)
-    return grid.orderBy("dims")
+    # one grouped pass carries all four prefix distances; each row fans
+    # out to its four dims arms, cut together under one (dims, probe)
+    # window
+    arms = dist.select(
+        "probe",
+        "vec_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(d).alias("dims"), F.col(f"d{d}").alias("dist")
+                    )
+                    for d in _MRL_DIMS
+                ]
+            )
+        ).alias("a"),
+    ).select("probe", "vec_id", "a.dims", "a.dist")
+    itop = _rank_cut(arms, "dist", "vec_id", tags=("dims",))
+    return _recall_row(
+        _etop_staged(spark, sf_dir), itop, dims=list(_MRL_DIMS)
+    ).orderBy("dims")
 
 
 # --------------------------------------------------------------------------
@@ -872,21 +819,12 @@ def _nlist_oracle() -> str:
 def similarity_ivf_nlist_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     from data_ingestion_din_spark.functions.vectors import quantize
     from data_ingestion_din_spark.operators.similarity import (
         kmeans_train_qv,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    etop = _etop_staged(spark, sf_dir)
-    pemb = F.broadcast(
-        emb.filter(F.col("vec_id") < _SWEEP_N).select(
-            F.col("vec_id").alias("probe"),
-            F.col("embedding").alias("p_embedding"),
-        )
-    )
     # one quantize checkpoint + one max-k seed collect feed every
     # fresh training in the grid (each capacity paid both before)
     fresh = [k for k in _NLIST_GRID if k != 8]
@@ -896,7 +834,7 @@ def similarity_ivf_nlist_sweep(
     seed_rows = (
         qv.orderBy("vec_id").limit(max(fresh)).collect() if fresh else []
     )
-    grid = None
+    cells, sizes = [], []
     for k in _NLIST_GRID:
         if k == 8:
             assigned = _km8_pair(spark, sf_dir)[0]
@@ -911,49 +849,33 @@ def similarity_ivf_nlist_sweep(
         pa = assigned.filter(F.col("vec_id") < _SWEEP_N).select(
             F.col("vec_id").alias("probe"), F.col("cluster").alias("pc")
         )
-        sh = (
+        cells.append(
             assigned.join(F.broadcast(pa), F.col("cluster") == F.col("pc"))
             .filter(F.col("vec_id") != F.col("probe"))
-            .select("probe", "vec_id")
+            .select("probe", "vec_id", F.lit(k).alias("nlist"))
         )
-        rr = (
-            sh.join(emb.select("vec_id", "embedding"), "vec_id")
-            .join(pemb, "probe")
-            .select(
-                "probe",
-                "vec_id",
-                cosine_exact(
-                    F.col("embedding"), F.col("p_embedding")
-                ).alias("cos"),
-            )
+        sizes.append(
+            assigned.agg(
+                F.expr(f"count(*) DIV {k}").cast("bigint").alias(
+                    "mean_cell_rows"
+                )
+            ).select(F.lit(k).alias("nlist"), "mean_cell_rows")
         )
-        wtop = W.partitionBy("probe").orderBy(F.desc("cos"), "vec_id")
-        itop = (
-            rr.withColumn("rk", F.row_number().over(wtop))
-            .filter(F.col("rk") <= 10)
-            .select("probe", "vec_id")
+    # shortlist = the probe's whole own cell, so the rerank IS the index
+    itop = _probe_rerank(spark, sf_dir, reduce(DataFrame.unionByName, cells))
+    return (
+        _recall_row(_etop_staged(spark, sf_dir), itop, nlist=list(_NLIST_GRID))
+        .join(reduce(DataFrame.unionByName, sizes), "nlist")
+        .select(
+            "nlist",
+            "n_probes",
+            "mean_cell_rows",
+            "n_exact_total",
+            "n_overlap_total",
+            "mean_recall",
         )
-        mean_cell = assigned.agg(
-            F.expr(f"count(*) DIV {k}").cast("bigint").alias(
-                "mean_cell_rows"
-            )
-        )
-        row = (
-            _recall_row(
-                etop, itop, F.lit(k).cast("int").alias("nlist")
-            )
-            .crossJoin(mean_cell)
-            .select(
-                "nlist",
-                "n_probes",
-                "mean_cell_rows",
-                "n_exact_total",
-                "n_overlap_total",
-                "mean_recall",
-            )
-        )
-        grid = row if grid is None else grid.unionByName(row)
-    return grid.orderBy("nlist")
+        .orderBy("nlist")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1068,7 +990,26 @@ def _rerank_oracle() -> str:
 def similarity_ivfpq_rerank_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _ivfpq_sweep(spark, sf_dir, "raw", shortlists=_RERANK_GRID)
+    # one pass of ADC ranks shared by every rerank depth — the
+    # candidate×ADC join is the expensive side, so checkpoint it (20
+    # probes × one cell's rows) instead of recomputing per C; lazy: all
+    # depth arms sit in the final action, which materializes it once
+    sh = _ivfpq_shortlist(
+        spark, sf_dir, "raw", depth=max(_RERANK_GRID)
+    ).localCheckpoint(eager=False)
+    arms = reduce(
+        DataFrame.unionByName,
+        [
+            sh.filter(F.col("rk") <= c).select(
+                "probe", "vec_id", F.lit(c).alias("rerank_c")
+            )
+            for c in _RERANK_GRID
+        ],
+    )
+    itop = _probe_rerank(spark, sf_dir, arms)
+    return _recall_row(
+        _etop_staged(spark, sf_dir), itop, rerank_c=list(_RERANK_GRID)
+    ).orderBy("rerank_c")
 
 
 # --------------------------------------------------------------------------
@@ -1146,8 +1087,6 @@ def _lsh_sweep_oracle() -> str:
 def similarity_lsh_recall_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     from data_ingestion_din_spark.operators.similarity import lsh_bucket
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1155,41 +1094,23 @@ def similarity_lsh_recall_sweep(
         eager=True
     )  # one hash pass feeds both modes
     p0 = hashed.filter(F.col("vec_id") < _SWEEP_N).select(
-        F.col("vec_id").alias("probe"),
-        F.col("embedding").alias("pe"),
-        F.col("bucket").alias("pb"),
+        F.col("vec_id").alias("probe"), F.col("bucket").alias("pb")
     )
-    etop = _etop_staged(spark, sf_dir)
 
-    def mode_row(name: str, masks: list[int]) -> DataFrame:
+    def mode_cand(name: str, masks: list[int]) -> DataFrame:
         probes = p0.select(
-            "probe",
-            "pe",
-            "pb",
-            F.explode(F.array(*[F.lit(m) for m in masks])).alias("m"),
-        ).select(
-            "probe", "pe", F.col("pb").bitwiseXOR(F.col("m")).alias("bucket")
-        )
-        cand = (
+            "probe", "pb", F.explode(F.array(*map(F.lit, masks))).alias("m")
+        ).select("probe", F.col("pb").bitwiseXOR(F.col("m")).alias("bucket"))
+        return (
             hashed.join(F.broadcast(probes), "bucket")
             .filter(F.col("vec_id") != F.col("probe"))
-            .select(
-                "probe",
-                "vec_id",
-                cosine_exact(F.col("embedding"), F.col("pe")).alias("cos"),
-            )
-            .distinct()
+            .select("probe", "vec_id", F.lit(name).alias("mode"))
         )
-        wtop = W.partitionBy("probe").orderBy(F.desc("cos"), "vec_id")
-        itop = (
-            cand.withColumn("rk", F.row_number().over(wtop))
-            .filter(F.col("rk") <= 10)
-            .select("probe", "vec_id")
-        )
-        return _recall_row(etop, itop, F.lit(name).alias("mode"))
 
-    return (
-        mode_row("single", [0])
-        .unionByName(mode_row("multiprobe", _MP_MASKS))
-        .orderBy("mode")
+    cand = mode_cand("single", [0]).unionByName(
+        mode_cand("multiprobe", _MP_MASKS)
     )
+    itop = _probe_rerank(spark, sf_dir, cand.distinct())
+    return _recall_row(
+        _etop_staged(spark, sf_dir), itop, mode=["single", "multiprobe"]
+    ).orderBy("mode")

@@ -92,9 +92,6 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
             continue
-        if name not in ORACLES:
-            print(f"skip-oracle  {name}: {len(spark_pdf)} rows (rows-only check)")
-            continue
         try:
             duck_pdf = con.execute(ORACLES[name]).fetchdf()
         except Exception as e:

@@ -17,7 +17,9 @@ failure impossible to reintroduce:
 
 A third lint keeps the streaming mechanism (trigger, checkpoint,
 foreachBatch sink, per-epoch state writes) in plans/streaming_core.py,
-the way lint 2 keeps staging in one registry.
+the way lint 2 keeps staging in one registry. A fourth keeps the
+similarity recall-audit skeleton (exact-cosine top-10 window, overlap
+counts) in plans/similarity_queries.py.
 """
 
 from __future__ import annotations
@@ -132,6 +134,57 @@ def test_streaming_mechanism_lives_in_streaming_core():
     assert not hits, (
         "streaming mechanism outside plans/streaming_core.py (use "
         f"_run_split_landings / _epoch_writer / _write_epoch): {dict(hits)}"
+    )
+
+
+def _is_desc_cos(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, (ast.Attribute, ast.Name))
+        and getattr(node.func, "attr", getattr(node.func, "id", None)) == "desc"
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "cos"
+    )
+
+
+def test_recall_skeleton_lives_in_similarity_queries():
+    """No similarity module but similarity_queries orders a window by
+    (F.desc("cos"), "vec_id") — the probe rerank's top-10 cut — or
+    aliases an ``n_overlap*`` count: recall audits go through
+    _probe_rerank / _rank_cut / _overlap_rollup / _recall_row."""
+    hits: dict[str, set[str]] = collections.defaultdict(set)
+    for path in sorted(glob.glob(os.path.join(PKG, "plans", "similarity_*.py"))):
+        rel = os.path.relpath(path, PKG)
+        if os.path.basename(path) == "similarity_queries.py":
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            args = node.args
+            if (
+                node.func.attr == "orderBy"
+                and len(args) == 2
+                and _is_desc_cos(args[0])
+                and isinstance(args[1], ast.Constant)
+                and args[1].value == "vec_id"
+            ):
+                hits[rel].add('orderBy(F.desc("cos"), "vec_id")')
+            elif (
+                node.func.attr == "alias"
+                and args
+                and isinstance(args[0], ast.Constant)
+                and isinstance(args[0].value, str)
+                and args[0].value.startswith("n_overlap")
+            ):
+                hits[rel].add(f"alias({args[0].value!r})")
+    assert not hits, (
+        "recall-audit mechanism outside plans/similarity_queries.py (use "
+        f"_probe_rerank / _rank_cut / _overlap_rollup / _recall_row): {dict(hits)}"
     )
 
 

@@ -41,7 +41,7 @@ def test_query_runs(spark, name):
 
 
 def test_every_oracle_has_a_query():
-    assert set(ORACLES) <= set(QUERIES)
+    assert set(ORACLES) == set(QUERIES)
 
 
 def test_entry_contract(spark):
