@@ -1,8 +1,15 @@
-"""Graph-based ANN (NSW layer-0) over the embeddings table — the graph
-member of the similarity family (split out of similarity_queries.py,
-which sits at the module-size lint bound): beam search over an exact
-kNN graph, the (degree x beam) operating grid, incremental NSW
-insertion, and the NSW-constructed-graph recall grid.
+"""Graph-based ANN audits over the embeddings table: the graph member of
+the similarity family (an HNSW index is what the paper's vector store
+serves /ask from). Eleven queries: the exact-kNN beam trace and
+(degree x beam) grid, scan-form and routed insertion, the NSW-built
+graph grid, HNSW entry through one and two upper layers, deletion with
+tombstone/naive/repaired arms, Vamana RobustPrune on raw and
+planted-cluster vectors, and the MMR diversifier.
+
+Every walk is one call of ``_beam_walk``, the driver-side beam kernel,
+over the walk inputs ``_gr_collected`` collects once per session from
+the staged all-pairs edge table: the ranked adjacency and the probe
+distances. Each oracle unrolls the same walk as CTEs (``_gr_step_ctes``).
 """
 
 from __future__ import annotations
@@ -162,24 +169,11 @@ def _gr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
 
 
-def _seed_beams(probes, entry, pdist):
-    """Per-probe beam seeded at the graph entry. A probe that IS the
-    entry (possible only on corpora small enough that the max-id node
-    sits inside the probe set) gets an EMPTY beam, mirroring the
-    oracle's self-excluded seed join (its walk emits no rows and the
-    probe never hits) — the hnsw_layers empty-seed convention
-    (r12 final addendum) applied family-wide."""
-    return {
-        p: ([] if entry == p else [(pdist[(p, entry)], entry)])
-        for p in probes
-    }
-
-
 # Collected walk inputs: adjacency ranked to _GR_MAXG, probe→candidate
-# distances, entry id. Bounded by the SAME ≤20k-row audit guard that
-# admits the all-pairs construction (adj is N×16 rows, pdist is
-# _SWEEP_N×N — control data for this audit family; a production walk
-# keeps both distributed, exactly as the comment above documents).
+# distances, entry id and each probe's exact NN (its rank-1 edge).
+# Bounded by the SAME ≤20k-row audit guard that admits the all-pairs
+# construction (adj is N×16 rows, pdist is _SWEEP_N×N — control data
+# for this audit family; a production walk keeps both distributed).
 # Collected once; every (G, B) config walks in driver Python — pure
 # integer arithmetic, bit-identical to the oracle's unrolled CTEs, with
 # no per-hop job scheduling at all (the per-hop DataFrame walk cost 28
@@ -196,39 +190,48 @@ def _gr_collected(spark: SparkSession, sf_dir: str):
         (int(r.node), int(r.nbr)): int(r.dist)
         for r in edges.filter(F.col("node") < _SWEEP_N).collect()
     }
-    emb = load_table(spark, sf_dir, "embeddings")
-    entry = int(emb.agg(F.max("vec_id")).first()[0])
-    probes = sorted({n for n, _ in pdist})
-    return adj, pdist, entry, probes
+    nn = {p: adj[p][0] for p in sorted({p for p, _ in pdist})}
+    return adj, pdist, max(adj), nn
 
 
-def _gr_beam_walk(
-    spark: SparkSession, sf_dir: str, g: int, b: int
-) -> list[list[tuple]]:
-    """Per-step beam rows [(probe, node, dist)] for steps 0..H under
-    degree ``g``, beam width ``b`` — driver-side integer walk over the
-    collected audit tables (smallest-(dist, node) ordering, identical
-    to the oracle's window tie-break)."""
-    adj, pdist, entry, probes = _gr_collected(spark, sf_dir)
-    frames = []
-    beams = _seed_beams(probes, entry, pdist)
-    frames.append(
-        sorted((p, n, d) for p, bm in beams.items() for d, n in bm)
-    )
-    for _ in range(_GR_H):
-        nxt = {}
-        for p, bm in beams.items():
-            cand = {n for _, n in bm}
-            for _, n in bm:
-                cand.update(adj[n][:g])
-            cand.discard(p)
-            ranked = sorted((pdist[(p, c)], c) for c in cand)
-            nxt[p] = ranked[:b]
-        beams = nxt
-        frames.append(
-            sorted((p, n, d) for p, bm in beams.items() for d, n in bm)
+def _beam_walk(adj, pdist, probe, start, width, steps):
+    """The family's one beam walk, for one probe: the beam at every step
+    0..steps and the cumulative count of adjacency edges expanded up to
+    each step. A beam is [(dist, node)] in (dist, node) order — the
+    oracle's window tie-break. Each step ranks {beam ∪ adj[beam]} minus
+    the probe and keeps ``width``. Step 0 is the seed at ``start``;
+    when ``start`` is None or the probe itself the beam is empty and
+    stays empty (the oracle's seed join excludes self-pairs). A degree
+    cap is the caller's adjacency slice ``{n: e[:g]}``."""
+    if start is None or start == probe:
+        beam = []
+    else:
+        beam = [(pdist[(probe, start)], start)]
+    frames, expanded = [beam], [0]
+    for _ in range(steps):
+        cand = {n for _, n in beam}
+        spent = expanded[-1]
+        for _, n in beam:
+            nbrs = adj.get(n, ())
+            spent += len(nbrs)
+            cand.update(nbrs)
+        cand.discard(probe)
+        beam = sorted((pdist[(probe, c)], c) for c in cand)[:width]
+        frames.append(beam)
+        expanded.append(spent)
+    return frames, expanded
+
+
+def _walk_hits(adj, pdist, nn, start, width) -> int:
+    """Probes (the keys of ``nn``) whose beam after _GR_H steps from
+    ``start`` holds their nearest neighbour ``nn[p]``."""
+    return sum(
+        any(
+            n == nn[p]
+            for _, n in _beam_walk(adj, pdist, p, start, width, _GR_H)[0][-1]
         )
-    return frames
+        for p in nn
+    )
 
 
 def _gr_ctes() -> str:
@@ -347,11 +350,15 @@ def _gr_trace_oracle() -> str:
 def similarity_graph_greedy_search(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    frames = _gr_beam_walk(spark, sf_dir, _GR_TRACE_G, _GR_TRACE_B)
+    adj, pdist, entry, nn = _gr_collected(spark, sf_dir)
+    adj = {n: e[:_GR_TRACE_G] for n, e in adj.items()}
     rows = [
         (p, h, n, d)
-        for h, f in enumerate(frames)
-        for (p, n, d) in f
+        for p in nn
+        for h, beam in enumerate(
+            _beam_walk(adj, pdist, p, entry, _GR_TRACE_B, _GR_H)[0]
+        )
+        for d, n in beam
     ]
     return spark.createDataFrame(
         rows, "probe bigint, step int, node bigint, dist bigint"
@@ -387,17 +394,11 @@ def _gr_grid_oracle() -> str:
 def similarity_graph_search_grid(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    adj, pdist, entry, probes = _gr_collected(spark, sf_dir)
-    # exact L2 NN per probe = its rank-1 edge (already in the
-    # collected table: the smallest (dist, nbr) candidate)
-    nn = {
-        p: min((d, c) for (pp, c), d in pdist.items() if pp == p)[1]
-        for p in probes
-    }
+    adj, pdist, entry, nn = _gr_collected(spark, sf_dir)
     rows = []
     for g, b in _GR_GRID:
-        final = _gr_beam_walk(spark, sf_dir, g, b)[_GR_H]
-        n_hits = sum(1 for (p, n, _) in final if nn[p] == n)
+        capped = {n: e[:g] for n, e in adj.items()}
+        n_hits = _walk_hits(capped, pdist, nn, entry, b)
         rows.append((g, b, _SWEEP_N, n_hits, n_hits * 1000 // _SWEEP_N))
     return spark.createDataFrame(
         rows,
@@ -514,11 +515,7 @@ def similarity_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: construction is the guarded all-pairs audit form (the
 # ≤20k-row _refuse_all_pairs gate inside _gr_edges); the production
 # path inserts via the beam walk itself and the per-hop cost stays
-# G·B rows per probe. The walk runs driver-side over collected
-# control-data tables under that same guard, like the rest of the
-# family (eager per-hop checkpoints ≈ 7 s and lazy-checkpoint task
-# binaries of 145 MB were both measured and rejected — see the family
-# header).
+# G·B rows per probe.
 # --------------------------------------------------------------------------
 @staged("graph_nsw_adjacency")
 def _gr_nsw_collected(spark: SparkSession, sf_dir: str) -> dict:
@@ -541,29 +538,6 @@ def _gr_nsw_collected(spark: SparkSession, sf_dir: str) -> dict:
                 adj.setdefault(nbr, set()).add(node)
         by_g[g] = adj
     return by_g
-
-
-def _gr_nsw_beam_walk(
-    spark: SparkSession, sf_dir: str, g: int, b: int
-) -> list[tuple]:
-    """Final beam rows [(probe, node, dist)] after H steps over the
-    NSW(g) adjacency — full adjacency per node (NSW search uses every
-    link; the degree budget is a CONSTRUCTION parameter here, unlike
-    the kNN walk's per-hop cap)."""
-    adj = _gr_nsw_collected(spark, sf_dir)[g]
-    _, pdist, entry, probes = _gr_collected(spark, sf_dir)
-    beams = _seed_beams(probes, entry, pdist)
-    for _ in range(_GR_H):
-        nxt = {}
-        for p, bm in beams.items():
-            cand = {n for _, n in bm}
-            for _, n in bm:
-                cand.update(adj.get(n, ()))
-            cand.discard(p)
-            ranked = sorted((pdist[(p, c)], c) for c in cand)
-            nxt[p] = ranked[:b]
-        beams = nxt
-    return sorted((p, n, d) for p, bm in beams.items() for d, n in bm)
 
 
 def _gr_nsw_grid_oracle() -> str:
@@ -623,20 +597,12 @@ def similarity_graph_nsw_grid(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     by_g = _gr_nsw_collected(spark, sf_dir)
-    _, pdist, entry, probes = _gr_collected(spark, sf_dir)
-    n_corpus = int(
-        load_table(spark, sf_dir, "embeddings").count()
-    )  # scalar corpus size for the mean-degree column
-    nn = {
-        p: min((d, c) for (pp, c), d in pdist.items() if pp == p)[1]
-        for p in probes
-    }
+    adj, pdist, entry, nn = _gr_collected(spark, sf_dir)
     rows = []
     for g, b in _GR_GRID:
-        final = _gr_nsw_beam_walk(spark, sf_dir, g, b)
-        n_hits = sum(1 for (p, n, _) in final if nn[p] == n)
-        kfinal = _gr_beam_walk(spark, sf_dir, g, b)[_GR_H]
-        knn_hits = sum(1 for (p, n, _) in kfinal if nn[p] == n)
+        n_hits = _walk_hits(by_g[g], pdist, nn, entry, b)
+        capped = {n: e[:g] for n, e in adj.items()}
+        knn_hits = _walk_hits(capped, pdist, nn, entry, b)
         n_edges = sum(len(a) for a in by_g[g].values())
         rows.append(
             (
@@ -644,7 +610,7 @@ def similarity_graph_nsw_grid(
                 b,
                 _SWEEP_N,
                 n_edges,
-                n_edges * 1000 // n_corpus,
+                n_edges * 1000 // len(adj),
                 n_hits,
                 n_hits * 1000 // _SWEEP_N,
                 knn_hits,
@@ -690,7 +656,8 @@ _GR_RI_B = 16
 
 
 def _gr_ri_collected(spark: SparkSession, sf_dir: str):
-    """Base NSW(8) adjacency + appended-probe distances + base entry."""
+    """Base NSW(8) adjacency + appended-probe distances + base entry
+    (the max-id node of the adjacency, which holds every base node)."""
     edges = _gr_edges(spark, sf_dir)
     adj: dict[int, set] = {}
     for r in (
@@ -710,13 +677,7 @@ def _gr_ri_collected(spark: SparkSession, sf_dir: str):
     ):
         pdist[(int(r.node), int(r.nbr))] = int(r.dist)
         probes.add(int(r.node))
-    emb = load_table(spark, sf_dir, "embeddings")
-    entry = int(
-        emb.filter(F.col("vec_id") % _IVF_INC_MOD != 0)
-        .agg(F.max("vec_id"))
-        .first()[0]
-    )
-    return adj, pdist, entry, sorted(probes)
+    return adj, pdist, max(adj), sorted(probes)
 
 
 def _gr_ri_oracle() -> str:
@@ -800,14 +761,8 @@ def similarity_graph_routed_insert(
     adj, pdist, entry, probes = _gr_ri_collected(spark, sf_dir)
     rows = []
     for p in probes:
-        beam = [(pdist[(p, entry)], entry)]
-        for _ in range(_GR_H):
-            cand = {n for _, n in beam}
-            for _, n in beam:
-                cand.update(adj.get(n, ()))
-            cand.discard(p)
-            beam = sorted((pdist[(p, c)], c) for c in cand)[:_GR_RI_B]
-        routed = sorted((d, n) for d, n in beam)[:_GR_RI_G]
+        frames, _ = _beam_walk(adj, pdist, p, entry, _GR_RI_B, _GR_H)
+        routed = frames[-1][:_GR_RI_G]
         exact = sorted(
             (d, n) for (pp, n), d in pdist.items() if pp == p
         )[:_GR_RI_G]
@@ -860,6 +815,7 @@ def similarity_graph_routed_insert(
 # --------------------------------------------------------------------------
 _GR_L1_G, _GR_L1_B, _GR_L1_H = 4, 2, 4
 _GR_HE_G, _GR_HE_B = 8, 4
+_GR_HL_HS = (1, 2, 6)  # layer-0 step budgets both hierarchy audits report
 
 
 def _gr_l1_collected(spark: SparkSession, sf_dir: str) -> dict[int, list]:
@@ -873,6 +829,53 @@ def _gr_l1_collected(spark: SparkSession, sf_dir: str) -> dict[int, list]:
     ):
         adj.setdefault(int(r.node), []).append((int(r.l1rk), int(r.nbr)))
     return {n: [v for _, v in sorted(e)] for n, e in adj.items()}
+
+
+def _descend(pdist, probe, start, route):
+    """HNSW descent through the upper layers of ``route``, top-down:
+    each (adj, width, steps) walk is seeded at the previous layer's
+    best node. Returns the layer-0 seed (None once a layer's beam is
+    empty) and the edges expanded on the way."""
+    spent = 0
+    for adj, width, steps in route:
+        frames, expanded = _beam_walk(adj, pdist, probe, start, width, steps)
+        spent += expanded[-1]
+        start = frames[-1][0][1] if frames[-1] else None
+    return start, spent
+
+
+def _hnsw_walk(spark: SparkSession, sf_dir: str, arms: dict) -> DataFrame:
+    """One row per (entry arm × layer-0 step budget in _GR_HL_HS). Arm
+    ``mode: (start, route)`` descends ``route`` from ``start`` per probe,
+    then walks the NSW(8) layer 0 with B = 4 from the seed it reaches;
+    the entry distance is the seed's and edges count every layer."""
+    adj0 = _gr_nsw_collected(spark, sf_dir)[_GR_HE_G]
+    _, pdist, _, nn = _gr_collected(spark, sf_dir)
+    rows = []
+    for mode, (start, route) in arms.items():
+        ed = 0
+        edges = dict.fromkeys(_GR_HL_HS, 0)
+        hits = dict.fromkeys(_GR_HL_HS, 0)
+        for p in nn:
+            seed, spent = _descend(pdist, p, start, route)
+            frames, expanded = _beam_walk(
+                adj0, pdist, p, seed, _GR_HE_B, _GR_H
+            )
+            ed += sum(d for d, _ in frames[0])
+            for h in _GR_HL_HS:
+                edges[h] += spent + expanded[h]
+                hits[h] += any(n == nn[p] for _, n in frames[h])
+        rows += [
+            (mode, h, _SWEEP_N, ed, edges[h], hits[h],
+             hits[h] * 1000 // _SWEEP_N)
+            for h in _GR_HL_HS
+        ]
+    return spark.createDataFrame(
+        rows,
+        "entry_mode string, steps int, n_probes bigint,"
+        " entry_dist_sum bigint, edges_expanded bigint, n_hits bigint,"
+        " hit_rate_milli bigint",
+    ).orderBy("entry_mode", "steps")
 
 
 def _gr_hnsw_entry_oracle() -> str:
@@ -979,77 +982,19 @@ def _gr_hnsw_entry_oracle() -> str:
 def similarity_graph_hnsw_entry(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    nsw_adj = _gr_nsw_collected(spark, sf_dir)[_GR_HE_G]
+    adj, _, entry, _ = _gr_collected(spark, sf_dir)
     l1_adj = _gr_l1_collected(spark, sf_dir)
-    _, pdist, entry, probes = _gr_collected(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    entry1 = int(
-        emb.filter(F.col("vec_id") % _GR_L1_MOD == 0)
-        .agg(F.max("vec_id"))
-        .first()[0]
-    )
-    nn = {
-        p: min((d, c) for (pp, c), d in pdist.items() if pp == p)[1]
-        for p in probes
-    }
-
-    def walk(p, start, adj_of, b, steps, cap=None):
-        beam = [(pdist[(p, start)], start)]
-        for _ in range(steps):
-            cand = {n for _, n in beam}
-            for _, n in beam:
-                nbrs = adj_of.get(n, ())
-                cand.update(nbrs[:cap] if cap else nbrs)
-            cand.discard(p)
-            beam = sorted((pdist[(p, c)], c) for c in cand)[:b]
-        return beam
-
-    seeds = {}
-    for p in probes:
-        l1_beam = walk(p, entry1, l1_adj, _GR_L1_B, _GR_L1_H)
-        seeds[p] = l1_beam[0]  # (dist, node), min-(dist, node) rank 1
-
-    def walk_frames(p, start, adj_of, b, steps):
-        frames = []
-        beam = [(pdist[(p, start)], start)]
-        for _ in range(steps):
-            cand = {n for _, n in beam}
-            for _, n in beam:
-                cand.update(adj_of.get(n, ()))
-            cand.discard(p)
-            beam = sorted((pdist[(p, c)], c) for c in cand)[:b]
-            frames.append(beam)
-        return frames
-
-    rows = []
-    adj0 = {n: sorted(a) for n, a in nsw_adj.items()}
-    for mode in ("fixed", "layer1"):
-        hit_at = {h: 0 for h in (1, 2, _GR_H)}
-        ed = 0
-        for p in probes:
-            start = entry if mode == "fixed" else seeds[p][1]
-            ed += pdist[(p, start)]
-            frames = walk_frames(p, start, adj0, _GR_HE_B, _GR_H)
-            for h in hit_at:
-                beam = frames[h - 1]
-                if beam and beam[0][1] == nn[p]:
-                    hit_at[h] += 1
-        for h in sorted(hit_at):
-            rows.append(
-                (
-                    mode,
-                    h,
-                    _SWEEP_N,
-                    ed,
-                    hit_at[h],
-                    hit_at[h] * 1000 // _SWEEP_N,
-                )
-            )
-    return spark.createDataFrame(
-        rows,
-        "entry_mode string, steps int, n_probes bigint,"
-        " entry_dist_sum bigint, n_hits bigint, hit_rate_milli bigint",
-    ).orderBy("entry_mode", "steps")
+    return _hnsw_walk(
+        spark,
+        sf_dir,
+        {
+            "fixed": (entry, []),
+            "layer1": (
+                max(n for n in adj if n % _GR_L1_MOD == 0),
+                [(l1_adj, _GR_L1_B, _GR_L1_H)],
+            ),
+        },
+    ).drop("edges_expanded")
 
 
 # --------------------------------------------------------------------------
@@ -1230,7 +1175,7 @@ def _gdr_repaired_adj(
 def similarity_graph_delete_repair(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    adj, pdist, _, probes = _gr_collected(spark, sf_dir)
+    adj, pdist, _, _ = _gr_collected(spark, sf_dir)
     surv = lambda v: v % _GDR_MOD != _GDR_RES  # noqa: E731
     entry = max(n for n in adj if surv(n))
     nns = {}
@@ -1238,10 +1183,6 @@ def similarity_graph_delete_repair(
         if surv(c) and (p not in nns or (dd, c) < nns[p]):
             nns[p] = (dd, c)
     nns = {p: c for p, (dd, c) in nns.items()}
-    full_edges = {
-        g: sum(min(len(e), g) for e in adj.values())
-        for g, _ in _GDR_GRID
-    }
     out = []
     for g, b in _GDR_GRID:
         arms = {
@@ -1253,29 +1194,9 @@ def similarity_graph_delete_repair(
             },
             "repaired": _gdr_repaired_adj(spark, sf_dir, g),
         }
-        for arm in ("tombstone", "naive", "repaired"):
-            a = arms[arm]
-            beams = _seed_beams(probes, entry, pdist)
-            for _ in range(_GR_H):
-                nxt = {}
-                for p, bm in beams.items():
-                    cand = {n for _, n in bm}
-                    for _, n in bm:
-                        cand.update(a.get(n, ()))
-                    cand.discard(p)
-                    ranked = sorted((pdist[(p, c)], c) for c in cand)
-                    nxt[p] = ranked[:b]
-                beams = nxt
-            n_hits = sum(
-                1
-                for p, bm in beams.items()
-                if any(n == nns[p] for _, n in bm)
-            )
-            n_edges = (
-                full_edges[g]
-                if arm == "tombstone"
-                else sum(len(e) for e in a.values())
-            )
+        for arm, a in arms.items():
+            n_hits = _walk_hits(a, pdist, nns, entry, b)
+            n_edges = sum(len(e) for e in a.values())
             out.append(
                 (g, b, arm, n_edges, _SWEEP_N, n_hits,
                  n_hits * 1000 // _SWEEP_N)
@@ -1577,7 +1498,6 @@ def similarity_graph_vamana_grid(
     _refuse_all_pairs(
         emb, 20_000, "per-node search-pool prune inside the insert path"
     )
-    n_corpus = int(emb.count())
     edges = _gr_edges(spark, sf_dir)
     cand: dict[int, list[tuple[int, int]]] = {}
     for r in (
@@ -1601,32 +1521,9 @@ def similarity_graph_vamana_grid(
         diff = vecs[u] - vecs[v]
         return int(diff @ diff)
 
-    _, pdist, entry, probes = _gr_collected(spark, sf_dir)
-    nnm = {
-        p: min((d, c) for (pp, c), d in pdist.items() if pp == p)[1]
-        for p in probes
-    }
-
-    def walk(adj: dict[int, set[int]], b: int) -> int:
-        beams = _seed_beams(probes, entry, pdist)
-        for _ in range(_GR_H):
-            nxt = {}
-            for p, bm in beams.items():
-                cs = {n for _, n in bm}
-                for _, n in bm:
-                    cs.update(adj.get(n, ()))
-                cs.discard(p)
-                nxt[p] = sorted((pdist[(p, c)], c) for c in cs)[:b]
-            beams = nxt
-        return sum(
-            1 for p, bm in beams.items() if any(n == nnm[p] for _, n in bm)
-        )
-
-    knn_adj8 = {
-        n: set(v[:_VAM_G])
-        for n, v in _gr_collected(spark, sf_dir)[0].items()
-    }
-    knn_hits = {b: walk(knn_adj8, b) for b in _VAM_BEAMS}
+    adj, pdist, entry, nn = _gr_collected(spark, sf_dir)
+    knn8 = {n: e[:_VAM_G] for n, e in adj.items()}
+    knn_hits = {b: _walk_hits(knn8, pdist, nn, entry, b) for b in _VAM_BEAMS}
     rows = []
     for a in _VAM_ALPHAS:
         pruned: dict[int, list[int]] = {}
@@ -1644,10 +1541,10 @@ def similarity_graph_vamana_grid(
         for n, e in pruned.items():
             for v in e:
                 sym_adj.setdefault(v, set()).add(n)
-        for sym, adj in ((False, dir_adj), (True, sym_adj)):
-            n_edges = sum(len(v) for v in adj.values())
+        for sym, vadj in ((False, dir_adj), (True, sym_adj)):
+            n_edges = sum(len(v) for v in vadj.values())
             for b in _VAM_BEAMS:
-                h = walk(adj, b)
+                h = _walk_hits(vadj, pdist, nn, entry, b)
                 rows.append(
                     (
                         a,
@@ -1655,7 +1552,7 @@ def similarity_graph_vamana_grid(
                         b,
                         _SWEEP_N,
                         n_edges,
-                        n_edges * 1000 // n_corpus,
+                        n_edges * 1000 // len(adj),
                         h,
                         h * 1000 // _SWEEP_N,
                         knn_hits[b],
@@ -1862,7 +1759,6 @@ def similarity_vamana_clustered_ab(
     by_id = {int(r.vec_id): np.array(list(r.qv), dtype=np.int64) for r in vrows}
     raw = np.stack([by_id[i] for i in ids])
     clus = 3 * np.stack([by_id[i % _VCA_K] for i in ids]) + raw
-    pool_rows = len(ids) * _VAM_C
     n = len(ids)
     # candidate pools TASK-PARALLEL (r13: the driver-side full n² GEMM
     # + per-node lexsort here was the same host-BLAS-sensitive pattern
@@ -1937,6 +1833,7 @@ def similarity_vamana_clustered_ab(
     for si, (label, m) in enumerate((("raw", raw), ("clustered", clus))):
         nsq = (m * m).sum(axis=1)
         pools = pools_by_s[si]
+        pool_rows = sum(len(pool) for pool in pools.values())
         ppair = ppair_by_s[si]
         # probe-side exact distances: one bounded 20×n GEMM
         pmask = ids < _SWEEP_N
@@ -1945,18 +1842,15 @@ def similarity_vamana_clustered_ab(
             + nsq[None, :]
             - 2 * (m[pmask] @ m.T)
         )
-        probes = [int(i) for i in ids[pmask]]
-        pdist: dict[tuple[int, int], int] = {}
-        nnm: dict[int, int] = {}
-        for pi, p in enumerate(probes):
-            drow = pdm[pi]
-            # len(ids), not the outer n: the beam loop below rebinds n
-            for j in range(len(ids)):
-                if int(ids[j]) != p:
-                    pdist[(p, int(ids[j]))] = int(drow[j])
-            order = np.lexsort((ids, drow))
-            order = order[ids[order] != p]
-            nnm[p] = int(ids[order[0]])
+        pdist = {
+            (int(p), int(c)): int(d)
+            for p, drow in zip(ids[pmask], pdm)
+            for c, d in zip(ids, drow)
+            if c != p
+        }
+        # a pool is its node's top-C in (dist, vec_id) order: the rank-1
+        # member is the exact NN
+        nn = {int(p): pools[int(p)][0][1] for p in ids[pmask]}
         entry = int(ids.max())
 
         for a in _VAM_ALPHAS:
@@ -1980,23 +1874,7 @@ def similarity_vamana_clustered_ab(
                     kept_pos.append(ci)
                 adj[node] = set(kept)
             n_edges = sum(len(v) for v in adj.values())
-            beams = _seed_beams(probes, entry, pdist)
-            for _ in range(_GR_H):
-                nxt = {}
-                for p, bm in beams.items():
-                    cs = {n for _, n in bm}
-                    for _, n in bm:
-                        cs.update(adj.get(n, ()))
-                    cs.discard(p)
-                    nxt[p] = sorted((pdist[(p, c)], c) for c in cs)[
-                        :_VCA_B
-                    ]
-                beams = nxt
-            hits = sum(
-                1
-                for p, bm in beams.items()
-                if any(n == nnm[p] for _, n in bm)
-            )
+            hits = _walk_hits(adj, pdist, nn, entry, _VCA_B)
             rows.append(
                 (
                     label,
@@ -2057,7 +1935,6 @@ def similarity_vamana_clustered_ab(
 _GR_L2_MOD = 64  # layer-2 subsample (over layer 1's % 8)
 _GR_L2_G, _GR_L2_B, _GR_L2_H = 4, 1, 2
 _GR_L12_H = 2  # halved seeded layer-1 walk in the layer2 arm
-_GR_HL_HS = (1, 2, 6)
 
 
 @staged("graph_l2_adjacency")
@@ -2237,101 +2114,21 @@ def _gr_hl_oracle() -> str:
 def similarity_graph_hnsw_layers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    nsw_adj = _gr_nsw_collected(spark, sf_dir)[_GR_HE_G]
-    adj0 = {n: sorted(a) for n, a in nsw_adj.items()}
+    adj, _, entry, _ = _gr_collected(spark, sf_dir)
     l1_adj = _gr_l1_collected(spark, sf_dir)
     l2_adj = _gr_l2_collected(spark, sf_dir)
-    _, pdist, entry, probes = _gr_collected(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    entry1 = int(
-        emb.filter(F.col("vec_id") % _GR_L1_MOD == 0)
-        .agg(F.max("vec_id"))
-        .first()[0]
+    return _hnsw_walk(
+        spark,
+        sf_dir,
+        {
+            "flat": (entry, []),
+            "layer1": (
+                max(n for n in adj if n % _GR_L1_MOD == 0),
+                [(l1_adj, _GR_L1_B, _GR_L1_H)],
+            ),
+            "layer2": (
+                max(n for n in adj if n % _GR_L2_MOD == 0),
+                [(l2_adj, _GR_L2_B, _GR_L2_H), (l1_adj, _GR_L1_B, _GR_L12_H)],
+            ),
+        },
     )
-    entry2 = int(
-        emb.filter(F.col("vec_id") % _GR_L2_MOD == 0)
-        .agg(F.max("vec_id"))
-        .first()[0]
-    )
-    nn = {
-        p: min((d, c) for (pp, c), d in pdist.items() if pp == p)[1]
-        for p in probes
-    }
-
-    def walk(p, start, adj_of, b, steps):
-        """Beam frames + CUMULATIVE expanded-edge count per step.
-        start == p (possible when a tiny corpus leaves the layer's
-        max-id entry inside the probe set) mirrors the oracle's
-        empty-s0 semantics: the walk yields empty frames and the
-        probe contributes nothing downstream."""
-        frames, ecum = [], []
-        beam = [] if start == p else [(pdist[(p, start)], start)]
-        e = 0
-        for _ in range(steps):
-            cand = {n for _, n in beam}
-            for _, n in beam:
-                nbrs = adj_of.get(n, ())
-                e += len(nbrs)
-                cand.update(nbrs)
-            cand.discard(p)
-            beam = sorted((pdist[(p, c)], c) for c in cand)[:b]
-            frames.append(beam)
-            ecum.append(e)
-        return frames, ecum
-
-    per_mode: dict[str, tuple[dict, int, dict]] = {}
-    for mode in ("flat", "layer1", "layer2"):
-        hier_e = 0
-        ed = 0
-        f0: dict[int, tuple[list, list]] = {}
-        for p in probes:
-            if mode == "flat":
-                start = entry
-            elif mode == "layer1":
-                fr, ec = walk(p, entry1, l1_adj, _GR_L1_B, _GR_L1_H)
-                hier_e += ec[-1]
-                start = fr[-1][0][1] if fr[-1] else None
-            else:
-                fr2, ec2 = walk(p, entry2, l2_adj, _GR_L2_B, _GR_L2_H)
-                hier_e += ec2[-1]
-                if fr2[-1]:
-                    frm, ecm = walk(
-                        p, fr2[-1][0][1], l1_adj, _GR_L1_B, _GR_L12_H
-                    )
-                    hier_e += ecm[-1]
-                    start = frm[-1][0][1] if frm[-1] else None
-                else:
-                    start = None
-            if start is None or start == p:
-                # empty hierarchy walk (oracle: no seed row) — the
-                # probe contributes no entry distance and never hits
-                f0[p] = ([[] for _ in range(_GR_H)], [0] * _GR_H)
-                continue
-            ed += pdist[(p, start)]
-            f0[p] = walk(p, start, adj0, _GR_HE_B, _GR_H)
-        per_mode[mode] = (f0, hier_e, {"ed": ed})
-
-    rows = []
-    for mode in ("flat", "layer1", "layer2"):
-        f0, hier_e, misc = per_mode[mode]
-        for h in _GR_HL_HS:
-            hits = 0
-            e_tot = hier_e
-            for p in probes:
-                frames, ecum = f0[p]
-                beam = frames[h - 1]
-                e_tot += ecum[h - 1]
-                if beam and beam[0][1] == nn[p]:
-                    hits += 1
-            rows.append(
-                (
-                    mode, h, _SWEEP_N, misc["ed"], e_tot, hits,
-                    hits * 1000 // _SWEEP_N,
-                )
-            )
-    return spark.createDataFrame(
-        rows,
-        "entry_mode string, steps int, n_probes bigint,"
-        " entry_dist_sum bigint, edges_expanded bigint, n_hits bigint,"
-        " hit_rate_milli bigint",
-    ).orderBy("entry_mode", "steps")

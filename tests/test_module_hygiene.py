@@ -19,7 +19,8 @@ A third lint keeps the streaming mechanism (trigger, checkpoint,
 foreachBatch sink, per-epoch state writes) in plans/streaming_core.py,
 the way lint 2 keeps staging in one registry. A fourth keeps the
 similarity recall-audit skeleton (exact-cosine top-10 window, overlap
-counts) in plans/similarity_queries.py.
+counts) in plans/similarity_queries.py. A fifth keeps the graph beam
+step in plans/graph_queries.py's ``_beam_walk``.
 """
 
 from __future__ import annotations
@@ -186,6 +187,53 @@ def test_recall_skeleton_lives_in_similarity_queries():
         "recall-audit mechanism outside plans/similarity_queries.py (use "
         f"_probe_rerank / _rank_cut / _overlap_rollup / _recall_row): {dict(hits)}"
     )
+
+
+def _beam_step_sites(tree: ast.AST) -> list[tuple[str, int]]:
+    """(function, line) of every ``sorted(<comprehension over pdist[...]>)``
+    call inside a loop (a for/while or a comprehension) of its function."""
+    sites: list[tuple[str, int]] = []
+    loops = (ast.For, ast.While, ast.ListComp, ast.SetComp, ast.DictComp,
+             ast.GeneratorExp)
+
+    def visit(node: ast.AST, func: str, in_loop: bool) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name, False)
+                continue
+            if (
+                in_loop
+                and isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Name)
+                and child.func.id == "sorted"
+                and child.args
+                and isinstance(child.args[0], (ast.GeneratorExp, ast.ListComp))
+                and any(
+                    isinstance(s, ast.Subscript)
+                    and isinstance(s.value, ast.Name)
+                    and s.value.id == "pdist"
+                    for s in ast.walk(child.args[0].elt)
+                )
+            ):
+                sites.append((func, child.lineno))
+            visit(child, func, in_loop or isinstance(child, loops))
+
+    visit(tree, "<module>", False)
+    return sites
+
+
+def test_beam_step_lives_in_beam_walk():
+    """No plans function but ``_beam_walk`` re-ranks a beam, i.e. sorts a
+    comprehension keyed on ``pdist[...]`` inside a loop: graph walks call
+    the kernel (with a sliced adjacency for a degree cap)."""
+    hits: dict[str, list[tuple[str, int]]] = {}
+    for path in sorted(glob.glob(os.path.join(PKG, "plans", "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        sites = [s for s in _beam_step_sites(tree) if s[0] != "_beam_walk"]
+        if sites:
+            hits[os.path.relpath(path, PKG)] = sites
+    assert not hits, f"beam step outside _beam_walk: {hits}"
 
 
 def test_streaming_split_stays_bounded():
