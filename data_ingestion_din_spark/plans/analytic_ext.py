@@ -19,6 +19,15 @@ from data_ingestion_din_spark.functions.text import (
 )
 from data_ingestion_din_spark.functions.vectors import cosine_exact_sql
 from data_ingestion_din_spark.functions.hashing import h64, h64_sql
+from data_ingestion_din_spark.functions.sketches import (  # noqa: F401
+    CMS_D as _CMS_D,  # re-exported: the streaming CMS tests size by it
+    cms_bucket,
+    cms_cells,
+    cms_estimate,
+    cms_grid,
+    cms_hash,
+    cms_rows,
+)
 from data_ingestion_din_spark.plans._exact import dec_to_double, dec_to_double_sql
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.tables import load_table
@@ -311,7 +320,6 @@ def doc_sanitize_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # heavy lifting map-side), and the probe join broadcasts the 1024-row
 # sketch.
 # --------------------------------------------------------------------------
-_CMS_D = 4
 _CMS_W = 256
 _CMS_TOPK = 30
 _TOKS_CMS_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
@@ -360,35 +368,10 @@ def corpus_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    cells = exact.select(
-        "tok",
-        "n",
-        F.explode(F.array(*[F.lit(r) for r in range(_CMS_D)])).alias("r"),
-    ).select(
-        "tok",
-        "n",
-        "r",
-        F.pmod(
-            h64(
-                F.concat(
-                    F.lit("cms"),
-                    F.col("r").cast("string"),
-                    F.lit(":"),
-                    F.col("tok"),
-                )
-            ),
-            F.lit(_CMS_W),
-        ).alias("bucket"),
-    )
-    cms = cells.groupBy("r", "bucket").agg(
-        F.sum("n").cast("bigint").alias("counter")
-    )
+    cells = cms_cells(exact, _CMS_W, "tok", "n")
     probe = exact.orderBy(F.desc("n"), "tok").limit(_CMS_TOPK)
-    est = (
-        probe.join(cells.select("tok", "r", "bucket"), "tok")
-        .join(F.broadcast(cms), ["r", "bucket"])
-        .groupBy("tok", "n")
-        .agg(F.min("counter").cast("bigint").alias("cms_estimate"))
+    est = cms_estimate(
+        probe.join(cells.select("tok", "r", "bucket"), "tok"), cms_grid(cells)
     )
     return est.select(
         "tok",
@@ -1127,34 +1110,15 @@ def corpus_cms_width_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_total = exact.agg(F.sum("n").cast("bigint").alias("n_total"))
     probe = exact.orderBy(F.desc("n"), "tok").limit(_CMS_TOPK)
-    base_cells = exact.select(
-        "tok",
-        "n",
-        F.explode(F.array(*[F.lit(r) for r in range(_CMS_D)])).alias("r"),
-    ).withColumn(
-        "h",
-        h64(
-            F.concat(
-                F.lit("cms"),
-                F.col("r").cast("string"),
-                F.lit(":"),
-                F.col("tok"),
-            )
-        ),
-    )
+    # one hash per (r, tok), shared by all three widths
+    base_cells = cms_rows(exact, "tok", "n").withColumn("h", cms_hash())
     grid = None
     for w in _CMSG_WS:
-        cells = base_cells.withColumn(
-            "bucket", F.pmod(F.col("h"), F.lit(w))
-        )
-        cms = cells.groupBy("r", "bucket").agg(
-            F.sum("n").cast("bigint").alias("counter")
-        )
-        est = (
-            probe.join(cells.select("tok", "r", "bucket"), "tok")
-            .join(F.broadcast(cms), ["r", "bucket"])
-            .groupBy("tok", "n")
-            .agg(F.min("counter").cast("bigint").alias("est"))
+        cells = base_cells.withColumn("bucket", cms_bucket(F.col("h"), w))
+        est = cms_estimate(
+            probe.join(cells.select("tok", "r", "bucket"), "tok"),
+            cms_grid(cells),
+            name="est",
         )
         row = (
             est.crossJoin(n_total)

@@ -16,6 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64_sql
+from data_ingestion_din_spark.functions.sketches import (
+    BF_K,
+    BF_M,
+    BF_WBITS,
+    bloom_probe,
+    bloom_words,
+)
 from data_ingestion_din_spark.operators import curation as C
 from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
@@ -1579,14 +1586,10 @@ def corpus_eval_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at production the Bloom verdict is the decision and the audit runs on
 # a sampled slice, exactly like the recall audits.
 # --------------------------------------------------------------------------
-_BF_WORDS = 512
-_BF_WBITS = 63  # bits used per int64 word — bit 63 (sign) never set
-_BF_M = _BF_WORDS * _BF_WBITS
-_BF_K = 3
 
 
 def _bf_pos_sql(expr: str, j: int) -> str:
-    return f"{h64_sql(expr, seed=f'bl{j}:')} % {_BF_M}"
+    return f"{h64_sql(expr, seed=f'bl{j}:')} % {BF_M}"
 
 
 def _bf_probe_union_sql(src: str, cols: str) -> str:
@@ -1594,7 +1597,7 @@ def _bf_probe_union_sql(src: str, cols: str) -> str:
     range() lateral cannot parameterize the seed string)."""
     return "\n      UNION ALL ".join(
         f"SELECT {cols}, {_bf_pos_sql('shingle', j)} AS pos FROM {src}"
-        for j in range(_BF_K)
+        for j in range(BF_K)
     )
 
 
@@ -1612,8 +1615,8 @@ def _bf_probe_union_sql(src: str, cols: str) -> str:
       {_bf_probe_union_sql("ev", "shingle")}
     ),
     words AS MATERIALIZED (
-      SELECT pos // {_BF_WBITS} AS word,
-             bit_or(CAST(1 AS BIGINT) << (pos % {_BF_WBITS})) AS bits
+      SELECT pos // {BF_WBITS} AS word,
+             bit_or(CAST(1 AS BIGINT) << (pos % {BF_WBITS})) AS bits
       FROM bpos GROUP BY 1
     ),
     cor AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 7 <> 0),
@@ -1622,12 +1625,12 @@ def _bf_probe_union_sql(src: str, cols: str) -> str:
     ),
     tested AS (
       SELECT c.doc_id, c.shingle,
-             coalesce((w.bits >> (c.pos % {_BF_WBITS})) & 1, 0) AS hit
-      FROM cp c LEFT JOIN words w ON w.word = c.pos // {_BF_WBITS}
+             coalesce((w.bits >> (c.pos % {BF_WBITS})) & 1, 0) AS hit
+      FROM cp c LEFT JOIN words w ON w.word = c.pos // {BF_WBITS}
     ),
     persh AS (
       SELECT doc_id, shingle,
-             CASE WHEN sum(hit) = {_BF_K} THEN 1 ELSE 0 END AS bloom_hit
+             CASE WHEN sum(hit) = {BF_K} THEN 1 ELSE 0 END AS bloom_hit
       FROM tested GROUP BY doc_id, shingle
     ),
     ex AS (
@@ -1657,7 +1660,6 @@ def corpus_bloom_decontaminate(
         tokens,
         word_shingles,
     )
-    from data_ingestion_din_spark.functions.hashing import h64
     from data_ingestion_din_spark.sources.tables import scan_parallel
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1674,48 +1676,8 @@ def corpus_bloom_decontaminate(
         .localCheckpoint(eager=False)  # feeds filter build AND probe
     )
     ev = sh.filter(F.col("doc_id") % 7 == 0).select("shingle").distinct()
-
-    def positions(df: DataFrame, keep: list[str]) -> DataFrame:
-        pos = F.explode(
-            F.array(
-                *[
-                    (h64(F.col("shingle"), seed=f"bl{j}:") % _BF_M)
-                    for j in range(_BF_K)
-                ]
-            )
-        ).alias("pos")
-        return df.select(*keep, "shingle", pos)
-
-    words = (
-        positions(ev, [])
-        .select(
-            (F.col("pos") / _BF_WBITS).cast("bigint").alias("word"),
-            F.expr(
-                f"shiftleft(cast(1 as bigint), cast(pos % {_BF_WBITS} as int))"
-            ).alias("mask"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
     cor = sh.filter(F.col("doc_id") % 7 != 0)
-    tested = (
-        positions(cor, ["doc_id"])
-        .withColumn("word", (F.col("pos") / _BF_WBITS).cast("bigint"))
-        # the ≤512-row filter is bounded control data: broadcast REQUIRED
-        .join(F.broadcast(words), "word", "left")
-        .withColumn(
-            "hit",
-            F.coalesce(
-                F.expr(
-                    f"shiftright(bits, cast(pos % {_BF_WBITS} as int)) & 1"
-                ),
-                F.lit(0),
-            ),
-        )
-    )
-    persh = tested.groupBy("doc_id", "shingle").agg(
-        F.when(F.sum("hit") == _BF_K, 1).otherwise(0).alias("bloom_hit")
-    )
+    persh = bloom_probe(cor, bloom_words(ev), "doc_id")
     ex = cor.join(
         F.broadcast(ev.withColumn("e", F.lit(1))), "shingle", "left"
     ).select(

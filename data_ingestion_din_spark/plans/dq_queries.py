@@ -22,7 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64_sql
-from data_ingestion_din_spark.plans.events_ext import _hll_alpha
+from data_ingestion_din_spark.functions.sketches import (
+    hll_bucket,
+    hll_num,
+    hll_rank,
+    hll_scaled_sum,
+    hll_top,
+)
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -1678,11 +1684,9 @@ _HAB_MICROS = {"ts", "o_orderdate", "l_shipdate"}  # stored TIMESTAMP
 # production swaps them for maintained HLL registers. This query IS the
 # swap, measured: for every profiled column, the exact distinct count
 # vs the raw-HLL estimate at m ∈ {64, 256} with the SIGNED per-mille
-# error — the events_hll_precision_grid machinery (same integer
-# register recipe: 60-bit portable md5 hash, rank = (61−p) −
-# length(bin(h div m)), scaled harmonic sum exact in BIGINT, one final
-# double division with the alpha literal) generalized from one stream
-# column to the whole catalog. The error column turns "HLL is fine for
+# error — the events_hll_precision_grid machinery (the integer register
+# recipe of functions/sketches.py) generalized from one stream column to
+# the whole catalog. The error column turns "HLL is fine for
 # profiling" into per-column evidence: keys with n ≫ m sit near the
 # 1.04/√m band while tiny enums (n/m < 1) show the raw estimator's
 # small-range bias — exactly the regime split the m knob buys.
@@ -1743,9 +1747,8 @@ def _hab_oracle() -> str:
     uh = "\n      UNION ALL\n      ".join(branches)
     per_m = []
     for m in _HAB_MS:
-        p = m.bit_length() - 1
-        top = 61 - p
-        num = _hll_alpha(m) * m * m * 4294967296.0
+        top = hll_top(m)
+        num = hll_num(m)
         per_m.append(
             f"""SELECT tbl, col, {m} AS m,
              CAST(sum(CAST(1 AS BIGINT) << (32 - least(r, 32)))
@@ -1858,23 +1861,17 @@ def dq_completeness_hll_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     structs = []
     est_num = None
     for m in _HAB_MS:
-        top = 61 - (m.bit_length() - 1)
-        num = _hll_alpha(m) * m * m * 4294967296.0
-        w = F.expr(f"h div {m}")
         structs.append(
             F.struct(
                 F.lit(m).cast("int").alias("m"),
-                F.pmod(F.col("h"), F.lit(m)).alias("bucket"),
-                F.when(w == 0, F.lit(top))
-                .otherwise(F.lit(top) - F.length(F.bin(w)))
-                .alias("rnk"),
+                hll_bucket(m).alias("bucket"),
+                hll_rank(m).alias("rnk"),
             )
         )
         cond = F.col("m") == m
+        num = F.lit(hll_num(m))
         est_num = (
-            F.when(cond, F.lit(num))
-            if est_num is None
-            else est_num.when(cond, F.lit(num))
+            F.when(cond, num) if est_num is None else est_num.when(cond, num)
         )
     reg = (
         dh.select("cid", F.explode(F.array(*structs)).alias("x"))
@@ -1883,15 +1880,7 @@ def dq_completeness_hll_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("rnk").alias("r"))
     )
     sk = reg.groupBy("cid", "m").agg(
-        (
-            F.sum(
-                F.expr("shiftleft(CAST(1 AS BIGINT), 32 - least(r, 32))")
-            )
-            + (F.col("m").cast("bigint") - F.count(F.lit(1)))
-            * F.lit(4294967296)
-        )
-        .cast("bigint")
-        .alias("s_scaled"),
+        hll_scaled_sum(F.col("m").cast("bigint")).alias("s_scaled"),
     ).withColumn("est_num", est_num)
     return (
         ex.join(sk, "cid")

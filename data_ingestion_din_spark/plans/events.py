@@ -18,6 +18,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from data_ingestion_din_spark.functions.hashing import h64_sql
+from data_ingestion_din_spark.functions.sketches import (
+    hll_bucket,
+    hll_num,
+    hll_rank,
+    hll_scaled_sum,
+)
 from data_ingestion_din_spark.plans._exact import dec_to_double, dec_to_double_sql
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.tables import load_table
@@ -863,16 +869,10 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
 # events_hll_distinct — HyperLogLog distinct-count estimation per event
 # type, the second sketch family next to events_kmv_distinct. Spark's
 # approx_count_distinct is HLL++ with engine-private state, so instead
-# the sketch is built from the portable md5-derived h64: bucket = low 6
-# bits (m = 64 registers), register = max leading-zero rank of the
-# remaining 54 bits. Ranks come from length(bin(w)) — identical minimal
-# binary rendering in both engines — so the REGISTERS are integer-exact,
-# and the harmonic mean is computed as a scaled-integer sum
-# S = Σ 2^(32 − min(rank, 32)) (≤ 64·2^32, exact BIGINT in any
-# summation order) with ONE final double division: the estimate itself
-# sits under the hash gate. Raw HLL estimator, no small-range linear
-# counting (that correction needs libm ln — documented exclusion, same
-# rationale as sigmoid).
+# the sketch is the portable integer-register recipe of
+# functions/sketches.py at m = 64 registers (p = 6): the registers and
+# the scaled harmonic sum are integer-exact in both engines, and only
+# the estimate's one final double division sits under the hash gate.
 #
 # Scale: the groupBy carries m·ranks integer state with map-side
 # partial max — constant size per group regardless of cardinality; the
@@ -880,8 +880,6 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct executes, with every bit reproducible.
 # --------------------------------------------------------------------------
 _HLL_M = 64  # registers (p = 6)
-# alpha_64 * m^2 * 2^32 — the estimator numerator, one double literal
-_HLL_NUM = 0.709 * 64.0 * 64.0 * 4294967296.0
 
 
 @query(
@@ -917,7 +915,7 @@ _HLL_NUM = 0.709 * 64.0 * 64.0 * 4294967296.0
     )
     SELECT s.event_type, ex.n_exact, s.n_buckets,
            CAST(s.s_scaled AS BIGINT) AS s_scaled,
-           round({_HLL_NUM!r} / CAST(s.s_scaled AS DOUBLE), 4)
+           round({hll_num(_HLL_M)!r} / CAST(s.s_scaled AS DOUBLE), 4)
              AS hll_estimate
     FROM s JOIN ex ON s.event_type = ex.event_type
     ORDER BY s.event_type
@@ -933,25 +931,15 @@ def events_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "h"
         ),
     ).distinct()
-    # `h div m`, NOT h/m-and-cast: the double division would round a
-    # 60-bit hash above 2^53 before the floor.
-    w = F.expr(f"h div {_HLL_M}")
     br = uh.select(
         "event_type",
-        F.pmod(F.col("h"), F.lit(_HLL_M)).alias("bucket"),
-        F.when(w == 0, F.lit(55))
-        .otherwise(F.lit(55) - F.length(F.bin(w)))
-        .alias("rnk"),
+        hll_bucket(_HLL_M).alias("bucket"),
+        hll_rank(_HLL_M).alias("rnk"),
     )
     reg = br.groupBy("event_type", "bucket").agg(F.max("rnk").alias("r"))
     s = reg.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-        (
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 32 - least(r, 32))"))
-            + (F.lit(_HLL_M) - F.count(F.lit(1))) * F.lit(4294967296)
-        )
-        .cast("bigint")
-        .alias("s_scaled"),
+        hll_scaled_sum(_HLL_M).alias("s_scaled"),
     )
     ex = ev.groupBy("event_type").agg(
         F.count_distinct(F.col("user_id")).cast("bigint").alias("n_exact")
@@ -964,7 +952,7 @@ def events_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_buckets",
             "s_scaled",
             F.round(
-                F.lit(_HLL_NUM) / F.col("s_scaled").cast("double"), 4
+                F.lit(hll_num(_HLL_M)) / F.col("s_scaled").cast("double"), 4
             ).alias("hll_estimate"),
         )
         .orderBy("event_type")

@@ -4,7 +4,7 @@ windowed funnel, storage-layout pruning audits (z-order / Hilbert),
 SCD2 temporal join, Lorenz/Gini concentration, Markov transitions and
 the session-gap grid — split family-line from plans/events.py (r12
 module-size hygiene; the core window/rollup family and the shared HLL
-constants stay there).
+register count stay there).
 """
 
 from __future__ import annotations
@@ -13,15 +13,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from data_ingestion_din_spark.functions.sketches import (
+    hll_bucket,
+    hll_num,
+    hll_rank,
+    hll_scaled_sum,
+    hll_top,
+)
 from data_ingestion_din_spark.plans._exact import dec_to_double, dec_to_double_sql
-from data_ingestion_din_spark.plans.events import _HLL_M, _HLL_NUM
+from data_ingestion_din_spark.plans.events import _HLL_M
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.tables import load_table
 
 # events_hll_precision_grid — the REGISTER-COUNT operating surface for
 # the portable HLL above: m is the sketch's one knob (memory = m
 # registers vs accuracy ~1.04/√m), and the RAW estimator (no
-# LinearCounting — libm-ln exclusion, documented on the m=64 query)
+# LinearCounting — libm-ln exclusion, documented in functions/sketches)
 # degrades exactly where n/m falls below ~2.5. One hash-gated row per
 # m ∈ {16, 64, 256} over the corpus-wide distinct user_id: registers
 # used, the exact scaled harmonic sum, the estimate, and the SIGNED
@@ -30,9 +37,7 @@ from data_ingestion_din_spark.sources.tables import load_table
 # (at sf0.01 n=150: m=256 puts n/m at 0.6, deep in the regime raw HLL
 # overestimates; the error column is the measured case for the
 # correction, not a prose claim). Same integer-register recipe as
-# events_hll_distinct: rank = (61−p) − length(bin(h div m)), scaled
-# sum S = Σ 2^(32−min(rank,32)) exact in BIGINT, one final double
-# division per row with the alpha constant embedded as a literal.
+# events_hll_distinct (functions/sketches.py), one row per m.
 #
 # Scale: one distinct-hash pass feeds all three sketches (bucket/rank
 # are per-m projections of the same h); register state is m rows per
@@ -41,18 +46,11 @@ from data_ingestion_din_spark.sources.tables import load_table
 _HLL_GRID = (16, 64, 256)
 
 
-def _hll_alpha(m: int) -> float:
-    return {16: 0.673, 32: 0.697, 64: 0.709}.get(
-        m, 0.7213 / (1 + 1.079 / m)
-    )
-
-
 def _hll_grid_oracle() -> str:
     rows = []
     for m in _HLL_GRID:
-        p = m.bit_length() - 1
-        top = 61 - p
-        num = _hll_alpha(m) * m * m * 4294967296.0
+        top = hll_top(m)
+        num = hll_num(m)
         rows.append(
             f"""SELECT {m} AS m,
            (SELECT CAST(count(*) AS BIGINT) FROM (
@@ -105,29 +103,15 @@ def events_hll_precision_grid(
     ex = uh.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     grid = None
     for m in _HLL_GRID:
-        p = m.bit_length() - 1
-        top = 61 - p
-        num = _hll_alpha(m) * m * m * 4294967296.0
-        w = F.expr(f"h div {m}")
         br = uh.select(
-            F.pmod(F.col("h"), F.lit(m)).alias("bucket"),
-            F.when(w == 0, F.lit(top))
-            .otherwise(F.lit(top) - F.length(F.bin(w)))
-            .alias("rnk"),
+            hll_bucket(m).alias("bucket"), hll_rank(m).alias("rnk")
         )
         reg = br.groupBy("bucket").agg(F.max("rnk").alias("r"))
         s = reg.agg(
             F.lit(m).cast("int").alias("m"),
             F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-            (
-                F.sum(
-                    F.expr("shiftleft(CAST(1 AS BIGINT), 32 - least(r, 32))")
-                )
-                + (F.lit(m) - F.count(F.lit(1))) * F.lit(4294967296)
-            )
-            .cast("bigint")
-            .alias("s_scaled"),
-            F.lit(num).alias("est_num"),
+            hll_scaled_sum(m).alias("s_scaled"),
+            F.lit(hll_num(m)).alias("est_num"),
         )
         grid = s if grid is None else grid.unionByName(s)
     return (
@@ -1286,7 +1270,7 @@ _HSM_W = 3  # trailing window, days
 
 
 def _hll_slide_oracle() -> str:
-    est = f"round({_HLL_NUM!r} / CAST(s_merged AS DOUBLE), 4)"
+    est = f"round({hll_num(_HLL_M)!r} / CAST(s_merged AS DOUBLE), 4)"
     return f"""
     WITH uh AS (
       SELECT DISTINCT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
@@ -1371,15 +1355,11 @@ def events_hll_sliding_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("hll:"), F.col("user_id").cast("string"))
         ).alias("h"),
     ).distinct()
-    w = F.expr(f"h div {_HLL_M}")
-    rnk = F.when(w == 0, F.lit(55)).otherwise(
-        F.lit(55) - F.length(F.bin(w))
-    )
     br = uh.select(
         "event_type",
         "day",
-        F.pmod(F.col("h"), F.lit(_HLL_M)).alias("bucket"),
-        rnk.alias("rnk"),
+        hll_bucket(_HLL_M).alias("bucket"),
+        hll_rank(_HLL_M).alias("rnk"),
     )
     regd = br.groupBy("event_type", "day", "bucket").agg(
         F.max("rnk").alias("r")
@@ -1400,10 +1380,6 @@ def events_hll_sliding_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    s_expr = (
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 32 - least(r, 32))"))
-        + (F.lit(_HLL_M) - F.count(F.lit(1))) * F.lit(4294967296)
-    ).cast("bigint")
     mreg = (
         _window_join(regd)
         .groupBy("w_type", "w_day", "bucket")
@@ -1411,20 +1387,22 @@ def events_hll_sliding_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ms = mreg.groupBy("w_type", "w_day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-        s_expr.alias("s_merged"),
+        hll_scaled_sum(_HLL_M).alias("s_merged"),
     )
     sreg = (
         _window_join(uh)
         .select(
             "w_type",
             "w_day",
-            F.pmod(F.col("h"), F.lit(_HLL_M)).alias("bucket"),
-            rnk.alias("rnk"),
+            hll_bucket(_HLL_M).alias("bucket"),
+            hll_rank(_HLL_M).alias("rnk"),
         )
         .groupBy("w_type", "w_day", "bucket")
         .agg(F.max("rnk").alias("r"))
     )
-    ss = sreg.groupBy("w_type", "w_day").agg(s_expr.alias("s_scratch"))
+    ss = sreg.groupBy("w_type", "w_day").agg(
+        hll_scaled_sum(_HLL_M).alias("s_scratch")
+    )
     du = ev.select(
         "event_type",
         F.to_date(F.date_trunc("day", F.col("ts"))).alias("day"),
@@ -1449,7 +1427,7 @@ def events_hll_sliding_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_merged",
             (F.col("s_merged") == F.col("s_scratch")).alias("merge_eq"),
             F.round(
-                F.lit(_HLL_NUM) / F.col("s_merged").cast("double"), 4
+                F.lit(hll_num(_HLL_M)) / F.col("s_merged").cast("double"), 4
             ).alias("hll_estimate"),
             "n_exact_3d",
         )

@@ -1710,24 +1710,11 @@ def _bloom_gate_processor(out: str, word_state: str):
         tokens,
         word_shingles,
     )
-    from data_ingestion_din_spark.functions.hashing import h64
-    from data_ingestion_din_spark.plans.curation_queries import (
-        _BF_K,
-        _BF_M,
-        _BF_WBITS,
-        _DC_N,
+    from data_ingestion_din_spark.functions.sketches import (
+        bloom_probe,
+        bloom_words,
     )
-
-    def _positions(df: DataFrame, keep: list[str]) -> DataFrame:
-        pos = F.explode(
-            F.array(
-                *[
-                    (h64(F.col("shingle"), seed=f"bl{j}:") % _BF_M)
-                    for j in range(_BF_K)
-                ]
-            )
-        ).alias("pos")
-        return df.select(*keep, "shingle", pos)
+    from data_ingestion_din_spark.plans.curation_queries import _DC_N
 
     def _plan(batch_df: DataFrame, epoch_id: int):
         spark_l = batch_df.sparkSession
@@ -1751,54 +1738,19 @@ def _bloom_gate_processor(out: str, word_state: str):
             words = prior
             new_state = None  # frozen — written once by the training epoch
         else:
-            words = (
-                _positions(
-                    sh.filter(
-                        (F.col("doc_id") % 14 == 0)
-                        & F.col("shingle").isNotNull()
-                    )
-                    .select("shingle")
-                    .distinct(),
-                    [],
+            words = bloom_words(
+                sh.filter(
+                    (F.col("doc_id") % 14 == 0) & F.col("shingle").isNotNull()
                 )
-                .select(
-                    (F.col("pos") / _BF_WBITS).cast("bigint").alias("word"),
-                    F.expr(
-                        "shiftleft(cast(1 as bigint),"
-                        f" cast(pos % {_BF_WBITS} as int))"
-                    ).alias("mask"),
-                )
-                .groupBy("word")
-                .agg(F.bit_or("mask").alias("bits"))
-                .localCheckpoint(eager=True)
-            )
+                .select("shingle")
+                .distinct()
+            ).localCheckpoint(eager=True)
             new_state = words
         probe = sh.filter(
             (F.col("doc_id") % 14 != 0) & F.col("shingle").isNotNull()
         )
-        tested = (
-            _positions(probe, ["doc_id"])
-            .withColumn("word", (F.col("pos") / _BF_WBITS).cast("bigint"))
-            # the ≤512-word frozen filter: broadcast REQUIRED (bounded)
-            .join(F.broadcast(words), "word", "left")
-            .withColumn(
-                "hit",
-                F.coalesce(
-                    F.expr(
-                        f"shiftright(bits, cast(pos % {_BF_WBITS} as int))"
-                        " & 1"
-                    ),
-                    F.lit(0),
-                ),
-            )
-        )
         perdoc = (
-            tested.groupBy("doc_id", "shingle")
-            .agg(
-                F.when(F.sum("hit") == _BF_K, 1)
-                .otherwise(0)
-                .alias("bloom_hit")
-            )
+            bloom_probe(probe, words, "doc_id")
             .groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
@@ -1834,9 +1786,8 @@ def _sblm_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
 
 
 def _sblm_oracle() -> str:
+    from data_ingestion_din_spark.functions.sketches import BF_K, BF_WBITS
     from data_ingestion_din_spark.plans.curation_queries import (
-        _BF_K,
-        _BF_WBITS,
         _DC_N,
         _DC_SHINGLE,
         _TOKS_SQL,
@@ -1855,8 +1806,8 @@ def _sblm_oracle() -> str:
       {_bf_probe_union_sql("ev", "shingle")}
     ),
     words AS MATERIALIZED (
-      SELECT pos // {_BF_WBITS} AS word,
-             bit_or(CAST(1 AS BIGINT) << (pos % {_BF_WBITS})) AS bits
+      SELECT pos // {BF_WBITS} AS word,
+             bit_or(CAST(1 AS BIGINT) << (pos % {BF_WBITS})) AS bits
       FROM bpos GROUP BY 1
     ),
     cor AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 14 <> 0),
@@ -1865,12 +1816,12 @@ def _sblm_oracle() -> str:
     ),
     tested AS (
       SELECT c.doc_id, c.shingle,
-             coalesce((w.bits >> (c.pos % {_BF_WBITS})) & 1, 0) AS hit
-      FROM cp c LEFT JOIN words w ON w.word = c.pos // {_BF_WBITS}
+             coalesce((w.bits >> (c.pos % {BF_WBITS})) & 1, 0) AS hit
+      FROM cp c LEFT JOIN words w ON w.word = c.pos // {BF_WBITS}
     ),
     persh AS (
       SELECT doc_id, shingle,
-             CASE WHEN sum(hit) = {_BF_K} THEN 1 ELSE 0 END AS bloom_hit
+             CASE WHEN sum(hit) = {BF_K} THEN 1 ELSE 0 END AS bloom_hit
       FROM tested GROUP BY doc_id, shingle
     ),
     pd AS (

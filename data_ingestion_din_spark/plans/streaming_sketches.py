@@ -13,7 +13,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_din_spark.functions.sketches import (
+    cms_cells,
+    cms_estimate,
+    cms_grid,
+    hll_bucket,
+    hll_num,
+    hll_rank,
+    hll_scaled_sum,
+)
 from data_ingestion_din_spark.operators.colocate import staged
+from data_ingestion_din_spark.plans.events import _HLL_M
 from data_ingestion_din_spark.plans.events_ext import (
     _theta_algebra_sql,
     _theta_est_rows,
@@ -41,28 +51,24 @@ from data_ingestion_din_spark.sources.tables import load_table
 # one across a restart. State per key is one int; ≤ m rows per group
 # regardless of stream length.
 # --------------------------------------------------------------------------
-_SHLL_M = 64
-_SHLL_NUM = 0.709 * 64.0 * 64.0 * 4294967296.0
 
 
 def _hll_register_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(event_type, bucket, rnk, ts) per distinct (type, user) — the same
-    h64-derived bucket/rank expressions as events_hll_distinct."""
+    """(event_type, bucket, rnk, ts) per EVENT, with the bucket/rank of
+    events_hll_distinct (functions/sketches.py). No distinct on
+    (type, user): a register is a max, and a max ignores duplicates, so
+    repeat events of one user leave every register unchanged."""
     from data_ingestion_din_spark.functions.hashing import h64
 
     ev = load_table(spark, sf_dir, "events")
     h = h64(F.concat(F.lit("hll:"), F.col("user_id").cast("string")))
-    w = F.expr(f"h div {_SHLL_M}")
     return (
         ev.select("event_type", "ts", h.alias("h"))
         .select(
             "event_type",
             "ts",
-            F.pmod(F.col("h"), F.lit(_SHLL_M)).cast("int").alias("bucket"),
-            F.when(w == 0, F.lit(55))
-            .otherwise(F.lit(55) - F.length(F.bin(w)))
-            .cast("int")
-            .alias("rnk"),
+            hll_bucket(_HLL_M).cast("int").alias("bucket"),
+            hll_rank(_HLL_M).cast("int").alias("rnk"),
         )
     )
 
@@ -104,9 +110,9 @@ def _hll_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     ),
     br AS (
       SELECT event_type,
-             h % {_SHLL_M} AS bucket,
-             CASE WHEN h // {_SHLL_M} = 0 THEN 55
-                  ELSE 55 - length(bin(h // {_SHLL_M})) END AS rnk
+             h % {_HLL_M} AS bucket,
+             CASE WHEN h // {_HLL_M} = 0 THEN 55
+                  ELSE 55 - length(bin(h // {_HLL_M})) END AS rnk
       FROM uh
     ),
     reg AS (
@@ -117,12 +123,12 @@ def _hll_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
       SELECT event_type,
              CAST(count(*) AS BIGINT) AS n_buckets,
              sum(CAST(1 AS BIGINT) << (32 - least(r, 32)))
-               + ({_SHLL_M} - count(*)) * 4294967296 AS s_scaled
+               + ({_HLL_M} - count(*)) * 4294967296 AS s_scaled
       FROM reg GROUP BY event_type
     )
     SELECT event_type, n_buckets,
            CAST(s_scaled AS BIGINT) AS s_scaled,
-           round({_SHLL_NUM!r} / CAST(s_scaled AS DOUBLE), 4)
+           round({hll_num(_HLL_M)!r} / CAST(s_scaled AS DOUBLE), 4)
              AS hll_estimate
     FROM s
     ORDER BY event_type
@@ -139,20 +145,15 @@ def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = reg.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-        (
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 32 - least(r, 32))"))
-            + (F.lit(_SHLL_M) - F.count(F.lit(1))) * F.lit(4294967296)
-        )
-        .cast("bigint")
-        .alias("s_scaled"),
+        hll_scaled_sum(_HLL_M).alias("s_scaled"),
     )
     return s.select(
         "event_type",
         "n_buckets",
         "s_scaled",
-        F.round(F.lit(_SHLL_NUM) / F.col("s_scaled").cast("double"), 4).alias(
-            "hll_estimate"
-        ),
+        F.round(
+            F.lit(hll_num(_HLL_M)) / F.col("s_scaled").cast("double"), 4
+        ).alias("hll_estimate"),
     ).orderBy("event_type")
 
 
@@ -812,39 +813,12 @@ def _cms_processor(state: str):
     """foreachBatch additive CMS-grid maintainer — module-level for
     the replay test, like the rollup/histogram maintainers."""
     from data_ingestion_din_spark.functions.analysis import tokens
-    from data_ingestion_din_spark.functions.hashing import h64
-    from data_ingestion_din_spark.plans.analytic_ext import (
-        _CMS_D,
-        _CMS_W,
-    )
+    from data_ingestion_din_spark.plans.analytic_ext import _CMS_W
 
     def _plan(batch_df: DataFrame, epoch_id: int) -> DataFrame:
         spark_l = batch_df.sparkSession
-        partials = (
-            batch_df.select(F.explode(tokens(F.col("text"))).alias("tok"))
-            .select(
-                "tok",
-                F.explode(
-                    F.array(*[F.lit(r) for r in range(_CMS_D)])
-                ).alias("r"),
-            )
-            .select(
-                "r",
-                F.pmod(
-                    h64(
-                        F.concat(
-                            F.lit("cms"),
-                            F.col("r").cast("string"),
-                            F.lit(":"),
-                            F.col("tok"),
-                        )
-                    ),
-                    F.lit(_CMS_W),
-                ).alias("bucket"),
-            )
-            .groupBy("r", "bucket")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("counter"))
-        )
+        toks = batch_df.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        partials = cms_grid(cms_cells(toks, _CMS_W, "tok"), n=None)
         if os.path.isdir(state):
             prior = _latest_epoch_rows(
                 spark_l, state, ["r", "bucket"], before_epoch=epoch_id
@@ -873,12 +847,7 @@ def streaming_cms_maintenance(
     sketch verbatim — additive merge == from-scratch, hash-enforced
     across the checkpointed restart."""
     from data_ingestion_din_spark.functions.analysis import tokens
-    from data_ingestion_din_spark.functions.hashing import h64
-    from data_ingestion_din_spark.plans.analytic_ext import (
-        _CMS_D,
-        _CMS_TOPK,
-        _CMS_W,
-    )
+    from data_ingestion_din_spark.plans.analytic_ext import _CMS_TOPK, _CMS_W
 
     state = _scm_state_dir(spark, sf_dir)
     cms = _latest_epoch_rows(spark, state, ["r", "bucket"])
@@ -889,31 +858,7 @@ def streaming_cms_maintenance(
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
     probe = exact.orderBy(F.desc("n"), "tok").limit(_CMS_TOPK)
-    pcells = probe.select(
-        "tok",
-        "n",
-        F.explode(F.array(*[F.lit(r) for r in range(_CMS_D)])).alias("r"),
-    ).select(
-        "tok",
-        "n",
-        "r",
-        F.pmod(
-            h64(
-                F.concat(
-                    F.lit("cms"),
-                    F.col("r").cast("string"),
-                    F.lit(":"),
-                    F.col("tok"),
-                )
-            ),
-            F.lit(_CMS_W),
-        ).alias("bucket"),
-    )
-    est = (
-        pcells.join(F.broadcast(cms), ["r", "bucket"])
-        .groupBy("tok", "n")
-        .agg(F.min("counter").cast("bigint").alias("cms_estimate"))
-    )
+    est = cms_estimate(cms_cells(probe, _CMS_W, "tok", "n"), cms)
     return est.select(
         "tok", F.col("n").alias("exact_count"), "cms_estimate"
     ).orderBy(F.desc("exact_count"), "tok")

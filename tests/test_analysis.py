@@ -103,17 +103,39 @@ def test_cms_overestimates_and_is_bounded(spark):
     """CMS invariants: every estimate >= the exact count (min over
     counters can only collide upward) and the sketch itself never
     exceeds d*w cells regardless of vocabulary size."""
-    from data_ingestion_din_spark.plans import QUERIES
-    from data_ingestion_din_spark.plans.analytic_ext import _CMS_D, _CMS_W
+    from conftest import SF_SMOKE
 
-    rows = QUERIES["corpus_cms_heavy_hitters"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
+    from data_ingestion_din_spark.functions.analysis import tokens
+    from data_ingestion_din_spark.functions.sketches import (
+        CMS_D,
+        cms_cells,
+        cms_grid,
+    )
+    from data_ingestion_din_spark.plans import QUERIES
+    from data_ingestion_din_spark.plans.analytic_ext import _CMS_W
+    from data_ingestion_din_spark.sources.tables import load_table
+
+    sf = SF_SMOKE
+    rows = QUERIES["corpus_cms_heavy_hitters"](spark, sf).collect()
     assert rows
     assert all(r.cms_estimate >= r.exact_count for r in rows)
     # the heavy-hitter top-1 should be nearly collision-free at this w
     top = rows[0]
     assert top.cms_estimate < top.exact_count * 2
+    exact = (
+        load_table(spark, sf, "documents")
+        .select(F.explode(tokens(F.col("text"))).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    # sf0.001 has 31 distinct tokens, fewer than any width in use; a
+    # width of 16 puts the vocabulary above w, where only hashing into
+    # w columns keeps the grid within d*w cells
+    w_small = 16
+    assert exact.count() > w_small
+    for w in (w_small, _CMS_W):
+        grid = cms_grid(cms_cells(exact, w, "tok", "n"))
+        assert grid.count() <= CMS_D * w
 
 
 def test_stream_join_cross_run_matches(spark):

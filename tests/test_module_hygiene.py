@@ -20,7 +20,9 @@ foreachBatch sink, per-epoch state writes) in plans/streaming_core.py,
 the way lint 2 keeps staging in one registry. A fourth keeps the
 similarity recall-audit skeleton (exact-cosine top-10 window, overlap
 counts) in plans/similarity_queries.py. A fifth keeps the graph beam
-step in plans/graph_queries.py's ``_beam_walk``.
+step in plans/graph_queries.py's ``_beam_walk``. A sixth keeps the
+HyperLogLog, Count-Min and packed-word Bloom recipes in
+functions/sketches.py.
 """
 
 from __future__ import annotations
@@ -249,3 +251,61 @@ def test_streaming_split_stays_bounded():
         if n > limit:
             over[base] = n
     assert not over, f"plans modules grew past the split threshold: {over}"
+
+
+def _call_name(node: ast.Call) -> str | None:
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _sketch_recipe_sites(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, recipe) of every hand-built sketch expression: an
+    ``F.expr`` string holding the HLL sum term, an ``F.lit("cms")``
+    Count-Min seed, or an ``h64(..., seed=f"bl{...}:")`` Bloom position."""
+    sites = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = _call_name(node)
+        if name == "expr" and any(
+            isinstance(c, ast.Constant)
+            and isinstance(c.value, str)
+            and "32 - least(" in c.value
+            for a in node.args
+            for c in ast.walk(a)
+        ):
+            sites.append((node.lineno, "HLL scaled sum"))
+        elif (
+            name == "lit"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "cms"
+        ):
+            sites.append((node.lineno, "CMS row hash"))
+        elif name == "h64" and any(
+            k.arg == "seed"
+            and isinstance(k.value, ast.JoinedStr)
+            and k.value.values
+            and isinstance(k.value.values[0], ast.Constant)
+            and str(k.value.values[0].value).startswith("bl")
+            for k in node.keywords
+        ):
+            sites.append((node.lineno, "Bloom position"))
+    return sites
+
+
+def test_sketch_recipes_live_in_sketches():
+    """No module but functions/sketches.py builds an HLL scaled sum, a
+    Count-Min row hash or a packed-word Bloom position: sketch queries
+    call the kernel. Oracle SQL strings are not ``F.expr`` calls and may
+    restate the recipes."""
+    hits: dict[str, list[tuple[int, str]]] = {}
+    for path in _module_files():
+        rel = os.path.relpath(path, PKG)
+        if rel == os.path.join("functions", "sketches.py"):
+            continue
+        with open(path) as fh:
+            sites = _sketch_recipe_sites(ast.parse(fh.read()))
+        if sites:
+            hits[rel] = sites
+    assert not hits, f"sketch recipes outside functions/sketches.py: {hits}"

@@ -157,42 +157,43 @@ def test_minhash_signature_twins_agree(spark, shingle_sets):
 
 
 # --------------------------------------------------------------------------
-# HLL register rank: the events_hll_distinct gate rests on
-# length(bin(w)) rendering identically in Spark and DuckDB for ANY
-# 60-bit hash value. Property-check the full domain (not just fixture
-# user_ids) against the Python ground truth bit_length().
+# HLL register rank: every HLL gate rests on length(bin(h div m))
+# rendering identically in Spark and DuckDB for ANY 60-bit hash value.
+# Property-check the kernel's rank (functions/sketches.hll_rank) over the
+# full domain (not just fixture user_ids), at every register count in
+# use, against the Python ground truth bit_length().
 # --------------------------------------------------------------------------
 @settings(max_examples=8, deadline=None)
 @given(st.lists(st.integers(0, (1 << 60) - 1), min_size=1, max_size=120))
 def test_hll_rank_twins_agree(spark, hs):
-    expect = [
-        55 - (h >> 6).bit_length() if (h >> 6) > 0 else 55 for h in hs
-    ]
+    from data_ingestion_din_spark.functions.sketches import hll_rank
+
     pdf = pd.DataFrame({"i": range(len(hs)), "h": hs})
     sdf = spark.createDataFrame(pdf)
-    got_spark = [
-        r.rnk
-        for r in sdf.select(
-            "i",
-            F.when(F.expr("h div 64") == 0, F.lit(55))
-            .otherwise(F.lit(55) - F.length(F.bin(F.expr("h div 64"))))
-            .alias("rnk"),
-        )
-        .orderBy("i")
-        .collect()
-    ]
     con = duckdb.connect()
     con.register("t", pdf)
-    got_duck = [
-        r[0]
-        for r in con.execute(
-            "SELECT CASE WHEN h // 64 = 0 THEN 55"
-            "            ELSE 55 - length(bin(h // 64)) END"
-            " FROM t ORDER BY i"
-        ).fetchall()
-    ]
-    assert got_spark == expect
-    assert got_duck == expect
+    for m in (16, 64, 256):  # the register counts the HLL queries use
+        p = m.bit_length() - 1
+        top = 61 - p
+        expect = [
+            top - (h >> p).bit_length() if (h >> p) > 0 else top for h in hs
+        ]
+        got_spark = [
+            r.rnk
+            for r in sdf.select("i", hll_rank(m).alias("rnk"))
+            .orderBy("i")
+            .collect()
+        ]
+        got_duck = [
+            r[0]
+            for r in con.execute(
+                f"SELECT CASE WHEN h // {m} = 0 THEN {top}"
+                f"            ELSE {top} - length(bin(h // {m})) END"
+                " FROM t ORDER BY i"
+            ).fetchall()
+        ]
+        assert got_spark == expect
+        assert got_duck == expect
 
 
 # ---------------------------------------------------------------------------
