@@ -114,3 +114,9 @@ def fingerprint(col: Column) -> Column:
     whitespace-collapsed lowercase text — the reference's chunk-fingerprint
     construction (backend/services/chunking.py:401-415) applied doc-level."""
     return F.md5(F.lower(F.regexp_replace(col, "\\s+", " ")))
+
+
+def intlog2(c: Column) -> Column:
+    """floor(log2 c) + 1 = length(bin(c)) as BIGINT — the exact integer
+    octave the DSIR and perplexity scores use in place of libm log."""
+    return F.length(F.bin(c)).cast("bigint")

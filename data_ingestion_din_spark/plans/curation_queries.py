@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_din_spark.functions.analysis import intlog2
 from data_ingestion_din_spark.functions.hashing import h64_sql
 from data_ingestion_din_spark.functions.sketches import (
     BF_K,
@@ -971,6 +972,47 @@ _QC_K = 400  # vocabulary size cap (count desc, word asc tiebreak)
 _QC_W_SQL = f"CAST({h64_sql('w')} % 201 - 100 AS BIGINT)"
 
 
+# The classifier, shared by doc_quality_classifier and the at-ingest
+# quality gate (streaming_gates._quality_gate_processor).
+def _qc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, w) per token occurrence."""
+    from data_ingestion_din_spark.functions.analysis import tokens
+
+    return docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("w"))
+
+
+def _qc_vocab(tok: DataFrame, k: int) -> DataFrame:
+    """The top-``k`` words (count desc, word asc) with their
+    hash-derived integer weights: (w, wt)."""
+    from data_ingestion_din_spark.functions.hashing import h64
+
+    return (
+        tok.groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.desc("c"), "w")
+        .limit(k)
+        .select("w", (h64(F.col("w")) % 201 - 100).cast("bigint").alias("wt"))
+    )
+
+
+def _qc_verdicts(tok: DataFrame, vocab: DataFrame) -> DataFrame:
+    """Per-doc (n_tok, oov_tok, logit_sum, passed) against ``vocab``;
+    OOV words score 0."""
+    # bounded-by-construction dimension: broadcast is correct here
+    scored = tok.join(F.broadcast(vocab), "w", "left")
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_tok"),
+        F.sum(F.when(F.col("wt").isNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("oov_tok"),
+        F.coalesce(F.sum("wt"), F.lit(0)).cast("bigint").alias("logit_sum"),
+        F.when(F.coalesce(F.sum("wt"), F.lit(0)) >= 0, 1)
+        .otherwise(0)
+        .cast("int")
+        .alias("passed"),
+    )
+
+
 @query(
     "doc_quality_classifier",
     oracle=f"""
@@ -997,37 +1039,8 @@ _QC_W_SQL = f"CAST({h64_sql('w')} % 201 - 100 AS BIGINT)"
     """,
 )
 def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.functions.analysis import tokens
-    from data_ingestion_din_spark.functions.hashing import h64
-
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("w")
-    )
-    vocab = (
-        tok.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "w")
-        .limit(_QC_K)
-        .select("w", (h64(F.col("w")) % 201 - 100).cast("bigint").alias("wt"))
-    )
-    # bounded-by-construction dimension: broadcast is correct here
-    scored = tok.join(F.broadcast(vocab), "w", "left")
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_tok"),
-            F.sum(F.when(F.col("wt").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("oov_tok"),
-            F.coalesce(F.sum("wt"), F.lit(0)).cast("bigint").alias("logit_sum"),
-            F.when(F.coalesce(F.sum("wt"), F.lit(0)) >= 0, 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("passed"),
-        )
-        .orderBy("doc_id")
-    )
+    tok = _qc_tokens(load_table(spark, sf_dir, "documents"))
+    return _qc_verdicts(tok, _qc_vocab(tok, _QC_K)).orderBy("doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -1239,6 +1252,84 @@ _DSIR_TOPK = 50
 _DSIR_TGT_SQL = "('src0', 'src1')"
 
 
+# The DSIR model, shared by corpus_dsir_select and the at-ingest DSIR
+# gate (streaming_gates._dsir_gate_processor).
+def _dsir_is_tgt() -> F.Column:
+    return F.col("source").isin(*_DSIR_TARGET)
+
+
+def _dsir_bucket_counts(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, bkt, n): each doc's hashed unigram + bigram
+    counts per bucket."""
+    from data_ingestion_din_spark.functions.analysis import tokens
+    from data_ingestion_din_spark.functions.hashing import h64
+
+    t = docs.select(
+        "doc_id", "source", tokens(F.col("text")).alias("toks")
+    ).filter(F.size("toks") >= 1)
+    # unigrams ++ bigrams in ONE generator expression so the explode
+    # scans the corpus once; slice(toks, 1, 0) is the typed empty array
+    # for single-token docs.
+    grams = t.select(
+        "doc_id",
+        "source",
+        F.explode(
+            F.expr(
+                "concat(toks, CASE WHEN size(toks) >= 2 THEN "
+                "transform(sequence(1, size(toks) - 1), "
+                "i -> concat(toks[i - 1], ' ', toks[i])) "
+                "ELSE slice(toks, 1, 0) END)"
+            )
+        ).alias("g"),
+    )
+    return (
+        grams.select(
+            "doc_id", "source", (h64(F.col("g")) % _DSIR_B).alias("bkt")
+        )
+        .groupBy("doc_id", "source", "bkt")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+
+
+def _dsir_bucket_totals(db: DataFrame) -> DataFrame:
+    """(bkt, t_n, r_n): target / raw gram counts per bucket."""
+    is_tgt = _dsir_is_tgt()
+    return db.groupBy("bkt").agg(
+        F.sum(F.when(is_tgt, F.col("n")).otherwise(F.lit(0)))
+        .cast("bigint")
+        .alias("t_n"),
+        F.sum(F.when(~is_tgt, F.col("n")).otherwise(F.lit(0)))
+        .cast("bigint")
+        .alias("r_n"),
+    )
+
+
+def _dsir_ratio(ball: DataFrame) -> DataFrame:
+    """(bkt, qlr): the octave-quantized log-likelihood ratio of every
+    bucket the raw pool has seen."""
+    return ball.filter(F.col("r_n") >= 1).select(
+        "bkt",
+        (intlog2(F.col("t_n") + 1) - intlog2(F.col("r_n") + 1)).alias(
+            "qlr"
+        ),
+    )
+
+
+def _dsir_totals(ball: DataFrame) -> DataFrame:
+    """The 1-row (t_tot, r_tot) the length offset is computed from."""
+    return ball.agg(
+        F.sum("t_n").cast("bigint").alias("t_tot"),
+        F.sum("r_n").cast("bigint").alias("r_tot"),
+    )
+
+
+def _dsir_offset() -> F.Column:
+    """The per-gram length offset over a _dsir_totals row."""
+    return intlog2(F.col("r_tot") + _DSIR_B) - intlog2(
+        F.col("t_tot") + _DSIR_B
+    )
+
+
 @query(
     "corpus_dsir_select",
     oracle=f"""
@@ -1302,78 +1393,27 @@ _DSIR_TGT_SQL = "('src0', 'src1')"
     """,
 )
 def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.functions.analysis import tokens
-    from data_ingestion_din_spark.functions.hashing import h64
-
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id", "source", tokens(F.col("text")).alias("toks")
-    ).filter(F.size("toks") >= 1)
-    # unigrams ++ bigrams in ONE generator expression so the explode
-    # scans the corpus once; slice(toks, 1, 0) is the typed empty array
-    # for single-token docs.
-    grams = t.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.expr(
-                "concat(toks, CASE WHEN size(toks) >= 2 THEN "
-                "transform(sequence(1, size(toks) - 1), "
-                "i -> concat(toks[i - 1], ' ', toks[i])) "
-                "ELSE slice(toks, 1, 0) END)"
-            )
-        ).alias("g"),
-    )
     db = (
-        grams.select(
-            "doc_id", "source", (h64(F.col("g")) % _DSIR_B).alias("bkt")
-        )
-        .groupBy("doc_id", "source", "bkt")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+        _dsir_bucket_counts(docs)
         # lazy: both consumers sit in the final action
         .localCheckpoint(eager=False)  # feeds ball + per-doc weights
     )
-    is_tgt = F.col("source").isin(*_DSIR_TARGET)
-    ball = db.groupBy("bkt").agg(
-        F.sum(F.when(is_tgt, F.col("n")).otherwise(F.lit(0)))
-        .cast("bigint")
-        .alias("t_n"),
-        F.sum(F.when(~is_tgt, F.col("n")).otherwise(F.lit(0)))
-        .cast("bigint")
-        .alias("r_n"),
-    )
-    intlog2 = lambda c: F.length(F.bin(c)).cast("bigint")  # noqa: E731
-    q = ball.filter(F.col("r_n") >= 1).select(
-        "bkt",
-        (intlog2(F.col("t_n") + 1) - intlog2(F.col("r_n") + 1)).alias(
-            "qlr"
-        ),
-    )
-    tot = ball.agg(
-        F.sum("t_n").cast("bigint").alias("t_tot"),
-        F.sum("r_n").cast("bigint").alias("r_tot"),
-    )
+    ball = _dsir_bucket_totals(db)
     w = (
-        db.filter(~is_tgt)
-        .join(F.broadcast(q), "bkt")
+        db.filter(~_dsir_is_tgt())
+        .join(F.broadcast(_dsir_ratio(ball)), "bkt")
         .groupBy("doc_id", "source")
         .agg(
             F.sum("n").cast("bigint").alias("n_grams"),
             F.sum(F.col("n") * F.col("qlr")).cast("bigint").alias("feat_w"),
         )
     )
-    sw = w.crossJoin(F.broadcast(tot)).select(
+    sw = w.crossJoin(F.broadcast(_dsir_totals(ball))).select(
         "doc_id",
         "source",
         "n_grams",
-        (
-            F.col("feat_w")
-            + F.col("n_grams")
-            * (
-                intlog2(F.col("r_tot") + _DSIR_B)
-                - intlog2(F.col("t_tot") + _DSIR_B)
-            )
-        )
+        (F.col("feat_w") + F.col("n_grams") * _dsir_offset())
         .cast("bigint")
         .alias("weight"),
     )
@@ -1404,6 +1444,38 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the language count (the legal broadcast class — plan-hinted); the
 # per-doc keep test is a scan-local predicate, no shuffle.
 # --------------------------------------------------------------------------
+# The T=2 mixture, shared by corpus_temperature_mixture and the
+# at-ingest mixture gate (streaming_gates._tmix_gate_processor).
+def _tmix_rates(docs: DataFrame) -> DataFrame:
+    """(lang, n_docs, threshold_micros) per language of ``docs``."""
+    counts = docs.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs")
+    )
+    n_min = counts.agg(F.min("n_docs").alias("n_min"))
+    return counts.crossJoin(F.broadcast(n_min)).select(
+        "lang",
+        "n_docs",
+        F.floor(
+            F.lit(1000000.0)
+            * F.sqrt(F.col("n_min").cast("double") / F.col("n_docs"))
+        )
+        .cast("bigint")
+        .alias("threshold_micros"),
+    )
+
+
+def _tmix_keep(threshold: F.Column) -> F.Column:
+    """The salted-hash Bernoulli keep test of a doc against its
+    language's micro-threshold."""
+    from data_ingestion_din_spark.functions.hashing import h64
+
+    return (
+        F.abs(h64(F.concat(F.lit("tmix:"), F.col("doc_id").cast("string"))))
+        % 1000000
+        < threshold
+    )
+
+
 @query(
     "corpus_temperature_mixture",
     oracle=f"""
@@ -1433,35 +1505,11 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.functions.hashing import h64
-
     docs = load_table(spark, sf_dir, "documents").select("lang", "doc_id")
-    counts = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    )
-    n_min = counts.agg(F.min("n_docs").alias("n_min"))
-    rates = (
-        counts.crossJoin(F.broadcast(n_min))
-        .select(
-            "lang",
-            "n_docs",
-            F.floor(
-                F.lit(1000000.0)
-                * F.sqrt(F.col("n_min").cast("double") / F.col("n_docs"))
-            )
-            .cast("bigint")
-            .alias("threshold_micros"),
-        )
-    )
+    rates = _tmix_rates(docs)
     kept = (
         docs.join(F.broadcast(rates.select("lang", "threshold_micros")), "lang")
-        .filter(
-            F.abs(
-                h64(F.concat(F.lit("tmix:"), F.col("doc_id").cast("string")))
-            )
-            % 1000000
-            < F.col("threshold_micros")
-        )
+        .filter(_tmix_keep(F.col("threshold_micros")))
         .groupBy("lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_sel"))
     )

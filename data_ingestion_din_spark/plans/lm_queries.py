@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from data_ingestion_din_spark.functions.analysis import tokens
+from data_ingestion_din_spark.functions.analysis import intlog2, tokens
 from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.text_pipeline import _TOKS_SQL
@@ -114,17 +114,19 @@ def _bi_perdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bi_perdoc_build(spark, sf_dir).localCheckpoint(eager=False)
 
 
-def _bi_perdoc_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
+# The bigram Stupid-Backoff LM, shared by doc_ngram_perplexity and the
+# at-ingest perplexity gate (streaming_gates._ppl_gate_processor).
+def _bi_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, t): each doc's token array."""
+    return docs.select("doc_id", tokens(F.col("text")).alias("t"))
 
-    docs = load_table(spark, sf_dir, "documents")
-    intlog2 = lambda c: F.length(F.bin(c)).cast("bigint")  # noqa: E731
+
+def _bi_pairs(t0: DataFrame) -> DataFrame:
+    """(doc_id, head, next) per adjacent token pair."""
     # size >= 2 guard for the bigram generator (sequence() descends for
-    # shorter docs — see corpus_bigram_lm); unigram/total counts use the
-    # UNFILTERED token stream (1-token train docs still count).
-    t0 = docs.select("doc_id", tokens(F.col("text")).alias("t"))
+    # shorter docs — see corpus_bigram_lm)
     t = t0.filter(F.size("t") >= 2)
-    prs = t.select(
+    return t.select(
         "doc_id",
         F.explode(
             F.expr(
@@ -133,22 +135,35 @@ def _bi_perdoc_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("doc_id", "p.head", "p.next")
-    train = prs.filter(F.col("doc_id") % _PPL_TRAIN_MOD == 0)
-    pc = train.groupBy("head", "next").agg(
+
+
+def _bi_lm(
+    prs: DataFrame, t0: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The LM trained on pairs ``prs`` and token arrays ``t0``: pair
+    counts (head, next, pair_n), unigram counts (tok, tok_n) and the
+    1-row token total (tt). Unigram/total counts use the UNFILTERED
+    token stream (1-token train docs still count)."""
+    pc = prs.groupBy("head", "next").agg(
         F.count(F.lit(1)).cast("bigint").alias("pair_n")
     )
-    hn = pc.withColumn(
-        "head_n", F.sum("pair_n").over(W.partitionBy("head")).cast("bigint")
-    )
-    trtok = (
-        t0.filter(F.col("doc_id") % _PPL_TRAIN_MOD == 0)
-        .select(F.explode("t").alias("tok"))
-    )
+    trtok = t0.select(F.explode("t").alias("tok"))
     uc = trtok.groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("tok_n")
     )
     tot = trtok.agg(F.count(F.lit(1)).cast("bigint").alias("tt"))
-    scored = (
+    return pc, uc, tot
+
+
+def _bi_scored(
+    prs: DataFrame, pc: DataFrame, uc: DataFrame, tot: DataFrame
+) -> DataFrame:
+    """(doc_id, q, bo) per pair of ``prs`` under the LM (pc, uc, tot):
+    the octave cost q, and bo = 1 where it backed off to the unigram."""
+    hn = pc.withColumn(
+        "head_n", F.sum("pair_n").over(W.partitionBy("head")).cast("bigint")
+    )
+    return (
         prs.join(hn, ["head", "next"], "left")
         .join(uc.withColumnRenamed("tok", "next"), "next", "left")
         # 1-row scalar attach, hint-free (AQE broadcasts it on its own;
@@ -169,6 +184,13 @@ def _bi_perdoc_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("pair_n").isNull(), 1).otherwise(0).alias("bo"),
         )
     )
+
+
+def _bi_perdoc_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t0 = _bi_tokens(load_table(spark, sf_dir, "documents"))
+    prs = _bi_pairs(t0)
+    train = F.col("doc_id") % _PPL_TRAIN_MOD == 0
+    scored = _bi_scored(prs, *_bi_lm(prs.filter(train), t0.filter(train)))
     n = F.count(F.lit(1))
     return (
         scored.groupBy("doc_id")

@@ -764,10 +764,10 @@ def _scd2_processor(out: str):
             F.unix_micros("ts").alias("ts_us"),
         )
         cols = "user_id bigint, version int, state string, valid_from bigint, valid_to bigint, is_current int, n_events bigint"
-        if os.path.isdir(out):
-            latest = _latest_epoch_rows(
-                spark_l, out, ["user_id", "version"], before_epoch=epoch_id
-            )
+        latest = _latest_epoch_rows(
+            spark_l, out, ["user_id", "version"], before_epoch=epoch_id
+        )
+        if latest is not None:
             # seed ONLY keys present in this batch (review finding):
             # untouched users' open rows stay current via
             # latest-epoch-wins at read time, so re-emitting them here
@@ -913,13 +913,10 @@ def _snapshot_processor(out: str):
             F.unix_micros("ts").alias("ts_us"),
             "value",
         )
-        if os.path.isdir(out):
-            prior = _latest_epoch_rows(
-                spark_l,
-                out,
-                ["user_id", "event_type"],
-                before_epoch=epoch_id,
-            )
+        prior = _latest_epoch_rows(
+            spark_l, out, ["user_id", "event_type"], before_epoch=epoch_id
+        )
+        if prior is not None:
             touched = b.select("user_id", "event_type").distinct()
             cand = b.unionByName(
                 prior.join(touched, ["user_id", "event_type"], "left_semi")
@@ -1014,10 +1011,8 @@ def _cdc_merge_processor(out: str):
             .otherwise(F.lit("U"))
             .alias("op"),
         ).withColumn("in_base", F.col("op") == "B")
-        if os.path.isdir(out):
-            prior = _latest_epoch_rows(
-                spark_l, out, keys, before_epoch=epoch_id
-            )
+        prior = _latest_epoch_rows(spark_l, out, keys, before_epoch=epoch_id)
+        if prior is not None:
             touched = b.select(*keys).distinct()
             cand = b.unionByName(
                 prior.join(touched, keys, "left_semi")
@@ -1381,13 +1376,13 @@ def _asof_processor(out: str):
         bclk = b.filter(F.col("event_type") == "click").select(
             "user_id", "ts_us", F.col("event_id").alias("click_id")
         )
-        if os.path.isdir(sdir):
+        prior = _latest_epoch_rows(
+            spark_l, sdir, ["user_id"], before_epoch=epoch_id
+        )
+        if prior is not None:
             touched = b.select("user_id").distinct()
             prior = (
-                _latest_epoch_rows(
-                    spark_l, sdir, ["user_id"], before_epoch=epoch_id
-                )
-                .join(touched, "user_id", "left_semi")
+                prior.join(touched, "user_id", "left_semi")
                 .select(
                     "user_id",
                     F.col("err_ts_us").alias("ts_us"),

@@ -18,7 +18,12 @@ in one place:
 - ``_epoch_writer`` / ``_write_epoch`` — the per-epoch state sink behind
   every ``foreachBatch`` processor (idempotent ``epoch=<id>``
   overwrites);
-- ``_latest_epoch_rows`` — the epoch-keyed state reader;
+- ``_prior_epochs`` / ``_latest_epoch_rows`` / ``_prior_snapshot`` /
+  ``_frozen_model`` / ``_unless_empty`` — the one rule for reading
+  epoch-keyed state inside a processor: only epochs strictly before the
+  current one, None when the state dir does not exist yet, and decisions
+  keyed on prior-epoch rows, not on the dir (a frozen model trains only
+  when there are none);
 - ``_await_or_raise`` — the awaitTermination guard;
 - ``_time_midpoint`` — the events time-split point several landings use.
 
@@ -104,10 +109,15 @@ def _run_split_landings(
 
 
 def _run_doc_parity_landings(
-    spark: SparkSession, sf_dir: str, base: str, process
+    spark: SparkSession,
+    sf_dir: str,
+    base: str,
+    process,
+    cols=("doc_id", "text"),
 ) -> None:
-    """documents split by doc_id parity through _run_split_landings."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    """documents' ``cols`` split by doc_id parity (evens land first)
+    through _run_split_landings."""
+    docs = load_table(spark, sf_dir, "documents").select(*cols)
     _run_split_landings(
         spark,
         base,
@@ -142,10 +152,12 @@ def _epoch_writer(plan, dirs):
     those names — other keys are not written — or a tuple of frames in
     the mapping's order). An empty batch and a None output write
     nothing. Every write is an idempotent per-epoch overwrite
-    (_write_epoch) and every state read filters to epochs strictly
-    before the current one (_latest_epoch_rows), so a replay under
-    foreachBatch's at-least-once delivery neither double-counts nor
-    reads its own earlier attempt: exactly-once state."""
+    (_write_epoch) and every processor-side state read goes through
+    _prior_epochs (directly, or via _latest_epoch_rows, _prior_snapshot
+    or _frozen_model), which keeps only epochs strictly before the
+    current one, so a replay under foreachBatch's at-least-once
+    delivery neither double-counts nor reads its own earlier attempt:
+    exactly-once state."""
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -165,20 +177,83 @@ def _epoch_writer(plan, dirs):
     return _process
 
 
+def _prior_epochs(
+    spark_l: SparkSession, state_dir: str, epoch_id: int
+) -> DataFrame | None:
+    """The rows of ``state_dir`` written by epochs strictly before
+    ``epoch_id`` (``epoch`` column kept), or None when the dir does not
+    exist yet. The processor-side read of every epoch-keyed state sink:
+    a replayed epoch never sees its own earlier attempt."""
+    if not os.path.isdir(state_dir):
+        return None
+    return (
+        spark_l.read.option("basePath", state_dir)
+        .parquet(state_dir)
+        .filter(F.col("epoch") < epoch_id)
+    )
+
+
+def _frozen_model(
+    spark_l: SparkSession, state_dir: str, epoch_id: int, train
+) -> tuple[DataFrame, DataFrame | None]:
+    """(model, new_state) for a model frozen by its first landing:
+    ``(prior rows, None)`` when earlier epochs wrote the model, else
+    ``(m, m)`` for ``m = train()``, called once.
+
+    The replay trap: the decision keys on PRIOR-EPOCH ROWS, not on the
+    state dir existing. A replayed training epoch finds the dir (its
+    failed attempt wrote it) but no epoch before its own, so it trains
+    again and rewrites identical rows instead of scoring against an
+    empty model. The probe is one bounded ``limit(1)`` job
+    (_unless_empty)."""
+    prior = _unless_empty(_prior_epochs(spark_l, state_dir, epoch_id))
+    if prior is not None:
+        return prior.drop("epoch"), None
+    m = train()
+    return m, m
+
+
+def _unless_empty(df: DataFrame | None) -> DataFrame | None:
+    """``df``, or None when it is None or has no rows — the replay
+    trap's decision (see _frozen_model) for state that is not a frozen
+    model. One bounded ``limit(1)`` probe; checkpoint ``df`` first if
+    its rows are read again."""
+    if df is None or df.limit(1).count() == 0:
+        return None
+    return df
+
+
+def _prior_snapshot(
+    spark_l: SparkSession, state_dir: str, epoch_id: int
+) -> DataFrame | None:
+    """The rows of the latest epoch before ``epoch_id`` — for a sink
+    whose every epoch writes its WHOLE state (a snapshot, not per-key
+    deltas) — or None when there is none. One max-epoch job decides."""
+    hist = _prior_epochs(spark_l, state_dir, epoch_id)
+    if hist is None:
+        return None
+    last = hist.agg(F.max("epoch")).first()[0]
+    return None if last is None else hist.filter(F.col("epoch") == last)
+
+
 def _latest_epoch_rows(
     spark_l: SparkSession, out: str, keys: list[str], before_epoch=None
-) -> DataFrame:
+) -> DataFrame | None:
     """Current rows of an epoch-keyed incremental state dir: per key
     tuple, the row from the highest epoch (the one epoch-resolution
     rule for every incremental state sink — SCD2, snapshot — so tie
-    handling / basePath semantics live once). ``before_epoch`` filters
-    to epochs strictly before it (the replay-safe processor-side read);
-    None reads all epochs (the query-side read)."""
+    handling / basePath semantics live once). ``before_epoch`` reads
+    through _prior_epochs (the replay-safe processor-side read; None
+    when the dir does not exist yet); None reads all epochs (the
+    query-side read)."""
     from pyspark.sql.window import Window as W
 
-    hist = spark_l.read.option("basePath", out).parquet(out)
-    if before_epoch is not None:
-        hist = hist.filter(F.col("epoch") < before_epoch)
+    if before_epoch is None:
+        hist = spark_l.read.option("basePath", out).parquet(out)
+    else:
+        hist = _prior_epochs(spark_l, out, before_epoch)
+        if hist is None:
+            return None
     return (
         hist.withColumn(
             "rk",

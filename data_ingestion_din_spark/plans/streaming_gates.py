@@ -3,8 +3,11 @@ gate family of the per-family streaming split (shared scaffolding in
 streaming_core): the curation funnel plus the quality / DSIR / BPE /
 decontamination / SemDeDup / topic-mix / perplexity / Bloom gates.
 Every gate freezes its model artifact in an early epoch and scores
-later landings with it; growing state joins stay hint-free (the
-broadcast rule), and each sink is epoch-keyed replay-idempotent.
+later landings with it (streaming_core._frozen_model); a gate with a
+batch twin calls the twin's own train and score functions, so only the
+state layout and the verdict shape live here. Growing state joins stay
+hint-free (the broadcast rule), and each sink is epoch-keyed
+replay-idempotent.
 """
 
 from __future__ import annotations
@@ -21,6 +24,8 @@ from data_ingestion_din_spark.plans.streaming_indexes import (
 )
 from data_ingestion_din_spark.plans.streaming_core import (
     _epoch_writer,
+    _frozen_model,
+    _prior_epochs,
     _run_doc_parity_landings,
     _run_split_landings,
 )
@@ -52,8 +57,9 @@ from data_ingestion_din_spark.sources.tables import load_table
 # so it must never carry a broadcast hint (that would pin billions of
 # rows into every executor at 100 TB); with no hint the anti-join
 # shuffles only on fp and AQE may still pick broadcast while the state
-# is genuinely small. Same rule as _minhash_index_processor below:
-# no forced broadcast on any state-side join.
+# is genuinely small. Same rule as
+# streaming_indexes._minhash_index_processor: no forced broadcast on any
+# state-side join.
 # --------------------------------------------------------------------------
 
 
@@ -63,15 +69,13 @@ def _funnel_processor(out: str, fp_state: str, lang_state: str):
     directly (same batch + same epoch twice must leave audit and state
     byte-identical — the exactly-once contract under foreachBatch's
     at-least-once delivery)."""
-    from pyspark.sql.window import Window as W
-
-    from data_ingestion_din_spark.functions.analysis import (
-        fingerprint,
-        lang_id,
-        quality_score,
-        tokens,
+    from data_ingestion_din_spark.plans.text_pipeline import (
+        _cur_budgeted,
+        _cur_cum_tokens,
+        _cur_deduped,
+        _cur_gated,
+        _cur_scored,
     )
-    from data_ingestion_din_spark.plans.text_pipeline import _CUR_BUDGET
 
     def _plan(batch_df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
         """Build this batch's output DataFrames (audit rows, new
@@ -85,66 +89,27 @@ def _funnel_processor(out: str, fp_state: str, lang_state: str):
         it executes jobs, it just writes nothing. The epoch writer never
         passes it an empty (checkpoint-recovery) batch, whose stage rows
         would stamp NULL batch_par into the audit."""
-        toks = tokens(F.col("text"))
-        scored = batch_df.select(
-            "doc_id",
-            (F.col("doc_id") % 2).cast("int").alias("batch_par"),
-            fingerprint(F.col("text")).alias("fp"),
-            F.size(toks).cast("bigint").alias("n_tokens"),
-            lang_id(F.col("text"), toks).alias("lang_guess"),
-            quality_score(F.col("text"), toks).alias("quality"),
-        ).localCheckpoint(eager=True)
-        gated = scored.filter(
-            (F.col("quality") >= 0.5) & (F.col("lang_guess") != "unk")
-        )
-        within = (
-            gated.withColumn(
-                "rn",
-                F.row_number().over(W.partitionBy("fp").orderBy("doc_id")),
-            )
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
         spark_l = batch_df.sparkSession
-        # State layout is epoch-keyed for EXACTLY-ONCE under foreachBatch
-        # replay (at-least-once delivery): every write below is an
-        # idempotent overwrite of this epoch's own partition, and every
-        # read filters to epochs STRICTLY BEFORE the current one — a
-        # replayed batch neither double-counts its earlier failed
-        # attempt's state nor anti-joins against its own fingerprints.
-        def _prior_epochs(path: str, col: str):
-            if not os.path.isdir(path):
-                return None
-            return (
-                spark_l.read.option("basePath", path)
-                .parquet(path)
-                .filter(F.col("epoch") < epoch_id)
-                .select(col)
-            )
-
+        scored = _cur_scored(batch_df).localCheckpoint(eager=True)
+        gated = _cur_gated(scored)
+        deduped = _cur_deduped(gated)
         # NO broadcast hint here: `seen` is the cumulative corpus-wide
         # fingerprint set (grows every epoch). A plain equi-anti-join
         # shuffles only on fp; AQE is free to broadcast while the state
         # is small but is never forced to once it isn't.
-        seen = _prior_epochs(fp_state, "fp")
+        seen = _prior_epochs(spark_l, fp_state, epoch_id)
         if seen is not None:
-            deduped = within.join(
-                seen, "fp", "left_anti"
-            ).localCheckpoint(eager=True)
-        else:
-            deduped = within.localCheckpoint(eager=True)
-        if os.path.isdir(lang_state):
+            deduped = deduped.join(seen.select("fp"), "fp", "left_anti")
+        deduped = deduped.localCheckpoint(eager=True)
+        consumed = {}
+        prior_lang = _prior_epochs(spark_l, lang_state, epoch_id)
+        if prior_lang is not None:
             consumed = {
                 r["lang_guess"]: r["c"]
-                for r in spark_l.read.option("basePath", lang_state)
-                .parquet(lang_state)
-                .filter(F.col("epoch") < epoch_id)
-                .groupBy("lang_guess")
+                for r in prior_lang.groupBy("lang_guess")
                 .agg(F.sum("consumed").alias("c"))
                 .collect()
             }
-        else:
-            consumed = {}
         cons_expr = F.coalesce(
             *(
                 [
@@ -156,24 +121,14 @@ def _funnel_processor(out: str, fp_state: str, lang_state: str):
                 + [F.lit(0).cast("bigint")]
             )
         )
-        budgeted = (
-            deduped.withColumn(
-                "cum_tokens",
-                F.sum("n_tokens").over(
-                    W.partitionBy("lang_guess")
-                    .orderBy(F.desc("quality"), "doc_id")
-                    .rowsBetween(W.unboundedPreceding, W.currentRow)
-                )
-                + cons_expr,
-            )
-            .filter(F.col("cum_tokens") <= _CUR_BUDGET)
-            .localCheckpoint(eager=True)
-        )
+        budgeted = _cur_budgeted(
+            deduped, _cur_cum_tokens() + cons_expr
+        ).localCheckpoint(eager=True)
 
         # the landing batch is parity-homogeneous and never empty, so one
         # driver-side scalar labels every stage row (a later stage CAN be
         # empty — deriving the label from its own rows would emit NULL)
-        par_val = scored.agg(F.min("batch_par")).first()[0]
+        par_val = scored.agg(F.min(F.col("doc_id") % 2)).first()[0]
 
         def stage(ord_: int, name: str, df: DataFrame) -> DataFrame:
             return df.groupBy().agg(
@@ -361,62 +316,22 @@ _SQG_K = 400
 
 def _quality_gate_processor(out: str, vocab_state: str, k: int = _SQG_K):
     """foreachBatch processor over (verdicts, vocab-state) dirs —
-    module-level for the replay test, like the other index processors."""
-    from data_ingestion_din_spark.functions.analysis import tokens
-    from data_ingestion_din_spark.functions.hashing import h64
+    module-level for the replay test, like the sibling gates."""
+    from data_ingestion_din_spark.plans.curation_queries import (
+        _qc_tokens,
+        _qc_verdicts,
+        _qc_vocab,
+    )
 
     def _plan(batch_df: DataFrame, epoch_id: int):
-        spark_l = batch_df.sparkSession
-        tok = batch_df.select(
-            "doc_id", F.explode(tokens(F.col("text"))).alias("w")
+        tok = _qc_tokens(batch_df)
+        vocab, new_vocab = _frozen_model(
+            batch_df.sparkSession,
+            vocab_state,
+            epoch_id,
+            lambda: _qc_vocab(tok, k).localCheckpoint(eager=True),
         )
-        prior = None
-        if os.path.isdir(vocab_state):
-            prior = (
-                spark_l.read.option("basePath", vocab_state)
-                .parquet(vocab_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("w", "wt")
-            )
-        # train ONLY when no prior-epoch vocab exists — keyed on the
-        # PRIOR-EPOCH rows, not directory existence, so a REPLAYED
-        # training epoch (state dir present, no epochs before it)
-        # retrains identically instead of scoring against an empty
-        # vocab (the 1-row probe is bounded: the vocab is top-K)
-        if prior is not None and prior.limit(1).count() > 0:
-            vocab = prior
-            new_vocab = None  # frozen — written once by the training epoch
-        else:
-            vocab = (
-                tok.groupBy("w")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .orderBy(F.desc("c"), "w")
-                .limit(k)
-                .select(
-                    "w",
-                    (h64(F.col("w")) % 201 - 100).cast("bigint").alias("wt"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            new_vocab = vocab
-        scored = tok.join(F.broadcast(vocab), "w", "left")
-        verdicts = (
-            scored.groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_tok"),
-                F.sum(F.when(F.col("wt").isNull(), 1).otherwise(0))
-                .cast("bigint")
-                .alias("oov_tok"),
-                F.coalesce(F.sum("wt"), F.lit(0))
-                .cast("bigint")
-                .alias("logit_sum"),
-                F.when(F.coalesce(F.sum("wt"), F.lit(0)) >= 0, 1)
-                .otherwise(0)
-                .cast("int")
-                .alias("passed"),
-            )
-        )
-        return {"verdicts": verdicts, "new_vocab": new_vocab}
+        return {"verdicts": _qc_verdicts(tok, vocab), "new_vocab": new_vocab}
 
     return _epoch_writer(_plan, {"verdicts": out, "new_vocab": vocab_state})
 
@@ -495,99 +410,45 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dsir_gate_processor(out: str, ratio_state: str):
     """foreachBatch processor over (verdicts, ratio-table-state) dirs —
-    module-level for the replay test, like the other index processors."""
-    from data_ingestion_din_spark.functions.analysis import tokens
-    from data_ingestion_din_spark.functions.hashing import h64
+    module-level for the replay test, like the sibling gates."""
     from data_ingestion_din_spark.plans.curation_queries import (
-        _DSIR_B,
-        _DSIR_TARGET,
+        _dsir_bucket_counts,
+        _dsir_bucket_totals,
+        _dsir_offset,
+        _dsir_ratio,
+        _dsir_totals,
     )
 
-    def intlog2(c):
-        return F.length(F.bin(c)).cast("bigint")
-
     def _plan(batch_df: DataFrame, epoch_id: int):
-        spark_l = batch_df.sparkSession
-        t = batch_df.select(
-            "doc_id", "source", tokens(F.col("text")).alias("toks")
-        ).filter(F.size("toks") >= 1)
-        grams = t.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.expr(
-                    "concat(toks, CASE WHEN size(toks) >= 2 THEN "
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> concat(toks[i - 1], ' ', toks[i])) "
-                    "ELSE slice(toks, 1, 0) END)"
-                )
-            ).alias("g"),
-        )
-        db = (
-            grams.select(
-                "doc_id", "source", (h64(F.col("g")) % _DSIR_B).alias("bkt")
-            )
-            .groupBy("doc_id", "source", "bkt")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            .localCheckpoint(eager=True)  # feeds training AND scoring
-        )
-        prior = None
-        if os.path.isdir(ratio_state):
-            prior = (
-                spark_l.read.option("basePath", ratio_state)
-                .parquet(ratio_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("bkt", "qlr")
-            )
-        # train ONLY when no prior-epoch table exists — keyed on the
-        # PRIOR-EPOCH rows, not directory existence, so a REPLAYED
-        # training epoch retrains identically (the quality-gate replay
-        # trap; the 1-row probe is bounded: the table is ≤B+1 rows)
-        if prior is not None and prior.limit(1).count() > 0:
-            state = prior
-            new_ratio = None  # frozen — written once by the training epoch
-        else:
-            is_tgt = F.col("source").isin(*_DSIR_TARGET)
-            ball = (
-                db.groupBy("bkt")
-                .agg(
-                    F.sum(F.when(is_tgt, F.col("n")).otherwise(F.lit(0)))
-                    .cast("bigint")
-                    .alias("t_n"),
-                    F.sum(F.when(~is_tgt, F.col("n")).otherwise(F.lit(0)))
-                    .cast("bigint")
-                    .alias("r_n"),
-                )
-                .localCheckpoint(eager=True)  # feeds ratio rows AND totals
-            )
-            q = ball.filter(F.col("r_n") >= 1).select(
-                "bkt",
-                (intlog2(F.col("t_n") + 1) - intlog2(F.col("r_n") + 1))
-                .cast("bigint")
-                .alias("qlr"),
-            )
+        db = _dsir_bucket_counts(batch_df).localCheckpoint(
+            eager=True
+        )  # feeds training AND scoring
+
+        def train():
+            ball = _dsir_bucket_totals(db).localCheckpoint(
+                eager=True
+            )  # feeds ratio rows AND totals
             # the per-doc length offset is a SCALAR of the training
             # totals — stored as the bkt = -1 row of the same table
             # (h64 % B is non-negative, so -1 cannot collide) so the
             # frozen model is ONE artifact that cannot half-evict
-            off = ball.agg(
-                F.sum("t_n").cast("bigint").alias("t_tot"),
-                F.sum("r_n").cast("bigint").alias("r_tot"),
-            ).select(
+            off = _dsir_totals(ball).select(
                 F.lit(-1).cast("bigint").alias("bkt"),
-                (
-                    intlog2(F.col("r_tot") + _DSIR_B)
-                    - intlog2(F.col("t_tot") + _DSIR_B)
-                )
-                .cast("bigint")
-                .alias("qlr"),
+                _dsir_offset().cast("bigint").alias("qlr"),
             )
-            state = q.unionByName(off).localCheckpoint(eager=True)
-            new_ratio = state
+            return _dsir_ratio(ball).unionByName(off).localCheckpoint(
+                eager=True
+            )
+
+        state, new_ratio = _frozen_model(
+            batch_df.sparkSession, ratio_state, epoch_id, train
+        )
         ratio = state.filter(F.col("bkt") >= 0)
         offr = state.filter(F.col("bkt") == -1).select(
             F.col("qlr").alias("off")
         )
+        # LEFT join: a bucket the training landing never saw scores 0
+        # (the batch query inner-joins — it scores its own training set)
         w = (
             db.join(F.broadcast(ratio), "bkt", "left")
             .groupBy("doc_id")
@@ -630,14 +491,8 @@ def _dsir_gate_processor(out: str, ratio_state: str):
 def _sdg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
     _process = _dsir_gate_processor(out, os.path.join(base, "ratio"))
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    )
-    _run_split_landings(
-        spark,
-        base,
-        [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
-        _process,
+    _run_doc_parity_landings(
+        spark, sf_dir, base, _process, cols=("doc_id", "source", "text")
     )
     return out
 
@@ -753,72 +608,32 @@ def streaming_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_gate_processor(out: str, merges_state: str, steps: int = 4):
     """foreachBatch processor over (verdicts, merge-table-state) dirs —
-    module-level for the replay test, like the other index processors."""
+    module-level for the replay test, like the sibling gates."""
     from data_ingestion_din_spark.functions.analysis import tokens
-    from data_ingestion_din_spark.plans.text_pipeline import bpe_merge_fold
+    from data_ingestion_din_spark.plans.text_pipeline import (
+        _bpe_merge_loop,
+        _bpe_word_table,
+        bpe_merge_fold,
+    )
 
     def _plan(batch_df: DataFrame, epoch_id: int):
         spark_l = batch_df.sparkSession
-        wn = (
-            batch_df.select(F.explode(tokens(F.col("text"))).alias("w"))
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("wn"))
+        words = _bpe_word_table(batch_df).localCheckpoint(eager=True)
+
+        def train():
+            merges, _ = _bpe_merge_loop(words, steps)
+            return spark_l.createDataFrame(
+                [m[:3] for m in merges], "step int, lft string, rgt string"
+            )
+
+        merges, new_merges = _frozen_model(
+            spark_l, merges_state, epoch_id, train
         )
-        cur = wn.withColumn(
-            "toks",
-            F.expr(
-                "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-            ),
-        ).localCheckpoint(eager=True)
-        prior = None
-        if os.path.isdir(merges_state):
-            prior = (
-                spark_l.read.option("basePath", merges_state)
-                .parquet(merges_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("step", "lft", "rgt")
-            )
-        # train ONLY when no prior-epoch merge table exists — keyed on
-        # the PRIOR-EPOCH rows, not directory existence, so a REPLAYED
-        # training epoch retrains identically (the replay trap the
-        # quality gate pinned); the read-back is ≤steps rows
-        if prior is not None and prior.limit(1).count() > 0:
-            frozen = sorted(prior.collect(), key=lambda r: r.step)
-            new_merges = None  # frozen — written once by the training epoch
-            for r in frozen:
-                cur = cur.withColumn("toks", bpe_merge_fold(r.lft, r.rgt))
-        else:
-            learned = []
-            for step in range(steps):
-                prs = (
-                    cur.filter(F.size("toks") >= 2)
-                    .select(
-                        "wn",
-                        F.explode(
-                            F.sequence(F.lit(1), F.size("toks") - 1)
-                        ).alias("i"),
-                        "toks",
-                    )
-                    .select(
-                        F.element_at("toks", F.col("i")).alias("lft"),
-                        F.element_at("toks", F.col("i") + 1).alias("rgt"),
-                        "wn",
-                    )
-                )
-                top = (
-                    prs.groupBy("lft", "rgt")
-                    .agg(F.sum("wn").cast("bigint").alias("n"))
-                    .orderBy(F.desc("n"), "lft", "rgt")
-                    .limit(1)
-                    .collect()[0]  # 1-row argmax — iteration control data
-                )
-                learned.append((step, top.lft, top.rgt))
-                cur = cur.withColumn(
-                    "toks", bpe_merge_fold(top.lft, top.rgt)
-                ).localCheckpoint(eager=True)
-            new_merges = spark_l.createDataFrame(
-                learned, "step int, lft string, rgt string"
-            )
+        # every epoch encodes the same way: the merge table (≤steps
+        # rows, iteration control data) folded over the word table
+        cur = words
+        for r in sorted(merges.collect(), key=lambda r: r.step):
+            cur = cur.withColumn("toks", bpe_merge_fold(r.lft, r.rgt))
         enc = cur.select("w", F.size("toks").cast("bigint").alias("n_sub"))
         doc_w = batch_df.select(
             "doc_id", F.explode(tokens(F.col("text"))).alias("w")
@@ -905,11 +720,9 @@ def streaming_bpe_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # like the quality gate's top-K vocab) and epoch-commits it; every
 # landing's non-benchmark docs are shingled once and probed against the
 # frozen set via a broadcast left-join, emitting per-doc
-# (n_hits, contaminated) verdicts. Training is keyed on PRIOR-EPOCH
-# ROWS, not directory existence (the replay trap — a replayed training
-# epoch retrains identically). Epoch-keyed idempotent overwrites +
-# prior-epoch-only reads give exactly-once under replay, proven in
-# tests/test_streaming.py.
+# (n_hits, contaminated) verdicts. The frozen set is read and trained
+# through streaming_core._frozen_model (exactly-once under replay,
+# proven in tests/test_streaming.py).
 #
 # The oracle restates freeze-on-%14-slice + probe-everyone in SQL, so
 # hash parity proves the frozen shingle set survived the checkpointed
@@ -926,35 +739,23 @@ def _decontam_gate_processor(out: str, shingle_state: str, n: int = 8):
     )
 
     def _plan(batch_df: DataFrame, epoch_id: int):
-        spark_l = batch_df.sparkSession
         sh = batch_df.select(
             "doc_id",
             F.explode_outer(
                 F.array_distinct(word_shingles(tokens(F.col("text")), n))
             ).alias("shingle"),
         )
-        prior = None
-        if os.path.isdir(shingle_state):
-            prior = (
-                spark_l.read.option("basePath", shingle_state)
-                .parquet(shingle_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("shingle")
+        ev, new_state = _frozen_model(
+            batch_df.sparkSession,
+            shingle_state,
+            epoch_id,
+            lambda: sh.filter(
+                (F.col("doc_id") % 14 == 0) & F.col("shingle").isNotNull()
             )
-        if prior is not None and prior.limit(1).count() > 0:
-            ev = prior
-            new_state = None  # frozen — written once by the training epoch
-        else:
-            ev = (
-                sh.filter(
-                    (F.col("doc_id") % 14 == 0)
-                    & F.col("shingle").isNotNull()
-                )
-                .select("shingle")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            new_state = ev
+            .select("shingle")
+            .distinct()
+            .localCheckpoint(eager=True),
+        )
         probed = sh.filter(F.col("doc_id") % 14 != 0).join(
             F.broadcast(ev.withColumn("hit", F.lit(1))), "shingle", "left"
         )
@@ -1080,15 +881,8 @@ def _semdedup_gate_processor(
 
     def _plan(batch_df: DataFrame, epoch_id: int):
         spark_l = batch_df.sparkSession
-        if os.path.isdir(cent_state):
-            prior = (
-                spark_l.read.option("basePath", cent_state)
-                .parquet(cent_state)
-                .filter(F.col("epoch") < epoch_id)
-            )
-            rows = prior.orderBy("cluster").collect()
-        else:
-            rows = []
+        prior = _prior_epochs(spark_l, cent_state, epoch_id)
+        rows = [] if prior is None else prior.orderBy("cluster").collect()
         if rows:
             cents = [list(r.qv) for r in rows]
             routed = (
@@ -1118,19 +912,17 @@ def _semdedup_gate_processor(
                 "cluster int, qv array<bigint>",
             )
         routed = routed.localCheckpoint(eager=True)
-        members = None
-        if os.path.isdir(member_state):
-            members = (
-                spark_l.read.option("basePath", member_state)
-                .parquet(member_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("cluster", F.col("q3").alias("m_q3"))
-            )
-        if members is not None and members.limit(1).count() > 0:
+        members = _prior_epochs(spark_l, member_state, epoch_id)
+        if members is not None:
             # plain equi-join on the cell — the member index grows with
-            # the corpus (the forbidden broadcast class, never hinted)
+            # the corpus (the forbidden broadcast class, never hinted);
+            # no prior members (a replayed first landing) joins nothing
+            # and coalesces to the same zero verdicts as the else branch
             hits = (
-                routed.join(members, "cluster")
+                routed.join(
+                    members.select("cluster", F.col("q3").alias("m_q3")),
+                    "cluster",
+                )
                 .select(
                     "vec_id",
                     quant_dot(F.col("q3"), F.col("m_q3")).alias("dot"),
@@ -1306,50 +1098,27 @@ def streaming_semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale: the rate table is bounded by the language count (the legal
 # broadcast class — hinted and plan-asserted REQUIRED); the per-doc
-# verdict is a scan-local predicate. Train is keyed on PRIOR-EPOCH ROWS
-# so a replayed training epoch retrains identically.
+# verdict is a scan-local predicate.
 # --------------------------------------------------------------------------
 
 
 def _tmix_gate_processor(out: str, rate_state: str):
     """foreachBatch processor over (verdicts, frozen-rate-state) dirs —
     module-level for the replay test, like the sibling gates."""
-    from data_ingestion_din_spark.functions.hashing import h64
+    from data_ingestion_din_spark.plans.curation_queries import (
+        _tmix_keep,
+        _tmix_rates,
+    )
 
     def _plan(batch_df: DataFrame, epoch_id: int):
-        spark_l = batch_df.sparkSession
-        prior = None
-        if os.path.isdir(rate_state):
-            prior = (
-                spark_l.read.option("basePath", rate_state)
-                .parquet(rate_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("lang", "threshold_micros")
-            )
-        if prior is not None and prior.limit(1).count() > 0:
-            rates = prior
-            new_rates = None  # frozen — written once by the training epoch
-        else:
-            counts = batch_df.groupBy("lang").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs")
-            )
-            n_min = counts.agg(F.min("n_docs").alias("n_min"))
-            rates = (
-                counts.crossJoin(F.broadcast(n_min))
-                .select(
-                    "lang",
-                    F.floor(
-                        F.lit(1000000.0)
-                        * F.sqrt(
-                            F.col("n_min").cast("double") / F.col("n_docs")
-                        )
-                    )
-                    .cast("bigint")
-                    .alias("threshold_micros"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            new_rates = rates
+        rates, new_rates = _frozen_model(
+            batch_df.sparkSession,
+            rate_state,
+            epoch_id,
+            lambda: _tmix_rates(batch_df)
+            .select("lang", "threshold_micros")
+            .localCheckpoint(eager=True),
+        )
         verdicts = (
             batch_df.select("doc_id", "lang")
             .join(F.broadcast(rates), "lang", "left")
@@ -1357,17 +1126,7 @@ def _tmix_gate_processor(out: str, rate_state: str):
                 "doc_id",
                 "lang",
                 F.when(
-                    F.abs(
-                        h64(
-                            F.concat(
-                                F.lit("tmix:"),
-                                F.col("doc_id").cast("string"),
-                            )
-                        )
-                    )
-                    % 1000000
-                    < F.coalesce("threshold_micros", F.lit(0)),
-                    1,
+                    _tmix_keep(F.coalesce("threshold_micros", F.lit(0))), 1
                 )
                 .otherwise(0)
                 .cast("int")
@@ -1382,12 +1141,12 @@ def _tmix_gate_processor(out: str, rate_state: str):
 @staged("tmix_gate_landings")
 def _stg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    _run_split_landings(
+    _run_doc_parity_landings(
         spark,
+        sf_dir,
         base,
-        [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _tmix_gate_processor(out, os.path.join(base, "rates")),
+        cols=("doc_id", "lang"),
     )
     return out
 
@@ -1442,10 +1201,9 @@ def streaming_tmix_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bkt=-1 sentinel rationale) — and every later landing is scored
 # against the frozen LM with Stupid-Backoff exactly as the batch query
 # (q = intlog2(head_n+1)−intlog2(pair_n), backoff 1+intlog2(T+1)−
-# intlog2(tok_n+1)), keep = ppl_milli <= cutoff. Training is keyed on
-# PRIOR-EPOCH ROWS, not directory existence (the replay trap); verdicts
-# and state are epoch-keyed idempotent overwrites with prior-epoch-only
-# reads — exactly-once under replay, proven in tests/test_streaming.py.
+# intlog2(tok_n+1)), keep = ppl_milli <= cutoff — the same
+# lm_queries._bi_lm / _bi_scored code; exactly-once under replay
+# (streaming_core._frozen_model), proven in tests/test_streaming.py.
 #
 # Scale: the frozen LM is vocabulary-sized (bigram long tail), NOT
 # bounded control data — so the scoring joins are plain equi-joins with
@@ -1462,106 +1220,53 @@ _SPPL_KEEP = 4600  # milli-octaves/bigram; splits the fixture under the
 def _ppl_gate_processor(out: str, lm_state: str):
     """foreachBatch processor over (verdicts, frozen-LM-state) dirs —
     module-level for the replay test, like the sibling gates."""
-    from pyspark.sql.window import Window as W
-
-    from data_ingestion_din_spark.functions.analysis import tokens
-
-    intlog2 = lambda c: F.length(F.bin(c)).cast("bigint")  # noqa: E731
+    from data_ingestion_din_spark.plans.lm_queries import (
+        _bi_lm,
+        _bi_pairs,
+        _bi_scored,
+        _bi_tokens,
+    )
 
     def _plan(batch_df: DataFrame, epoch_id: int):
-        spark_l = batch_df.sparkSession
-        t0 = batch_df.select("doc_id", tokens(F.col("text")).alias("t"))
-        t = t0.filter(F.size("t") >= 2)
-        prs = t.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), "
-                    "i -> struct(t[i - 1] AS head, t[i] AS next))"
-                )
-            ).alias("p"),
-        ).select("doc_id", "p.head", "p.next")
-        prior = None
-        if os.path.isdir(lm_state):
-            prior = (
-                spark_l.read.option("basePath", lm_state)
-                .parquet(lm_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("kind", "k1", "k2", "cnt")
+        t0 = _bi_tokens(batch_df)
+        prs = _bi_pairs(t0)
+
+        def kind_rows(df: DataFrame, kind: str, k1, k2, cnt: str):
+            return df.select(
+                F.lit(kind).alias("kind"),
+                k1.alias("k1"),
+                k2.alias("k2"),
+                F.col(cnt).alias("cnt"),
             )
-        if prior is not None and prior.limit(1).count() > 0:
-            state = prior
-            new_state = None  # frozen — written once by the training epoch
-        else:
-            pc = prs.groupBy("head", "next").agg(
-                F.count(F.lit(1)).cast("bigint").alias("cnt")
-            ).select(
-                F.lit("p").alias("kind"),
-                F.col("head").alias("k1"),
-                F.col("next").alias("k2"),
-                "cnt",
+
+        def train():
+            pc, uc, tot = _bi_lm(prs, t0)
+            c, none = F.col, F.lit("")
+            return (
+                kind_rows(pc, "p", c("head"), c("next"), "pair_n")
+                .unionByName(kind_rows(uc, "u", c("tok"), none, "tok_n"))
+                .unionByName(kind_rows(tot, "t", none, none, "tt"))
+                .localCheckpoint(eager=True)
             )
-            toks_all = t0.select(F.explode("t").alias("tok"))
-            uc = toks_all.groupBy("tok").agg(
-                F.count(F.lit(1)).cast("bigint").alias("cnt")
-            ).select(
-                F.lit("u").alias("kind"),
-                F.col("tok").alias("k1"),
-                F.lit("").alias("k2"),
-                "cnt",
-            )
-            totrow = toks_all.agg(
-                F.count(F.lit(1)).cast("bigint").alias("cnt")
-            ).select(
-                F.lit("t").alias("kind"),
-                F.lit("").alias("k1"),
-                F.lit("").alias("k2"),
-                "cnt",
-            )
-            state = pc.unionByName(uc).unionByName(totrow).localCheckpoint(
-                eager=True
-            )
-            new_state = state
-        pairs = state.filter(F.col("kind") == "p").select(
-            F.col("k1").alias("head"),
-            F.col("k2").alias("next"),
-            F.col("cnt").alias("pair_n"),
+
+        state, new_state = _frozen_model(
+            batch_df.sparkSession, lm_state, epoch_id, train
         )
-        hn = pairs.withColumn(
-            "head_n",
-            F.sum("pair_n").over(W.partitionBy("head")).cast("bigint"),
-        )
-        uni = state.filter(F.col("kind") == "u").select(
-            F.col("k1").alias("next"), F.col("cnt").alias("tok_n")
-        )
-        tot = state.filter(F.col("kind") == "t").select(
-            F.col("cnt").alias("tt")
-        )
-        scored = (
-            # frozen-LM joins: PLAIN HINT-FREE equi-joins (the LM is
-            # vocabulary-sized, not bounded control data — the
-            # growing-state rule); even the 1-row total-scalar attach
-            # carries no hint (AQE broadcasts a 1-row side on its own)
-            prs.join(hn, ["head", "next"], "left")
-            .join(uni, "next", "left")
-            .crossJoin(tot)
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("pair_n").isNotNull(),
-                    intlog2(F.col("head_n") + 1)
-                    - intlog2(F.col("pair_n")),
-                )
-                .otherwise(
-                    F.lit(1)
-                    + intlog2(F.col("tt") + 1)
-                    - intlog2(F.coalesce(F.col("tok_n"), F.lit(0)) + 1)
-                )
-                .alias("q"),
-                F.when(F.col("pair_n").isNull(), 1).otherwise(0).alias(
-                    "bo"
-                ),
-            )
+        kind = F.col("kind")
+        # frozen-LM joins inside _bi_scored: PLAIN HINT-FREE equi-joins
+        # (the LM is vocabulary-sized, not bounded control data — the
+        # growing-state rule)
+        scored = _bi_scored(
+            prs,
+            state.filter(kind == "p").select(
+                F.col("k1").alias("head"),
+                F.col("k2").alias("next"),
+                F.col("cnt").alias("pair_n"),
+            ),
+            state.filter(kind == "u").select(
+                F.col("k1").alias("tok"), F.col("cnt").alias("tok_n")
+            ),
+            state.filter(kind == "t").select(F.col("cnt").alias("tt")),
         )
         perdoc = scored.groupBy("doc_id").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
@@ -1691,8 +1396,7 @@ def streaming_ppl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (n_shingles, n_bloom_hits, flagged = hits ≥ 4) verdicts — the
 # thresholded doc gate the batch query's measured t-sweep selected
 # (any-hit flags 31× too many docs at the measured 2.75% per-shingle
-# FPR). Training keyed on PRIOR-EPOCH ROWS (the replay trap);
-# epoch-keyed idempotent overwrites; replay-proven.
+# FPR). Frozen through streaming_core._frozen_model; replay-proven.
 #
 # The oracle restates build-filter-on-the-%14-slice + probe-everyone,
 # so hash parity proves the frozen words survived the checkpointed
@@ -1717,7 +1421,6 @@ def _bloom_gate_processor(out: str, word_state: str):
     from data_ingestion_din_spark.plans.curation_queries import _DC_N
 
     def _plan(batch_df: DataFrame, epoch_id: int):
-        spark_l = batch_df.sparkSession
         sh = batch_df.select(
             "doc_id",
             F.explode_outer(
@@ -1726,26 +1429,18 @@ def _bloom_gate_processor(out: str, word_state: str):
                 )
             ).alias("shingle"),
         )
-        prior = None
-        if os.path.isdir(word_state):
-            prior = (
-                spark_l.read.option("basePath", word_state)
-                .parquet(word_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("word", "bits")
-            )
-        if prior is not None and prior.limit(1).count() > 0:
-            words = prior
-            new_state = None  # frozen — written once by the training epoch
-        else:
-            words = bloom_words(
+        words, new_state = _frozen_model(
+            batch_df.sparkSession,
+            word_state,
+            epoch_id,
+            lambda: bloom_words(
                 sh.filter(
                     (F.col("doc_id") % 14 == 0) & F.col("shingle").isNotNull()
                 )
                 .select("shingle")
                 .distinct()
-            ).localCheckpoint(eager=True)
-            new_state = words
+            ).localCheckpoint(eager=True),
+        )
         probe = sh.filter(
             (F.col("doc_id") % 14 != 0) & F.col("shingle").isNotNull()
         )
@@ -1888,22 +1583,17 @@ def _line_gate_processor(out: str, freq_state: str):
     from data_ingestion_din_spark.plans.dedup_grids import _doc_lines
 
     def _plan(batch_df: DataFrame, epoch_id: int):
-        spark_l = batch_df.sparkSession
         hl = _doc_lines(batch_df).localCheckpoint(eager=True)
         own = hl.groupBy("lh").agg(
             F.countDistinct("doc_id").cast("bigint").alias("nd")
         )
-        parts = [own]
-        if os.path.isdir(freq_state):
-            parts.append(
-                spark_l.read.option("basePath", freq_state)
-                .parquet(freq_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("lh", "nd")
-            )
-        freq = (
-            parts[0].unionByName(parts[1]) if len(parts) > 1 else parts[0]
-        ).groupBy("lh").agg(F.sum("nd").cast("bigint").alias("nd_cum"))
+        prior = _prior_epochs(batch_df.sparkSession, freq_state, epoch_id)
+        parts = own if prior is None else own.unionByName(
+            prior.select("lh", "nd")
+        )
+        freq = parts.groupBy("lh").agg(
+            F.sum("nd").cast("bigint").alias("nd_cum")
+        )
         verdicts = (
             hl.join(freq, "lh")  # growing state: plain, hint-free
             .groupBy("doc_id")

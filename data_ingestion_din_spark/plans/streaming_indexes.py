@@ -19,6 +19,7 @@ from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_core import (
     _epoch_writer,
     _latest_epoch_rows,
+    _prior_epochs,
     _run_doc_parity_landings,
     _run_split_landings,
     _write_epoch,
@@ -94,17 +95,9 @@ def _minhash_index_processor(out: str, sig_state: str):
             sh_base, F.col("sh"), _SMI_HASHES, keep=["doc_id"]
         ).localCheckpoint(eager=True)
 
-        if os.path.isdir(sig_state):
-            prior = (
-                spark_l.read.option("basePath", sig_state)
-                .parquet(sig_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("doc_id", *mh_cols)
-            )
-        else:
-            prior = None
-
+        prior = _prior_epochs(spark_l, sig_state, epoch_id)
         if prior is not None:
+            prior = prior.select("doc_id", *mh_cols)
             b_bands = sigs.select(
                 F.col("doc_id").alias("batch_id"),
                 F.explode(_smi_band_keys()).alias("band_key"),
@@ -312,17 +305,9 @@ def _phash_index_processor(out: str, ph_state: str):
             .localCheckpoint(eager=True)
         )
 
-        if os.path.isdir(ph_state):
-            prior = (
-                spark_l.read.option("basePath", ph_state)
-                .parquet(ph_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("path", *band_cols)
-            )
-        else:
-            prior = None
-
+        prior = _prior_epochs(spark_l, ph_state, epoch_id)
         if prior is not None:
+            prior = prior.select("path", *band_cols)
             def bands(df: DataFrame, name: str):
                 return df.select(
                     F.col("path").alias(name),
@@ -492,15 +477,8 @@ def _ivf_index_processor(out: str, cent_state: str, k: int = _SII_K):
         writes — exposed for the plan-shape tests. Executes jobs when
         training (first landing) or reading the centroid state."""
         spark_l = batch_df.sparkSession
-        if os.path.isdir(cent_state):
-            prior = (
-                spark_l.read.option("basePath", cent_state)
-                .parquet(cent_state)
-                .filter(F.col("epoch") < epoch_id)
-            )
-            rows = prior.orderBy("cluster").collect()
-        else:
-            rows = []
+        prior = _prior_epochs(spark_l, cent_state, epoch_id)
+        rows = [] if prior is None else prior.orderBy("cluster").collect()
         if rows:
             cents = [list(r.qv) for r in rows]
             routed = assign_to_centroids(
@@ -631,18 +609,11 @@ def _substring_index_processor(out: str, wfp_state: str, w: int = _SSI_W):
     def _plan(batch_df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
         spark_l = batch_df.sparkSession
         wins = window_fingerprints(batch_df, w).localCheckpoint(eager=True)
-        prior = None
-        if os.path.isdir(wfp_state):
-            prior = (
-                spark_l.read.option("basePath", wfp_state)
-                .parquet(wfp_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select("wfp")
-            )
+        prior = _prior_epochs(spark_l, wfp_state, epoch_id)
         if prior is not None:
             # plain equi-semi-join: existence in the prior index (the
             # semi join absorbs index duplicates — no distinct pass)
-            matched = wins.join(prior, "wfp", "left_semi")
+            matched = wins.join(prior.select("wfp"), "wfp", "left_semi")
             dwin = W.partitionBy("doc_id").orderBy("start")
             flagged = matched.withColumn(
                 "new_island",
@@ -797,23 +768,10 @@ def _ivfpq_index_processor(
 
     def _plan(batch_df: DataFrame, epoch_id: int):
         spark_l = batch_df.sparkSession
-        crows, brows = [], []
-        if os.path.isdir(cent_state):
-            crows = (
-                spark_l.read.option("basePath", cent_state)
-                .parquet(cent_state)
-                .filter(F.col("epoch") < epoch_id)
-                .orderBy("cluster")
-                .collect()
-            )
-        if os.path.isdir(cb_state):
-            brows = (
-                spark_l.read.option("basePath", cb_state)
-                .parquet(cb_state)
-                .filter(F.col("epoch") < epoch_id)
-                .orderBy("m", "code")
-                .collect()
-            )
+        cprior = _prior_epochs(spark_l, cent_state, epoch_id)
+        bprior = _prior_epochs(spark_l, cb_state, epoch_id)
+        crows = [] if cprior is None else cprior.orderBy("cluster").collect()
+        brows = [] if bprior is None else bprior.orderBy("m", "code").collect()
         if crows and brows:
             cents = [list(r.qv) for r in crows]
             n_sub = 1 + max(r.m for r in brows)
@@ -1195,20 +1153,16 @@ def _ivf_rebalance_processor(
         qv_b = batch_df.select(
             "vec_id", quantize(F.col("embedding")).alias("qv")
         )
-        # replay-safe state probe (the _ivf_index_processor rule): the
-        # training path is taken when no PRIOR-epoch centroids exist —
-        # a replayed first landing sees its own epoch's rows on disk
-        # but must still re-train, not route against nothing
-        crows = []
-        if os.path.isdir(cent_state):
-            crows = (
-                _latest_epoch_rows(
-                    spark_l, cent_state, ["cluster"], before_epoch=epoch_id
-                )
-                .filter(~F.col("retired"))
-                .orderBy("cluster")
-                .collect()
-            )
+        # train when no PRIOR-epoch centroids exist (the replay trap,
+        # streaming_core._frozen_model), decided by the collected rows
+        latest = _latest_epoch_rows(
+            spark_l, cent_state, ["cluster"], before_epoch=epoch_id
+        )
+        crows = (
+            []
+            if latest is None
+            else latest.filter(~F.col("retired")).orderBy("cluster").collect()
+        )
         if not crows:
             # first landing: train the coarse quantizer on itself
             assigned, cents = kmeans_train(batch_df, k=k, iters=2)
@@ -1279,9 +1233,7 @@ def _ivf_rebalance_processor(
         # filter on the state (sound under retired-ids-never-reused —
         # see header), plus this landing's routed members
         prior_members = (
-            spark_l.read.option("basePath", out)
-            .parquet(out)
-            .filter(F.col("epoch") < epoch_id)
+            _prior_epochs(spark_l, out, epoch_id)
             .filter(F.col("cluster") == c_split)
             .select("vec_id", "qv")
         )

@@ -31,10 +31,13 @@ from data_ingestion_din_spark.plans.events_ext import (
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_core import (
     _epoch_writer,
+    _frozen_model,
     _latest_epoch_rows,
+    _prior_snapshot,
     _run_doc_parity_landings,
     _run_split_landings,
     _time_midpoint,
+    _unless_empty,
 )
 from data_ingestion_din_spark.sources.tables import load_table
 
@@ -200,13 +203,13 @@ def _rollup_processor(state: str):
             "n_events",
             "total_value",
         )
-        if os.path.isdir(state):
-            prior = _latest_epoch_rows(
-                spark_l,
-                state,
-                ["window_start", "event_type"],
-                before_epoch=epoch_id,
-            )
+        prior = _latest_epoch_rows(
+            spark_l,
+            state,
+            ["window_start", "event_type"],
+            before_epoch=epoch_id,
+        )
+        if prior is not None:
             partials = partials.unionByName(prior)
         return (
             partials.groupBy("window_start", "event_type")
@@ -312,30 +315,15 @@ def _profile_gate_processor(out: str, baseline_state: str):
         )
 
     def _plan(batch_df: DataFrame, epoch_id: int):
-        spark_l = batch_df.sparkSession
         prof = _profile(batch_df).localCheckpoint(eager=True)
-        prior = None
-        if os.path.isdir(baseline_state):
-            prior = (
-                spark_l.read.option("basePath", baseline_state)
-                .parquet(baseline_state)
-                .filter(F.col("epoch") < epoch_id)
-                .select(
-                    "col",
-                    F.col("n_rows").alias("b_rows"),
-                    F.col("n_distinct").alias("b_distinct"),
-                )
-            )
-        if prior is not None and prior.limit(1).count() > 0:
-            baseline = prior
-            new_baseline = None  # frozen — written once by epoch 0
-        else:
-            baseline = prof.select(
-                "col",
-                F.col("n_rows").alias("b_rows"),
-                F.col("n_distinct").alias("b_distinct"),
-            )
-            new_baseline = prof
+        frozen, new_baseline = _frozen_model(
+            batch_df.sparkSession, baseline_state, epoch_id, lambda: prof
+        )
+        baseline = frozen.select(
+            "col",
+            F.col("n_rows").alias("b_rows"),
+            F.col("n_distinct").alias("b_distinct"),
+        )
         dens = F.expr("n_distinct * 1000 DIV greatest(n_rows, 1)")
         b_dens = F.expr("b_distinct * 1000 DIV greatest(b_rows, 1)")
         audit = prof.join(F.broadcast(baseline), "col").select(
@@ -356,14 +344,12 @@ def _profile_gate_processor(out: str, baseline_state: str):
 @staged("profile_gate_landings")
 def _spg_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     out = os.path.join(base, "out")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    _run_split_landings(
+    _run_doc_parity_landings(
         spark,
+        sf_dir,
         base,
-        [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _profile_gate_processor(out, os.path.join(base, "baseline")),
+        cols=("doc_id", "text", "lang", "source", "n_chars"),
     )
     return out
 
@@ -481,20 +467,18 @@ def _anomaly_gate_processor(out: str, state: str, k: int = _SAG_K):
             )
             .localCheckpoint(eager=True)  # feeds verdicts AND the merge
         )
-        prior = None
-        if os.path.isdir(state):
-            prior = _latest_epoch_rows(
-                spark_l,
-                state,
-                ["window_start", "event_type"],
-                before_epoch=epoch_id,
-            ).localCheckpoint(eager=True)  # feeds stats AND the merge
+        prior = _latest_epoch_rows(
+            spark_l,
+            state,
+            ["window_start", "event_type"],
+            before_epoch=epoch_id,
+        )
+        if prior is not None:
             # keyed on PRIOR-EPOCH ROWS, not directory existence: a
-            # REPLAYED first epoch must still see "no prior" (the
-            # replay trap every gate here guards; the probe is bounded
-            # — state is aggregate-cardinality)
-            if prior.limit(1).count() == 0:
-                prior = None
+            # REPLAYED first epoch must still see "no prior"
+            prior = _unless_empty(
+                prior.localCheckpoint(eager=True)  # stats AND the merge
+            )
         verdicts = None
         if prior is not None:
             stats = prior.groupBy("event_type").agg(
@@ -649,10 +633,10 @@ def _quantile_processor(state: str):
             .groupBy("bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        if os.path.isdir(state):
-            prior = _latest_epoch_rows(
-                spark_l, state, ["bin"], before_epoch=epoch_id
-            )
+        prior = _latest_epoch_rows(
+            spark_l, state, ["bin"], before_epoch=epoch_id
+        )
+        if prior is not None:
             partials = partials.unionByName(prior)
         return partials.groupBy("bin").agg(
             F.sum("cnt").cast("bigint").alias("cnt")
@@ -664,12 +648,12 @@ def _quantile_processor(state: str):
 @staged("quantile_state_landings")
 def _sqm_state_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     state = os.path.join(base, "state")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    _run_split_landings(
+    _run_doc_parity_landings(
         spark,
+        sf_dir,
         base,
-        [docs.filter(F.col("doc_id") % 2 == p) for p in (0, 1)],
         _quantile_processor(state),
+        cols=("doc_id", "n_chars"),
     )
     return state
 
@@ -819,10 +803,10 @@ def _cms_processor(state: str):
         spark_l = batch_df.sparkSession
         toks = batch_df.select(F.explode(tokens(F.col("text"))).alias("tok"))
         partials = cms_grid(cms_cells(toks, _CMS_W, "tok"), n=None)
-        if os.path.isdir(state):
-            prior = _latest_epoch_rows(
-                spark_l, state, ["r", "bucket"], before_epoch=epoch_id
-            )
+        prior = _latest_epoch_rows(
+            spark_l, state, ["r", "bucket"], before_epoch=epoch_id
+        )
+        if prior is not None:
             partials = partials.unionByName(prior)
         return partials.groupBy("r", "bucket").agg(
             F.sum("counter").cast("bigint").alias("counter")
@@ -896,21 +880,12 @@ def _smg_processor(out: str):
         # NOT a per-word latest-epoch read (_latest_epoch_rows), which
         # would resurrect words the decrement churn already dropped
         mg: dict[str, int] = {}
-        if os.path.isdir(out):
-            hist = (
-                spark_l.read.option("basePath", out)
-                .parquet(out)
-                .filter(F.col("epoch") < epoch_id)
-            )
-            maxe = hist.agg(F.max("epoch")).first()[0]
-            if maxe is not None:
-                mg = {
-                    r.word: int(r.c)
-                    for r in hist.filter(
-                        (F.col("epoch") == maxe)
-                        & F.col("word").isNotNull()
-                    ).collect()
-                }
+        snap = _prior_snapshot(spark_l, out, epoch_id)
+        if snap is not None:
+            mg = {
+                r.word: int(r.c)
+                for r in snap.filter(F.col("word").isNotNull()).collect()
+            }
         rows = (
             batch_df.orderBy("doc_id", "pos")
             .select("w")
@@ -1225,13 +1200,11 @@ def _cusum_gate_processor(out: str, state: str):
             .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
             .localCheckpoint(eager=True)
         )
-        prior = None
-        if os.path.isdir(state):
-            prior = _latest_epoch_rows(
-                spark_l, state, ["event_type"], before_epoch=epoch_id
-            ).localCheckpoint(eager=True)
-            if prior.limit(1).count() == 0:
-                prior = None
+        prior = _latest_epoch_rows(
+            spark_l, state, ["event_type"], before_epoch=epoch_id
+        )
+        if prior is not None:
+            prior = _unless_empty(prior.localCheckpoint(eager=True))
         # every landing computes its own per-type mean; it is used as
         # the frozen mu ONLY for types with no prior state (landing 1
         # for everyone, and — the r12 ADVICE fix — a type FIRST

@@ -254,6 +254,62 @@ def corpus_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CUR_BUDGET = 50_000  # tokens per language
 
 
+# The four curation stages, shared by corpus_curation, the
+# corpus_curation_funnel audit and the at-ingest funnel
+# (streaming_gates._funnel_processor); the oracles restate each in SQL.
+def _cur_scored(docs: DataFrame) -> DataFrame:
+    """(doc_id, fp, n_tokens, lang_guess, quality) per document."""
+    toks = tokens(F.col("text"))
+    return docs.select(
+        "doc_id",
+        fingerprint(F.col("text")).alias("fp"),
+        F.size(toks).cast("bigint").alias("n_tokens"),
+        lang_id(F.col("text"), toks).alias("lang_guess"),
+        quality_score(F.col("text"), toks).alias("quality"),
+    )
+
+
+def _cur_gated(scored: DataFrame) -> DataFrame:
+    """The quality / language gate."""
+    return scored.filter(
+        (F.col("quality") >= 0.5) & (F.col("lang_guess") != "unk")
+    )
+
+
+def _cur_deduped(gated: DataFrame) -> DataFrame:
+    """Exact dedup: the min doc_id per fingerprint (``fp`` kept)."""
+    from pyspark.sql.window import Window as W
+
+    return (
+        gated.withColumn(
+            "rn", F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
+        )
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def _cur_cum_tokens() -> F.Column:
+    """Running token total per language in admission order (quality
+    desc, doc_id asc)."""
+    from pyspark.sql.window import Window as W
+
+    return F.sum("n_tokens").over(
+        W.partitionBy("lang_guess")
+        .orderBy(F.desc("quality"), "doc_id")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+
+
+def _cur_budgeted(deduped: DataFrame, cum: F.Column) -> DataFrame:
+    """Budget admission: rows whose running total ``cum`` (a
+    _cur_cum_tokens column, plus any carried consumption) stays within
+    _CUR_BUDGET, kept as ``cum_tokens``."""
+    return deduped.withColumn("cum_tokens", cum).filter(
+        F.col("cum_tokens") <= _CUR_BUDGET
+    )
+
+
 @query(
     "corpus_curation",
     oracle=f"""
@@ -310,38 +366,11 @@ _CUR_BUDGET = 50_000  # tokens per language
     """,
 )
 def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    scored = docs.select(
-        "doc_id",
-        fingerprint(F.col("text")).alias("fp"),
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        lang_id(F.col("text"), toks).alias("lang_guess"),
-        quality_score(F.col("text"), toks).alias("quality"),
-    )
-    gated = scored.filter(
-        (F.col("quality") >= 0.5) & (F.col("lang_guess") != "unk")
-    )
-    w_dedup = W.partitionBy("fp").orderBy("doc_id")
-    deduped = (
-        gated.withColumn("rn", F.row_number().over(w_dedup))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "fp")
-    )
-    w_budget = (
-        W.partitionBy("lang_guess")
-        .orderBy(F.desc("quality"), "doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        deduped.withColumn(
-            "cum_tokens", F.sum("n_tokens").over(w_budget).cast("bigint")
-        )
-        .filter(F.col("cum_tokens") <= _CUR_BUDGET)
-        .orderBy("lang_guess", "cum_tokens")
-    )
+    deduped = _cur_deduped(_cur_gated(_cur_scored(docs))).drop("fp")
+    return _cur_budgeted(
+        deduped, _cur_cum_tokens().cast("bigint")
+    ).orderBy("lang_guess", "cum_tokens")
 
 
 # --------------------------------------------------------------------------
@@ -776,38 +805,11 @@ def corpus_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    scored = docs.select(
-        "doc_id",
-        fingerprint(F.col("text")).alias("fp"),
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        lang_id(F.col("text"), toks).alias("lang_guess"),
-        quality_score(F.col("text"), toks).alias("quality"),
-    ).localCheckpoint(eager=False)
-    gated = scored.filter(
-        (F.col("quality") >= 0.5) & (F.col("lang_guess") != "unk")
-    )
-    deduped = (
-        gated.withColumn(
-            "rn", F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    budgeted = (
-        deduped.withColumn(
-            "cum_tokens",
-            F.sum("n_tokens").over(
-                W.partitionBy("lang_guess")
-                .orderBy(F.desc("quality"), "doc_id")
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            ),
-        )
-        .filter(F.col("cum_tokens") <= _CUR_BUDGET)
-    )
+    scored = _cur_scored(docs).localCheckpoint(eager=False)
+    gated = _cur_gated(scored)
+    deduped = _cur_deduped(gated)
+    budgeted = _cur_budgeted(deduped, _cur_cum_tokens())
 
     def stage(ord_: int, name: str, df: DataFrame) -> DataFrame:
         return df.agg(
@@ -1741,24 +1743,24 @@ def bpe_merge_fold(a: str, b: str) -> F.Column:
     )
 
 
-# The trained tokenizer — (merge table, final distinct-word
-# tokenization) — is consumed by corpus_bpe_train AND the composed
-# corpus_bpe_pipeline; staged as ONE pair (the _km8_pair pattern) so
-# neither query re-runs the 4-round Lloyd-style loop.
-@staged("bpe_train")
-def _bpe_train_run(
-    spark: SparkSession, sf_dir: str
-) -> tuple[list, DataFrame]:
-    docs = load_table(spark, sf_dir, "documents")
+# The training recipe, shared by _bpe_train_run and the at-ingest
+# frozen-tokenizer gate (streaming_gates._bpe_gate_processor).
+def _bpe_word_table(docs: DataFrame) -> DataFrame:
+    """(w, wn, toks): each distinct word, its count and its character
+    tokenization."""
     words = docs.select(F.explode(tokens(F.col("text"))).alias("w"))
     wn = words.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("wn"))
-    cur = wn.withColumn(
+    return wn.withColumn(
         "toks",
         F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"),
-    ).localCheckpoint(eager=True)
+    )
 
+
+def _bpe_merge_loop(cur: DataFrame, steps: int) -> tuple[list, DataFrame]:
+    """Run ``steps`` training rounds over a word table: (merges as
+    (step, lft, rgt, n) tuples, the word table encoded with them)."""
     merges = []
-    for step in range(_BPE_TRAIN_STEPS):
+    for step in range(steps):
         prs = cur.filter(F.size("toks") >= 2).select(
             "wn",
             F.explode(F.sequence(F.lit(1), F.size("toks") - 1)).alias("i"),
@@ -1777,13 +1779,26 @@ def _bpe_train_run(
         )
         merges.append((step, top.lft, top.rgt, top.n))
         # intermediate folds lazy (the next step's argmax collect
-        # materializes them); the LAST fold stays eager so the staged
-        # artifact's materialization cost remains inside this run, not
-        # shifted onto the first _bpe_train_run consumer
+        # materializes them); the LAST fold stays eager so the trained
+        # table's materialization cost remains inside the loop, not
+        # shifted onto its first consumer
         cur = cur.withColumn(
             "toks", bpe_merge_fold(top.lft, top.rgt)
-        ).localCheckpoint(eager=(step == _BPE_TRAIN_STEPS - 1))
+        ).localCheckpoint(eager=(step == steps - 1))
     return merges, cur
+
+
+# The trained tokenizer — (merge table, final distinct-word
+# tokenization) — is consumed by corpus_bpe_train AND the composed
+# corpus_bpe_pipeline; staged as ONE pair (the _km8_pair pattern) so
+# neither query re-runs the 4-round Lloyd-style loop.
+@staged("bpe_train")
+def _bpe_train_run(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list, DataFrame]:
+    docs = load_table(spark, sf_dir, "documents")
+    cur = _bpe_word_table(docs).localCheckpoint(eager=True)
+    return _bpe_merge_loop(cur, _BPE_TRAIN_STEPS)
 
 
 @query("corpus_bpe_train", oracle=_bpe_train_oracle())

@@ -22,7 +22,10 @@ similarity recall-audit skeleton (exact-cosine top-10 window, overlap
 counts) in plans/similarity_queries.py. A fifth keeps the graph beam
 step in plans/graph_queries.py's ``_beam_walk``. A sixth keeps the
 HyperLogLog, Count-Min and packed-word Bloom recipes in
-functions/sketches.py.
+functions/sketches.py. A seventh keeps every processor-side read of
+epoch-keyed state (the prior-epoch filter, the ``basePath`` read, the
+state-dir existence guard and the empty-state probe) in
+plans/streaming_core.py.
 """
 
 from __future__ import annotations
@@ -309,3 +312,85 @@ def test_sketch_recipes_live_in_sketches():
         if sites:
             hits[rel] = sites
     assert not hits, f"sketch recipes outside functions/sketches.py: {hits}"
+
+
+def _is_epoch_col(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and _call_name(node) == "col"
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "epoch"
+    )
+
+
+def _epoch_state_read_sites(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, what) of every hand-written state read: anywhere, an
+    ``epoch`` column compared with ``epoch_id``; inside a processor (a
+    module-level function named ``*_processor`` or building its sink
+    with _epoch_writer / _write_epoch), any ``epoch`` column compare,
+    a ``.option("basePath", ...)`` read, an ``os.path.isdir`` guard or
+    a ``.limit(1).count()`` empty-state probe."""
+    sites = []
+
+    def scan(root: ast.AST, in_proc: bool) -> None:
+        for node in ast.walk(root):
+            if isinstance(node, ast.Compare):
+                ops = [node.left, *node.comparators]
+                if any(_is_epoch_col(o) for o in ops) and (
+                    in_proc
+                    or any(
+                        isinstance(o, ast.Name) and o.id == "epoch_id"
+                        for o in ops
+                    )
+                ):
+                    sites.append((node.lineno, "epoch compare"))
+            if not (in_proc and isinstance(node, ast.Call)):
+                continue
+            name = _call_name(node)
+            f = node.func
+            if (
+                name == "option"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "basePath"
+            ):
+                sites.append((node.lineno, "basePath read"))
+            elif name == "isdir":
+                sites.append((node.lineno, "isdir guard"))
+            elif (
+                name == "count"
+                and isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Call)
+                and _call_name(f.value) == "limit"
+            ):
+                sites.append((node.lineno, "limit(1).count() probe"))
+
+    for node in tree.body:
+        is_proc = isinstance(node, ast.FunctionDef) and (
+            node.name.endswith("_processor")
+            or any(
+                isinstance(n, ast.Name)
+                and n.id in ("_epoch_writer", "_write_epoch")
+                for n in ast.walk(node)
+            )
+        )
+        scan(node, is_proc)
+    return sorted(set(sites))
+
+
+def test_epoch_state_reads_live_in_streaming_core():
+    """No plans module but streaming_core reads epoch-keyed state by
+    hand inside a processor: processors call _prior_epochs,
+    _latest_epoch_rows, _prior_snapshot, _frozen_model or _unless_empty,
+    which own the strictly-earlier-epochs rule, the missing-dir case and
+    the replay trap."""
+    hits: dict[str, list[tuple[int, str]]] = {}
+    for path in sorted(glob.glob(os.path.join(PKG, "plans", "*.py"))):
+        if os.path.basename(path) == "streaming_core.py":
+            continue
+        with open(path) as fh:
+            sites = _epoch_state_read_sites(ast.parse(fh.read()))
+        if sites:
+            hits[os.path.relpath(path, PKG)] = sites
+    assert not hits, f"epoch-keyed state read outside streaming_core: {hits}"

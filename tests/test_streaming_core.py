@@ -1,7 +1,7 @@
 """Unit tests of the shared streaming mechanism in plans/streaming_core:
-the awaitTermination guard (JVM-free, a stub query object) and the
-per-epoch state writer behind every foreachBatch processor (a real
-session writing to ``tmp_path``)."""
+the awaitTermination guard (JVM-free, a stub query object), the
+per-epoch state writer behind every foreachBatch processor and the
+processor-side state readers (a real session on ``tmp_path``)."""
 
 from __future__ import annotations
 
@@ -12,6 +12,11 @@ import pytest
 from data_ingestion_din_spark.plans.streaming_core import (
     _await_or_raise,
     _epoch_writer,
+    _frozen_model,
+    _latest_epoch_rows,
+    _prior_epochs,
+    _prior_snapshot,
+    _write_epoch,
 )
 
 
@@ -101,3 +106,74 @@ def test_epoch_writer_replay_overwrites_the_epoch(spark, tmp_path):
     # a replay with different content replaces that epoch's rows
     process(spark.createDataFrame([(9,)], "x bigint"), 1)
     assert _rows(spark, out) == [(0, 1), (0, 2), (1, 9)]
+
+
+def _put(spark, state: str, epoch_id: int, xs: list[int]) -> None:
+    _write_epoch(
+        spark.createDataFrame([(x,) for x in xs], "x bigint"), state, epoch_id
+    )
+
+
+def _freeze(spark, state: str, epoch_id: int):
+    """(train calls, model rows, new-state rows or None) of one
+    _frozen_model read whose training returns [1, 2]."""
+    calls = []
+
+    def train():
+        calls.append(epoch_id)
+        return spark.createDataFrame([(1,), (2,)], "x bigint")
+
+    model, new = _frozen_model(spark, state, epoch_id, train)
+    assert model.columns == ["x"]
+    rows = sorted(r.x for r in model.collect())
+    return calls, rows, None if new is None else sorted(r.x for r in new.collect())
+
+
+def test_frozen_model_trains_when_the_state_dir_is_missing(spark, tmp_path):
+    state = str(tmp_path / "state")
+    assert _prior_epochs(spark, state, 0) is None
+    assert _latest_epoch_rows(spark, state, ["x"], before_epoch=0) is None
+    assert _freeze(spark, state, 0) == ([0], [1, 2], [1, 2])
+
+
+def test_frozen_model_retrains_a_replayed_training_epoch(spark, tmp_path):
+    # the training epoch's first attempt wrote its model, then failed:
+    # the replay finds the dir but no EARLIER epoch, so it trains again
+    state = str(tmp_path / "state")
+    _put(spark, state, 0, [1, 2])
+    assert _prior_epochs(spark, state, 0).count() == 0
+    calls, rows, new = _freeze(spark, state, 0)
+    assert (calls, rows, new) == ([0], [1, 2], [1, 2])
+    _put(spark, state, 0, new)
+    assert sorted(r.x for r in _prior_epochs(spark, state, 1).collect()) == [1, 2]
+
+
+def test_frozen_model_reads_an_earlier_epoch(spark, tmp_path):
+    state = str(tmp_path / "state")
+    _put(spark, state, 0, [5, 6])
+    assert [(r.epoch, r.x) for r in _prior_epochs(spark, state, 1).orderBy("x").collect()] == [
+        (0, 5),
+        (0, 6),
+    ]
+    assert _freeze(spark, state, 1) == ([], [5, 6], None)
+
+
+def test_state_reads_ignore_later_epochs(spark, tmp_path):
+    state = str(tmp_path / "state")
+    _put(spark, state, 0, [5])
+    _put(spark, state, 2, [7])
+    assert [(r.epoch, r.x) for r in _prior_epochs(spark, state, 1).collect()] == [(0, 5)]
+    assert _freeze(spark, state, 1) == ([], [5], None)
+    later_only = str(tmp_path / "later_only")
+    _put(spark, later_only, 2, [7])
+    assert _freeze(spark, later_only, 1) == ([1], [1, 2], [1, 2])
+
+
+def test_prior_snapshot_is_the_latest_earlier_epoch(spark, tmp_path):
+    state = str(tmp_path / "state")
+    assert _prior_snapshot(spark, state, 0) is None
+    _put(spark, state, 0, [1, 2])
+    _put(spark, state, 1, [3])
+    assert _prior_snapshot(spark, state, 0) is None
+    assert sorted(r.x for r in _prior_snapshot(spark, state, 1).collect()) == [1, 2]
+    assert [r.x for r in _prior_snapshot(spark, state, 2).collect()] == [3]
