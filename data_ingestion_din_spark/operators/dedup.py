@@ -13,23 +13,49 @@ Scale notes (100 TB posture):
   (NOT ``dropDuplicates``, whose kept row is partition-order-dependent —
   SURVEY.md §7.4.2 first-match-wins).
 - MinHash signatures are pure array expressions (no shuffle, no UDF);
-  LSH banding turns O(n²) near-dup search into a groupBy on band keys —
-  each band shuffle carries only (key, doc_id).
+  LSH banding turns O(n²) near-dup search into an equi-join on band
+  keys — each band shuffle carries only (key, id).
 - The inverted-index Jaccard join shuffles on shingle; a frequency cap on
   hot shingles (stop-shingle pruning) bounds skew — the same reasoning as
   salting a hot join key.
 - Embedding near-dup at scale goes through the LSH/IVF candidates from
   operators/similarity.py; the all-pairs form here is the correctness
   baseline.
+
+The banded-LSH kernel (every banded near-dup join in the engine is built
+on it):
+
+- :func:`shingle_signatures` — distinct word n-gram shingle set, empty
+  sets dropped, MinHash slots, one lazy ``localCheckpoint``;
+- :func:`minhash_band_keys` — the MinHash band-key recipe
+  (``md5('b{j}', r slots)``, r = n_hashes / bands);
+- :func:`band_candidates` — the band equi-join: a self-join keeping
+  ``a.id < b.id``, or a probe × index join, then distinct pairs, with
+  payload columns carried through the join;
+- :func:`pair_sides`, :func:`shingle_jaccard`, :func:`slot_agreement` —
+  the verify step: look each candidate's two sides up once, then exact
+  shingle Jaccard or MinHash slot agreement;
+- :func:`nearest_match` — an incremental probe's verdict: each probe's
+  best verified match, or a clean bill.
+
+SimHash, hyperplane and pHash callers build their own band-key columns
+and use the same join and verdict.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from data_ingestion_din_spark.functions.analysis import fingerprint, tokens
+from data_ingestion_din_spark.functions.analysis import (
+    fingerprint,
+    tokens,
+    word_shingles,
+)
 from data_ingestion_din_spark.functions.hashing import with_minhash
 from data_ingestion_din_spark.sources.tables import scan_parallel
 
@@ -145,55 +171,41 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return summed.select("doc_id", sim.cast("bigint").alias("simhash"))
 
 
-def minhash_banded_pairs(
-    docs: DataFrame,
-    n_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
+# --------------------------------------------------------------------------
+# The banded-LSH kernel (see the module docstring).
+# --------------------------------------------------------------------------
+def shingle_signatures(
+    docs: DataFrame, n_hashes: int, shingle_n: int, *keep: str
 ) -> DataFrame:
-    """Multi-band MinHash LSH over word n-gram shingles with an exact
-    Jaccard verify stage — the real near-dup construction (b bands × r
-    rows; single-band ``minhash_dup_groups`` only finds whole-signature
-    matches).
+    """(doc_id, *keep, sh, mh0..mh{n_hashes-1}) for every doc whose
+    distinct word ``shingle_n``-gram set ``sh`` is non-empty.
 
-    Pipeline (all JVM-side):
-      1. signature: ``n_hashes`` seeded min-hashes over the distinct
-         n-gram shingle set (pure array expressions, no shuffle);
-      2. banding: each doc emits ``bands`` keys, band j = md5 over its
-         r = n_hashes/bands signature slots (explode → one groupBy-free
-         self-equi-join on band_key; each band row carries only
-         (band_key, doc_id));
-      3. candidates: distinct (doc_a < doc_b) pairs sharing ≥1 band —
-         P[candidate] = 1−(1−j^r)^b, so near-dups at j≥0.8 are found
-         w.h.p. while low-j pairs are never joined (no cartesian);
-      4. verify: exact shingle-set Jaccard via two hash-joins back to the
-         per-doc shingle arrays; keep pairs ≥ ``threshold``.
-
-    At 100 TB the band join shuffles only (16-byte key, doc_id) rows and
-    the verify join touches only candidate docs — the standard
-    MinHash-LSH scale shape. Returns (doc_a, doc_b, jaccard).
+    Lazily local-checkpointed: the signature frame feeds several plan
+    branches (both sides of the band join and the verify lookups);
+    without staging, Spark recomputes the shingle + MinHash pipeline
+    per branch (measured 4x cost at sf0.1). At cluster scale this is
+    the staged-table / dataset-cache shape; localCheckpoint is its
+    single-JVM equivalent. Partitioning is the caller's: batch callers
+    pass ``scan_parallel(docs)``, a streaming micro-batch passes itself.
     """
-    from data_ingestion_din_spark.functions.analysis import word_shingles
-
-    r = n_hashes // bands
-    if r * bands != n_hashes:
-        raise ValueError("bands must divide n_hashes")
-    sh_arr = F.array_distinct(word_shingles(tokens(F.col("text")), shingle_n))
-    sh_base = scan_parallel(docs).select("doc_id", sh_arr.alias("sh")).filter(
+    sh = F.array_distinct(word_shingles(tokens(F.col("text")), shingle_n))
+    base = docs.select("doc_id", *keep, sh.alias("sh")).filter(
         F.size("sh") > 0
     )
-    sigs = (
-        with_minhash(sh_base, F.col("sh"), n_hashes)
-        # materialize once: the signature scan feeds FOUR plan branches
-        # (both sides of the band self-join and both sides of the verify
-        # join); without staging, Spark recomputes the shingle+minhash
-        # pipeline per branch (measured 4× cost at sf0.1). At cluster
-        # scale this is the staged-table / dataset-cache production
-        # shape; localCheckpoint is its single-JVM equivalent.
-        .localCheckpoint(eager=False)
+    return with_minhash(base, F.col("sh"), n_hashes).localCheckpoint(
+        eager=False
     )
-    band_keys = F.array(
+
+
+def minhash_band_keys(n_hashes: int, bands: int) -> F.Column:
+    """The ``bands`` MinHash band keys of a signature row as one array:
+    band j = md5('b{j}', mh[j*r], ..., mh[j*r + r - 1]) with
+    r = n_hashes / bands. The band tag keeps equal slot values in
+    different bands from colliding."""
+    r, rest = divmod(n_hashes, bands)
+    if rest:
+        raise ValueError("bands must divide n_hashes")
+    return F.array(
         *[
             F.md5(
                 F.concat_ws(
@@ -205,43 +217,149 @@ def minhash_banded_pairs(
             for j in range(bands)
         ]
     )
-    banded = sigs.select("doc_id", F.explode(band_keys).alias("band_key"))
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), "band_key")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+
+
+def band_candidates(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    on="band_key",
+    id: str = "doc_id",
+    pair: tuple[str, str] = ("doc_a", "doc_b"),
+    carry=(),
+) -> DataFrame:
+    """Distinct candidate pairs of items sharing at least one band.
+
+    ``left`` (and ``right``) hold banded rows: one per (item, band), with
+    the item's ``id``, the band key column(s) ``on`` and any ``carry``
+    payload columns. With no ``right`` this is the self-join: each
+    unordered pair once, as ``a.id < b.id``. With ``right`` it is the
+    probe: left (probe) rows against right (index) rows only, so two
+    probe rows are never paired and the index is never self-joined.
+
+    Returns distinct (pair[0], pair[1], a_<c>..., b_<c>...): a carried
+    column rides through the join, so no lookup join is needed for it.
+    P[candidate] = 1-(1-p^r)^b for per-row agreement p, so low-similarity
+    pairs are never joined (no cartesian).
+    """
+    keys = [on] if isinstance(on, str) else list(on)
+    a = left.alias("a")
+    b = (left if right is None else right).alias("b")
+    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if right is None:
+        cond.append(F.col(f"a.{id}") < F.col(f"b.{id}"))
+    return (
+        a.join(b, functools.reduce(operator.and_, cond))
         .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            F.col(f"a.{id}").alias(pair[0]),
+            F.col(f"b.{id}").alias(pair[1]),
+            *[F.col(f"a.{c}").alias(f"a_{c}") for c in carry],
+            *[F.col(f"b.{c}").alias(f"b_{c}") for c in carry],
         )
         .distinct()
     )
-    sh_sets = sigs.select("doc_id", "sh")
-    verified = (
-        cand.join(
-            sh_sets.select(
-                F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-            ),
-            "doc_a",
+
+
+def pair_sides(
+    pairs: DataFrame,
+    left: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    id: str = "doc_id",
+    pair: tuple[str, str] = ("doc_a", "doc_b"),
+    cols=(),
+) -> DataFrame:
+    """Attach both sides' ``cols`` to candidate ``pairs`` for the verify
+    step: a_<c> from ``left`` by pair[0], b_<c> from ``right`` (default
+    ``left``) by pair[1]. Two hash joins on the ids, after the distinct,
+    so only candidate items are looked up."""
+    def side(df: DataFrame, key: str, tag: str) -> DataFrame:
+        return df.select(
+            F.col(id).alias(key), *[F.col(c).alias(f"{tag}_{c}") for c in cols]
         )
-        .join(
-            sh_sets.select(
-                F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-            ),
-            "doc_b",
-        )
-        .withColumn(
-            "inter", F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("inter"))
-            ).alias("jaccard"),
-        )
+
+    return pairs.join(side(left, pair[0], "a"), pair[0]).join(
+        side(left if right is None else right, pair[1], "b"), pair[1]
     )
-    return verified.filter(F.col("jaccard") >= threshold)
+
+
+def shingle_jaccard(pairs: DataFrame) -> DataFrame:
+    """Append the exact Jaccard of the ``a_sh`` / ``b_sh`` shingle sets
+    as ``jaccard``: |A∩B| / (|A| + |B| - |A∩B|), the intersection size
+    staged once per pair."""
+    return pairs.withColumn(
+        "_inter", F.size(F.array_intersect(F.col("a_sh"), F.col("b_sh")))
+    ).withColumn(
+        "jaccard",
+        F.col("_inter").cast("double")
+        / (F.size("a_sh") + F.size("b_sh") - F.col("_inter")),
+    )
+
+
+def slot_agreement(pairs: DataFrame, n_hashes: int) -> DataFrame:
+    """Append ``n_agree`` (int): how many of the ``a_mh<i>`` / ``b_mh<i>``
+    MinHash slots agree — n_agree / n_hashes estimates the Jaccard from
+    signatures alone (what an index that stores no texts can verify)."""
+    agree = sum(
+        F.when(F.col(f"a_mh{i}") == F.col(f"b_mh{i}"), 1).otherwise(0)
+        for i in range(n_hashes)
+    )
+    return pairs.withColumn("n_agree", agree.cast("int"))
+
+
+def nearest_match(
+    pairs: DataFrame, probes: DataFrame, order: str, matched: str
+) -> DataFrame:
+    """An incremental probe's verdict. ``pairs`` holds verified
+    (probe id, match id, score) rows, ``probes`` the one probe-id column.
+    Each probe's best match is the best score (``order`` "desc": higher
+    wins, "asc": lower wins), ties to the lower match id. Returns
+    (probe id, is_dup, ``matched``, score) for every probe; a probe with
+    no verified pair reads is_dup = false and nulls."""
+    pid, mid, score = pairs.columns
+    first = F.desc(score) if order == "desc" else F.asc(score)
+    w = W.partitionBy(pid).orderBy(first, mid)
+    best = (
+        pairs.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") == 1)
+        .select(pid, mid, score)
+    )
+    (key,) = probes.columns
+    return probes.join(best, F.col(key) == F.col(pid), "left").select(
+        key,
+        F.col(mid).isNotNull().alias("is_dup"),
+        F.col(mid).alias(matched),
+        score,
+    )
+
+
+def minhash_banded_pairs(
+    docs: DataFrame,
+    n_hashes: int = 8,
+    bands: int = 4,
+    shingle_n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Multi-band MinHash LSH over word n-gram shingles with an exact
+    Jaccard verify stage — the real near-dup construction (b bands × r
+    rows; single-band ``minhash_dup_groups`` only finds whole-signature
+    matches): signatures, band self-join, exact shingle Jaccard on the
+    candidates, keep pairs ≥ ``threshold``.
+
+    At 100 TB the band join shuffles only (16-byte key, doc_id) rows and
+    the verify join touches only candidate docs — the standard
+    MinHash-LSH scale shape. Returns (doc_a, doc_b, jaccard).
+    """
+    keys = minhash_band_keys(n_hashes, bands)
+    sigs = shingle_signatures(scan_parallel(docs), n_hashes, shingle_n)
+    cand = band_candidates(
+        sigs.select("doc_id", F.explode(keys).alias("band_key"))
+    )
+    return (
+        shingle_jaccard(pair_sides(cand, sigs, cols=["sh"]))
+        .select("doc_a", "doc_b", "jaccard")
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def simhash_dup_groups(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
@@ -269,9 +387,9 @@ def simhash_near_pairs(
 
     The fingerprint is sliced into ``n_bands`` contiguous bit bands; a pair
     within Hamming distance ≤ n_bands−1 must agree on ≥1 whole band
-    (pigeonhole), so the band equi-join finds every such pair without a
-    cartesian product. An exact popcount filter (``bit_count(a XOR b)``)
-    then keeps pairs ≤ ``max_hamming``.
+    (pigeonhole), so :func:`band_candidates` finds every such pair, the
+    fingerprints riding through the join; an exact popcount filter
+    (``bit_count(a XOR b)``) keeps pairs ≤ ``max_hamming``.
 
     At 100 TB: each band row is (band_idx:value, doc_id, simhash) — a
     narrow shuffle; band width drives the self-join fan-out (dense bands
@@ -297,22 +415,13 @@ def simhash_near_pairs(
             for j in range(n_bands)
         ]
     )
-    banded = sh.select(
-        "doc_id", "simhash", F.explode(band_keys).alias("band_key")
+    cand = band_candidates(
+        sh.select("doc_id", "simhash", F.explode(band_keys).alias("band_key")),
+        carry=["simhash"],
     )
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), "band_key")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int")
+    ham = F.bit_count(
+        F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))
+    ).cast("int")
     return cand.select("doc_a", "doc_b", ham.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )
@@ -336,8 +445,6 @@ def ngram_jaccard_pairs(
     capped runs skip the guard — their candidate set is bounded by
     construction).
     """
-    from data_ingestion_din_spark.functions.analysis import word_shingles
-
     if max_shingle_freq is None:
         _refuse_all_pairs(
             docs,
@@ -396,18 +503,14 @@ def embedding_near_dup_lsh(
     the scale path for :func:`embedding_near_dup_pairs` (reference has no
     ANN at all; Chroma kNN is backend/services/vector_store.py:263-341).
 
-    Pipeline:
-      1. hash every vector with ``n_tables`` independent hyperplane
-         tables (``n_planes`` bits each, exact integer projections so the
-         oracle reproduces the signs bit-for-bit);
-      2. candidates: pairs agreeing on ≥1 whole table's bucket — an
-         equi-join on (table, bucket), never a cartesian. For cosine s,
-         P[candidate] = 1 − (1 − p^n_planes)^n_tables with
-         p = 1 − arccos(s)/π, so true near-dups (s ≥ 0.9) are found
-         w.h.p. while unrelated pairs rarely collide;
-      3. verify: exact quantized cosine ≥ ``threshold`` on candidates
-         only (each side's quantized vector + norm computed once,
-         pre-join).
+    Every vector is hashed with ``n_tables`` independent hyperplane
+    tables (``n_planes`` bits each, exact integer projections so the
+    oracle reproduces the signs bit-for-bit); the band key is
+    ``table:bucket``. For cosine s, P[candidate] = 1 − (1 − p^n_planes)
+    ^n_tables with p = 1 − arccos(s)/π, so true near-dups (s ≥ 0.9) are
+    found w.h.p. while unrelated pairs rarely collide. Candidates are
+    verified by exact quantized cosine ≥ ``threshold`` (each side's
+    quantized vector + norm computed once, pre-join).
 
     At 100 TB the bucket join shuffles only (table:bucket, vec_id) rows
     and the verify join touches candidates only — same shape as
@@ -480,34 +583,16 @@ def embedding_near_dup_lsh(
             for t in range(n_tables)
         ]
     )
-    banded = staged.select("vec_id", F.explode(band_keys).alias("band_key"))
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), "band_key")
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
-        )
-        .distinct()
+    cand = band_candidates(
+        staged.select("vec_id", F.explode(band_keys).alias("band_key")),
+        id="vec_id",
+        pair=("id_a", "id_b"),
     )
-    sides = staged.select("vec_id", "qv", "nrm")
-    pairs = cand.join(
-        sides.select(
-            F.col("vec_id").alias("id_a"),
-            F.col("qv").alias("qa"),
-            F.col("nrm").alias("na"),
-        ),
-        "id_a",
-    ).join(
-        sides.select(
-            F.col("vec_id").alias("id_b"),
-            F.col("qv").alias("qb"),
-            F.col("nrm").alias("nb"),
-        ),
-        "id_b",
+    pairs = pair_sides(
+        cand, staged, id="vec_id", pair=("id_a", "id_b"), cols=["qv", "nrm"]
     )
-    cos = quant_dot(F.col("qa"), F.col("qb")).cast("double") / (
-        F.col("na") * F.col("nb")
+    cos = quant_dot(F.col("a_qv"), F.col("b_qv")).cast("double") / (
+        F.col("a_nrm") * F.col("b_nrm")
     )
     return pairs.select("id_a", "id_b", cos.alias("cos_sim")).filter(
         F.col("cos_sim") >= threshold
@@ -751,80 +836,33 @@ def minhash_banded_pairs_incremental(
     band table is a materialized artifact keyed by band_key, and each
     night's batch probes it like an index.
 
-    Same signature/band/verify machinery as the full self-join form;
-    returns (batch_id, corpus_id, jaccard ≥ ``threshold``).
+    Same kernel as the full self-join form, with the probe join of
+    :func:`band_candidates`; returns (batch_id, corpus_id,
+    jaccard ≥ ``threshold``).
     """
-    from data_ingestion_din_spark.functions.analysis import word_shingles
-
-    r = n_hashes // bands
-    if r * bands != n_hashes:
-        raise ValueError("bands must divide n_hashes")
+    keys = minhash_band_keys(n_hashes, bands)
     tagged = batch.select(
         "doc_id", F.lit(True).alias("is_batch"), "text"
     ).unionByName(
         corpus.select("doc_id", F.lit(False).alias("is_batch"), "text")
     )
-    sh_arr = F.array_distinct(word_shingles(tokens(F.col("text")), shingle_n))
-    sh_base = scan_parallel(tagged).select(
-        "doc_id", "is_batch", sh_arr.alias("sh")
-    ).filter(F.size("sh") > 0)
-    sigs = with_minhash(sh_base, F.col("sh"), n_hashes).localCheckpoint(
-        eager=False
-    )
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.lit(f"b{j}"),
-                    *[F.col(f"mh{j * r + i}").cast("string") for i in range(r)],
-                )
-            )
-            for j in range(bands)
-        ]
+    sigs = shingle_signatures(
+        scan_parallel(tagged), n_hashes, shingle_n, "is_batch"
     )
     banded = sigs.select(
-        "doc_id", "is_batch", F.explode(band_keys).alias("band_key")
+        "doc_id", "is_batch", F.explode(keys).alias("band_key")
     )
-    cand = (
-        banded.filter(F.col("is_batch"))
-        .select(F.col("doc_id").alias("batch_id"), "band_key")
-        .join(
-            banded.filter(~F.col("is_batch")).select(
-                F.col("doc_id").alias("corpus_id"), "band_key"
-            ),
-            "band_key",
-        )
-        .select("batch_id", "corpus_id")
-        .distinct()
+    pair = ("batch_id", "corpus_id")
+    cand = band_candidates(
+        banded.filter(F.col("is_batch")),
+        banded.filter(~F.col("is_batch")),
+        pair=pair,
     )
-    sh_sets = sigs.select("doc_id", "sh")
-    verified = (
-        cand.join(
-            sh_sets.select(
-                F.col("doc_id").alias("batch_id"), F.col("sh").alias("sh_a")
-            ),
-            "batch_id",
-        )
-        .join(
-            sh_sets.select(
-                F.col("doc_id").alias("corpus_id"), F.col("sh").alias("sh_b")
-            ),
-            "corpus_id",
-        )
-        .withColumn(
-            "inter", F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        )
-        .select(
-            "batch_id",
-            "corpus_id",
-            (
-                F.col("inter").cast("double")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("inter"))
-            ).alias("jaccard"),
-        )
+    return (
+        shingle_jaccard(pair_sides(cand, sigs, pair=pair, cols=["sh"]))
+        .select(*pair, "jaccard")
+        .filter(F.col("jaccard") >= threshold)
     )
-    return verified.filter(F.col("jaccard") >= threshold)
 
 
 def window_fingerprints(docs: DataFrame, w: int) -> DataFrame:

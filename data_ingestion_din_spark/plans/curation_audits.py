@@ -719,60 +719,21 @@ def _doremi_oracle() -> str:
 
 @query("corpus_doremi_step", oracle=_doremi_oracle())
 def corpus_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    from data_ingestion_din_spark.functions.analysis import tokens
+    from data_ingestion_din_spark.plans.lm_queries import (
+        _bi_lm,
+        _bi_pairs,
+        _bi_scored,
+        _bi_tokens,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
-    intlog2 = lambda c: F.length(F.bin(c)).cast("bigint")  # noqa: E731
-    t0 = docs.select("doc_id", tokens(F.col("text")).alias("t"))
-    t = t0.filter(F.size("t") >= 2)
-    prs = t.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1), "
-                "i -> struct(t[i - 1] AS head, t[i] AS next))"
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.head", "p.next")
+    t0 = _bi_tokens(docs)
+    prs = _bi_pairs(t0)
     held = prs.filter((F.col("doc_id") % 4).isin(*_DRM_HELD))
 
     def lm_scored(mod: int) -> DataFrame:
-        train = prs.filter(F.col("doc_id") % mod == 0)
-        pc = train.groupBy("head", "next").agg(
-            F.count(F.lit(1)).cast("bigint").alias("pair_n")
-        )
-        hn = pc.withColumn(
-            "head_n",
-            F.sum("pair_n").over(W.partitionBy("head")).cast("bigint"),
-        )
-        trtok = t0.filter(F.col("doc_id") % mod == 0).select(
-            F.explode("t").alias("tok")
-        )
-        uc = trtok.groupBy("tok").agg(
-            F.count(F.lit(1)).cast("bigint").alias("tok_n")
-        )
-        tot = trtok.agg(F.count(F.lit(1)).cast("bigint").alias("tt"))
-        return (
-            held.join(hn, ["head", "next"], "left")
-            .join(uc.withColumnRenamed("tok", "next"), "next", "left")
-            .crossJoin(tot)
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("pair_n").isNotNull(),
-                    intlog2(F.col("head_n") + 1)
-                    - intlog2(F.col("pair_n")),
-                )
-                .otherwise(
-                    F.lit(1)
-                    + intlog2(F.col("tt") + 1)
-                    - intlog2(F.coalesce(F.col("tok_n"), F.lit(0)) + 1)
-                )
-                .alias("q"),
-            )
-        )
+        train = F.col("doc_id") % mod == 0
+        return _bi_scored(held, *_bi_lm(prs.filter(train), t0.filter(train)))
 
     dl = docs.select("doc_id", "lang")
     pp = (
@@ -1183,56 +1144,18 @@ def doc_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     from data_ingestion_din_spark.functions.analysis import tokens
+    from data_ingestion_din_spark.plans.lm_queries import (
+        _bi_lm,
+        _bi_pairs,
+        _bi_scored,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
-    intlog2 = lambda c: F.length(F.bin(c)).cast("bigint")  # noqa: E731
     t0 = docs.select("doc_id", "lang", tokens(F.col("text")).alias("t"))
-    t = t0.filter(F.size("t") >= 2)
-    prs = t.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1), "
-                "i -> struct(t[i - 1] AS head, t[i] AS next))"
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.head", "p.next")
-    train = prs.filter(F.col("doc_id") % 4 == 0)
-    pc = train.groupBy("head", "next").agg(
-        F.count(F.lit(1)).cast("bigint").alias("pair_n")
-    )
-    hn = pc.withColumn(
-        "head_n",
-        F.sum("pair_n").over(W.partitionBy("head")).cast("bigint"),
-    )
-    trtok = t0.filter(F.col("doc_id") % 4 == 0).select(
-        F.explode("t").alias("tok")
-    )
-    uc = trtok.groupBy("tok").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tok_n")
-    )
-    tot = trtok.agg(F.count(F.lit(1)).cast("bigint").alias("tt"))
-    scored = (
-        prs.join(hn, ["head", "next"], "left")
-        .join(uc.withColumnRenamed("tok", "next"), "next", "left")
-        .crossJoin(tot)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("pair_n").isNotNull(),
-                intlog2(F.col("head_n") + 1) - intlog2(F.col("pair_n")),
-            )
-            .otherwise(
-                F.lit(1)
-                + intlog2(F.col("tt") + 1)
-                - intlog2(F.coalesce(F.col("tok_n"), F.lit(0)) + 1)
-            )
-            .alias("q"),
-        )
-    )
+    prs = _bi_pairs(t0)
+    train = F.col("doc_id") % 4 == 0
+    scored = _bi_scored(prs, *_bi_lm(prs.filter(train), t0.filter(train)))
     ppl = (
         scored.groupBy("doc_id")
         .agg(

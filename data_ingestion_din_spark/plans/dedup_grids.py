@@ -26,7 +26,7 @@ from data_ingestion_din_spark.plans.dedup_queries import (
     _win_ctes,
 )
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, scan_parallel
 
 # --------------------------------------------------------------------------
 # dedup_minhash_br_grid — the (bands × rows) OPERATING GRID for banded
@@ -121,24 +121,9 @@ def _br_grid_oracle() -> str:
 
 @query("dedup_minhash_br_grid", oracle=_br_grid_oracle())
 def dedup_minhash_br_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.functions.analysis import (
-        tokens,
-        word_shingles,
-    )
-    from data_ingestion_din_spark.functions.hashing import with_minhash
-    from data_ingestion_din_spark.sources.tables import scan_parallel
-
     docs = load_table(spark, sf_dir, "documents")
-    sh_arr = F.array_distinct(word_shingles(tokens(F.col("text")), 3))
-    sh_base = (
-        scan_parallel(docs)
-        .select("doc_id", sh_arr.alias("sh"))
-        .filter(F.size("sh") > 0)
-    )
     # one signature pass feeds all three configs' band joins
-    sigs = with_minhash(sh_base, F.col("sh"), _NB_HASHES).localCheckpoint(
-        eager=False
-    )
+    sigs = D.shingle_signatures(scan_parallel(docs), _NB_HASHES, 3)
     # ground truth (audit-guarded all-pairs; 3 tp joins + 1 count read it)
     truth = (
         D.ngram_jaccard_pairs(docs, n=3)
@@ -151,31 +136,9 @@ def dedup_minhash_br_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grid = None
     for b, r in _BR_CONFIGS:
-        keys = F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.lit(f"b{j}"),
-                        *[
-                            F.col(f"mh{j * r + i}").cast("string")
-                            for i in range(r)
-                        ],
-                    )
-                )
-                for j in range(b)
-            ]
-        )
-        banded = sigs.select("doc_id", F.explode(keys).alias("band_key"))
-        cand = (
-            banded.alias("a")
-            .join(banded.alias("b"), "band_key")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
+        keys = D.minhash_band_keys(_NB_HASHES, b)
+        cand = D.band_candidates(
+            sigs.select("doc_id", F.explode(keys).alias("band_key"))
         )
         row = (
             cand.agg(F.count(F.lit(1)).cast("bigint").alias("cand_pairs"))

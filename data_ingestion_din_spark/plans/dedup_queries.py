@@ -22,7 +22,7 @@ from data_ingestion_din_spark.functions.hashing import (
 from data_ingestion_din_spark.operators import dedup as D
 from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, scan_parallel
 
 _TOKS_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 _FP_SQL = "md5(lower(regexp_replace(text, '\\s+', ' ', 'g')))"
@@ -194,16 +194,12 @@ _BIT_ASSEMBLE = " + ".join(
 # that whole-signature equality misses). 8 hashes, 4 bands × 2 rows.
 # --------------------------------------------------------------------------
 _NB_HASHES, _NB_BANDS = 8, 4
-_NB_R = _NB_HASHES // _NB_BANDS
-
-
-def _mh_sh_sql(i: int) -> str:
-    return minhash_slot_sql(i)
 
 
 def _band_sql(j: int) -> str:
+    r = _NB_HASHES // _NB_BANDS
     slots = " || ',' || ".join(
-        f"CAST(mh{j * _NB_R + i} AS VARCHAR)" for i in range(_NB_R)
+        f"CAST(mh{j * r + i} AS VARCHAR)" for i in range(r)
     )
     return f"md5('b{j}' || ',' || {slots})"
 
@@ -225,7 +221,7 @@ _BANDED_CTES = f"""toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
     ),
     shh AS (SELECT doc_id, {h32_sql("shingle")} AS hb FROM sh),
     sig AS (
-      SELECT doc_id, {", ".join(_mh_sh_sql(i) for i in range(_NB_HASHES))}
+      SELECT doc_id, {", ".join(minhash_slot_sql(i) for i in range(_NB_HASHES))}
       FROM shh GROUP BY doc_id
     ),
     bands AS ({_BANDS_UNION}),
@@ -930,10 +926,9 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # dedup_incremental_batch — the nightly-ingest dedup decision: an
 # incoming batch (doc_id % 10 = 0 plays the new ingest) is checked
-# against the EXISTING corpus without ever self-joining the corpus —
-# band keys are matched strictly batch ⋈ corpus
-# (operators/dedup.minhash_banded_pairs_incremental), then each batch
-# doc gets its best verified match (argmax jaccard) or a clean bill.
+# against the EXISTING corpus without ever self-joining the corpus
+# (operators/dedup.minhash_banded_pairs_incremental, then the kernel's
+# nearest_match verdict: best verified jaccard, or a clean bill).
 # At 100 TB the corpus band table is a materialized index the batch
 # probes; per-night cost scales with the batch, not the corpus.
 # --------------------------------------------------------------------------
@@ -949,7 +944,7 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     shh AS (SELECT doc_id, {h32_sql("shingle")} AS hb FROM sh),
     sig AS (
-      SELECT doc_id, {", ".join(_mh_sh_sql(i) for i in range(_NB_HASHES))}
+      SELECT doc_id, {", ".join(minhash_slot_sql(i) for i in range(_NB_HASHES))}
       FROM shh GROUP BY doc_id
     ),
     bands AS ({_BANDS_UNION}),
@@ -996,8 +991,6 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
@@ -1005,23 +998,9 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch, corpus, n_hashes=_NB_HASHES, bands=_NB_BANDS,
         shingle_n=3, threshold=0.5,
     )
-    w = W.partitionBy("batch_id").orderBy(F.desc("jaccard"), "corpus_id")
-    best = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("batch_id", "corpus_id", "jaccard")
-    )
-    return (
-        batch.select("doc_id")
-        .join(best, F.col("doc_id") == F.col("batch_id"), "left")
-        .select(
-            "doc_id",
-            F.col("corpus_id").isNotNull().alias("is_dup"),
-            F.col("corpus_id").cast("bigint").alias("matched_doc"),
-            "jaccard",
-        )
-        .orderBy("doc_id")
-    )
+    return D.nearest_match(
+        pairs, batch.select("doc_id"), "desc", "matched_doc"
+    ).orderBy("doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -1140,65 +1119,22 @@ _EST_SLOT_MATCHES = " + ".join(
     """,
 )
 def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.functions.analysis import (
-        tokens,
-        word_shingles,
-    )
-    from data_ingestion_din_spark.functions.hashing import with_minhash
-    from data_ingestion_din_spark.sources.tables import scan_parallel
-
+    keys = D.minhash_band_keys(_NB_HASHES, _NB_BANDS)
     docs = load_table(spark, sf_dir, "documents")
-    sh_arr = F.array_distinct(word_shingles(tokens(F.col("text")), 3))
-    sh_base = scan_parallel(docs).select(
-        "doc_id", sh_arr.alias("sh")
-    ).filter(F.size("sh") > 0)
-    sigs = with_minhash(sh_base, F.col("sh"), _NB_HASHES).localCheckpoint(
-        eager=False
+    sigs = D.shingle_signatures(scan_parallel(docs), _NB_HASHES, 3)
+    cand = D.band_candidates(
+        sigs.select("doc_id", F.explode(keys).alias("band_key"))
     )
-    r = _NB_HASHES // _NB_BANDS
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.lit(f"b{j}"),
-                    *[F.col(f"mh{j * r + i}").cast("string") for i in range(r)],
-                )
-            )
-            for j in range(_NB_BANDS)
-        ]
-    )
-    banded = sigs.select("doc_id", F.explode(band_keys).alias("band_key"))
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), "band_key")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    side = lambda suf: sigs.select(
-        F.col("doc_id").alias(f"doc_{suf}"),
-        F.col("sh").alias(f"sh_{suf}"),
-        *[F.col(f"mh{i}").alias(f"mh{i}_{suf}") for i in range(_NB_HASHES)],
-    )
-    joined = cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
-    slot_matches = None
-    for i in range(_NB_HASHES):
-        t = F.when(F.col(f"mh{i}_a") == F.col(f"mh{i}_b"), 1).otherwise(0)
-        slot_matches = t if slot_matches is None else slot_matches + t
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    jac = inter.cast("double") / (
-        F.size("sh_a") + F.size("sh_b") - inter
-    )
-    est = slot_matches.cast("double") / _NB_HASHES
-    return joined.select(
+    mh = [f"mh{i}" for i in range(_NB_HASHES)]
+    joined = D.pair_sides(cand, sigs, cols=["sh", *mh])
+    verified = D.slot_agreement(D.shingle_jaccard(joined), _NB_HASHES)
+    est = F.col("n_agree").cast("double") / _NB_HASHES
+    return verified.select(
         "doc_a",
         "doc_b",
         est.alias("est_jaccard"),
-        jac.alias("jaccard"),
-        (est - jac).alias("err"),
+        "jaccard",
+        (est - F.col("jaccard")).alias("err"),
     ).orderBy("doc_a", "doc_b")
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64, h64_sql
+from data_ingestion_din_spark.operators import dedup as D
 from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.binary import decode_media
@@ -98,11 +99,10 @@ def multimodal_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # payload (decode stubbed at the codec boundary — the sampled
 # code-point grid stands in for the 8x8 resized luma grid, with the
 # same scale-with-size robustness; see the module comment there), and
-# this query runs the REAL scale path: split the hash into 4 x 16-bit
-# bands, equi-join on (band_id, band_value) so candidates are only
-# pairs agreeing exactly in >= 1 band, then verify bit_count(xor) <= K
-# — the dedup_simhash_near shape applied to media. RECALL IS
-# PROBABILISTIC at this operating point: pigeonhole guarantees a
+# this query runs the REAL scale path: 4 x 16-bit bands through the
+# band equi-join of operators/dedup.band_candidates, then verify
+# bit_count(xor) <= K — the dedup_simhash_near shape applied to media.
+# RECALL IS PROBABILISTIC at this operating point: pigeonhole guarantees a
 # candidate only for Hamming <= bands-1 = 3, and at K=10 a pair whose
 # differing bits touch all four bands is never generated (measured at
 # sf0.01: 11 of 49 true <=10 pairs banded — P(candidate | d=10) ~ 24%,
@@ -226,45 +226,38 @@ def _phash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phash_media(_media_binary(spark, sf_dir)).localCheckpoint(eager=True)
 
 
+_PH_BAND_COLS = ["b0", "b1", "b2", "b3"]
+
+
+def _ph_bands(ph: DataFrame) -> DataFrame:
+    """One banded row per (path, 16-bit band): (path, b0..b3, bid, bv)."""
+    return ph.select(
+        "path",
+        *_PH_BAND_COLS,
+        F.posexplode(F.array(*_PH_BAND_COLS)).alias("bid", "bv"),
+    )
+
+
+def _ph_hamming() -> F.Column:
+    """Total Hamming distance over the a_b<j> / b_b<j> band pairs (int)."""
+    return sum(
+        F.bit_count(F.col(f"a_{c}").bitwiseXOR(F.col(f"b_{c}")))
+        for c in _PH_BAND_COLS
+    ).cast("int")
+
+
 def _phash_pairs(ph: DataFrame) -> DataFrame:
     """Banded Hamming near-dup pairs over the staged pHash table:
     (path_a, path_b, hamming) with hamming <= _PH_K."""
-    cand = ph.select(
-        "path",
-        "b0",
-        "b1",
-        "b2",
-        "b3",
-        F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("bid", "bv"),
-    )
-    a, b = cand.alias("a"), cand.alias("b")
-    ham = (
-        F.bit_count(F.col("a0").bitwiseXOR(F.col("c0")))
-        + F.bit_count(F.col("a1").bitwiseXOR(F.col("c1")))
-        + F.bit_count(F.col("a2").bitwiseXOR(F.col("c2")))
-        + F.bit_count(F.col("a3").bitwiseXOR(F.col("c3")))
-    )
     return (
-        a.join(
-            b,
-            (F.col("a.bid") == F.col("b.bid"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.path") < F.col("b.path")),
+        D.band_candidates(
+            _ph_bands(ph),
+            on=["bid", "bv"],
+            id="path",
+            pair=("path_a", "path_b"),
+            carry=_PH_BAND_COLS,
         )
-        .select(
-            F.col("a.path").alias("path_a"),
-            F.col("b.path").alias("path_b"),
-            F.col("a.b0").alias("a0"),
-            F.col("a.b1").alias("a1"),
-            F.col("a.b2").alias("a2"),
-            F.col("a.b3").alias("a3"),
-            F.col("b.b0").alias("c0"),
-            F.col("b.b1").alias("c1"),
-            F.col("b.b2").alias("c2"),
-            F.col("b.b3").alias("c3"),
-        )
-        .distinct()
-        .withColumn("hamming", ham.cast("int"))
+        .withColumn("hamming", _ph_hamming())
         .filter(F.col("hamming") <= _PH_K)
         .select("path_a", "path_b", "hamming")
     )
@@ -338,11 +331,9 @@ def media_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    from data_ingestion_din_spark.operators.dedup import connected_components
-
     binary_df = _media_binary(spark, sf_dir)
     pairs = _phash_pairs(_phash_table(spark, sf_dir))
-    clusters = connected_components(pairs, a="path_a", b="path_b").select(
+    clusters = D.connected_components(pairs, a="path_a", b="path_b").select(
         F.col("node").alias("path"), "cluster_id"
     )
     sizes = binary_df.select(
@@ -391,25 +382,19 @@ def media_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def media_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.operators.dedup import _refuse_all_pairs
-
     ph = _phash_table(spark, sf_dir)
-    _refuse_all_pairs(ph, 20_000, "media_phash_near_dup (banded join)")
+    D._refuse_all_pairs(ph, 20_000, "media_phash_near_dup (banded join)")
     a = ph.select(
         F.col("path").alias("path_a"),
-        *[F.col(f"b{j}").alias(f"a{j}") for j in range(4)],
+        *[F.col(c).alias(f"a_{c}") for c in _PH_BAND_COLS],
     )
     b = ph.select(
         F.col("path").alias("path_b"),
-        *[F.col(f"b{j}").alias(f"c{j}") for j in range(4)],
-    )
-    ham = sum(
-        F.bit_count(F.col(f"a{j}").bitwiseXOR(F.col(f"c{j}")))
-        for j in range(4)
+        *[F.col(c).alias(f"b_{c}") for c in _PH_BAND_COLS],
     )
     truth = (
         a.join(b, F.col("path_a") < F.col("path_b"))
-        .withColumn("hamming", ham.cast("int"))
+        .withColumn("hamming", _ph_hamming())
         .filter(F.col("hamming") <= _PH_K)
     )
     found = _phash_pairs(ph)

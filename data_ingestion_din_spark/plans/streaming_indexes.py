@@ -14,6 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_din_spark.operators import dedup as D
 from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.streaming_core import (
@@ -30,15 +31,14 @@ from data_ingestion_din_spark.sources.tables import load_table
 # streaming_minhash_index — NEAR-dup dedup at ingest, the MinHash
 # sibling of the funnel's exact-fp dedup and the streaming twin of the
 # batch dedup_incremental_batch: each checkpointed availableNow landing
-# is signed (8-hash MinHash over 3-gram shingles), probed against the
-# cumulative SIGNATURE index built by the prior landings (band-key
-# equi-join, never all-pairs and never corpus-self-join), verified by
-# signature agreement (>= 4 of 8 slots == estimated Jaccard >= 0.5 —
-# the production index stores signatures, not texts, so the estimate IS
-# the verification it can run), and every batch doc gets a dup verdict
-# plus its signatures appended to the index. State is epoch-keyed
-# parquet with idempotent overwrites / prior-epoch reads, the same
-# exactly-once-under-replay layout as the curation funnel.
+# (8-hash MinHash over 3-gram shingles) probes the cumulative SIGNATURE
+# index built by the prior landings with the same kernel probe join and
+# nearest_match verdict, verified by signature agreement (>= 4 of 8
+# slots == estimated Jaccard >= 0.5 — the production index stores
+# signatures, not texts, so the estimate IS the verification it can
+# run); its signatures are then appended to the index. State is
+# epoch-keyed parquet with idempotent overwrites / prior-epoch reads,
+# the same exactly-once-under-replay layout as the curation funnel.
 #
 # Scale: per landing, cost is O(batch bands + matched index band rows);
 # the index grows with the corpus but is touched only through the
@@ -46,124 +46,44 @@ from data_ingestion_din_spark.sources.tables import load_table
 # materialized band index.
 # --------------------------------------------------------------------------
 _SMI_HASHES, _SMI_BANDS = 8, 4
-_SMI_R = _SMI_HASHES // _SMI_BANDS
 _SMI_MIN_AGREE = 4  # >= 4/8 slots == estimated jaccard >= 0.5
-
-
-def _smi_band_keys():
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.lit(f"b{j}"),
-                    *[
-                        F.col(f"mh{j * _SMI_R + i}").cast("string")
-                        for i in range(_SMI_R)
-                    ],
-                )
-            )
-            for j in range(_SMI_BANDS)
-        ]
-    )
 
 
 def _minhash_index_processor(out: str, sig_state: str):
     """foreachBatch processor over (decisions, signature-index) dirs —
     module-level for the replay test, like _funnel_processor."""
-    from pyspark.sql.window import Window as W
-
-    from data_ingestion_din_spark.functions.analysis import (
-        tokens,
-        word_shingles,
-    )
-    from data_ingestion_din_spark.functions.hashing import with_minhash
-
     mh_cols = [f"mh{i}" for i in range(_SMI_HASHES)]
+    keys = D.minhash_band_keys(_SMI_HASHES, _SMI_BANDS)
+    pair = ("batch_id", "corpus_id")
 
     def _plan(batch_df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
         """Build this batch's (decisions, new signatures) without
         writing — exposed for the plan-shape tests."""
         spark_l = batch_df.sparkSession
-        sh_arr = F.array_distinct(
-            word_shingles(tokens(F.col("text")), 3)
-        )
-        sh_base = batch_df.select("doc_id", sh_arr.alias("sh")).filter(
-            F.size("sh") > 0
-        )
-        sigs = with_minhash(
-            sh_base, F.col("sh"), _SMI_HASHES, keep=["doc_id"]
-        ).localCheckpoint(eager=True)
+        sigs = D.shingle_signatures(batch_df, _SMI_HASHES, 3)
 
         prior = _prior_epochs(spark_l, sig_state, epoch_id)
-        if prior is not None:
-            prior = prior.select("doc_id", *mh_cols)
-            b_bands = sigs.select(
-                F.col("doc_id").alias("batch_id"),
-                F.explode(_smi_band_keys()).alias("band_key"),
+        # no prior epoch: probe an empty index (folded away at planning)
+        index = (
+            sigs.where(F.lit(False)) if prior is None else prior
+        ).select("doc_id", *mh_cols)
+        cand = D.band_candidates(
+            sigs.select("doc_id", F.explode(keys).alias("band_key")),
+            index.select("doc_id", F.explode(keys).alias("band_key")),
+            pair=pair,
+        )
+        pairs = (
+            D.slot_agreement(
+                D.pair_sides(cand, sigs, index, pair=pair, cols=mh_cols),
+                _SMI_HASHES,
             )
-            p_bands = prior.select(
-                F.col("doc_id").alias("corpus_id"),
-                F.explode(_smi_band_keys()).alias("band_key"),
-            )
-            cand = (
-                b_bands.join(p_bands, "band_key")
-                .select("batch_id", "corpus_id")
-                .distinct()
-            )
-            agree = sum(
-                F.when(
-                    F.col(f"a_mh{i}") == F.col(f"b_mh{i}"), 1
-                ).otherwise(0)
-                for i in range(_SMI_HASHES)
-            )
-            ver = (
-                cand.join(
-                    sigs.select(
-                        F.col("doc_id").alias("batch_id"),
-                        *[F.col(m).alias(f"a_{m}") for m in mh_cols],
-                    ),
-                    "batch_id",
-                )
-                .join(
-                    prior.select(
-                        F.col("doc_id").alias("corpus_id"),
-                        *[F.col(m).alias(f"b_{m}") for m in mh_cols],
-                    ),
-                    "corpus_id",
-                )
-                .withColumn("n_agree", agree.cast("int"))
-                .filter(F.col("n_agree") >= _SMI_MIN_AGREE)
-            )
-            best = (
-                ver.withColumn(
-                    "rk",
-                    F.row_number().over(
-                        W.partitionBy("batch_id").orderBy(
-                            F.desc("n_agree"), "corpus_id"
-                        )
-                    ),
-                )
-                .filter(F.col("rk") == 1)
-                .select("batch_id", "corpus_id", "n_agree")
-            )
-        else:
-            best = spark_l.createDataFrame(
-                [], "batch_id bigint, corpus_id bigint, n_agree int"
-            )
-
-        decisions = (
-            batch_df.select("doc_id")
-            .join(best, F.col("doc_id") == F.col("batch_id"), "left")
-            .select(
-                "doc_id",
-                F.col("corpus_id").isNotNull().alias("is_dup"),
-                F.col("corpus_id").cast("bigint").alias("matched_doc"),
-                F.col("n_agree").cast("int").alias("n_agree"),
-            )
+            .filter(F.col("n_agree") >= _SMI_MIN_AGREE)
+            .select(*pair, "n_agree")
         )
         return {
-            "decisions": decisions,
+            "decisions": D.nearest_match(
+                pairs, batch_df.select("doc_id"), "desc", "matched_doc"
+            ),
             "new_sigs": sigs.select("doc_id", *mh_cols),
         }
 
@@ -188,8 +108,9 @@ def _smi_oracle() -> str:
     slots = ", ".join(minhash_slot_sql(i) for i in range(_SMI_HASHES))
 
     def band_sql(j: int) -> str:
+        r = _SMI_HASHES // _SMI_BANDS
         cols = " || ',' || ".join(
-            f"CAST(mh{j * _SMI_R + i} AS VARCHAR)" for i in range(_SMI_R)
+            f"CAST(mh{j * r + i} AS VARCHAR)" for i in range(r)
         )
         return f"md5('b{j}' || ',' || {cols})"
 
@@ -264,15 +185,15 @@ def streaming_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the pHash sibling of streaming_minhash_index (text ✓ r6; this closes
 # the ingest-time dedup story across both modalities): each checkpointed
 # availableNow landing's payloads are pHashed ONCE (the Arrow stage runs
-# on the batch only, never re-hashing the corpus), probed against the
-# cumulative 64-bit-band index built by prior landings via the
-# (band_id, band_value) equi-join — never all-pairs, never a broadcast
-# of the growing index — verified by total Hamming distance <= K over
-# the four 16-bit bands (bit_count(xor), integer-exact), and each
-# batch's bands are appended to the index. Best match per batch path is
-# min Hamming (path tiebreak). State is epoch-keyed parquet with
-# idempotent overwrites / prior-epoch-only reads — the same
-# exactly-once-under-replay layout as the funnel and the MinHash index.
+# on the batch only, never re-hashing the corpus) and probe the
+# cumulative 64-bit-band index built by prior landings through the
+# kernel's probe join on (band_id, band_value) — never a broadcast of
+# the growing index — verified by total Hamming distance <= K
+# (bit_count(xor), integer-exact); the best match is min Hamming, and
+# each batch's bands are appended to the index. State is epoch-keyed
+# parquet with idempotent overwrites / prior-epoch-only reads — the
+# same exactly-once-under-replay layout as the funnel and the MinHash
+# index.
 #
 # Scale: per landing, cost is O(batch bands + matched index band rows);
 # the index grows with the corpus but is touched only through the band
@@ -285,15 +206,16 @@ def _phash_index_processor(out: str, ph_state: str):
     """foreachBatch processor over (decisions, band-index) dirs —
     module-level for the replay-idempotence and plan-shape tests, like
     _funnel_processor / _minhash_index_processor."""
-    from pyspark.sql.window import Window as W
-
     from data_ingestion_din_spark.plans.multimodal_queries import (
+        _PH_BAND_COLS,
         _PH_K,
+        _ph_bands,
+        _ph_hamming,
         media_frame,
     )
     from data_ingestion_din_spark.sources.binary import phash_media
 
-    band_cols = ["b0", "b1", "b2", "b3"]
+    pair = ("batch_path", "corpus_path")
 
     def _plan(batch_df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
         """Build this batch's (decisions, new band hashes) without
@@ -301,79 +223,35 @@ def _phash_index_processor(out: str, ph_state: str):
         spark_l = batch_df.sparkSession
         ph = (
             phash_media(media_frame(batch_df))
-            .select("path", *band_cols)
+            .select("path", *_PH_BAND_COLS)
             .localCheckpoint(eager=True)
         )
 
         prior = _prior_epochs(spark_l, ph_state, epoch_id)
-        if prior is not None:
-            prior = prior.select("path", *band_cols)
-            def bands(df: DataFrame, name: str):
-                return df.select(
-                    F.col("path").alias(name),
-                    F.posexplode(F.array(*band_cols)).alias("bid", "bv"),
-                )
-
-            # plain equi-join on (bid, bv): the index side grows with
-            # the corpus, so — state-side-join rule — no broadcast hint
-            cand = (
-                bands(ph, "batch_path")
-                .join(bands(prior, "corpus_path"), ["bid", "bv"])
-                .select("batch_path", "corpus_path")
-                .distinct()
-            )
-            ham = sum(
-                F.bit_count(
-                    F.col(f"a_{c}").bitwiseXOR(F.col(f"c_{c}"))
-                )
-                for c in band_cols
-            )
-            ver = (
-                cand.join(
-                    ph.select(
-                        F.col("path").alias("batch_path"),
-                        *[F.col(c).alias(f"a_{c}") for c in band_cols],
-                    ),
-                    "batch_path",
-                )
-                .join(
-                    prior.select(
-                        F.col("path").alias("corpus_path"),
-                        *[F.col(c).alias(f"c_{c}") for c in band_cols],
-                    ),
-                    "corpus_path",
-                )
-                .withColumn("hamming", ham.cast("int"))
-                .filter(F.col("hamming") <= _PH_K)
-            )
-            best = (
-                ver.withColumn(
-                    "rk",
-                    F.row_number().over(
-                        W.partitionBy("batch_path").orderBy(
-                            "hamming", "corpus_path"
-                        )
-                    ),
-                )
-                .filter(F.col("rk") == 1)
-                .select("batch_path", "corpus_path", "hamming")
-            )
-        else:
-            best = spark_l.createDataFrame(
-                [], "batch_path string, corpus_path string, hamming int"
-            )
-
-        decisions = (
-            ph.select("path")
-            .join(best, F.col("path") == F.col("batch_path"), "left")
-            .select(
-                "path",
-                F.col("corpus_path").isNotNull().alias("is_dup"),
-                F.col("corpus_path").alias("matched_path"),
-                F.col("hamming").cast("int").alias("hamming"),
-            )
+        # no prior epoch: probe an empty index (folded away at planning)
+        index = (
+            ph.where(F.lit(False)) if prior is None else prior
+        ).select("path", *_PH_BAND_COLS)
+        # plain equi-join on (bid, bv): the index side grows with the
+        # corpus, so — state-side-join rule — no broadcast hint
+        cand = D.band_candidates(
+            _ph_bands(ph), _ph_bands(index), on=["bid", "bv"], id="path",
+            pair=pair,
         )
-        return {"decisions": decisions, "new_hashes": ph}
+        pairs = (
+            D.pair_sides(
+                cand, ph, index, id="path", pair=pair, cols=_PH_BAND_COLS
+            )
+            .withColumn("hamming", _ph_hamming())
+            .filter(F.col("hamming") <= _PH_K)
+            .select(*pair, "hamming")
+        )
+        return {
+            "decisions": D.nearest_match(
+                pairs, ph.select("path"), "asc", "matched_path"
+            ),
+            "new_hashes": ph,
+        }
 
     return _epoch_writer(_plan, {"decisions": out, "new_hashes": ph_state})
 
@@ -604,11 +482,9 @@ def _substring_index_processor(out: str, wfp_state: str, w: int = _SSI_W):
     module-level for the replay test, like the other index processors."""
     from pyspark.sql.window import Window as W
 
-    from data_ingestion_din_spark.operators.dedup import window_fingerprints
-
     def _plan(batch_df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
         spark_l = batch_df.sparkSession
-        wins = window_fingerprints(batch_df, w).localCheckpoint(eager=True)
+        wins = D.window_fingerprints(batch_df, w).localCheckpoint(eager=True)
         prior = _prior_epochs(spark_l, wfp_state, epoch_id)
         if prior is not None:
             # plain equi-semi-join: existence in the prior index (the

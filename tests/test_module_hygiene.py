@@ -25,7 +25,9 @@ HyperLogLog, Count-Min and packed-word Bloom recipes in
 functions/sketches.py. A seventh keeps every processor-side read of
 epoch-keyed state (the prior-epoch filter, the ``basePath`` read, the
 state-dir existence guard and the empty-state probe) in
-plans/streaming_core.py.
+plans/streaming_core.py. An eighth keeps the banded-LSH steps (the band
+equi-join, the MinHash band-key recipe and the incremental probe's
+best-match window) in operators/dedup.py.
 """
 
 from __future__ import annotations
@@ -394,3 +396,81 @@ def test_epoch_state_reads_live_in_streaming_core():
         if sites:
             hits[os.path.relpath(path, PKG)] = sites
     assert not hits, f"epoch-keyed state read outside streaming_core: {hits}"
+
+
+_BAND_JOIN_KEYS = ("band_key", "bid")
+
+
+def _is_band_key_str(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and any(
+            node.value == k or node.value.endswith("." + k)
+            for k in _BAND_JOIN_KEYS
+        )
+    )
+
+
+def _is_band_tag(node: ast.AST) -> bool:
+    """``F.lit(f"b{...}")``: the MinHash band tag."""
+    return (
+        isinstance(node, ast.Call)
+        and _call_name(node) == "lit"
+        and bool(node.args)
+        and isinstance(node.args[0], ast.JoinedStr)
+        and bool(node.args[0].values)
+        and isinstance(node.args[0].values[0], ast.Constant)
+        and str(node.args[0].values[0].value).startswith("b")
+    )
+
+
+def _band_kernel_sites(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, what) of every hand-written banded-LSH step: a ``.join``
+    keyed on ``band_key`` or on the pHash (``bid``, ``bv``) band columns;
+    an ``F.lit(f"b{...}")`` band tag inside ``md5(concat_ws(...))``; a
+    ``partitionBy("batch_id" | "batch_path")`` window in a function that
+    takes a ``row_number`` (the incremental best-match cut)."""
+    sites = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = _call_name(node)
+        if name == "join":
+            keys = node.args[1:] + [k.value for k in node.keywords if k.arg == "on"]
+            if any(_is_band_key_str(c) for k in keys for c in ast.walk(k)):
+                sites.append((node.lineno, "band join"))
+        elif name == "md5":
+            inner = [c for c in ast.walk(node) if isinstance(c, ast.Call)]
+            if any(_call_name(c) == "concat_ws" for c in inner) and any(
+                _is_band_tag(c) for c in inner
+            ):
+                sites.append((node.lineno, "MinHash band key"))
+    for top in tree.body:
+        calls = [n for n in ast.walk(top) if isinstance(n, ast.Call)]
+        if not any(_call_name(c) == "row_number" for c in calls):
+            continue
+        for c in calls:
+            if _call_name(c) == "partitionBy" and any(
+                isinstance(a, ast.Constant) and a.value in ("batch_id", "batch_path")
+                for a in c.args
+            ):
+                sites.append((c.lineno, "best-match window"))
+    return sorted(set(sites))
+
+
+def test_band_join_lives_in_dedup_kernel():
+    """No module but operators/dedup.py joins on a band key, builds a
+    MinHash band key or cuts an incremental probe's best match: near-dup
+    joins call band_candidates / minhash_band_keys / nearest_match.
+    Oracle SQL strings are not calls and stay the reference."""
+    hits: dict[str, list[tuple[int, str]]] = {}
+    for path in _module_files():
+        rel = os.path.relpath(path, PKG)
+        if rel == os.path.join("operators", "dedup.py"):
+            continue
+        with open(path) as fh:
+            sites = _band_kernel_sites(ast.parse(fh.read()))
+        if sites:
+            hits[rel] = sites
+    assert not hits, f"banded-LSH steps outside operators/dedup.py: {hits}"
