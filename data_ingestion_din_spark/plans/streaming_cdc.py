@@ -111,7 +111,7 @@ def streaming_ingest_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # streaming_first_seen — the STATEFUL streaming operator under the hash
-# gate: applyInPandasWithState first-seen dedup (streaming/stateful.py)
+# gate: native streaming first-seen dedup (streaming/stateful.py)
 # run over two incremental landing batches with the checkpoint carried
 # across runs, so the fingerprint state provably survives restarts. Each
 # landing batch is pre-deduped (min doc_id per fp within the batch), so
@@ -600,8 +600,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # streaming_dedup_watermark — the NATIVE dropDuplicatesWithinWatermark
-# operator under the hash gate (the built-in sibling of the custom
-# applyInPandasWithState first-seen dedup above): (user_id, event_type)
+# operator under the hash gate (the watermark-bounded sibling of the
+# unbounded first-seen dedup above): (user_id, event_type)
 # events land in two checkpointed availableNow batches (event_id
 # parity, each batch pre-reduced to one deterministic row per key so
 # within-batch processing order cannot pick a winner), watermark delay

@@ -87,7 +87,13 @@ def merge_chunks(batch_chunks: DataFrame, corpus_dir: str) -> None:
     if os.path.isdir(corpus_dir) and any(
         f.endswith(".parquet") for f in os.listdir(corpus_dir)
     ):
-        existing = spark.read.parquet(corpus_dir).select("chunk_id")
+        # the corpus is this function's own output, so its schema is the
+        # batch's: declaring it skips a footer-inference job per batch
+        existing = (
+            spark.read.schema(batch_chunks.schema)
+            .parquet(corpus_dir)
+            .select("chunk_id")
+        )
         batch_chunks = batch_chunks.join(existing, "chunk_id", "left_anti")
     batch_chunks.write.mode("append").parquet(corpus_dir)
 

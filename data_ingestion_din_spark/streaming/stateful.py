@@ -1,4 +1,4 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Stateful streaming operators: first-seen dedup and running maxima.
 
 The reference has no streaming surface at all (SURVEY.md §2.11); the one
 stateful behavior it approximates — "skip documents already ingested" —
@@ -11,18 +11,23 @@ Scale notes (100 TB posture):
 - State is partitioned by the grouping key across the cluster's state
   store (RocksDB-backed in production) — no driver state, arbitrary key
   cardinality, and each micro-batch touches only the keys it contains.
-- The stored value per key is a single boolean-sized row, NOT the row
+- The first-seen filter is Spark's native streaming ``dropDuplicates``
+  on the key column alone (``StreamingDeduplicateExec``, no watermark):
+  the state row per key is the key with an empty value, NOT the row
   content — state size is O(distinct keys), the minimum any exact
-  streaming dedup can hold. (Native ``dropDuplicates`` on a stream
-  stores the full dedup columns; fingerprinting first keeps state
-  narrow, the same trick as the batch fingerprint dedup U4.)
+  streaming dedup can hold. Fingerprinting first keeps that key narrow,
+  the same trick as the batch fingerprint dedup U4. The dedup runs in the
+  JVM: no row crosses Arrow into a Python worker.
+- ``running_max_stream`` stays on ``applyInPandasWithState``: it emits a
+  key only when its max rises, which no native aggregation can do into
+  an append-mode file sink.
 - Batch twin: ``operators.dedup.keep_first_by`` (same winner semantics
   when the stream is replayed as one batch in arrival order).
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Any, Iterable, Iterator
+from typing import TYPE_CHECKING, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -31,47 +36,21 @@ from pyspark.sql.types import StructType
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
-# state: one marker int per fingerprint (smallest stable state row)
+# state: one int per key, the key's running max
 _STATE_SCHEMA = "seen INT"
-
-
-def _first_seen_fn(
-    key: tuple, pdfs: Iterable["pd.DataFrame"], state: GroupState
-) -> Iterator["pd.DataFrame"]:
-    """Emit rows for a fingerprint only if this is its first appearance
-    across the life of the stream; within the first micro-batch, keep the
-    single first row (stable arrival order within a group batch)."""
-    if state.exists:
-        return  # duplicate content: emit nothing, state already marks it
-    state.update((1,))
-    for pdf in pdfs:
-        if len(pdf):
-            yield pdf.head(1)
-            return
 
 
 def first_seen_stream(docs: DataFrame, key_col: str = "fp") -> DataFrame:
     """Streaming exact dedup: pass through only the FIRST row seen per
     ``key_col`` over the whole stream lifetime (state survives across
-    micro-batches and restarts via the checkpoint).
+    micro-batches and restarts via the checkpoint). Within one
+    micro-batch the first row in arrival (partition) order wins.
 
     ``docs`` must already carry the dedup key column (use
     ``functions.analysis.fingerprint`` for content fingerprints) — the
     operator stays agnostic of how the key is derived.
     """
-    out_schema = StructType(
-        [f for f in docs.schema.fields]  # passthrough schema
-    )
-    return (
-        docs.groupBy(key_col)
-        .applyInPandasWithState(
-            _first_seen_fn,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return docs.dropDuplicates([key_col])
 
 
 def _make_running_max_fn(key_names: list[str], val_col: str):

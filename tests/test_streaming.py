@@ -262,48 +262,101 @@ def test_tumbling_stream_equals_batch_on_closed_windows(spark, events_dir):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_first_seen_stream_dedups_across_microbatches(spark):
-    """applyInPandasWithState first-seen filter: duplicate content arriving
-    in a LATER micro-batch must be suppressed by state persisted across
-    triggers (maxFilesPerTrigger=1 forces one micro-batch per file)."""
+_FIRST_SEEN_SCHEMA = "doc_id LONG, fp STRING, text STRING"
+
+
+def _land_first_seen(spark, base, name, rows):
+    """Land ``rows`` as one new parquet file set under ``base``/in."""
     import os
-    from datetime import datetime
+
+    spark.createDataFrame(rows, _FIRST_SEEN_SCHEMA).coalesce(1).write.parquet(
+        os.path.join(base, "in", name)
+    )
+
+
+def _first_seen_query(spark, base):
+    """One availableNow run of ``first_seen_stream`` over ``base``/in into
+    a parquet sink at ``base``/out, one micro-batch per file; the
+    checkpoint under ``base`` carries the dedup state across runs (the
+    memory sink cannot restart, so a file sink it is)."""
+    import os
 
     from data_ingestion_din_spark.streaming.stateful import first_seen_stream
 
-    base = tempfile.mkdtemp(prefix="first_seen_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    schema = "doc_id LONG, fp STRING, text STRING"
-    # batch 1: A, B, plus an in-batch duplicate of A
-    spark.createDataFrame(
-        [(1, "fpA", "a"), (2, "fpB", "b"), (3, "fpA", "a dup in-batch")],
-        schema,
-    ).coalesce(1).write.parquet(os.path.join(src, "b1"))
-    # batch 2: cross-batch duplicate of A + fresh C
-    spark.createDataFrame(
-        [(4, "fpA", "a dup cross-batch"), (5, "fpC", "c")], schema
-    ).coalesce(1).write.parquet(os.path.join(src, "b2"))
-
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_FIRST_SEEN_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "*"))
+        .parquet(os.path.join(base, "in", "*"))
     )
     q = (
         first_seen_stream(stream, key_col="fp")
         .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("first_seen_out")
+        .format("parquet")
+        .option("path", os.path.join(base, "out"))
         .option("checkpointLocation", os.path.join(base, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     _await_or_raise(q, 120)
-    rows = spark.sql("SELECT fp FROM first_seen_out").collect()
+    return q
+
+
+def _first_seen_rows(spark, base):
+    import os
+
+    out = spark.read.parquet(os.path.join(base, "out"))
+    return sorted((r.doc_id, r.fp) for r in out.collect())
+
+
+def test_first_seen_stream_dedups_across_microbatches(spark):
+    """Native streaming first-seen filter: duplicate content arriving in a
+    LATER micro-batch must be suppressed by state persisted across
+    triggers (maxFilesPerTrigger=1 forces one micro-batch per file), and
+    within a micro-batch the first row in arrival order wins."""
+    base = tempfile.mkdtemp(prefix="first_seen_")
+    # batch 1: A, B, plus an in-batch duplicate of A
+    _land_first_seen(
+        spark, base, "b1",
+        [(1, "fpA", "a"), (2, "fpB", "b"), (3, "fpA", "a dup in-batch")],
+    )
+    # batch 2: cross-batch duplicate of A + fresh C
+    _land_first_seen(
+        spark, base, "b2", [(4, "fpA", "a dup cross-batch"), (5, "fpC", "c")]
+    )
+    _first_seen_query(spark, base)
     # exactly one row per distinct fingerprint, regardless of how many
-    # micro-batches its duplicates were spread over
-    assert sorted(r.fp for r in rows) == ["fpA", "fpB", "fpC"]
+    # micro-batches its duplicates were spread over; the winners are the
+    # first arrivals (doc 1, not its in-batch duplicate 3)
+    assert _first_seen_rows(spark, base) == [(1, "fpA"), (2, "fpB"), (5, "fpC")]
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_first_seen_stream_state_survives_restart(spark):
+    """A second query on the same checkpoint (the per-upload restart the
+    upload path relies on) must remember every key the first run saw: a
+    new file re-landing ``fpB`` emits nothing for it."""
+    base = tempfile.mkdtemp(prefix="first_seen_restart_")
+    _land_first_seen(spark, base, "b1", [(1, "fpA", "a"), (2, "fpB", "b")])
+    _first_seen_query(spark, base)
+    assert _first_seen_rows(spark, base) == [(1, "fpA"), (2, "fpB")]
+    _land_first_seen(spark, base, "b2", [(6, "fpB", "b again"), (7, "fpD", "d")])
+    _first_seen_query(spark, base)
+    assert _first_seen_rows(spark, base) == [(1, "fpA"), (2, "fpB"), (7, "fpD")]
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_first_seen_stream_plans_native_dedup(spark, capsys):
+    """The first-seen filter runs in the JVM state operator: the physical
+    plan over a file stream holds ``StreamingDeduplicate`` and no pandas
+    state worker."""
+    base = tempfile.mkdtemp(prefix="first_seen_plan_")
+    _land_first_seen(spark, base, "b1", [(1, "fpA", "a")])
+    q = _first_seen_query(spark, base)
+    capsys.readouterr()
+    q.explain()
+    plan = capsys.readouterr().out
+    assert "StreamingDeduplicate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
     shutil.rmtree(base, ignore_errors=True)
 
 
