@@ -57,7 +57,7 @@ from data_ingestion_din_spark.functions.analysis import (
     word_shingles,
 )
 from data_ingestion_din_spark.functions.hashing import with_minhash
-from data_ingestion_din_spark.sources.tables import scan_parallel
+from data_ingestion_din_spark.sources.tables import local_frame, scan_parallel
 
 SIMHASH_BITS = 16
 
@@ -689,9 +689,7 @@ def connected_components(
                 StructField("cluster_id", node_t, False),
             ]
         )
-        return spark.createDataFrame(
-            sorted(labels.items()), schema
-        )
+        return local_frame(spark, sorted(labels.items()), schema)
     adj = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=False)

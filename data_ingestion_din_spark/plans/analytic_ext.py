@@ -30,7 +30,7 @@ from data_ingestion_din_spark.functions.sketches import (  # noqa: F401
 )
 from data_ingestion_din_spark.plans._exact import dec_to_double, dec_to_double_sql
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # similarity_batch_topk — k queries × corpus in ONE job (the /ask-under-
@@ -931,7 +931,8 @@ def corpus_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(walk, "shard bigint, w string, c bigint")
         .collect()
     )
-    shard_rows = spark.createDataFrame(
+    shard_rows = local_frame(
+        spark,
         [(int(r.shard), r.w, int(r.c)) for r in summaries],
         "shard int, word string, est bigint",
     ).select(
@@ -964,8 +965,8 @@ def corpus_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact.agg(F.sum("true_cnt").cast("bigint").alias("n")).first()[0]
     )
     bound = n // (_MG_K + 1)
-    sdf = spark.createDataFrame(
-        [(w, c) for w, c in summary.items()], "w string, est bigint"
+    sdf = local_frame(
+        spark, [(w, c) for w, c in summary.items()], "w string, est bigint"
     )
     hit = (
         sdf.join(exact, "w")

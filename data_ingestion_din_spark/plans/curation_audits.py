@@ -15,7 +15,7 @@ from pyspark.sql.window import Window as W
 from data_ingestion_din_spark.operators import curation as C
 from data_ingestion_din_spark.plans.curation_queries import _TOKS_SQL
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # doc_gopher_rules — the NAMED Gopher document-statistics battery (Rae
@@ -385,9 +385,7 @@ def layout_zonemap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape): the 3-row predicate table broadcasts into both the match
     # count and the per-bin rollup, replacing three serial items.count()
     # jobs and six duplicate aggregate subtrees over two zones subtrees
-    preds = spark.createDataFrame(
-        list(_ZM_PREDS), "pred string, lo bigint, hi bigint"
-    )
+    preds = local_frame(spark, list(_ZM_PREDS), "pred string, lo bigint, hi bigint")
     match = (
         items.crossJoin(F.broadcast(preds))
         .filter(F.col("n").between(F.col("lo"), F.col("hi")))

@@ -27,7 +27,7 @@ from data_ingestion_din_spark.functions.sketches import (
 from data_ingestion_din_spark.operators import curation as C
 from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 _TOKS_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
@@ -728,7 +728,8 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestion_din_spark.functions.hashing import h64
 
     out, manifest = _shard_export(spark, sf_dir)
-    mdf = spark.createDataFrame(
+    mdf = local_frame(
+        spark,
         [(m["shard"], m["n_rows"], m["n_files"]) for m in manifest],
         "shard int, n_rows_manifest bigint, n_files int",
     )

@@ -26,7 +26,11 @@ from data_ingestion_din_spark.plans.dedup_queries import (
     _win_ctes,
 )
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table, scan_parallel
+from data_ingestion_din_spark.sources.tables import (
+    load_table,
+    local_frame,
+    scan_parallel,
+)
 
 # --------------------------------------------------------------------------
 # dedup_minhash_br_grid — the (bands × rows) OPERATING GRID for banded
@@ -430,8 +434,8 @@ def _shg_inputs(spark: SparkSession, sf_dir: str) -> tuple:
     # popcount-table gather. Chunk starts are one-int control rows.
     chunk = 256
     n_tasks = max(1, (n + chunk - 1) // chunk)
-    starts_df = spark.createDataFrame(
-        [(i,) for i in range(0, n, chunk)], "i0 int"
+    starts_df = local_frame(
+        spark, [(i,) for i in range(0, n, chunk)], "i0 int"
     ).repartition(n_tasks)
 
     def _truth_tasks(batches):
@@ -482,8 +486,8 @@ def dedup_simhash_band_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union over bands without materializing pair keys anywhere)
     bc2 = spark.sparkContext.broadcast(hv)
     band_tasks = [(w, j) for w in _SHG_WIDTHS for j in range(64 // w)]
-    tasks_df = spark.createDataFrame(
-        band_tasks, "w int, j int"
+    tasks_df = local_frame(
+        spark, band_tasks, "w int, j int"
     ).repartition(len(band_tasks))
 
     def _cand_tasks(batches):
@@ -587,7 +591,8 @@ def dedup_simhash_band_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                     c * 1000 // max(nc, 1),
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         grid,
         "band_w int, n_bands int, radius int, truth_pairs bigint,"
         " cand_pairs bigint, caught_pairs bigint, recall_milli bigint,"
@@ -888,8 +893,8 @@ def dedup_semdedup_eps_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast((m, cells, nsq))
     chunk = 256
     n_tasks = max(1, (n + chunk - 1) // chunk)
-    starts_df = spark.createDataFrame(
-        [(i,) for i in range(0, n, chunk)], "i0 int"
+    starts_df = local_frame(
+        spark, [(i,) for i in range(0, n, chunk)], "i0 int"
     ).repartition(n_tasks)
 
     def _truth_tasks(batches):
@@ -952,7 +957,8 @@ def dedup_semdedup_eps_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 1000 if rm_true == 0 else rm_cell * 1000 // rm_true,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "eps_tenths int, n_true_pairs bigint, n_cell_pairs bigint,"
         " pair_recall_milli bigint, n_removed_true bigint,"

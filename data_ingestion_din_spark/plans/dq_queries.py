@@ -30,7 +30,7 @@ from data_ingestion_din_spark.functions.sketches import (
     hll_top,
 )
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 
 def _orphans(child: DataFrame, ck: str, parent: DataFrame, pk: str) -> DataFrame:
@@ -796,7 +796,8 @@ def dq_k_anonymity_generalize(
         .cast("bigint")
         .alias("s2"),
     )
-    lattice = spark.createDataFrame(
+    lattice = local_frame(
+        spark,
         [
             (ll, sl)
             for ll in range(_KGEN_LANG_LEVELS)
@@ -1193,7 +1194,8 @@ def dq_quantile_sketch_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (est - ex) * 1000 // max(ex, 1),
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "base int, pct int, n bigint, exact_c bigint, est_c bigint,"
         " n_bins bigint, over_milli bigint",
@@ -1314,7 +1316,8 @@ def dq_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     exp = F.broadcast(
-        digits.sparkSession.createDataFrame(
+        local_frame(
+            digits.sparkSession,
             [(d + 1, m) for d, m in enumerate(_BENFORD_MILLI)],
             "digit int, exp_milli bigint",
         )
@@ -1784,17 +1787,15 @@ def _hab_oracle() -> str:
 @query("dq_completeness_hll_ab", oracle=_hab_oracle())
 def dq_completeness_hll_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Columns travel the heavy path keyed by a dense INT id; the two
-    # name strings re-attach from a 50-row broadcast at the end
-    # (narrower group keys and shuffle rows over the corpus-sized
-    # stream). The raw hash stream is deduplicated ONCE on (cid, h) and
-    # that single exchange feeds BOTH the exact count and the register
-    # rollup (ReuseExchange): the register max is duplicate-insensitive
-    # and the exact count needs the dedup anyway, so the corpus is
-    # scanned/hashed once and shuffled once — the old shape
-    # (localCheckpoint + 3 full scans: exact + one per m) paid the
-    # block-manager materialization plus two extra passes over the
-    # un-deduplicated stream. Both m register tables come out of one
-    # pass over the deduped hashes via a 2-way explode.
+    # name strings re-attach from a 50-row local relation broadcast at
+    # the end (narrower group keys and shuffle rows over the
+    # corpus-sized stream). The raw hash stream is deduplicated ONCE on
+    # (cid, h), and that exchange has ONE reader, so no stage depends
+    # on exchange reuse: the register rollup, which emits both m
+    # register tables via a 2-way explode and also counts the hashes in
+    # each register. Every distinct h falls in exactly one bucket per
+    # m, so the per-(cid, m) sum of those counts IS the exact distinct
+    # count — no separate exact aggregate, exchange or join.
     #
     # Each TABLE is scanned once (r15): the per-(table, column) union of
     # 50 single-column scans paid 50 FileScan subtrees — J passes over
@@ -1845,19 +1846,16 @@ def dq_completeness_hll_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         uh = part if uh is None else uh.unionByName(part)
     names = F.broadcast(
-        spark.createDataFrame(ids, "cid int, tbl string, col string")
+        local_frame(spark, ids, "cid int, tbl string, col string")
     )
-    dh = uh.distinct()  # the one corpus-sized exchange, shared below
-    ex = dh.groupBy("cid").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact")
-    )
+    dh = uh.distinct()  # the one corpus-sized exchange
     # Register pass: ONE scan of the deduped hashes emits both m
-    # register streams via a 2-way explode (per-(cid, m, bucket) max is
-    # map-side partial, so the shuffle stays metadata-sized). A
-    # two-level variant that derived the m=64 registers from the m=256
-    # bucket partials measured SLOWER (8.1 s vs 5.0 s min, alternating
-    # in-session): the second consumer of the bucket rollup defeated
-    # AQE's exchange-stage reuse and re-ran the corpus-sized dedup.
+    # register streams via a 2-way explode (per-(cid, m, bucket) max
+    # and count are map-side partial, so the shuffle stays
+    # metadata-sized). A two-level variant that derived the m=64
+    # registers from the m=256 bucket partials measured SLOWER (8.1 s
+    # vs 5.0 s min, alternating in-session): it added a second reader
+    # of the deduplicating exchange.
     structs = []
     est_num = None
     for m in _HAB_MS:
@@ -1877,14 +1875,16 @@ def dq_completeness_hll_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         dh.select("cid", F.explode(F.array(*structs)).alias("x"))
         .select("cid", "x.m", "x.bucket", "x.rnk")
         .groupBy("cid", "m", "bucket")
-        .agg(F.max("rnk").alias("r"))
+        .agg(F.max("rnk").alias("r"), F.count(F.lit(1)).alias("n"))
     )
     sk = reg.groupBy("cid", "m").agg(
         hll_scaled_sum(F.col("m").cast("bigint")).alias("s_scaled"),
+        # a group is never empty; the coalesce keeps the column NOT NULL
+        # as the count it replaces was (Spark types every sum nullable)
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_exact"),
     ).withColumn("est_num", est_num)
     return (
-        ex.join(sk, "cid")
-        .join(names, "cid")
+        sk.join(names, "cid")
         .select(
             "tbl",
             "col",
@@ -1904,5 +1904,7 @@ def dq_completeness_hll_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("err_permille"),
         )
+        # ≤ 100 rows: sort them in one partition, no range exchange
+        .coalesce(1)
         .orderBy("tbl", "col", "m")
     )

@@ -23,7 +23,7 @@ from data_ingestion_din_spark.functions.sketches import (
 from data_ingestion_din_spark.plans._exact import dec_to_double, dec_to_double_sql
 from data_ingestion_din_spark.plans.events import _HLL_M
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # events_hll_precision_grid — the REGISTER-COUNT operating surface for
 # the portable HLL above: m is the sketch's one knob (memory = m
@@ -650,7 +650,8 @@ def _zp_box_grid(pts: DataFrame, laid: DataFrame) -> DataFrame:
     # shape): the 3-row box table broadcasts into both the match count
     # and the zones rollup, replacing three serial pts.count() jobs and
     # three duplicate aggregate subtrees over zones with one groupBy
-    boxes = pts.sparkSession.createDataFrame(
+    boxes = local_frame(
+        pts.sparkSession,
         list(_ZP_BOXES),
         "box string, u_lo bigint, u_hi bigint, t_lo bigint, t_hi bigint",
     )
@@ -1106,7 +1107,8 @@ def events_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         _THETA_K,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "op string, n_exact bigint, k int, theta_ppm bigint,"
         " est_users bigint, err_milli bigint",
@@ -1688,7 +1690,8 @@ def ranked_prefix_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 int(chk.max_cum),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "arm string, n_rows bigint, sum_r_cents bigint, sum_cum bigint,"
         " max_cum bigint",

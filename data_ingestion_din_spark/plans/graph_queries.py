@@ -24,7 +24,7 @@ from data_ingestion_din_spark.plans.similarity_queries import (
     _IVF_INC_MOD,
     _SWEEP_N,
 )
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # similarity_graph_greedy_search / similarity_graph_search_grid — the
@@ -360,8 +360,8 @@ def similarity_graph_greedy_search(
         )
         for d, n in beam
     ]
-    return spark.createDataFrame(
-        rows, "probe bigint, step int, node bigint, dist bigint"
+    return local_frame(
+        spark, rows, "probe bigint, step int, node bigint, dist bigint"
     ).orderBy("probe", "step")
 
 
@@ -400,7 +400,8 @@ def similarity_graph_search_grid(
         capped = {n: e[:g] for n, e in adj.items()}
         n_hits = _walk_hits(capped, pdist, nn, entry, b)
         rows.append((g, b, _SWEEP_N, n_hits, n_hits * 1000 // _SWEEP_N))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "degree_g int, beam_b int, n_probes bigint, n_hits bigint,"
         " hit_rate_milli bigint",
@@ -617,7 +618,8 @@ def similarity_graph_nsw_grid(
                 (n_hits - knn_hits) * 1000 // _SWEEP_N,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "degree_g int, beam_b int, n_probes bigint, n_edges bigint,"
         " mean_deg_milli bigint, n_hits bigint, hit_rate_milli bigint,"
@@ -779,7 +781,8 @@ def similarity_graph_routed_insert(
                 (rsum - xsum) * 1000 // max(xsum, 1),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "node bigint, n_agree bigint, routed_dist_sum bigint,"
         " exact_dist_sum bigint, excess_permille bigint",
@@ -870,7 +873,8 @@ def _hnsw_walk(spark: SparkSession, sf_dir: str, arms: dict) -> DataFrame:
              hits[h] * 1000 // _SWEEP_N)
             for h in _GR_HL_HS
         ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "entry_mode string, steps int, n_probes bigint,"
         " entry_dist_sum bigint, edges_expanded bigint, n_hits bigint,"
@@ -1201,7 +1205,8 @@ def similarity_graph_delete_repair(
                 (g, b, arm, n_edges, _SWEEP_N, n_hits,
                  n_hits * 1000 // _SWEEP_N)
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "degree_g int, beam_b int, arm string, n_edges bigint,"
         " n_probes bigint, n_hits bigint, hit_rate_milli bigint",
@@ -1340,7 +1345,8 @@ def retrieval_mmr_diversify(
                 best = (obj, c, dsel)
         rows.append((k, best[1], dq[best[1]], best[2], best[0]))
         sel.append(best[1])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "step int, vec_id bigint, d_query bigint, d_sel bigint,"
         " mmr_obj bigint",
@@ -1559,7 +1565,8 @@ def similarity_graph_vamana_grid(
                         (h - knn_hits[b]) * 1000 // _SWEEP_N,
                     )
                 )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "alpha_tenths int, sym boolean, beam_b int, n_probes bigint,"
         " n_edges bigint, mean_deg_milli bigint, n_hits bigint,"
@@ -1774,8 +1781,8 @@ def similarity_vamana_clustered_ab(
     task_list = [
         (s, i0) for s in (0, 1) for i0 in range(0, n, chunk)
     ]
-    tasks_df = spark.createDataFrame(
-        task_list, "s int, i0 int"
+    tasks_df = local_frame(
+        spark, task_list, "s int, i0 int"
     ).repartition(len(task_list))
 
     def _pool_tasks(batches):
@@ -1887,7 +1894,8 @@ def similarity_vamana_clustered_ab(
                     hits * 1000 // _SWEEP_N,
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "space string, alpha_tenths int, n_probes bigint,"
         " n_occluded bigint, fire_milli bigint, n_edges bigint,"

@@ -24,7 +24,7 @@ from data_ingestion_din_spark.sources.entities import (
     table_blocks,
     text_blocks,
 )
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # validation_issues — the constraint suite over derived doc_meta + entities
@@ -1260,7 +1260,7 @@ def retrieval_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
             rk_col="rank",
         )
 
-    q1 = spark.createDataFrame([(t,) for t in QUERY_TERMS], "tok string")
+    q1 = local_frame(spark, [(t,) for t in QUERY_TERMS], "tok string")
     # lazy: both checkpoints materialize inside the final action
     # (they were serial driver barriers; consumers all live in one plan)
     top1 = bm25(q1).localCheckpoint(eager=False)

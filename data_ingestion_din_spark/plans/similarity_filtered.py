@@ -21,7 +21,7 @@ from data_ingestion_din_spark.plans.similarity_queries import (
     _overlap_rollup,
     _probe_rerank,
 )
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # similarity_filtered_ann — post-filter vs filter-aware recall under
@@ -192,7 +192,8 @@ def similarity_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, (_, rawpred) in enumerate(_FANN_FILTERS)
         ],
     ).collect()[0]
-    sel = spark.createDataFrame(
+    sel = local_frame(
+        spark,
         [
             (name, int(sel_row[f"s{i}"]) * 1000 // int(sel_row.n))
             for i, (name, _) in enumerate(_FANN_FILTERS)
@@ -348,7 +349,8 @@ def similarity_filtered_nprobe(
         for r in _probe_qv_staged(spark, sf_dir, "raw")
     }
     # every nprobe arm's probed cells in one tagged table
-    pcells = spark.createDataFrame(
+    pcells = local_frame(
+        spark,
         [
             (p, cl, np_)
             for np_ in _FNP_GRID

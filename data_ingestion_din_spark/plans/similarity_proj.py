@@ -31,7 +31,7 @@ from data_ingestion_din_spark.plans.similarity_queries import (
     _rank_cut,
 )
 from data_ingestion_din_spark.plans.similarity_sq import _MRL_DIMS
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # similarity_rp_dim_grid — the JL random-projection answer to the MRL
@@ -630,8 +630,8 @@ def _pqs_space(spark: SparkSession, sf_dir: str):
         cand = np.lexsort((sids, row))
         cand = cand[sids[cand] != pid][:10]
         etop_rows += [(int(pid), int(sids[j])) for j in cand]
-    setop = spark.createDataFrame(
-        etop_rows, "probe bigint, vec_id bigint"
+    setop = local_frame(
+        spark, etop_rows, "probe bigint, vec_id bigint"
     ).localCheckpoint(eager=True)
     probes = {
         int(pid): [int(v) for v in smat[ri]]
@@ -678,7 +678,8 @@ def _pq_arm(
         # consumers sit in the final action
         codes = codes.localCheckpoint(eager=False)
     cb_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (m, c + 1, [int(v) for v in cb[m][c]])
                 for m in range(4)
@@ -727,9 +728,7 @@ def _pq_arm(
                     )
                 )
     adc = F.broadcast(
-        spark.createDataFrame(
-            adc_rows, "probe bigint, m int, code int, dpart bigint"
-        )
+        local_frame(spark, adc_rows, "probe bigint, m int, code int, dpart bigint")
     )
     dist = (
         codes.join(adc, ["m", "code"])
@@ -1494,9 +1493,7 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = np.lexsort((sids, -row))
         cand = cand[sids[cand] != pid][:10]
         etop_rows += [(int(pid), int(sids[j])) for j in cand]
-    setop = spark.createDataFrame(
-        etop_rows, "probe bigint, vec_id bigint"
-    )
+    setop = local_frame(spark, etop_rows, "probe bigint, vec_id bigint")
     probes = {
         int(pid): [int(v) for v in smat[ri]]
         for ri, pid in enumerate(sids)
@@ -1508,7 +1505,8 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         cb = _mstep(arm)
         codes = _assign(cb, arm).select("vec_id", "m", "code")
         cb_df = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (m, c + 1, [int(v) for v in cb[m][c]])
                     for m in range(_PQ_SUB)
@@ -1558,9 +1556,7 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
                         )
                     )
         adc = F.broadcast(
-            spark.createDataFrame(
-                adc_rows, "probe bigint, m int, code int, dpart bigint"
-            )
+            local_frame(spark, adc_rows, "probe bigint, m int, code int, dpart bigint")
         )
         ests.append(
             codes.join(adc, ["m", "code"])
@@ -1591,7 +1587,8 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for arm in ("aniso", "mse")
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "arm string, sq_err bigint, aniso_err bigint, n_probes bigint,"
         " recall_milli bigint",

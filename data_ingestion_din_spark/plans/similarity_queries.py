@@ -25,7 +25,7 @@ from data_ingestion_din_spark.functions.vectors import (
 _DIMS_UB = EMBED_DIMS + 1
 from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 
 def _with_query_vec(emb: DataFrame, query_id: int) -> DataFrame:
@@ -1774,7 +1774,8 @@ def _overlap_rollup(
     )
     if not tags:
         return n_truth.crossJoin(n_overlap)
-    grid = approx.sparkSession.createDataFrame(
+    grid = local_frame(
+        approx.sparkSession,
         list(itertools.product(*arms.values())),
         ", ".join(
             f"{t} {'int' if isinstance(v[0], int) else 'string'}"
@@ -1868,9 +1869,7 @@ def _ivfpq_shortlist(
             )
             for _, cl in ranked[:nprobe]:
                 pc_rows.append((int(r.vec_id), cl))
-        pcells = spark.createDataFrame(
-            pc_rows, "probe bigint, pcell int"
-        )
+        pcells = local_frame(spark, pc_rows, "probe bigint, pcell int")
     # ADC tables (probe-side control data, broadcast). In the residual
     # space at nprobe>1 the probe's residual DIFFERS per probed cell —
     # candidates in cell C were encoded as residuals against cent_C, so
@@ -1893,8 +1892,8 @@ def _ivfpq_shortlist(
                         for i in range(_PQ_D)
                     )
                     adc_rows.append((probe, cl, m, c0 + 1, d))
-        adc = spark.createDataFrame(
-            adc_rows, "probe bigint, cluster int, m int, code int, dpart bigint"
+        adc = local_frame(
+            spark, adc_rows, "probe bigint, cluster int, m int, code int, dpart bigint"
         )
         adc_keys = ["probe", "cluster", "m", "code"]
     else:
@@ -1911,8 +1910,8 @@ def _ivfpq_shortlist(
                         for i in range(_PQ_D)
                     )
                     adc_rows.append((int(r.vec_id), m, c0 + 1, d))
-        adc = spark.createDataFrame(
-            adc_rows, "probe bigint, m int, code int, dpart bigint"
+        adc = local_frame(
+            spark, adc_rows, "probe bigint, m int, code int, dpart bigint"
         )
         adc_keys = ["probe", "m", "code"]
     cand = (
@@ -2281,7 +2280,7 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for _, cl in ranked[:_RS_NPROBE]:
             rows.append((int(r.vec_id), cl))
-    pc = spark.createDataFrame(rows, "query_id bigint, cluster int")
+    pc = local_frame(spark, rows, "query_id bigint, cluster int")
     members = assigned.select("vec_id", "cluster").join(
         emb.select("vec_id", q3(F.col("embedding")).alias("q3")), "vec_id"
     )

@@ -34,7 +34,7 @@ from data_ingestion_din_spark.plans.streaming_core import (
     _run_split_landings,
     _time_midpoint,
 )
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 from data_ingestion_din_spark.streaming.ingest import start_ingest_stream
 
 
@@ -223,7 +223,8 @@ def _interval_join_landings(
     late = F.unix_micros("ts") >= mid
     run2 = {"errors": errors.filter(late)}
     if how != "inner":
-        run2["clicks"] = spark.createDataFrame(
+        run2["clicks"] = local_frame(
+            spark,
             [(-1, hi + 30 * 24 * 3_600_000_000, -1)],
             "event_id bigint, us bigint, user_id bigint",
         ).select(
@@ -779,7 +780,7 @@ def _scd2_processor(out: str):
                 touched, "user_id", "left_semi"
             )
         else:
-            open_rows = spark_l.createDataFrame([], cols)
+            open_rows = local_frame(spark_l, [], cols)
 
         pseudo = open_rows.select(
             "user_id",
@@ -1165,7 +1166,8 @@ def _swl_out_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     ).first()
     odds = ev.filter(F.col("event_id") % 2 == 1)
     evens = ev.filter(F.col("event_id") % 2 == 0)
-    sentinel = spark.createDataFrame(
+    sentinel = local_frame(
+        spark,
         [(-1, "sentinel")], "event_id bigint, event_type string"
     ).select(
         "event_id",
@@ -1390,7 +1392,7 @@ def _asof_processor(out: str):
                 )
             )
         else:
-            prior = spark_l.createDataFrame([], state_cols).select(
+            prior = local_frame(spark_l, [], state_cols).select(
                 "user_id", F.col("err_ts_us").alias("ts_us"), "err_id"
             )
         # prior state + batch errors; re-dedup per (user, ts) so the

@@ -29,7 +29,7 @@ from data_ingestion_din_spark.plans.streaming_core import (
     _run_doc_parity_landings,
     _run_split_landings,
 )
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # streaming_curation_funnel — the batch curation funnel
@@ -153,9 +153,7 @@ def _funnel_processor(out: str, fp_state: str, lang_state: str):
             .agg(F.sum("n_tokens").cast("bigint").alias("t"))
             .collect()
         )
-        new_lang = spark_l.createDataFrame(
-            new_cons, "lang_guess string, consumed bigint"
-        )
+        new_lang = local_frame(spark_l, new_cons, "lang_guess string, consumed bigint")
         return {
             "audit": audit,
             "new_fps": deduped.select("fp"),
@@ -622,8 +620,8 @@ def _bpe_gate_processor(out: str, merges_state: str, steps: int = 4):
 
         def train():
             merges, _ = _bpe_merge_loop(words, steps)
-            return spark_l.createDataFrame(
-                [m[:3] for m in merges], "step int, lft string, rgt string"
+            return local_frame(
+                spark_l, [m[:3] for m in merges], "step int, lft string, rgt string"
             )
 
         merges, new_merges = _frozen_model(
@@ -907,7 +905,8 @@ def _semdedup_gate_processor(
                 batch_df.select("vec_id", q3(F.col("embedding")).alias("q3")),
                 "vec_id",
             )
-            new_cents = spark_l.createDataFrame(
+            new_cents = local_frame(
+                spark_l,
                 [(c + 1, cents[c]) for c in range(len(cents))],
                 "cluster int, qv array<bigint>",
             )

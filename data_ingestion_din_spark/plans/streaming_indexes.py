@@ -25,7 +25,7 @@ from data_ingestion_din_spark.plans.streaming_core import (
     _run_split_landings,
     _write_epoch,
 )
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # streaming_minhash_index — NEAR-dup dedup at ingest, the MinHash
@@ -372,7 +372,8 @@ def _ivf_index_processor(out: str, cent_state: str, k: int = _SII_K):
                 "new_cents": None,  # frozen — written once by training
             }
         assigned, cents = kmeans_train(batch_df, k=k, iters=2)
-        cent_rows = spark_l.createDataFrame(
+        cent_rows = local_frame(
+            spark_l,
             [(c + 1, cents[c]) for c in range(len(cents))],
             "cluster int, qv array<bigint>",
         )
@@ -514,8 +515,8 @@ def _substring_index_processor(out: str, wfp_state: str, w: int = _SSI_W):
                 .alias("dup_tokens"),
             )
         else:
-            per_doc = spark_l.createDataFrame(
-                [], "doc_id bigint, n_spans bigint, dup_tokens bigint"
+            per_doc = local_frame(
+                spark_l, [], "doc_id bigint, n_spans bigint, dup_tokens bigint"
             )
         verdicts = (
             batch_df.select("doc_id")
@@ -682,11 +683,13 @@ def _ivfpq_index_processor(
         postings = codes.join(assigned, "vec_id").select(
             "vec_id", "cluster", "m", "code", F.lit(False).alias("incremental")
         )
-        cent_rows = spark_l.createDataFrame(
+        cent_rows = local_frame(
+            spark_l,
             [(c + 1, cents[c]) for c in range(len(cents))],
             "cluster int, qv array<bigint>",
         )
-        cb_rows = spark_l.createDataFrame(
+        cb_rows = local_frame(
+            spark_l,
             [
                 (m, c + 1, cb[m][c])
                 for m in range(len(cb))
@@ -1160,7 +1163,8 @@ def _ivf_rebalance_processor(
         _write_epoch(dfs["assignments"], out, epoch_id)
         if dfs["cent_rows"]:
             _write_epoch(
-                spark_l.createDataFrame(
+                local_frame(
+                    spark_l,
                     dfs["cent_rows"],
                     "cluster int, qv array<bigint>, retired boolean",
                 ),
@@ -1168,8 +1172,8 @@ def _ivf_rebalance_processor(
                 epoch_id,
             )
         _write_epoch(
-            spark_l.createDataFrame(
-                sorted(dfs["masses"].items()), "cluster int, mass bigint"
+            local_frame(
+                spark_l, sorted(dfs["masses"].items()), "cluster int, mass bigint"
             ),
             mass_state,
             epoch_id,

@@ -39,7 +39,7 @@ from data_ingestion_din_spark.plans.streaming_core import (
     _time_midpoint,
     _unless_empty,
 )
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # streaming_hll_registers — SKETCH MAINTENANCE as a streaming operator:
@@ -906,7 +906,8 @@ def _smg_processor(out: str):
         # the None sentinel keeps an EMPTY snapshot addressable: an
         # all-churned state must still advance the latest-prior-epoch
         # pointer, or the next epoch resumes from a stale snapshot
-        return spark_l.createDataFrame(
+        return local_frame(
+            spark_l,
             [(w, c, epoch_id) for w, c in mg.items()]
             or [(None, None, epoch_id)],
             "word string, c bigint, epoch_src bigint",
@@ -1153,7 +1154,8 @@ def streaming_theta_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         _STH_K,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "op string, n_exact bigint, k int, theta_ppm bigint,"
         " est_users bigint, err_milli bigint",

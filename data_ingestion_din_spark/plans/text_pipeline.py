@@ -27,7 +27,7 @@ from data_ingestion_din_spark.functions.hashing import h64_sql
 from data_ingestion_din_spark.functions.text import clean_text, clean_text_sql
 from data_ingestion_din_spark.operators.colocate import staged
 from data_ingestion_din_spark.plans.registry import query
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 _TOKS_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 _STOP_LIST_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
@@ -1804,8 +1804,8 @@ def _bpe_train_run(
 @query("corpus_bpe_train", oracle=_bpe_train_oracle())
 def corpus_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, _ = _bpe_train_run(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "step int, lft string, rgt string, n bigint"
+    return local_frame(
+        spark, merges, "step int, lft string, rgt string, n bigint"
     ).orderBy("step")
 
 

@@ -18,7 +18,7 @@ from data_ingestion_din_spark.plans.text_pipeline import (
     _bpe_train_ctes,
     _bpe_train_run,
 )
-from data_ingestion_din_spark.sources.tables import load_table
+from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
 # --------------------------------------------------------------------------
 # corpus_unigram_tokenize — the UNIGRAM-LM tokenizer (SentencePiece /
@@ -585,7 +585,8 @@ def corpus_unigram_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # 1-row × 1-row audit assembly
     return (
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(len(vocab), len(usage), len(vocab2))],
             "n_vocab_r0 bigint, n_pieces_used bigint, n_vocab_r1 bigint",
         )
@@ -734,7 +735,8 @@ def corpus_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         (p, u, own, alt, delta, i + 1, (i + 1) <= nm // 4)
         for i, (p, u, own, alt, delta) in enumerate(rows)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "piece string, usage bigint, own_obj bigint, alt_obj bigint,"
         " loss_delta bigint, rk int, pruned boolean",

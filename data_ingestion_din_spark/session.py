@@ -74,3 +74,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def started_jobs(spark: SparkSession) -> int:
+    """How many Spark jobs the session's scheduler has started so far.
+
+    The difference of two reads counts the jobs run in between by job
+    id, whatever job group they carry: also the jobs a streaming
+    ``foreachBatch`` processor runs under its own group, which a
+    job-group count misses. The scheduler hands out job ids when a job
+    is submitted, so the count does not lag behind the listener bus."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()

@@ -1,9 +1,14 @@
 """Isolation profiler for one or more registered queries.
 
 For each named query: build + execute (noop sink) N times in a fresh
-session, print per-run wall seconds, and on request a cProfile of the
-steady run split into driver-Python time vs py4j/JVM wait — the split
-that tells you whether to attack driver loops or the Spark plan.
+session, print per-run wall seconds and per-run Spark jobs, and on
+request a cProfile of the steady run split into driver-Python time vs
+py4j/JVM wait — the split that tells you whether to attack driver loops
+or the Spark plan.
+
+Jobs are counted by job id between a run's start and end
+(``session.started_jobs``), so they include the jobs a streaming
+``foreachBatch`` processor runs under its own job group.
 
 Usage:
   python scripts/profile_query.py NAME [NAME ...] [--runs N] [--cprofile]
@@ -32,22 +37,23 @@ def main() -> None:
     do_explain = "--explain" in sys.argv
 
     from data_ingestion_din_spark.plans import QUERIES
-    from data_ingestion_din_spark.session import get_spark
+    from data_ingestion_din_spark.session import get_spark, started_jobs
 
     spark = get_spark("profile")
 
-    def run(name: str) -> float:
+    def run(name: str) -> tuple[float, int]:
+        j0 = started_jobs(spark)
         t0 = time.time()
         df = QUERIES[name](spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+        return round(time.time() - t0, 3), started_jobs(spark) - j0
 
     # warmup
     run("q1_pricing_summary")
 
     for name in args:
-        times = [round(run(name), 3) for _ in range(runs)]
-        print(f"{name}: {times}  min={min(times)}")
+        times, jobs = zip(*(run(name) for _ in range(runs)))
+        print(f"{name}: {list(times)}  min={min(times)}  jobs={list(jobs)}")
         if do_explain:
             QUERIES[name](spark, SF_DIR).explain("formatted")
         if do_prof:

@@ -27,7 +27,9 @@ epoch-keyed state (the prior-epoch filter, the ``basePath`` read, the
 state-dir existence guard and the empty-state probe) in
 plans/streaming_core.py. An eighth keeps the banded-LSH steps (the band
 equi-join, the MinHash band-key recipe and the incremental probe's
-best-match window) in operators/dedup.py.
+best-match window) in operators/dedup.py. A ninth sends every
+driver-built frame through sources/tables.py's ``local_frame``, so none
+plans a Python-RDD scan.
 """
 
 from __future__ import annotations
@@ -474,3 +476,31 @@ def test_band_join_lives_in_dedup_kernel():
         if sites:
             hits[rel] = sites
     assert not hits, f"banded-LSH steps outside operators/dedup.py: {hits}"
+
+
+def test_driver_frames_go_through_local_frame():
+    """No ``createDataFrame`` call in the engine outside
+    sources/tables.py's ``local_frame``: a list- or row-based
+    ``createDataFrame`` plans a scan over a Python RDD whose tasks fork
+    Python workers, where ``local_frame`` plans a ``LocalTableScan``."""
+    hits: dict[str, list[int]] = {}
+    for path in _module_files():
+        rel = os.path.relpath(path, PKG)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        allowed: set[int] = set()
+        if rel == os.path.join("sources", "tables.py"):
+            for top in tree.body:
+                if isinstance(top, ast.FunctionDef) and top.name == "local_frame":
+                    allowed = {id(n) for n in ast.walk(top)}
+        lines = [
+            node.lineno
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+            and id(node) not in allowed
+        ]
+        if lines:
+            hits[rel] = lines
+    assert not hits, f"createDataFrame outside local_frame: {hits}"

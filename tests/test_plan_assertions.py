@@ -36,6 +36,8 @@ def _plan_stats(df) -> dict[str, int]:
         "cartesian": n("CartesianProduct") + n("BroadcastNestedLoopJoin"),
         "map_in_pandas": n("MapInPandas"),
         "smj": n("SortMergeJoin"),
+        "existing_rdd": n("ExistingRDD"),
+        "range_partitioning": n("rangepartitioning"),
     }
 
 
@@ -299,6 +301,18 @@ def test_events_hll_distinct_plan(spark):
     # side joins back — constant sketch state per group, no cartesian
     assert s["cartesian"] == 0, s
     assert s["exchange"] <= 6, s
+
+
+def test_dq_completeness_hll_ab_plan(spark):
+    s = _stats("dq_completeness_hll_ab", spark)
+    # one dedup exchange on (cid, h), the register rollup (which also
+    # counts the exact distinct hashes), the per-(cid, m) sum, and the
+    # broadcast of the local names relation; the <= 100 result rows sort
+    # in one partition, so no range exchange and no sampling job
+    assert s["existing_rdd"] == 0, s
+    assert s["range_partitioning"] == 0, s
+    assert s["exchange"] <= 4, s
+    assert s["bhj"] == 1, s
 
 
 def test_corpus_bpe_merge_step_plan(spark):
