@@ -519,7 +519,7 @@ def embedding_near_dup_lsh(
     from data_ingestion_din_spark.functions.vectors import quant_dot, quantize
     from data_ingestion_din_spark.operators.similarity import (
         _plane_coefs,
-        int_matrix_lit,
+        int_array_lit,
     )
 
     # All n_tables × n_planes hyperplanes as ONE 2D literal matrix and ONE
@@ -540,7 +540,7 @@ def embedding_near_dup_lsh(
         "vec_id",
         "qv",
         F.transform(
-            int_matrix_lit(coefs),
+            int_array_lit(coefs),
             lambda row: F.aggregate(
                 # coalesce: sub-64-dim vectors pad with NULL in zip_with;
                 # trailing coefficients contribute 0 (dims upper bound)

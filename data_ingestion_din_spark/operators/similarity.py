@@ -15,6 +15,25 @@ O3) with DataFrame-native search:
 - ``lsh_bucket`` — random-hyperplane signatures for LSH bucketing; planes
   are derived deterministically from md5 so both engines (and reruns)
   agree. Bucket-join candidates → exact re-rank.
+
+It also owns the integer-exact quantizer kernel every IVF, PQ, k-means
+and range-search query calls (oracle SQL restates each step on purpose):
+
+- ``int_array_lit`` — BIGINT literal of any depth (vector, centroid
+  matrix, PQ codebook);
+- ``subvectors`` / ``pq_book`` — the PQ subspace split and the row's
+  subspace codebook;
+- ``nearest_code`` — argmin over a literal book (squared L2 or a caller
+  loss), ties to the lowest code, optionally with its distance;
+- ``tdiv`` / ``lloyd_update`` / ``lloyd`` — the driver M-step (truncated
+  integer means, an empty code keeps its prior) and the one Lloyd loop
+  behind ``kmeans_train_qv``, ``pq_assign_qv`` and the k-means
+  convergence audit;
+- ``with_codewords`` — encoded subvectors beside their codewords, for
+  reconstruction-error rollups;
+- ``probe_qv`` / ``nearest_cells`` / ``adc_table`` / ``adc_rows`` /
+  ``adc_lookup`` — the serving side: the probe's quantized vector, its
+  nearest cells and its ADC table as broadcast rows or a literal lookup.
 """
 
 from __future__ import annotations
@@ -28,7 +47,9 @@ from data_ingestion_din_spark.functions.vectors import (
     EMBED_DIMS,
     cosine,
     cosine_exact,
+    quantize,
 )
+from data_ingestion_din_spark.sources.tables import local_frame
 
 
 def _h64_py(s: str) -> int:
@@ -46,19 +67,20 @@ def _plane_coefs(seed: str, b: int, dims: int) -> list[int]:
     return [(_h64_py(f"{seed}:{b}:{i}") % 2001) - 1000 for i in range(dims)]
 
 
-def int_array_lit(vals: list[int]) -> Column:
-    """BIGINT array literal built as ONE parsed SQL expression —
-    ``F.lit(list)`` issues a py4j call per element (a 1,536-element
-    nested literal cost 3.5 s of driver time to build)."""
-    return F.expr("array(" + ",".join(f"{v}L" for v in vals) + ")")
+def _int_array_sql(vals) -> str:
+    """SQL text of a BIGINT array literal of any nesting depth: each
+    list becomes ``array(...)``, each leaf ``{v}L``."""
+    if isinstance(vals, (list, tuple)):
+        return "array(" + ",".join(_int_array_sql(v) for v in vals) + ")"
+    return f"{vals}L"
 
 
-def int_matrix_lit(rows: list[list[int]]) -> Column:
-    """2-D BIGINT array literal, same single-expression construction."""
-    inner = ",".join(
-        "array(" + ",".join(f"{v}L" for v in r) + ")" for r in rows
-    )
-    return F.expr(f"array({inner})")
+def int_array_lit(vals: list) -> Column:
+    """BIGINT array literal (1-D vector, 2-D centroid matrix, 3-D PQ
+    codebook, ...) built as ONE parsed SQL expression — ``F.lit(list)``
+    issues a py4j call per element (a 1,536-element nested literal cost
+    3.5 s of driver time to build)."""
+    return F.expr(_int_array_sql(vals))
 
 
 def double_array_lit(vals: list[float]) -> Column:
@@ -200,28 +222,131 @@ def lsh_topk(emb: DataFrame, qvec: Column, k: int = 10, n_planes: int = 8) -> Da
     )
 
 
-def assign_to_centroids(qv_df: DataFrame, cents: list[list[int]]) -> DataFrame:
-    """Assign quantized vectors (vec_id, qv) to the nearest centroid of a
-    FROZEN k×dims integer centroid matrix (argmin of integer squared
-    distance, lowest cluster wins ties). The matrix ships as a literal —
-    bounded at k·dims regardless of corpus size — so assignment is a
-    narrow per-row expression: no shuffle, no join. This is both the
-    k-means E-step and the IVF routing step for appended vectors."""
-    m = int_matrix_lit(cents)
-    dist = F.transform(
-        m,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("qv"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        ),
+
+
+# --------------------------------------------------------------------------
+# The integer-exact quantizer kernel: k-means (IVF) cells, product
+# quantization codes and ADC tables. Vectors are quantized BIGINT arrays,
+# distances integer squared L2, centroids truncated integer means and
+# argmins take the lowest code on ties, so every step is deterministic in
+# both engines and the oracle SQL can unroll the same training. Codebooks
+# are bounded control data: collected to the driver per M-step and
+# shipped back as literals.
+# --------------------------------------------------------------------------
+def sq_l2(v: Column, c: Column) -> Column:
+    """Integer squared L2 distance of two BIGINT array columns."""
+    return F.aggregate(
+        F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
     )
-    return qv_df.select("vec_id", "qv", dist.alias("_d")).select(
-        "vec_id",
-        "qv",
+
+
+def sq_l2_py(a, b) -> int:
+    """Driver twin of :func:`sq_l2` over two int sequences."""
+    return sum((int(x) - int(y)) ** 2 for x, y in zip(a, b))
+
+
+def tdiv(s: int, n: int) -> int:
+    """Truncating integer division (DuckDB ``//``): rounds toward zero,
+    so a negative residual sum matches the oracle's centroid."""
+    return s // n if (s >= 0) == (n >= 0) or s % n == 0 else s // n + 1
+
+
+def subvectors(df: DataFrame, n_sub: int, d_sub: int, *keep: str) -> DataFrame:
+    """Split each row's ``qv`` into ``n_sub`` consecutive ``d_sub``-wide
+    subvectors: one row per (row, subspace) with ``keep`` + (m, sv),
+    ``m`` 0-based."""
+    split = F.expr(
+        f"transform(sequence(0, {n_sub - 1}), "
+        f"m -> struct(m AS m, slice(qv, m * {d_sub} + 1, {d_sub}) AS sv))"
+    )
+    return df.select(*keep, F.explode(split).alias("x")).select(
+        *keep, F.col("x.m").alias("m"), F.col("x.sv").alias("sv")
+    )
+
+
+def pq_book(cb: list) -> Column:
+    """The row's own subspace codebook ``cb[m]`` out of the 3-D PQ
+    codebook literal (rows carry ``m``)."""
+    return F.element_at(int_array_lit(cb), F.col("m") + 1)
+
+
+def nearest_code(
+    df: DataFrame,
+    vec: str,
+    book: Column,
+    *keep: str,
+    loss=sq_l2,
+    code: str = "code",
+    dist: str | None = None,
+) -> DataFrame:
+    """Each row's nearest ``book`` entry: ``code`` (int, 1-based) is the
+    argmin of ``loss(vec, entry)``, ties to the lowest code
+    (``array_position`` finds the first minimum); ``dist`` (BIGINT), when
+    named, is that minimum. The per-code losses are staged as one column
+    so the loop over the book runs once per row. Returns ``keep`` + code
+    (+ dist)."""
+    losses = F.transform(book, lambda c: loss(F.col(vec), c))
+    out = [
         F.array_position(F.col("_d"), F.array_min(F.col("_d")))
         .cast("int")
-        .alias("cluster"),
+        .alias(code)
+    ]
+    if dist:
+        out.append(F.array_min(F.col("_d")).cast("bigint").alias(dist))
+    return df.select(*keep, losses.alias("_d")).select(*keep, *out)
+
+
+def lloyd_update(sum_rows, book: list, key: str) -> list:
+    """One driver M-step: ``sum_rows`` are collected (``key``, dim, s, n)
+    per-code partial sums over ``book`` (``key`` is the 1-based code).
+    A code with members becomes its truncated per-dim mean; an empty
+    code keeps its prior entry."""
+    new: dict[int, list[int]] = {}
+    for r in sum_rows:
+        c = r[key]
+        new.setdefault(c, [0] * len(book[c - 1]))[r["dim"]] = tdiv(
+            int(r["s"]), int(r["n"])
+        )
+    return [new.get(c, book[c - 1]) for c in range(1, len(book) + 1)]
+
+
+def lloyd(assign, book: list, vec: str, key: str, m_steps: int, group=None):
+    """The integer-exact Lloyd loop: assign against ``book``, then
+    ``m_steps`` times run one (``group``, ``key``, dim) partial-sum
+    collect over ``vec``, update the book (:func:`lloyd_update`, per
+    ``group`` value when books are per subspace) and reassign. Returns
+    (the last assignment, the book it used)."""
+    keys = [group, key] if group else [key]
+    assigned = assign(book)
+    for _ in range(m_steps):
+        sums = (
+            assigned.select(*keys, F.posexplode(vec).alias("dim", "v"))
+            .groupBy(*keys, "dim")
+            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        if group is None:
+            book = lloyd_update(sums, book, key)
+        else:
+            book = [
+                lloyd_update([r for r in sums if r[group] == g], b, key)
+                for g, b in enumerate(book)
+            ]
+        assigned = assign(book)
+    return assigned, book
+
+
+def assign_to_centroids(qv_df: DataFrame, cents: list[list[int]]) -> DataFrame:
+    """Assign quantized vectors (vec_id, qv) to the nearest centroid of a
+    FROZEN k×dims integer centroid matrix (``cluster``, 1-based). The
+    matrix ships as a literal — bounded at k·dims regardless of corpus
+    size — so assignment is a narrow per-row expression: no shuffle, no
+    join. This is both the k-means E-step and the IVF routing step for
+    appended vectors."""
+    return nearest_code(
+        qv_df, "qv", int_array_lit(cents), "vec_id", "qv", code="cluster"
     )
 
 
@@ -229,28 +354,20 @@ def kmeans_train(
     emb: DataFrame, k: int = 8, iters: int = 2
 ) -> tuple[DataFrame, list[list[int]]]:
     """Lloyd's k-means over quantized-integer vectors, exact enough to
-    hash-check: assignments use integer squared distances (no float
-    order sensitivity), centroids are TRUNCATED integer per-dimension
-    means (DuckDB ``//`` semantics, mirrored driver-side), seeds are the
-    ``k`` lowest-vec_id vectors — every step deterministic in both
-    engines, so the oracle unrolls the same ``iters`` iterations in SQL
-    and the final assignment is bit-compared (the IVF training loop
-    under the same gate as everything else).
+    hash-check: seeds are the ``k`` lowest-vec_id vectors and every step
+    is the kernel's, so the oracle unrolls the same ``iters`` iterations
+    in SQL and the final assignment is bit-compared.
 
-    Physical shape per iteration: the k×dims centroid matrix is tiny, so
-    it is collected and re-broadcast as a LITERAL (the standard
-    k-means-on-Spark shape — MLlib does the same); assignment is then a
+    Physical shape per iteration: the k×dims centroid matrix is
+    collected and re-broadcast as a LITERAL (the standard
+    k-means-on-Spark shape — MLlib does the same); assignment is a
     narrow argmin expression over the staged quantized vectors, and the
     M-step is one (cluster, dim) shuffle of integer partial sums.
-    Driver traffic per iteration = k·dims ints — iteration control, not
-    data movement.
 
     Returns ``(assignment, centroids)`` where ``centroids`` is the matrix
     the returned assignment was computed against (after ``iters - 1``
-    M-steps) — i.e. the frozen coarse quantizer an IVF index would serve
-    and route appends with."""
-    from data_ingestion_din_spark.functions.vectors import quantize
-
+    M-steps) — the frozen coarse quantizer an IVF index would serve and
+    route appends with."""
     return kmeans_train_qv(
         emb.select("vec_id", quantize(F.col("embedding")).alias("qv")),
         k=k,
@@ -266,10 +383,9 @@ def kmeans_train_qv(
     seed_cents: list[list[int]] | None = None,
 ) -> tuple[DataFrame, list[list[int]]]:
     """:func:`kmeans_train` over an ALREADY-QUANTIZED ``(vec_id, qv)``
-    relation — the loop factored out so retrain paths that hold their
-    vectors as integer state (the streaming IVF cell split reads an
-    oversized cell's members back from the assignment state) reuse the
-    exact gated training instead of round-tripping through floats.
+    relation — for retrain paths that hold their vectors as integer
+    state (the streaming IVF cell split). ``iters`` assignments, the
+    last M-step skipped (its centroids would be discarded).
 
     ``base_staged=True`` promises ``qv_df`` is already materialized
     (checkpointed) narrow ``(vec_id, qv)`` data, and ``seed_cents``
@@ -288,47 +404,16 @@ def kmeans_train_qv(
     )
     if len(cents) < k:
         raise ValueError(
-            f"kmeans_assign: need at least k={k} vectors, got {len(cents)}"
+            f"kmeans_train: need at least k={k} vectors, got {len(cents)}"
         )
-    # dims from the already-collected seeds — no extra driver action
-    dims = len(cents[0])
-
-    def tdiv(s: int, n: int) -> int:  # truncating div (DuckDB `//`)
-        return s // n if (s >= 0) == (n >= 0) or s % n == 0 else s // n + 1
-
-    assigned, used = None, cents
-    for it in range(iters):
-        used = cents
-        # argmin, lowest cluster wins ties (array_position = first match)
-        assigned = assign_to_centroids(base, cents)
-        if it == iters - 1:
-            # the final M-step's centroids would be discarded (the
-            # returned quantizer is the matrix this assignment used) —
-            # skipping it drops a full posexplode shuffle + collect
-            break
-        sums = (
-            assigned.select(
-                "cluster", F.posexplode("qv").alias("dim", "v")
-            )
-            .groupBy("cluster", "dim")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        new = {c: [0] * dims for c in range(1, k + 1)}
-        seen = set()
-        for r in sums:
-            new[r.cluster][r.dim] = tdiv(int(r.s), int(r.n))
-            seen.add(r.cluster)
-        # empty cluster: keep its previous centroid (deterministic)
-        cents = [
-            new[c] if c in seen else cents[c - 1] for c in range(1, k + 1)
-        ]
+    assigned, used = lloyd(
+        lambda cc: assign_to_centroids(base, cc),
+        cents,
+        "qv",
+        "cluster",
+        iters - 1,
+    )
     return assigned.select("vec_id", "cluster"), used
-
-
-def kmeans_assign(emb: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
-    """Final k-means assignment only — see :func:`kmeans_train`."""
-    return kmeans_train(emb, k, iters)[0]
 
 
 def pq_assign(
@@ -336,24 +421,18 @@ def pq_assign(
 ) -> tuple[DataFrame, list[list[list[int]]]]:
     """Product quantization (Jégou et al. 2011) code assignment: split
     each quantized vector into ``n_sub`` equal subvectors, train a
-    ``k``-code codebook per subspace with the same integer-exact Lloyd
-    machinery as :func:`kmeans_assign` (seeds = the ``k`` lowest-vec_id
-    rows' subvectors, truncated-integer centroid means, argmin with
-    lowest-code tie-break), and return
+    ``k``-code codebook per subspace with the kernel's Lloyd loop (seeds
+    = the ``k`` lowest-vec_id rows' subvectors), and return
 
     - a DataFrame ``(vec_id, m, code)`` — one row per (vector, subspace),
-    - the trained codebooks ``cb[m][code] = centroid ints`` for building
-      ADC (asymmetric distance computation) lookup tables driver-side.
+    - the trained codebooks ``cb[m][code - 1] = centroid ints`` for
+      building ADC (asymmetric distance computation) tables driver-side.
 
-    Every step is deterministic in integer arithmetic, so the oracle SQL
-    can unroll the identical training and the CODES themselves sit under
-    the hash gate. Physical shape per iteration: codebooks are
-    n_sub·k·(dims/n_sub) ints — collected and re-broadcast as literals
-    (iteration control, not data); assignment is a narrow argmin
-    expression; the M-step is one (m, code, dim) integer-partial shuffle.
-    """
-    from data_ingestion_din_spark.functions.vectors import quantize
-
+    The CODES sit under the hash gate: the oracle SQL unrolls the
+    identical training. Physical shape per iteration: codebooks are
+    n_sub·k·(dims/n_sub) ints shipped as literals; assignment is a narrow
+    argmin expression; the M-step is one (m, code, dim) integer-partial
+    shuffle."""
     return pq_assign_qv(
         emb.select("vec_id", quantize(F.col("embedding")).alias("qv")),
         n_sub=n_sub,
@@ -368,7 +447,8 @@ def pq_assign_qv(
     """:func:`pq_assign` over ALREADY-QUANTIZED integer vectors
     ``(vec_id, qv)`` — the entry point residual encoding needs (the
     residual ``qv − centroid(cell)`` is integer by construction, so
-    re-quantizing would be wrong)."""
+    re-quantizing would be wrong). ``iters`` M-steps, each followed by a
+    reassignment against the updated codebooks."""
     base = qv_df.select("vec_id", "qv").localCheckpoint(eager=True)
     seed_rows = base.orderBy("vec_id").limit(k).collect()
     if len(seed_rows) < k:
@@ -381,135 +461,100 @@ def pq_assign_qv(
             f"pq_assign: dims={dims} not divisible by n_sub={n_sub}"
         )
     d_sub = dims // n_sub
-    # cb[m][code] = subvector slice of the code-th lowest-vec_id row
     cb = [
         [list(r.qv)[m * d_sub : (m + 1) * d_sub] for r in seed_rows]
         for m in range(n_sub)
     ]
-    sub = base.select(
-        "vec_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {n_sub - 1}), "
-                f"m -> struct(m AS m, slice(qv, m * {d_sub} + 1, {d_sub})"
-                " AS sv))"
-            )
-        ).alias("x"),
-    ).select("vec_id", F.col("x.m").alias("m"), F.col("x.sv").alias("sv"))
-
-    def _cb_lit(cbm: list[list[list[int]]]) -> Column:
-        return F.expr(
-            "array("
-            + ",".join(
-                "array("
-                + ",".join(
-                    "array(" + ",".join(f"{v}L" for v in c) + ")"
-                    for c in codes
-                )
-                + ")"
-                for codes in cbm
-            )
-            + ")"
-        )
-
-    def _assign(cbm: list[list[list[int]]]) -> DataFrame:
-        dists = F.transform(
-            F.element_at(_cb_lit(cbm), F.col("m") + 1),
-            lambda c: F.aggregate(
-                F.zip_with(F.col("sv"), c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v,
-            ),
-        )
-        staged = sub.select("vec_id", "m", "sv", dists.alias("_d"))
-        return staged.select(
-            "vec_id",
-            "m",
-            "sv",
-            F.array_position(F.col("_d"), F.array_min(F.col("_d")))
-            .cast("int")
-            .alias("code"),
-        )
-
-    def tdiv(s: int, n: int) -> int:  # truncating div (DuckDB `//`)
-        return s // n if (s >= 0) == (n >= 0) or s % n == 0 else s // n + 1
-
-    assigned = None
-    for _ in range(iters):
-        assigned = _assign(cb)
-        sums = (
-            assigned.select("m", "code", F.posexplode("sv").alias("dim", "v"))
-            .groupBy("m", "code", "dim")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        new = {
-            (m, c): [0] * d_sub
-            for m in range(n_sub)
-            for c in range(1, k + 1)
-        }
-        seen = set()
-        for r in sums:
-            new[(r.m, r.code)][r.dim] = tdiv(int(r.s), int(r.n))
-            seen.add((r.m, r.code))
-        # empty code: keep its previous centroid (deterministic)
-        cb = [
-            [
-                new[(m, c)] if (m, c) in seen else cb[m][c - 1]
-                for c in range(1, k + 1)
-            ]
-            for m in range(n_sub)
-        ]
-        assigned = _assign(cb)
+    sub = subvectors(base, n_sub, d_sub, "vec_id")
+    assigned, cb = lloyd(
+        lambda b: nearest_code(sub, "sv", pq_book(b), "vec_id", "m", "sv"),
+        cb,
+        "sv",
+        "code",
+        iters,
+        group="m",
+    )
     return assigned.select("vec_id", "m", "code"), cb
 
 
 def pq_encode_qv(
     qv_df: DataFrame, cb: list[list[list[int]]]
 ) -> DataFrame:
-    """Encode quantized vectors against a FROZEN PQ codebook: split each
-    ``(vec_id, qv)`` row into subvectors and argmin each against
-    ``cb[m]`` (integer squared distance, lowest code wins ties) — the
+    """Encode quantized vectors against a FROZEN PQ codebook — the
     index-maintenance twin of :func:`assign_to_centroids` for the PQ
-    half of an IVFPQ index. The codebook ships as a literal (bounded at
-    n_sub·k·d_sub ints), so encoding is a narrow per-row expression:
-    no shuffle, no join, no retraining. Returns (vec_id, m, code)."""
-    n_sub = len(cb)
-    d_sub = len(cb[0][0])
-    sub = qv_df.select(
-        "vec_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {n_sub - 1}), "
-                f"m -> struct(m AS m, slice(qv, m * {d_sub} + 1, {d_sub})"
-                " AS sv))"
-            )
-        ).alias("x"),
-    ).select("vec_id", F.col("x.m").alias("m"), F.col("x.sv").alias("sv"))
-    cb_lit = F.expr(
-        "array("
-        + ",".join(
-            "array("
-            + ",".join(
-                "array(" + ",".join(f"{v}L" for v in c) + ")" for c in codes
-            )
-            + ")"
-            for codes in cb
+    half of an IVFPQ index: a narrow per-row expression, no shuffle, no
+    join, no retraining. Returns (vec_id, m, code)."""
+    sub = subvectors(qv_df, len(cb), len(cb[0][0]), "vec_id")
+    return nearest_code(sub, "sv", pq_book(cb), "vec_id", "m")
+
+
+def with_codewords(
+    spark, codes: DataFrame, sub: DataFrame, cb: list
+) -> DataFrame:
+    """Each encoded subvector beside its codeword: ``codes`` (vec_id, m,
+    code) joined to ``sub`` (vec_id, m, sv, ...) and to the codebook as
+    a broadcast (m, code, cv) frame — the input of a reconstruction-
+    error rollup."""
+    book = F.broadcast(
+        local_frame(
+            spark,
+            [
+                (m, c, [int(v) for v in cv])
+                for m, cents in enumerate(cb)
+                for c, cv in enumerate(cents, start=1)
+            ],
+            "m int, code int, cv array<bigint>",
         )
-        + ")"
     )
-    dists = F.transform(
-        F.element_at(cb_lit, F.col("m") + 1),
-        lambda c: F.aggregate(
-            F.zip_with(F.col("sv"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        ),
+    return codes.join(sub, ["vec_id", "m"]).join(book, ["m", "code"])
+
+
+def probe_qv(emb: DataFrame) -> list:
+    """The serving probe's (vec_id 0) quantized vector: a 1-row driver
+    collect, the per-query work ANN serving does."""
+    return list(
+        emb.filter(F.col("vec_id") == 0)
+        .select(quantize(F.col("embedding")).alias("qv"))
+        .collect()[0]
+        .qv
     )
-    return sub.select("vec_id", "m", dists.alias("_d")).select(
-        "vec_id",
-        "m",
-        F.array_position(F.col("_d"), F.array_min(F.col("_d")))
-        .cast("int")
-        .alias("code"),
+
+
+def nearest_cells(vec, cents: list[list[int]], n: int) -> list[int]:
+    """The ``n`` cells (1-based) nearest ``vec`` by integer squared L2
+    to the centroid rows, ties to the lower cell — the driver-side
+    multiprobe routing of a bounded probe batch."""
+    ranked = sorted(
+        (sq_l2_py(vec, c), cl) for cl, c in enumerate(cents, start=1)
+    )
+    return [cl for _, cl in ranked[:n]]
+
+
+def adc_table(vec, book: list, score=sq_l2_py) -> list[list[int]]:
+    """The driver ADC table of one probe vector against a PQ codebook:
+    ``table[m][code - 1] = score(vec's m-th subvector, book[m][code - 1])``
+    (integer squared L2 by default)."""
+    d_sub = len(book[0][0])
+    return [
+        [score(vec[m * d_sub : (m + 1) * d_sub], c) for c in cents]
+        for m, cents in enumerate(book)
+    ]
+
+
+def adc_rows(key: tuple, vec, book: list, score=sq_l2_py) -> list[tuple]:
+    """:func:`adc_table` as ``(*key, m, code, dpart)`` rows of a
+    broadcast ADC frame."""
+    return [
+        (*key, m, c, d)
+        for m, ds in enumerate(adc_table(vec, book, score))
+        for c, d in enumerate(ds, start=1)
+    ]
+
+
+def adc_lookup(vec, book: list) -> Column:
+    """A probe's squared-L2 ADC table as a literal, looked up per
+    encoded (m, code) row."""
+    return F.element_at(
+        F.element_at(int_array_lit(adc_table(vec, book)), F.col("m") + 1),
+        F.col("code"),
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.operators.colocate import staged
+from data_ingestion_din_spark.operators.similarity import sq_l2_py
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.plans.similarity_queries import (
     _DIMS_UB,
@@ -1968,7 +1969,7 @@ def _gr_l2_collected(spark: SparkSession, sf_dir: str) -> dict[int, list]:
     adj = {}
     for a, va in q.items():
         ds = sorted(
-            (sum((x - y) * (x - y) for x, y in zip(va, vb)), b)
+            (sq_l2_py(va, vb), b)
             for b, vb in q.items()
             if b != a
         )

@@ -321,6 +321,7 @@ def _fnp_oracle() -> str:
 def similarity_filtered_nprobe(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    from data_ingestion_din_spark.operators.similarity import nearest_cells
     from data_ingestion_din_spark.plans.similarity_queries import (
         _km8_cents,
         _probe_qv_staged,
@@ -339,13 +340,7 @@ def similarity_filtered_nprobe(
     # the _ivfpq_shortlist multiprobe shape); the quantized probe
     # collect is the session-staged one every sweep shares
     ranked = {
-        int(r.vec_id): sorted(
-            (
-                sum((int(r.qv[i]) - c[i]) ** 2 for i in range(len(c))),
-                cl + 1,
-            )
-            for cl, c in enumerate(cents)
-        )
+        int(r.vec_id): nearest_cells(r.qv, cents, max(_FNP_GRID))
         for r in _probe_qv_staged(spark, sf_dir, "raw")
     }
     # every nprobe arm's probed cells in one tagged table
@@ -355,7 +350,7 @@ def similarity_filtered_nprobe(
             (p, cl, np_)
             for np_ in _FNP_GRID
             for p, rk in ranked.items()
-            for _, cl in rk[:np_]
+            for cl in rk[:np_]
         ],
         "probe bigint, pcell int, nprobe int",
     )

@@ -666,7 +666,13 @@ def _pq_arm(
     probe vectors). ``trained`` short-circuits the training with a
     pre-staged (checkpointed codes, codebooks) pair — the
     session-staged baseline arm both A/Bs share."""
-    from data_ingestion_din_spark.operators.similarity import pq_assign_qv
+    from data_ingestion_din_spark.operators.similarity import (
+        adc_rows,
+        pq_assign_qv,
+        sq_l2,
+        subvectors,
+        with_codewords,
+    )
     from data_ingestion_din_spark.plans.similarity_queries import _PQ_D
 
     if trained is not None:
@@ -677,58 +683,15 @@ def _pq_arm(
         # checkpoint so the Lloyd DAG runs once per arm; lazy, both
         # consumers sit in the final action
         codes = codes.localCheckpoint(eager=False)
-    cb_df = F.broadcast(
-        local_frame(
-            spark,
-            [
-                (m, c + 1, [int(v) for v in cb[m][c]])
-                for m in range(4)
-                for c in range(len(cb[m]))
-            ],
-            "m int, code int, cv array<bigint>",
-        )
-    )
-    sub = src.select(
-        "vec_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, 3), m -> struct(m AS m,"
-                f" slice(qv, m * {_PQ_D} + 1, {_PQ_D}) AS sv))"
-            )
-        ).alias("x"),
-    ).select("vec_id", "x.m", "x.sv")
     serr = (
-        codes.join(sub, ["vec_id", "m"])
-        .join(cb_df, ["m", "code"])
-        .select(
-            "m",
-            F.expr(
-                "aggregate(zip_with(sv, cv,"
-                " (a, b) -> (a - b) * (a - b)),"
-                " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            ).alias("e"),
-        )
+        with_codewords(spark, codes, subvectors(src, 4, _PQ_D, "vec_id"), cb)
+        .select("m", sq_l2(F.col("sv"), F.col("cv")).alias("e"))
         .groupBy("m")
         .agg(F.sum("e").cast("bigint").alias("sq_err"))
     )
-    adc_rows = []
-    for pid, vec in pv.items():
-        for m in range(4):
-            svp = vec[m * _PQ_D : (m + 1) * _PQ_D]
-            for c in range(len(cb[m])):
-                adc_rows.append(
-                    (
-                        pid,
-                        m,
-                        c + 1,
-                        sum(
-                            (a - b) * (a - b)
-                            for a, b in zip(svp, cb[m][c])
-                        ),
-                    )
-                )
+    rows = [r for pid, vec in pv.items() for r in adc_rows((pid,), vec, cb)]
     adc = F.broadcast(
-        local_frame(spark, adc_rows, "probe bigint, m int, code int, dpart bigint")
+        local_frame(spark, rows, "probe bigint, m int, code int, dpart bigint")
     )
     dist = (
         codes.join(adc, ["m", "code"])
@@ -1016,7 +979,9 @@ def similarity_kmeans_convergence(
 ) -> DataFrame:
     from data_ingestion_din_spark.functions.vectors import quantize
     from data_ingestion_din_spark.operators.similarity import (
-        int_matrix_lit,
+        int_array_lit,
+        lloyd,
+        nearest_code,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1028,62 +993,31 @@ def similarity_kmeans_convergence(
     cents = [
         list(r.qv) for r in base.orderBy("vec_id").limit(_KMC_K).collect()
     ]
-    dims = len(cents[0])
-
-    def tdiv(s: int, n: int) -> int:  # truncating div (DuckDB `//`)
-        return s // n if (s >= 0) == (n >= 0) or s % n == 0 else s // n + 1
-
-    def assign_with_d(cc: list[list[int]]) -> DataFrame:
-        m = int_matrix_lit(cc)
-        dist = F.transform(
-            m,
-            lambda c: F.aggregate(
-                F.zip_with(F.col("qv"), c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v,
-            ),
-        )
-        return (
-            base.select("vec_id", "qv", dist.alias("_d"))
-            .select(
-                "vec_id",
-                "qv",
-                F.array_position(F.col("_d"), F.array_min(F.col("_d")))
-                .cast("int")
-                .alias("cluster"),
-                F.array_min(F.col("_d")).cast("bigint").alias("d"),
-            )
-            # lazy checkpoint (history: 3 consumers per a_t share the
-            # blocks): for t < T the M-step collect is the first consumer
-            # and materializes it; for t = T the final action does — four
-            # fewer serial driver jobs than the eager form, same plan
-            .localCheckpoint(eager=False)
-        )
 
     hist: list[DataFrame] = []
-    for t in range(1, _KMC_T + 1):
-        a = assign_with_d(cents)
+
+    def assign_with_d(cc: list[list[int]]) -> DataFrame:
+        # lazy checkpoint (history: 3 consumers per a_t share the
+        # blocks): for t < T the M-step collect is the first consumer
+        # and materializes it; for t = T the final action does — four
+        # fewer serial driver jobs than the eager form, same plan
+        a = nearest_code(
+            base,
+            "qv",
+            int_array_lit(cc),
+            "vec_id",
+            "qv",
+            code="cluster",
+            dist="d",
+        ).localCheckpoint(eager=False)
         hist.append(a)
-        if t == _KMC_T:
-            break
-        sums = (
-            a.select("cluster", F.posexplode("qv").alias("dim", "v"))
-            .groupBy("cluster", "dim")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        new = {c: [0] * dims for c in range(1, _KMC_K + 1)}
-        seen = set()
-        for r in sums:
-            new[r.cluster][r.dim] = tdiv(int(r.s), int(r.n))
-            seen.add(r.cluster)
-        # empty-cluster convention (both engines): keep the PRIOR
-        # iteration's centroid — the oracle's c{t}f coalesces against
-        # the previous c{t-1}f/seeds, not the original seed
-        cents = [
-            new[c] if c in seen else cents[c - 1]
-            for c in range(1, _KMC_K + 1)
-        ]
+        return a
+
+    # empty-cluster convention (both engines): keep the PRIOR
+    # iteration's centroid — the oracle's c{t}f coalesces against the
+    # previous c{t-1}f/seeds, not the original seed
+    lloyd(assign_with_d, cents, "qv", "cluster", _KMC_T - 1)
+
     grid = None
     for t, a in enumerate(hist, start=1):
         inertia = a.agg(F.sum("d").cast("bigint").alias("inertia"))
@@ -1342,6 +1276,15 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from data_ingestion_din_spark.functions.vectors import quantize_milli
     from data_ingestion_din_spark.operators.dedup import _refuse_all_pairs
+    from data_ingestion_din_spark.operators.similarity import (
+        adc_rows,
+        lloyd_update,
+        nearest_code,
+        pq_book,
+        sq_l2,
+        subvectors,
+        with_codewords,
+    )
     from data_ingestion_din_spark.plans.similarity_queries import (
         _PQ_D,
         _PQ_K,
@@ -1362,28 +1305,20 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     qm = emb.select(
         "vec_id", quantize_milli(F.col("embedding")).alias("qv")
     ).coalesce(4)
-    sub = qm.select(
-        "vec_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {_PQ_SUB - 1}), m -> struct(m AS m,"
-                f" slice(qv, m * {_PQ_D} + 1, {_PQ_D}) AS sv))"
-            )
-        ).alias("x"),
-    ).select(
-        "vec_id",
-        F.col("x.m").alias("m"),
-        F.col("x.sv").alias("sv"),
-        F.aggregate(
-            F.col("x.sv"),
-            F.lit(0).cast("bigint"),
-            lambda a, v: a + v * v,
-        ).alias("xx"),
+    sub = (
+        subvectors(qm, _PQ_SUB, _PQ_D, "vec_id")
+        .withColumn(
+            "xx",
+            F.aggregate(
+                F.col("sv"), F.lit(0).cast("bigint"), lambda a, v: a + v * v
+            ),
+        )
         # lazy: the merged M-step collect (msums, below) is the first
         # consumer that runs over sub's own plan and materializes the
         # checkpoint; the qm.collect() seed job reads the un-checkpointed
         # upstream and does NOT touch sub's RDD
-    ).localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)
+    )
     # ONE driver collect serves seeds, the guarded GEMM truth and the
     # probe vectors (three separate jobs before this round)
     srows = sorted(qm.collect(), key=lambda r: int(r.vec_id))
@@ -1393,52 +1328,25 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         for m in range(_PQ_SUB)
     ]
 
-    def cb_lit(cbm):
-        return F.expr(
-            "array("
-            + ",".join(
-                "array("
-                + ",".join(
-                    "array(" + ",".join(f"{v}L" for v in c) + ")"
-                    for c in codes
-                )
-                + ")"
-                for codes in cbm
-            )
-            + ")"
+    def rx(v, c):  # Σ (x − c)·x: the residual's component along x
+        return F.aggregate(
+            F.zip_with(v, c, lambda x, y: (x - y) * x),
+            F.lit(0).cast("bigint"),
+            lambda a, t: a + t,
         )
 
-    def tdiv(s: int, n: int) -> int:  # truncating div (DuckDB `//`)
-        return s // n if (s >= 0) == (n >= 0) or s % n == 0 else s // n + 1
+    def aniso(v, c):
+        r = rx(v, c)
+        return sq_l2(v, c) * F.col("xx") + F.lit(_PQA_W) * r * r
+
+    def dot_py(a, b):  # the MIPS ADC score
+        return sum(int(x) * int(y) for x, y in zip(a, b))
+
+    losses = {"aniso": aniso, "mse": sq_l2}
 
     def _assign(cbm, mode):
-        def per_code(c):
-            rr = F.aggregate(
-                F.zip_with(F.col("sv"), c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("bigint"),
-                lambda a, v: a + v,
-            )
-            if mode == "mse":
-                return rr
-            rx = F.aggregate(
-                F.zip_with(F.col("sv"), c, lambda x, y: (x - y) * x),
-                F.lit(0).cast("bigint"),
-                lambda a, v: a + v,
-            )
-            return rr * F.col("xx") + F.lit(_PQA_W) * rx * rx
-
-        losses = F.transform(
-            F.element_at(cb_lit(cbm), F.col("m") + 1), per_code
-        )
-        return sub.select(
-            "vec_id", "m", "sv", losses.alias("_l")
-        ).select(
-            "vec_id",
-            "m",
-            "sv",
-            F.array_position(F.col("_l"), F.array_min(F.col("_l")))
-            .cast("int")
-            .alias("code"),
+        return nearest_code(
+            sub, "sv", pq_book(cbm), "vec_id", "m", "sv", loss=losses[mode]
         )
 
     # ONE merged M-step for both arms: the two comparators' seed
@@ -1459,25 +1367,6 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
         .collect()
     )
-
-    def _mstep(mode):
-        new = {
-            (m, c): list(cb0[m][c - 1])
-            for m in range(_PQ_SUB)
-            for c in range(1, _PQ_K + 1)
-        }
-        seen = set()
-        for r in msums:
-            if r.arm != mode:
-                continue
-            if (r.m, r.code) not in seen:
-                new[(r.m, r.code)] = [0] * _PQ_D
-                seen.add((r.m, r.code))
-            new[(r.m, r.code)][r.dim] = tdiv(int(r.s), int(r.n))
-        return [
-            [new[(m, c)] for c in range(1, _PQ_K + 1)]
-            for m in range(_PQ_SUB)
-        ]
 
     # exact MIPS truth (guarded GEMM over the already-collected control
     # data — the similarity_pq_subspace_ab audit form, dot instead of
@@ -1502,34 +1391,19 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     errs, ests = [], []
     for arm in ("aniso", "mse"):
-        cb = _mstep(arm)
-        codes = _assign(cb, arm).select("vec_id", "m", "code")
-        cb_df = F.broadcast(
-            local_frame(
-                spark,
-                [
-                    (m, c + 1, [int(v) for v in cb[m][c]])
-                    for m in range(_PQ_SUB)
-                    for c in range(_PQ_K)
-                ],
-                "m int, code int, cv array<bigint>",
+        cb = [
+            lloyd_update(
+                [r for r in msums if r.arm == arm and r.m == m], cb0[m], "code"
             )
-        )
+            for m in range(_PQ_SUB)
+        ]
+        codes = _assign(cb, arm).select("vec_id", "m", "code")
         errs.append(
-            codes.join(sub, ["vec_id", "m"])
-            .join(cb_df, ["m", "code"])
+            with_codewords(spark, codes, sub, cb)
             .select(
-                F.expr(
-                    "aggregate(zip_with(sv, cv,"
-                    " (a, b) -> (a - b) * (a - b)),"
-                    " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-                ).alias("rr"),
+                sq_l2(F.col("sv"), F.col("cv")).alias("rr"),
                 F.col("xx"),
-                F.expr(
-                    "aggregate(zip_with(sv, cv,"
-                    " (a, b) -> (a - b) * a),"
-                    " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-                ).alias("rx"),
+                rx(F.col("sv"), F.col("cv")).alias("rx"),
             )
             .agg(
                 F.sum("rr").cast("bigint").alias("sq_err"),
@@ -1542,21 +1416,13 @@ def similarity_pq_aniso_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("arm", F.lit(arm))
         )
-        adc_rows = []
-        for pid, vec in probes.items():
-            for m in range(_PQ_SUB):
-                svp = vec[m * _PQ_D : (m + 1) * _PQ_D]
-                for c in range(_PQ_K):
-                    adc_rows.append(
-                        (
-                            pid,
-                            m,
-                            c + 1,
-                            sum(a * b for a, b in zip(svp, cb[m][c])),
-                        )
-                    )
+        rows = [
+            r
+            for pid, vec in probes.items()
+            for r in adc_rows((pid,), vec, cb, score=dot_py)
+        ]
         adc = F.broadcast(
-            local_frame(spark, adc_rows, "probe bigint, m int, code int, dpart bigint")
+            local_frame(spark, rows, "probe bigint, m int, code int, dpart bigint")
         )
         ests.append(
             codes.join(adc, ["m", "code"])

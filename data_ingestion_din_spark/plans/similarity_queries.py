@@ -24,6 +24,13 @@ from data_ingestion_din_spark.functions.vectors import (
 # (functions/vectors.py) instead of silently breaking k-means parity.
 _DIMS_UB = EMBED_DIMS + 1
 from data_ingestion_din_spark.operators.colocate import staged
+from data_ingestion_din_spark.operators.similarity import (
+    adc_lookup,
+    adc_rows,
+    int_array_lit,
+    nearest_cells,
+    probe_qv,
+)
 from data_ingestion_din_spark.plans.registry import query
 from data_ingestion_din_spark.sources.tables import load_table, local_frame
 
@@ -217,7 +224,7 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vec_ids) with integer squared distances and truncated-integer
 # centroids, final assignment hash-compared against the oracle's
 # unrolled SQL of the same two iterations (operators/similarity.py
-# kmeans_assign). The IVF training loop — an iterative algorithm — under
+# kmeans_train). The IVF training loop — an iterative algorithm — under
 # the same bit-exact gate as the one-shot queries; empty clusters keep
 # their previous centroid on both sides.
 # --------------------------------------------------------------------------
@@ -682,45 +689,6 @@ def _pq_ctes(qsrc: str | None = None, k: int = _PQ_K) -> str:
     )"""
 
 
-def _adc_expr(q0: list, cb: list) -> F.Column:
-    """The integer ||q0_m − centroid||² ADC table for a probe's
-    (possibly residual) quantized vector ``q0`` as a literal, returned
-    as the per-code lookup expression over (m, code)."""
-    from data_ingestion_din_spark.operators.similarity import int_matrix_lit
-
-    adc = [
-        [
-            sum(
-                (int(q0[m * _PQ_D + i]) - c[i]) ** 2
-                for i in range(_PQ_D)
-            )
-            for c in cb[m]
-        ]
-        for m in range(_PQ_SUB)
-    ]
-    return F.element_at(
-        F.element_at(int_matrix_lit(adc), F.col("m") + 1), F.col("code")
-    )
-
-
-def _probe_adc(emb: DataFrame, cb: list) -> F.Column:
-    """Probe-side ADC precomputation shared by similarity_pq_topk and
-    similarity_ivfpq_topk (both hash-gated against oracles that must
-    stay bit-identical): one 1-row collect for the probe's quantized
-    vector — the per-query work PQ serving does — then the literal ADC
-    lookup via :func:`_adc_expr`."""
-    from data_ingestion_din_spark.functions.vectors import quantize
-
-    q0 = (
-        emb.filter(F.col("vec_id") == 0)
-        .select(quantize(F.col("embedding")).alias("qv"))
-        .collect()[0]
-        .qv
-    )
-    return _adc_expr(q0, cb)
-
-
-
 # The trained PQ index — (codes DF, codebooks) — is consumed by seven
 # queries (pq_topk, the ivfpq family, every recall audit; the 'res'
 # space by the residual family): a session artifact like the k=8
@@ -789,7 +757,7 @@ def _pq_trained(
 def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     codes, cb = _pq_trained(spark, sf_dir, "raw")
-    dpart = _probe_adc(emb, cb)
+    dpart = adc_lookup(probe_qv(emb), cb)
     shortlist = (
         codes.filter(F.col("vec_id") != 0)
         .select("vec_id", dpart.alias("dpart"))
@@ -1094,9 +1062,9 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _km8(spark, sf_dir)
     codes, cb = _pq_trained(spark, sf_dir, "raw")
     # probe-side precomputation (the per-query work PQ serving does):
-    # 1-row collects for the probe's ADC table (shared helper) and its
-    # coarse cell — bounded control data, independent of corpus size
-    dpart = _probe_adc(emb, cb)
+    # 1-row collects for the probe's ADC table and its coarse cell —
+    # bounded control data, independent of corpus size
+    dpart = adc_lookup(probe_qv(emb), cb)
     pc = assigned.filter(F.col("vec_id") == 0).collect()[0].cluster
     cell_ids = assigned.filter(
         (F.col("cluster") == F.lit(int(pc))) & (F.col("vec_id") != 0)
@@ -1207,27 +1175,14 @@ def _ivfpq_mp_cells_sql() -> str:
     """,
 )
 def similarity_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.functions.vectors import quantize
-
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = _km8(spark, sf_dir)
     cents = _km8_cents(spark, sf_dir)
     codes, cb = _pq_trained(spark, sf_dir, "raw")
-    dpart = _probe_adc(emb, cb)
-    q0 = (
-        emb.filter(F.col("vec_id") == 0)
-        .select(quantize(F.col("embedding")).alias("qv"))
-        .collect()[0]
-        .qv
-    )
-    ranked = sorted(
-        (
-            sum((int(q0[i]) - c[i]) ** 2 for i in range(len(c))),
-            cl + 1,
-        )
-        for cl, c in enumerate(cents)
-    )
-    probe_cells = [cl for _, cl in ranked[:_IVFPQ_NPROBE]]
+    # ONE 1-row probe collect feeds the ADC table and the cell ranking
+    q0 = probe_qv(emb)
+    dpart = adc_lookup(q0, cb)
+    probe_cells = nearest_cells(q0, cents, _IVFPQ_NPROBE)
     cell_ids = assigned.filter(
         F.col("cluster").isin(probe_cells) & (F.col("vec_id") != 0)
     ).select("vec_id")
@@ -1317,13 +1272,12 @@ def _residual_qv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster, qv) where qv is the integer residual against
     the staged k=8 quantizer's cell centroid."""
     from data_ingestion_din_spark.functions.vectors import quantize
-    from data_ingestion_din_spark.operators.similarity import int_matrix_lit
 
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = _km8(spark, sf_dir)
     cents = _km8_cents(spark, sf_dir)
     qv = emb.select("vec_id", quantize(F.col("embedding")).alias("qv"))
-    cent_m = int_matrix_lit(cents)
+    cent_m = int_array_lit(cents)
     return qv.join(assigned, "vec_id").select(
         "vec_id",
         "cluster",
@@ -1372,7 +1326,7 @@ def similarity_ivfpq_residual_topk(
     # residual (the ADC input — residualized against its own cell, which
     # is also the only cell scanned at nprobe=1) and its coarse cell
     probe = rv.filter(F.col("vec_id") == 0).select("qv", "cluster").collect()[0]
-    dpart = _adc_expr(list(probe.qv), cb)
+    dpart = adc_lookup(list(probe.qv), cb)
     cell_ids = assigned.filter(
         (F.col("cluster") == F.lit(int(probe.cluster)))
         & (F.col("vec_id") != 0)
@@ -1547,34 +1501,20 @@ def _residual_mp_padc_sql() -> str:
 def similarity_ivfpq_residual_multiprobe(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from data_ingestion_din_spark.functions.vectors import quantize
-
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = _km8(spark, sf_dir)
     cents = _km8_cents(spark, sf_dir)
     codes, cb = _pq_trained(spark, sf_dir, "res")
     # driver-side control data: the probe's raw quantized vector (1-row
     # collect) ranks the cells AND residualizes per probed cell
-    q0 = (
-        emb.filter(F.col("vec_id") == 0)
-        .select(quantize(F.col("embedding")).alias("qv"))
-        .collect()[0]
-        .qv
-    )
-    ranked = sorted(
-        (
-            sum((int(q0[i]) - c[i]) ** 2 for i in range(len(c))),
-            cl + 1,
-        )
-        for cl, c in enumerate(cents)
-    )
-    probe_cells = [cl for _, cl in ranked[:_IVFPQ_NPROBE]]
+    q0 = probe_qv(emb)
+    probe_cells = nearest_cells(q0, cents, _IVFPQ_NPROBE)
     # per-cell ADC literal: candidate rows carry their cluster, so the
     # lookup dispatches on it (a 3-arm CASE over bounded literals)
     dpart = None
     for cl in probe_cells:
         r0 = [int(q0[i]) - cents[cl - 1][i] for i in range(len(q0))]
-        arm = _adc_expr(r0, cb)
+        arm = adc_lookup(r0, cb)
         dpart = (
             F.when(F.col("cluster") == cl, arm)
             if dpart is None
@@ -1856,19 +1796,11 @@ def _ivfpq_shortlist(
             if space == "raw"
             else _probe_qv_staged(spark, sf_dir, "raw")
         )
-        pc_rows = []
-        for r in raw_rows:
-            ranked = sorted(
-                (
-                    sum(
-                        (int(r.qv[i]) - c[i]) ** 2 for i in range(len(c))
-                    ),
-                    cl + 1,
-                )
-                for cl, c in enumerate(cents)
-            )
-            for _, cl in ranked[:nprobe]:
-                pc_rows.append((int(r.vec_id), cl))
+        pc_rows = [
+            (int(r.vec_id), cl)
+            for r in raw_rows
+            for cl in nearest_cells(r.qv, cents, nprobe)
+        ]
         pcells = local_frame(spark, pc_rows, "probe bigint, pcell int")
     # ADC tables (probe-side control data, broadcast). In the residual
     # space at nprobe>1 the probe's residual DIFFERS per probed cell —
@@ -1879,39 +1811,26 @@ def _ivfpq_shortlist(
     # mis-rank 2/3 of the pool and deflate residual recall).
     if space == "res" and nprobe > 1:
         raw_by_id = {int(r.vec_id): list(r.qv) for r in raw_rows}
-        adc_rows = []
+        rows = []
         for probe, cl in pc_rows:
             rq = [
                 int(raw_by_id[probe][i]) - cents[cl - 1][i]
                 for i in range(len(raw_by_id[probe]))
             ]
-            for m in range(_PQ_SUB):
-                for c0, cvec in enumerate(cb[m]):
-                    d = sum(
-                        (rq[m * _PQ_D + i] - cvec[i]) ** 2
-                        for i in range(_PQ_D)
-                    )
-                    adc_rows.append((probe, cl, m, c0 + 1, d))
+            rows += adc_rows((probe, cl), rq, cb)
         adc = local_frame(
-            spark, adc_rows, "probe bigint, cluster int, m int, code int, dpart bigint"
+            spark, rows, "probe bigint, cluster int, m int, code int, dpart bigint"
         )
         adc_keys = ["probe", "cluster", "m", "code"]
     else:
         # nprobe=1 residual: the only probed cell is the probe's own,
         # so the own-cell residual in probe_rows IS the per-cell one;
         # raw space: the ADC is cell-independent
-        adc_rows = []
-        for r in probe_rows:
-            q0 = list(r.qv)
-            for m in range(_PQ_SUB):
-                for c0, cvec in enumerate(cb[m]):
-                    d = sum(
-                        (int(q0[m * _PQ_D + i]) - cvec[i]) ** 2
-                        for i in range(_PQ_D)
-                    )
-                    adc_rows.append((int(r.vec_id), m, c0 + 1, d))
+        rows = [
+            row for r in probe_rows for row in adc_rows((int(r.vec_id),), r.qv, cb)
+        ]
         adc = local_frame(
-            spark, adc_rows, "probe bigint, m int, code int, dpart bigint"
+            spark, rows, "probe bigint, m int, code int, dpart bigint"
         )
         adc_keys = ["probe", "m", "code"]
     cand = (
@@ -2269,17 +2188,11 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", quantize(F.col("embedding")).alias("qv"))
         .collect()  # bounded: the query batch is control data
     )
-    rows = []
-    for r in probes:
-        ranked = sorted(
-            (
-                sum((int(r.qv[i]) - c[i]) ** 2 for i in range(len(c))),
-                cl + 1,
-            )
-            for cl, c in enumerate(cents)
-        )
-        for _, cl in ranked[:_RS_NPROBE]:
-            rows.append((int(r.vec_id), cl))
+    rows = [
+        (int(r.vec_id), cl)
+        for r in probes
+        for cl in nearest_cells(r.qv, cents, _RS_NPROBE)
+    ]
     pc = local_frame(spark, rows, "query_id bigint, cluster int")
     members = assigned.select("vec_id", "cluster").join(
         emb.select("vec_id", q3(F.col("embedding")).alias("q3")), "vec_id"

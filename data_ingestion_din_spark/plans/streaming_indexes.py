@@ -895,11 +895,12 @@ def _siq_serve_oracle() -> str:
 
 @query("streaming_ivfpq_serve", oracle=_siq_serve_oracle())
 def streaming_ivfpq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_din_spark.functions.vectors import (
-        cosine_exact,
-        quantize,
+    from data_ingestion_din_spark.functions.vectors import cosine_exact
+    from data_ingestion_din_spark.operators.similarity import (
+        adc_lookup,
+        nearest_cells,
+        probe_qv,
     )
-    from data_ingestion_din_spark.plans.similarity_queries import _adc_expr
 
     out = _siq_out_dir(spark, sf_dir)
     base = os.path.dirname(out)
@@ -921,20 +922,9 @@ def streaming_ivfpq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in brows:
         cb[r.m].append(list(r.sv))
     emb = load_table(spark, sf_dir, "embeddings")
-    q0 = (
-        emb.filter(F.col("vec_id") == 0)
-        .select(quantize(F.col("embedding")).alias("qv"))
-        .collect()[0]
-        .qv
-    )
-    pc = min(
-        range(len(cents)),
-        key=lambda c: (
-            sum((int(q0[i]) - cents[c][i]) ** 2 for i in range(len(q0))),
-            c,
-        ),
-    ) + 1
-    dpart = _adc_expr(list(q0), cb)
+    q0 = probe_qv(emb)
+    pc = nearest_cells(q0, cents, 1)[0]
+    dpart = adc_lookup(q0, cb)
     postings = spark.read.parquet(out).filter(
         (F.col("cluster") == pc) & (F.col("vec_id") != 0)
     )

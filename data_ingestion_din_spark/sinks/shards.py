@@ -17,7 +17,8 @@ Why a dedicated sink instead of a bare ``write.parquet``:
   n_tasks × n_shards small files, the exact debris
   ``compact_small_files`` exists to clean up).
 - **Audit result** — returns per-shard row/byte counts read back from
-  the committed files, the manifest a training job records.
+  the committed files' listing and parquet footers (no Spark job), the
+  manifest a training job records.
 
 Scale: one hash shuffle on the shard id (the partitionBy itself is
 shuffle-free after that); n_shards is chosen by the caller to match the
@@ -28,6 +29,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, functions as F
 
 from data_ingestion_din_spark.functions.hashing import h64
@@ -43,8 +45,7 @@ def write_training_shards(
 ) -> list[dict[str, int]]:
     """Write ``df`` as ``out_dir/shard=N/`` hive dirs, one parquet file
     per shard, rows routed by ``shard_id(key_col)``. Returns the shard
-    manifest (shard, n_rows, n_bytes) read back from the committed
-    output."""
+    manifest of the committed output (:func:`shard_manifest`)."""
     sharded = df.withColumn("shard", shard_id(F.col(key_col), n_shards))
     (
         sharded.repartition(n_shards, "shard")
@@ -52,19 +53,17 @@ def write_training_shards(
         .partitionBy("shard")
         .parquet(out_dir)
     )
-    spark = df.sparkSession
-    counts = {
-        r["shard"]: r["n"]
-        for r in spark.read.parquet(out_dir)
-        .groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    return shard_manifest(out_dir, n_shards)
+
+
+def shard_manifest(out_dir: str, n_shards: int) -> list[dict[str, int]]:
+    """Per-shard (shard, n_rows, n_files, n_bytes) of a committed shard
+    export, read on the driver from the part files' listing and parquet
+    footers — no Spark job. Every shard id 0..n_shards-1 gets an entry:
+    a loader that maps one worker per shard id must see an explicit
+    zero-row shard, not a missing one (no ``shard=N`` directory is
+    written for an empty shard)."""
     manifest = []
-    # every shard id 0..n_shards-1 gets a manifest entry — a loader that
-    # maps one worker per shard id must see an explicit zero-row shard,
-    # not a missing one (no shard=N directory is written for empty
-    # shards, so absent ids are emitted as zeros)
     for shard in range(n_shards):
         d = os.path.join(out_dir, f"shard={shard}")
         files = (
@@ -79,7 +78,7 @@ def write_training_shards(
         manifest.append(
             {
                 "shard": shard,
-                "n_rows": counts.get(shard, 0),
+                "n_rows": sum(pq.read_metadata(f).num_rows for f in files),
                 "n_files": len(files),
                 "n_bytes": sum(os.path.getsize(f) for f in files),
             }

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_ingestion_din_spark.operators.dedup import connected_components
-from data_ingestion_din_spark.operators.similarity import kmeans_assign
+from data_ingestion_din_spark.operators.similarity import kmeans_train
 
 
 def test_connected_components_chain_and_pair(spark):
@@ -38,7 +38,7 @@ def test_kmeans_separates_two_blobs(spark):
         (10 + i, vec(5.0 + 0.001 * i)) for i in range(4)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r.vec_id: r.cluster for r in kmeans_assign(emb, k=2, iters=2).collect()}
+    out = {r.vec_id: r.cluster for r in kmeans_train(emb, k=2, iters=2)[0].collect()}
     blob_a = {out[i] for i in range(4)}
     blob_b = {out[10 + i] for i in range(4)}
     assert blob_a == {1} and blob_b == {2}
@@ -49,10 +49,10 @@ def test_kmeans_deterministic_across_runs(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     a = sorted(
-        (r.vec_id, r.cluster) for r in kmeans_assign(emb, 4, 2).collect()
+        (r.vec_id, r.cluster) for r in kmeans_train(emb, 4, 2)[0].collect()
     )
     b = sorted(
-        (r.vec_id, r.cluster) for r in kmeans_assign(emb, 4, 2).collect()
+        (r.vec_id, r.cluster) for r in kmeans_train(emb, 4, 2)[0].collect()
     )
     assert a == b and len(a) > 0
 
@@ -93,10 +93,10 @@ def test_kmeans_raises_on_degenerate_input(spark):
     import pytest
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError, match="at least k"):
-        kmeans_assign(empty, k=2, iters=1)
+    with pytest.raises(ValueError, match="kmeans_train: need at least k=2"):
+        kmeans_train(empty, k=2, iters=1)[0]
     one = spark.createDataFrame(
         [(0, [1.0] * 8)], "vec_id long, embedding array<float>"
     )
-    with pytest.raises(ValueError, match="at least k"):
-        kmeans_assign(one, k=2, iters=1)
+    with pytest.raises(ValueError, match="kmeans_train: need at least k=2"):
+        kmeans_train(one, k=2, iters=1)[0]

@@ -29,7 +29,11 @@ plans/streaming_core.py. An eighth keeps the banded-LSH steps (the band
 equi-join, the MinHash band-key recipe and the incremental probe's
 best-match window) in operators/dedup.py. A ninth sends every
 driver-built frame through sources/tables.py's ``local_frame``, so none
-plans a Python-RDD scan.
+plans a Python-RDD scan. A tenth keeps the integer-exact quantizer steps
+(argmin over a literal book, the truncating M-step division, nested
+BIGINT literal builders, the PQ subspace split, the codebook frame,
+driver squared-distance sums and the probe's 1-row quantized collect) in
+operators/similarity.py.
 """
 
 from __future__ import annotations
@@ -504,3 +508,97 @@ def test_driver_frames_go_through_local_frame():
         if lines:
             hits[rel] = lines
     assert not hits, f"createDataFrame outside local_frame: {hits}"
+
+
+def _is_self_square(node: ast.AST) -> bool:
+    """``e ** 2`` or ``(a - b) * (a - b)``."""
+    if not isinstance(node, ast.BinOp):
+        return False
+    if isinstance(node.op, ast.Pow):
+        return isinstance(node.right, ast.Constant) and node.right.value == 2
+    return (
+        isinstance(node.op, ast.Mult)
+        and isinstance(node.left, ast.BinOp)
+        and ast.dump(node.left) == ast.dump(node.right)
+    )
+
+
+def _str_parts(node: ast.AST) -> list[str]:
+    return [
+        c.value
+        for c in ast.walk(node)
+        if isinstance(c, ast.Constant) and isinstance(c.value, str)
+    ]
+
+
+def _quantizer_recipe_sites(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, recipe) of every hand-written quantizer step: an
+    ``array_position(..., array_min(...))`` argmin, a ``def tdiv``, an
+    f-string ``{v}L`` BIGINT literal builder, an ``F.expr`` subspace
+    split (``slice(qv, m * ...``), a ``cv array<bigint>`` codebook frame,
+    a driver ``sum(...)`` of squared differences, or a ``.collect()[0]
+    .qv`` probe collect."""
+    sites = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and node.name == "tdiv":
+            sites.append((node.lineno, "truncating division"))
+        elif isinstance(node, ast.JoinedStr):
+            vals = node.values
+            if any(
+                isinstance(a, ast.FormattedValue)
+                and isinstance(b, ast.Constant)
+                and str(b.value).startswith("L")
+                for a, b in zip(vals, vals[1:])
+            ):
+                sites.append((node.lineno, "BIGINT literal builder"))
+        elif (
+            isinstance(node, ast.Attribute)
+            and node.attr == "qv"
+            and isinstance(node.value, ast.Subscript)
+            and isinstance(node.value.value, ast.Call)
+            and _call_name(node.value.value) == "collect"
+        ):
+            sites.append((node.lineno, "probe collect"))
+        if not isinstance(node, ast.Call):
+            continue
+        name = _call_name(node)
+        if name == "array_position" and any(
+            isinstance(a, ast.Call) and _call_name(a) == "array_min"
+            for a in node.args
+        ):
+            sites.append((node.lineno, "argmin"))
+        elif name == "expr" and any(
+            "slice(qv, m *" in v for a in node.args for v in _str_parts(a)
+        ):
+            sites.append((node.lineno, "subspace split"))
+        elif name == "local_frame" and any(
+            "cv array<bigint>" in v for a in node.args for v in _str_parts(a)
+        ):
+            sites.append((node.lineno, "codebook frame"))
+        elif (
+            name == "sum"
+            and isinstance(node.func, ast.Name)
+            and node.args
+            and isinstance(node.args[0], (ast.GeneratorExp, ast.ListComp))
+            and any(_is_self_square(c) for c in ast.walk(node.args[0].elt))
+        ):
+            sites.append((node.lineno, "driver squared distance"))
+    return sorted(set(sites))
+
+
+def test_quantizer_recipes_live_in_similarity_kernel():
+    """No module but operators/similarity.py writes a quantizer step:
+    IVF, PQ, k-means and range-search queries call nearest_code,
+    lloyd / lloyd_update, int_array_lit, subvectors, with_codewords,
+    nearest_cells, adc_table / adc_rows / adc_lookup and probe_qv. Oracle
+    SQL strings are not calls and stay the reference."""
+    hits: dict[str, list[tuple[int, str]]] = {}
+    for path in _module_files():
+        rel = os.path.relpath(path, PKG)
+        if rel == os.path.join("operators", "similarity.py"):
+            continue
+        with open(path) as fh:
+            sites = _quantizer_recipe_sites(ast.parse(fh.read()))
+        if sites:
+            hits[rel] = sites
+    assert not hits, f"quantizer steps outside operators/similarity.py: {hits}"

@@ -79,7 +79,7 @@ def test_semdedup_prune_agrees_with_exact_cosine(spark):
     """Re-derive keep/prune with the division-based exact cosine: a vec
     is pruned iff some lower-id same-cluster member has cos >= 0.4."""
     from data_ingestion_din_spark.functions.vectors import cosine_exact
-    from data_ingestion_din_spark.operators.similarity import kmeans_assign
+    from data_ingestion_din_spark.operators.similarity import kmeans_train
     from data_ingestion_din_spark.sources.tables import load_table
 
     emb = load_table(spark, SF, "embeddings")
@@ -87,7 +87,7 @@ def test_semdedup_prune_agrees_with_exact_cosine(spark):
         r.vec_id: (r.cluster, r.n_close, r.keep)
         for r in QUERIES["dedup_semantic_kmeans"](spark, SF).collect()
     }
-    assigned = kmeans_assign(emb, k=8, iters=2)
+    assigned = kmeans_train(emb, k=8, iters=2)[0]
     v = assigned.join(emb, "vec_id")
     a = v.select(
         F.col("vec_id").alias("a_id"),

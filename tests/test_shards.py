@@ -54,3 +54,37 @@ def test_write_training_shards_empty_shards_explicit(spark, tmp_path):
     assert all(
         m["n_files"] == 0 and m["n_bytes"] == 0 for m in empties
     ), manifest
+
+
+def test_shard_manifest_from_footers_runs_no_job(spark, tmp_path):
+    """The manifest comes from the part files' parquet footers: its row
+    counts equal a Spark count of the committed output per shard, empty
+    shards read as explicit zeros, and building it after the write
+    starts no Spark job (counted by job id)."""
+    from data_ingestion_din_spark.session import started_jobs
+    from data_ingestion_din_spark.sinks.shards import shard_manifest
+
+    out = str(tmp_path / "shards_footer")
+    df = spark.range(0, 50).selectExpr("id % 3 AS doc_id", "id AS toks")
+    manifest = write_training_shards(df, "doc_id", out, n_shards=8)
+
+    j0 = started_jobs(spark)
+    again = shard_manifest(out, 8)
+    assert started_jobs(spark) - j0 == 0
+    assert again == manifest
+
+    counts = {
+        r["shard"]: r["n"]
+        for r in spark.read.parquet(out)
+        .groupBy("shard")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert [m["n_rows"] for m in manifest] == [counts.get(s, 0) for s in range(8)]
+    assert sum(m["n_rows"] for m in manifest) == 50
+    empties = [m for m in manifest if m["shard"] not in counts]
+    assert len(empties) >= 5
+    assert all(
+        m["n_rows"] == 0 and m["n_files"] == 0 and m["n_bytes"] == 0
+        for m in empties
+    ), manifest
